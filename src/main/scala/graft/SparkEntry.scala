@@ -1,125 +1,53 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` is the union of the module-level inventories (every
-  * query DuckDB-oracle-checked; COVERAGE.md records the totals):
+  * `queries` is the union of the registry modules in [[modules]]
+  * (every query DuckDB-oracle-checked; COVERAGE.md lists the modules
+  * and their key counts):
   *  - [[graft.serve.Queries]] — the reference's pipeline/dashboard
   *    surface (SURVEY §2) over the deterministic silver derivation;
-  *  - [[graft.operators.Relational]] — joins/windows/set-ops/events
-  *    corpus on the TPC-H-ish tables;
-  *  - [[graft.operators.TrainingData]] — dedup/similarity/text/
-  *    multimodal extensions.
+  *  - one `graft.operators` module per query family, named by domain
+  *    and owning the key prefixes it declares: TPC-H and data quality
+  *    (`q<N>_`, `q_`), joins (`j_`), windows (`w_`), events (`ev_`),
+  *    analytics (`a_`), column functions (`c_`), SQL shapes (`sql_`,
+  *    `set_`, `r5_`), ops audits (`o_`), text curation (`t_`,
+  *    `pipeline_`), dedup (`dedup_`), similarity (`sim_`, `r_`),
+  *    embeddings (`e_`), graphs (`g_`) and multimodal (`mm_`).
   * Every key in `queries` has an `oracleSql` twin that hash-matches
   * DuckDB (ANN/sketch/simhash oracles replay the algorithm in SQL
-  * rather than assuming recall). COVERAGE.md maps SURVEY §2 line by
-  * line.
+  * rather than assuming recall).
   *
   * The module maps merge by `++`, so a duplicate key would SILENTLY
   * shadow an earlier module's registered query (a drafted round-10
   * `ev_stickiness` briefly did exactly that to the weekly one);
   * RegistrySpec pins that the per-module key sets are pairwise
-  * disjoint and that the query and oracle key sets coincide.
+  * disjoint, that the query and oracle key sets coincide, that each
+  * key carries its module's prefix and that all 458 are registered.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     serve.Queries.a1DailySentiment(spark, "/root/testdata/sf0.001")
 
-  /** Module inventories in merge order — the single source for both
-    * maps AND RegistrySpec's disjointness pin. */
+  /** The registry, in merge order: the single list that both maps and
+    * RegistrySpec's pins iterate. A module left out of it loses all its
+    * queries, so RegistrySpec also pins the total key count. */
+  private[graft] lazy val modules: Seq[QueryModule] = Seq(
+    serve.Queries, operators.TpchQueries, operators.JoinQueries,
+    operators.WindowQueries, operators.EventQueries,
+    operators.AnalyticsQueries, operators.ColumnQueries,
+    operators.SqlQueries, operators.OpsQueries, operators.TextQueries,
+    operators.DedupQueries, operators.SimilarityQueries,
+    operators.EmbeddingQueries, operators.GraphQueries,
+    operators.MultimodalQueries)
+
   private[graft] def queryModules: Seq[Map[String, (SparkSession, String) => DataFrame]] =
-    Seq(serve.Queries.queries, operators.Relational.queries,
-      operators.TrainingData.queries, operators.TrainingData2.queries,
-      operators.TrainingData3.queries, operators.TrainingData4.queries,
-      operators.TrainingData5.queries, operators.TrainingData6.queries,
-      operators.TrainingData7.queries, operators.TrainingData8.queries,
-      operators.TrainingData9.queries, operators.TrainingData10.queries,
-      operators.TrainingData11.queries, operators.TrainingData12.queries,
-      operators.TrainingData13.queries, operators.TrainingData14.queries,
-      operators.TrainingData15.queries, operators.TrainingData16.queries,
-      operators.TrainingData17.queries, operators.TrainingData18.queries,
-      operators.TrainingData19.queries, operators.TrainingData20.queries,
-      operators.TrainingData21.queries, operators.TrainingData22.queries,
-      operators.TrainingData23.queries, operators.TrainingData24.queries,
-      operators.TrainingData25.queries, operators.TrainingData26.queries,
-      operators.TrainingData27.queries, operators.TrainingData28.queries,
-      operators.TrainingData29.queries, operators.TrainingData30.queries,
-      operators.TrainingData31.queries, operators.TrainingData32.queries,
-      operators.TrainingData33.queries, operators.TrainingData34.queries,
-      operators.TrainingData35.queries, operators.TrainingData36.queries,
-      operators.TrainingData37.queries, operators.TrainingData38.queries,
-      operators.TrainingData39.queries, operators.TrainingData40.queries,
-      operators.TrainingData41.queries, operators.TrainingData42.queries,
-      operators.TrainingData43.queries, operators.TrainingData44.queries,
-      operators.TrainingData45.queries, operators.TrainingData46.queries,
-      operators.TrainingData47.queries, operators.TrainingData48.queries,
-      operators.TrainingData49.queries, operators.TrainingData50.queries,
-      operators.TrainingData51.queries, operators.TrainingData52.queries,
-      operators.TrainingData53.queries, operators.TrainingData54.queries,
-      operators.TrainingData55.queries, operators.TrainingData56.queries,
-      operators.TrainingData57.queries, operators.TrainingData58.queries,
-      operators.TrainingData60.queries, operators.TrainingData61.queries,
-      operators.TrainingData62.queries, operators.TrainingData63.queries,
-      operators.TrainingData64.queries, operators.TrainingData65.queries,
-      operators.TrainingData66.queries, operators.TrainingData67.queries,
-      operators.TrainingData68.queries, operators.TrainingData69.queries,
-      operators.TrainingData70.queries, operators.TrainingData71.queries,
-      operators.TrainingData72.queries, operators.TrainingData73.queries,
-      operators.TrainingData74.queries, operators.TrainingData75.queries,
-      operators.TrainingData76.queries, operators.TrainingData77.queries,
-      operators.TrainingData78.queries, operators.TrainingData79.queries,
-      operators.TrainingData80.queries, operators.TrainingData81.queries,
-      operators.TrainingData82.queries, operators.TrainingData83.queries,
-      operators.TrainingData84.queries, operators.TrainingData85.queries,
-      operators.Tpch.queries, operators.Tpch2.queries)
+    modules.map(_.queries)
 
   private[graft] def oracleModules: Seq[Map[String, String]] =
-    Seq(serve.Queries.oracles, operators.Relational.oracles,
-      operators.TrainingData.oracles, operators.TrainingData2.oracles,
-      operators.TrainingData3.oracles, operators.TrainingData4.oracles,
-      operators.TrainingData5.oracles, operators.TrainingData6.oracles,
-      operators.TrainingData7.oracles, operators.TrainingData8.oracles,
-      operators.TrainingData9.oracles, operators.TrainingData10.oracles,
-      operators.TrainingData11.oracles, operators.TrainingData12.oracles,
-      operators.TrainingData13.oracles, operators.TrainingData14.oracles,
-      operators.TrainingData15.oracles, operators.TrainingData16.oracles,
-      operators.TrainingData17.oracles, operators.TrainingData18.oracles,
-      operators.TrainingData19.oracles, operators.TrainingData20.oracles,
-      operators.TrainingData21.oracles, operators.TrainingData22.oracles,
-      operators.TrainingData23.oracles, operators.TrainingData24.oracles,
-      operators.TrainingData25.oracles, operators.TrainingData26.oracles,
-      operators.TrainingData27.oracles, operators.TrainingData28.oracles,
-      operators.TrainingData29.oracles, operators.TrainingData30.oracles,
-      operators.TrainingData31.oracles, operators.TrainingData32.oracles,
-      operators.TrainingData33.oracles, operators.TrainingData34.oracles,
-      operators.TrainingData35.oracles, operators.TrainingData36.oracles,
-      operators.TrainingData37.oracles, operators.TrainingData38.oracles,
-      operators.TrainingData39.oracles, operators.TrainingData40.oracles,
-      operators.TrainingData41.oracles, operators.TrainingData42.oracles,
-      operators.TrainingData43.oracles, operators.TrainingData44.oracles,
-      operators.TrainingData45.oracles, operators.TrainingData46.oracles,
-      operators.TrainingData47.oracles, operators.TrainingData48.oracles,
-      operators.TrainingData49.oracles, operators.TrainingData50.oracles,
-      operators.TrainingData51.oracles, operators.TrainingData52.oracles,
-      operators.TrainingData53.oracles, operators.TrainingData54.oracles,
-      operators.TrainingData55.oracles, operators.TrainingData56.oracles,
-      operators.TrainingData57.oracles, operators.TrainingData58.oracles,
-      operators.TrainingData60.oracles, operators.TrainingData61.oracles,
-      operators.TrainingData62.oracles, operators.TrainingData63.oracles,
-      operators.TrainingData64.oracles, operators.TrainingData65.oracles,
-      operators.TrainingData66.oracles, operators.TrainingData67.oracles,
-      operators.TrainingData68.oracles, operators.TrainingData69.oracles,
-      operators.TrainingData70.oracles, operators.TrainingData71.oracles,
-      operators.TrainingData72.oracles, operators.TrainingData73.oracles,
-      operators.TrainingData74.oracles, operators.TrainingData75.oracles,
-      operators.TrainingData76.oracles, operators.TrainingData77.oracles,
-      operators.TrainingData78.oracles, operators.TrainingData79.oracles,
-      operators.TrainingData80.oracles, operators.TrainingData81.oracles,
-      operators.TrainingData82.oracles, operators.TrainingData83.oracles,
-      operators.TrainingData84.oracles, operators.TrainingData85.oracles,
-      operators.Tpch.oracles, operators.Tpch2.oracles)
+    modules.map(_.oracles)
 
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

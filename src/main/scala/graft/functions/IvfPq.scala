@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Grain
 
 /** IVF-PQ index build/search split out of the registered
-  * sim_ivf_pq_search operator (TrainingData4) so the SAME dataflow
+  * sim_ivf_pq_search operator (SimilarityQueries) so the SAME dataflow
   * serves both the in-query form and the persisted
   * build-once/search-many path (sources.AnnIndex): a real deployment
   * never rebuilds codebooks per query — it stores coarse centroids +
@@ -64,8 +64,11 @@ object IvfPq {
         assigned.limit(0).select(col("vec_id"), col("cell"),
           lit(0).as("m"), lit(0L).as("code"))
       else {
+        // coverage is all-or-nothing: subCode posexplodes every one of
+        // the m8 subspaces per seed vector, so a non-empty scByM holds
+        // every mm (an empty candidate list would not even analyze)
         val codeArr = array((0 until m8).map { mm =>
-          val cands = scByM.getOrElse(mm, Nil).map { case (scid, sc) =>
+          val cands = scByM(mm).map { case (scid, sc) =>
             struct(l2(subOf(col("r"), lit(mm), m8), array(sc.map(lit): _*))
               .as("sd"), lit(scid).as("scid"))
           }

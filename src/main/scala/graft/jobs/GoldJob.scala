@@ -1,8 +1,10 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sources.Sinks
 
 /** Gold analytics build (reference entry point C, SURVEY §3.3):
   * the two dbt models as DataFrame pipelines, fully recomputed and
@@ -61,9 +63,9 @@ object GoldJob {
   /** Materialize both gold tables, date-partitioned for pruning. */
   def run(silver: DataFrame, goldDir: String): Unit = {
     val stg = staging(silver)
-    dailySentiment(stg).write.mode(SaveMode.Overwrite)
-      .partitionBy("analysis_date").parquet(s"$goldDir/daily_sentiment_analysis")
-    dailyCategory(stg).write.mode(SaveMode.Overwrite)
-      .partitionBy("analysis_date").parquet(s"$goldDir/daily_category_analysis")
+    Sinks.materializeGold(dailySentiment(stg),
+      s"$goldDir/daily_sentiment_analysis", "analysis_date")
+    Sinks.materializeGold(dailyCategory(stg),
+      s"$goldDir/daily_category_analysis", "analysis_date")
   }
 }

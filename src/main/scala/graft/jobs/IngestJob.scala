@@ -1,9 +1,9 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Bronze ingestion (reference entry point A, SURVEY §3.1):
   * latest CSV → quality filter → URL normalization → dedup →
@@ -46,7 +46,7 @@ object IngestJob {
     val latest = Tables.latestFile(spark, rawDir)
       .getOrElse(throw new IllegalStateException(s"no csv under $rawDir"))
     val cleaned = clean(Tables.rawHeadlinesCsv(spark, latest))
-    cleaned.write.mode(SaveMode.Overwrite).parquet(bronzePath)
+    Sinks.overwrite(cleaned, bronzePath)
     spark.read.parquet(bronzePath).count()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SimHashAgg, TextFunctions => TF}
-import graft.sources.Tables
+import ColumnIdioms.docs
 
 /** Deduplication operators for training-data pipelines: exact,
   * token-Jaccard (inverted-index formulation), MinHash+LSH, SimHash.
@@ -16,8 +16,6 @@ import graft.sources.Tables
   * the O(n²)-within-bucket step only ever sees one bucket at a time.
   */
 object Dedup {
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.table(s, dir, "documents")
 
   /** Exact dedup summary over the md5 fingerprint (hash-groupBy). */
   def exactSummary(s: SparkSession, dir: String): DataFrame =
@@ -488,12 +486,13 @@ object Dedup {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      // neighbor minimum over both edge directions; the eager
-      // localCheckpoint both truncates lineage (an iterative plan
-      // otherwise doubles every round and analysis cost dominates)
-      // and materializes nbr ONCE before the convergence probe —
-      // the previous cache()-then-checkpoint form leaked one
-      // CacheManager entry per round
+      // neighbor minimum over both edge directions; the lazy
+      // localCheckpoint truncates lineage when called (an iterative
+      // plan otherwise doubles every round and analysis cost
+      // dominates), and its blocks are stored by the first job over
+      // nbr — the convergence probe, or the next round's join when
+      // the probe is skipped. The previous cache()-then-checkpoint
+      // form leaked one CacheManager entry per round
       val nbr = edges.join(labels, col("d1") === col("id"))
         .select(col("d2").as("id"), col("rep"))
         .union(edges.join(labels, col("d2") === col("id"))

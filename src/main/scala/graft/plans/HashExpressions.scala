@@ -24,10 +24,11 @@ import org.apache.spark.sql.types._
 case class MinHashSignature(child: Expression, k: Int)
     extends UnaryExpression {
   // VALUE NOTE: the classical form is ((h & 0xFFFFFFFF)·a_i + b_i)
-  // mod (2^61−1). With h masked to 32 bits, a_i = 2i+1000003 and
-  // b_i = 104729i+780291637, the dividend is < 2^52 + 2^30 for any
-  // k ≤ 2^26 — strictly below the Mersenne prime — so the modulo is
-  // the IDENTITY and is elided (a 64-bit division per (perm×shingle)
+  // mod (2^61−1). With h masked to 32 bits (h < 2^32), a_i =
+  // 2i+1000003 < 2^27 + 2^20 and b_i = 104729i+780291637 < 2^43 for
+  // any k ≤ 2^26, the dividend is < 2^59 + 2^52 + 2^43, about 2^59 —
+  // strictly below the Mersenne prime — so the modulo is the
+  // IDENTITY and is elided (a 64-bit division per (perm×shingle)
   // for nothing; measured ~35% of the kernel). The loops are also
   // interchanged (hash outer, permutation inner) so each input hash
   // is read and masked once instead of k times; min per permutation

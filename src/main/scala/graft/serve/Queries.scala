@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.jobs.GoldJob
+import graft.operators.ColumnIdioms.d
 import graft.operators.Grain
 import graft.sources.HeadlineData
 import graft.sources.HeadlineData.{SQL => H, Today}
@@ -18,13 +19,12 @@ import graft.sources.HeadlineData.{SQL => H, Today}
   * integer cents for confidence) — bit-identical in Spark & DuckDB.
   * Every query has a total ORDER BY so row order is deterministic.
   */
-object Queries {
-  private type Q = (SparkSession, String) => DataFrame
+object Queries extends graft.QueryModule {
+  val prefixes: Seq[String] = Nil
   private def silver(s: SparkSession, dir: String): DataFrame =
     HeadlineData.silverCached(s, dir)
   private def stg(s: SparkSession, dir: String): DataFrame =
     GoldJob.staging(silver(s, dir))
-  private def d(c: Column): Column = c.cast("double")
   /** Exact integer cents for 2-decimal confidence values. */
   private def cents(c: Column): Column =
     round(c * 100, 0).cast("long")

@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.model.Schemas
 
@@ -22,25 +25,43 @@ object Tables {
     * (a logical plan): every action still scans the parquet input —
     * no rows are cached, nothing is precomputed.
     *
-    * Lifetime: the outer map is WEAK-keyed by session, so a stopped
-    * and dereferenced SparkSession's plans are GC-eligible instead of
-    * pinned for the process lifetime. Staleness caveat: regenerating
-    * the parquet at the SAME path in-process serves the old schema —
-    * call [[invalidate]] after rewriting testdata in place. */
-  private val memo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
+    * Lifetime: the outer map is keyed by the session's UUID, a
+    * String the cached plans do not reference. Every cached
+    * DataFrame holds its session, so a map keyed by the session
+    * itself could never release an entry, weak keys or not. Instead,
+    * the first plan memoized for an application registers a listener
+    * on its SparkContext that drops all of that application's
+    * sessions when the application ends. Staleness caveat:
+    * regenerating the parquet at the SAME path in-process serves the
+    * old schema — call [[invalidate]] after rewriting testdata in
+    * place. */
+  private final class Plans(val appId: String) {
+    val byTable =
+      new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  }
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[String, Plans]()
+  /** Applications whose end already evicts their sessions' plans. */
+  private val watched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    memo.computeIfAbsent(spark, _ =>
-        new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-      .computeIfAbsent((sfDir, name), _ =>
+    memo.computeIfAbsent(SessionBridge.uuid(spark), _ => plansFor(spark.sparkContext))
+      .byTable.computeIfAbsent((sfDir, name), _ =>
         if (name == "events") events(spark, sfDir)
         else spark.read.parquet(s"$sfDir/$name.parquet"))
 
+  private def plansFor(sc: SparkContext): Plans = {
+    val app = sc.applicationId
+    if (watched.add(app)) sc.addSparkListener(new SparkListener {
+      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+        memo.values.removeIf(_.appId == app)
+    })
+    new Plans(app)
+  }
+
   /** Drop memoized plans (all sessions) — for in-process testdata
     * regeneration at an already-memoized path. */
-  def invalidate(): Unit = memo.synchronized { memo.clear() }
+  def invalidate(): Unit = memo.clear()
 
   /** events.parquet's `ts` encoding has shifted across testdata
     * generations; normalize every variant to TIMESTAMP (LTZ, session

@@ -24,7 +24,7 @@ object EventStreams {
     StructField("props", StringType)))
 
   /** Tumbling 1-day counts/sums per event_type — the streaming twin
-    * of Relational.evTumblingDaily (equivalence is ScalaTest-checked
+    * of EventQueries.evTumblingDaily (equivalence is ScalaTest-checked
     * via the memory sink). Watermark bounds state at scale.
     */
   def tumblingDailyAgg(events: DataFrame): DataFrame =
@@ -37,7 +37,7 @@ object EventStreams {
 
   /** Hopping (sliding) twin: 2-day windows advancing 1 day — same
     * watermark/state mechanics as the tumbling agg, each event in
-    * exactly two windows (batch twin: Relational.evHoppingDaily).
+    * exactly two windows (batch twin: EventQueries.evHoppingDaily).
     */
   def hoppingDailyAgg(events: DataFrame): DataFrame =
     events
@@ -131,7 +131,7 @@ object EventStreams {
       end_micros: Long, n_events: Int)
 
   /** Streaming twin of the batch +1/−1 peak-concurrency sweep
-    * (operators.TrainingData4.evPeakConcurrency — the live
+    * (operators.EventQueries.evPeakConcurrency — the live
     * "peak concurrent sessions today" ops metric). The batch op is a
     * GLOBAL cumulative sweep, so a day's peak counts intervals opened
     * late the previous day; a per-day-keyed streaming state cannot
@@ -193,7 +193,7 @@ object EventStreams {
     * to it, so downstream per-day state is one counter per occupied
     * grid instant (default 1 s ⇒ ≤86,400/day). `quantUs = 1` recovers
     * the exact-µs semantics of the registered batch operator
-    * (TrainingData4.evPeakConcurrency on raw timestamps) at the cost
+    * (EventQueries.evPeakConcurrency on raw timestamps) at the cost
     * of state linear in a hot day's distinct event instants. The grid
     * must divide the day so flooring never moves an event across
     * midnight, and must divide the window so closes land on-grid. */
@@ -334,7 +334,7 @@ object EventStreams {
   }
 
   /** Streaming twin of the batch first/last-touch attribution
-    * (operators.TrainingData6.evAttribution): per user, the state is
+    * (operators.EventQueries.evAttribution): per user, the state is
     * exactly TWO channel strings (first and most recent non-purchase
     * event type) — O(1) per user, the 100 TB-safe shape; each
     * purchase is emitted with the channels credited at that instant.
@@ -381,7 +381,7 @@ object EventStreams {
   final case class SprtVerdict(day: java.sql.Date, cum_n: Long,
     cum_conv: Long, llr: Double, decision: String)
 
-  /** Streaming twin of TrainingData16.aSprtMonitor: Wald's SPRT
+  /** Streaming twin of AnalyticsQueries.aSprtMonitor: Wald's SPRT
     * (H₀ p=0.18 vs H₁ p=0.22, α = β = 0.05) folded over a stream of
     * per-day (n, conversions) aggregates as they land. State is ONE
     * (cumN, cumConv) pair under a single monitor key — a sequential
@@ -428,7 +428,7 @@ object EventStreams {
   final case class MomentRow(month: java.sql.Date, n_orders: Long,
     mean_price: Double, var_price: Double)
 
-  /** Streaming twin of TrainingData20.aVarMerge: per-month running
+  /** Streaming twin of AnalyticsQueries.aVarMerge: per-month running
     * mean/variance maintained by MERGING algebraic partial states
     * (n, Σcents, Σcents²) as per-day partials land — the
     * incremental-view-maintenance loop the batch op audits, run
@@ -473,7 +473,7 @@ object EventStreams {
   final case class TwapRow(user_id: Long, n_events: Long, span_us: Long,
     twap: Double)
 
-  /** Streaming twin of TrainingData29.wTwap: per-user time-weighted
+  /** Streaming twin of WindowQueries.wTwap: per-user time-weighted
     * average maintained live — each arriving event closes the held
     * interval [lastTs, ts) and folds value·duration into the running
     * numerator IN EVENT ORDER, the exact fold order of the batch
@@ -549,7 +549,7 @@ object EventStreams {
   final case class LatenessRow(user_id: Long, event_id: Long,
     bucket_rank: Int, late_us: Long)
 
-  /** Streaming twin of TrainingData20.evWatermarkLateness: per-user
+  /** Streaming twin of EventQueries.evWatermarkLateness: per-user
     * high-watermark state (one long per user) folded over events in
     * arrival order, each event emitting its lateness bucket against
     * the max event time of everything that arrived before it. This
@@ -589,7 +589,7 @@ object EventStreams {
   final case class CmItem(grp: String, cell: Int)
   final case class CmSketch(grp: String, cells: Seq[Long], n_items: Long)
 
-  /** Streaming twin of the count-min build (TrainingData3.aCountMin's
+  /** Streaming twin of the count-min build (AnalyticsQueries.aCountMin's
     * sketch stage): per-group state is the depth×width cell array
     * plus the item count. The sketch is LINEAR — cells ADD under any
     * split of the stream into triggers — so the final state is
@@ -628,7 +628,7 @@ object EventStreams {
   final case class HllEstimate(grp: String, estimate: Double,
     n_zero_registers: Long)
 
-  /** Streaming twin of TrainingData21.aHllRegisters' direct sketch:
+  /** Streaming twin of AnalyticsQueries.aHllRegisters' direct sketch:
     * per-group state is the 64-register max array. Register max is a
     * semilattice merge, so ANY trigger split converges to the
     * identical register state — the "1000 executors sketch
@@ -670,7 +670,7 @@ object EventStreams {
   final case class ActivityEvent(user_id: Long, epochDay: Long, event_id: Long)
   final case class GrowthDelta(epoch_day: Long, category: String, n: Long)
 
-  /** Streaming twin of TrainingData40.evGrowthAccounting: per-user
+  /** Streaming twin of EventQueries.evGrowthAccounting: per-user
     * state is the last activity day (one long). Each first-of-day
     * arrival emits its class — `new` (never seen), `retained`
     * (active the previous day), `resurrected` (returning after a
@@ -679,7 +679,7 @@ object EventStreams {
     * since a later activity day exists). Trailing churn — silence
     * after a user's LAST observed day — is a stream-END notion: the
     * batch op charges it at lastDay+1, dropped when that falls past
-    * max(day) (TrainingData40.evGrowthAccounting), while live it
+    * max(day) (EventQueries.evGrowthAccounting), while live it
     * belongs to a day-close timer (the peakPerDay timeout pattern);
     * the StreamingSpec pin adds those batch-side final-day churns
     * before comparing ledgers, which are exact otherwise. Same

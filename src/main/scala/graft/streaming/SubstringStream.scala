@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming twin of the exact-substring detector
-  * (operators.TrainingData54.exactSubstringOf): documents arrive
+  * (operators.DedupQueries.exactSubstringOf): documents arrive
   * continuously; each micro-batch merges its L-token anchor grams
   * into a growing postings index, meets the merged index on the
   * gram key, and runs the same diagonal gaps-and-islands span

@@ -61,24 +61,24 @@ object ScaleProbe {
     // planted verbatim span now exists in N× docs, so anchor postings
     // fan out N× per gram while the df-cap (64) bounds the pair work
     timed("exact_substring")(
-      graft.operators.TrainingData54.queries("dedup_exact_substring")(
+      graft.operators.DedupQueries.queries("dedup_exact_substring")(
         spark, dir).count())
     timed("substring_scrub")(
-      graft.operators.TrainingData55.queries("dedup_substring_scrub")(
+      graft.operators.DedupQueries.queries("dedup_substring_scrub")(
         spark, dir).count())
     // the two-tier family at the PRODUCTION cap: at ≥65× duplication
     // every original df≥1 gram exceeds SubstrMaxDf=64, so the high-df
     // tier carries the entire load — the shape the round-10 audit
     // flagged as the silent-recall hole. Work must stay linear in
     // occurrences (no pairing above the cap).
-    import graft.operators.TrainingData63
+    import graft.operators.DedupQueries
     val docsDf = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val (substrL, substrMaxDf) = (10, 64) // TrainingData54 production values
+    val (substrL, substrMaxDf) = (10, 64) // DedupQueries production values
     timed("substring_highdf")(
-      TrainingData63.highDfIslandsOf(docsDf, substrL, substrMaxDf).count())
+      DedupQueries.highDfIslandsOf(docsDf, substrL, substrMaxDf).count())
     timed("substring_full_scrub")(
-      TrainingData63.fullSubstringScrubOf(docsDf, substrL, substrMaxDf)
+      DedupQueries.fullSubstringScrubOf(docsDf, substrL, substrMaxDf)
         .count())
     spark.stop()
   }

@@ -36,7 +36,7 @@ class AnnIndexSpec extends SparkTestBase {
     AnnIndex.buildIvfPq(spark, sf, s"$dir/pq")
     val once = AnnIndex.searchIvfPq(spark, s"$dir/pq", emb(10))
       .collect().map(_.toSeq).toSeq
-    val inQuery = graft.operators.TrainingData4
+    val inQuery = SparkEntry
       .queries("sim_ivf_pq_search")(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(once.nonEmpty && once == inQuery)
@@ -75,7 +75,7 @@ class AnnIndexSpec extends SparkTestBase {
     val p1 = AnnIndex.ivfIndexFor(spark, sf)
     val p2 = AnnIndex.ivfIndexFor(spark, sf)
     assert(p1 == p2)
-    val out = graft.operators.TrainingData64
+    val out = SparkEntry
       .queries("sim_ivf_persisted")(spark, sf).collect()
     assert(out.length == 50) // 10 queries × k=5
   }

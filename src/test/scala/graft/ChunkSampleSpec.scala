@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingData
 
 /** Invariants for the round-5 corpus operators: chunk-with-overlap
   * coverage, priority-sampling determinism/subset consistency, and
@@ -18,7 +17,7 @@ class ChunkSampleSpec extends SparkTestBase {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
         size(graft.functions.TextFunctions.tokens(col("text"))).as("n"))
-    val chunks = TrainingData.tChunkOverlap(spark, sf)
+    val chunks = SparkEntry.queries("t_chunk_overlap")(spark, sf)
     val agg = chunks.groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"), max("chunk_index").as("last_idx"),
         expr("max_by(n_chunk_tokens, chunk_index)").as("last_w"),
@@ -43,9 +42,9 @@ class ChunkSampleSpec extends SparkTestBase {
   }
 
   test("priority sample is deterministic and subset-consistent") {
-    val s1 = TrainingData.tWeightedSample(spark, sf)
+    val s1 = SparkEntry.queries("t_weighted_sample")(spark, sf)
       .select("doc_id").as[Long].collect().toSeq
-    val s2 = TrainingData.tWeightedSample(spark, sf)
+    val s2 = SparkEntry.queries("t_weighted_sample")(spark, sf)
       .select("doc_id").as[Long].collect().toSeq
     assert(s1 == s2, "sample not rerun-stable")
     assert(s1.size == math.min(100,
@@ -54,14 +53,14 @@ class ChunkSampleSpec extends SparkTestBase {
     // the corpus mean (statistical, but deterministic given the data)
     val corpusMean = spark.read.parquet(s"$sf/documents.parquet")
       .agg(avg("n_chars")).head().getDouble(0)
-    val sampleMean = TrainingData.tWeightedSample(spark, sf)
+    val sampleMean = SparkEntry.queries("t_weighted_sample")(spark, sf)
       .agg(avg("weight")).head().getDouble(0)
     assert(sampleMean > corpusMean,
       s"weighted sample mean $sampleMean not above corpus mean $corpusMean")
   }
 
   test("epoch planner: budget arithmetic replayed, bounds hold, rerun-stable") {
-    val rows = TrainingData.tSourceEpochs(spark, sf)
+    val rows = SparkEntry.queries("t_source_epochs")(spark, sf)
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(rows.nonEmpty)
     val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
@@ -79,13 +78,13 @@ class ChunkSampleSpec extends SparkTestBase {
         s"$src: emitted $emitted outside epoch bounds")
       assert((nUp == 0) == (idSum == 0))
     }
-    val again = TrainingData.tSourceEpochs(spark, sf)
+    val again = SparkEntry.queries("t_source_epochs")(spark, sf)
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(rows == again, "epoch plan not rerun-stable")
   }
 
   test("training order: epoch accounting, shard routing, rerun-stable fingerprints") {
-    val rows = TrainingData.oTrainingOrder(spark, sf)
+    val rows = SparkEntry.queries("o_training_order")(spark, sf)
       .as[(Int, Long, Long, String)].collect().toSeq
     assert(rows.map(_._1).toSet.subsetOf((0 until 16).toSet))
     // total items = Σ per-doc epoch counts (w = 1 + src# % 4)
@@ -97,14 +96,14 @@ class ChunkSampleSpec extends SparkTestBase {
     val counts = rows.map(_._2)
     assert(counts.max <= 3 * (expected / 16).max(1L),
       s"shard imbalance: ${counts.mkString(",")}")
-    val again = TrainingData.oTrainingOrder(spark, sf)
+    val again = SparkEntry.queries("o_training_order")(spark, sf)
       .as[(Int, Long, Long, String)].collect().toSeq
     assert(rows == again, "training order not rerun-stable")
   }
 
   test("resolve-best survivor is the longest member, min-id on ties") {
-    val resolved = TrainingData.dedupResolveBest(spark, sf)
-    val groups = TrainingData.dedupGroups(spark, sf)
+    val resolved = SparkEntry.queries("dedup_resolve_best")(spark, sf)
+    val groups = SparkEntry.queries("dedup_groups")(spark, sf)
     assert(resolved.count() == groups.count(),
       "one survivor per dup group")
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -134,7 +134,7 @@ class DedupSpec extends SparkTestBase {
     // oracle checks per-pair engine agreement; THIS pins that a
     // correct 64-perm family keeps ~4σ coverage (a broken family
     // collapses to ~0%), tolerating the rare legitimate outlier
-    val rows = graft.operators.TrainingData.dedupMinhashEst(spark, sf)
+    val rows = SparkEntry.queries("dedup_minhash_est")(spark, sf)
       .select(col("est_within_025")).collect().map(_.getBoolean(0))
     assert(rows.nonEmpty)
     val within = rows.count(identity).toDouble / rows.length

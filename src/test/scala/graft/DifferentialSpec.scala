@@ -137,7 +137,7 @@ class DifferentialSpec extends SparkTestBase {
     val shorts = (0 until 20).map(i =>
       (5000L + i, s"l${i % 2}", "s0", randStr(2 + rnd.nextInt(10)))) // incl. len < q
     val df = (base0 ++ planted ++ shorts).toDF("doc_id", "lang", "source", "prefix")
-    val fast = graft.operators.TrainingData.editDistancePairsOf(df)
+    val fast = graft.operators.DedupQueries.editDistancePairsOf(df)
       .select("d1", "d2", "edit_dist").collect().toSet
     val a = df.alias("a"); val b = df.alias("b")
     val naive = a.join(b, col("a.lang") === col("b.lang") &&
@@ -159,7 +159,7 @@ class DifferentialSpec extends SparkTestBase {
         (9001L, "l0", "s0", null.asInstanceOf[String]),
         (9002L, "l0", "s0", null.asInstanceOf[String]))
       .toDF("doc_id", "lang", "source", "prefix"))
-    val fastN = graft.operators.TrainingData.editDistancePairsOf(withNulls)
+    val fastN = graft.operators.DedupQueries.editDistancePairsOf(withNulls)
       .filter(col("d1") >= 9000L || col("d2") >= 9000L).count()
     assert(fastN == 0L, "null prefixes must produce no pairs")
   }
@@ -309,7 +309,7 @@ class DifferentialSpec extends SparkTestBase {
 
     // hybrid entry point — at this size it takes the driver
     // union-find path
-    val got = graft.operators.TrainingData3.gComponents(spark, dir)
+    val got = SparkEntry.queries("g_components")(spark, dir)
       .select("component", "n_members", "max_member")
       .as[(Long, Long, Long)].collect().toSet
     // threshold 0 forces the distributed min-label+halving loop over
@@ -317,7 +317,7 @@ class DifferentialSpec extends SparkTestBase {
     // union-find below
     val pairsDf = graft.functions.Similarity
       .cosineNearDupPairs(spark, dir, 0.3).select($"v1", $"v2")
-    val gotDistributed = graft.operators.TrainingData3
+    val gotDistributed = graft.operators.GraphQueries
       .gComponentsImpl(pairsDf, localEdgeThreshold = 0L)
       .select("component", "n_members", "max_member")
       .as[(Long, Long, Long)].collect().toSet

@@ -57,10 +57,12 @@ class GuardrailSpec extends AnyFunSuite {
     val allowed = Map(
       "Ranking.scala" -> 3,        // P carry rows per range partition
       "Dedup.scala" -> 1,          // union-find arm, <=5M edges thresholded
-      "TrainingData3.scala" -> 1,  // dup-group union-find, same threshold
-      "TrainingData44.scala" -> 1, // encoding-advisor carries, 4096 cap
-      "TrainingData56.scala" -> 1, // one-row logistic fit coefficients
-      "TrainingData84.scala" -> 3, // k-center driver-stepped 1-row steps
+      "GraphQueries.scala" -> 3,   // dup-group union-find, same threshold;
+                                   // HITS edges + 40 top terms
+      "OpsQueries.scala" -> 1,     // encoding-advisor carries, 4096 cap
+      "TextQueries.scala" -> 1,    // one-row logistic fit coefficients
+      "SimilarityQueries.scala" -> 3, // k-center driver-stepped 1-row steps
+      "EventQueries.scala" -> 1,   // <=|event_types|^2 transition chain
       "Reports.scala" -> 1,        // validation summary, report-sized
       "Sinks.scala" -> 1,          // batch's distinct partition values
       "Bench.scala" -> 1,          // benchmark main, driver tool
@@ -68,9 +70,7 @@ class GuardrailSpec extends AnyFunSuite {
       // round-13 optimization seams — every one constant-bounded:
       "Selection.scala" -> 2,      // 1-row stats + <=nBuckets counts/pass
       "Similarity.scala" -> 1,     // collectCodebook: <=nCells (cid, ce)
-      "IvfPq.scala" -> 2,          // coarse codebook + m8*nCells sub-codes
-      "TrainingData32.scala" -> 3  // <=|event_types|^2 chain + top-40^2
-                                   // HITS edges + 40 top terms
+      "IvfPq.scala" -> 2           // coarse codebook + m8*nCells sub-codes
     )
     found.foreach { case (f, n) =>
       assert(allowed.getOrElse(f, 0) >= n,

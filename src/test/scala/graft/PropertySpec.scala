@@ -147,7 +147,7 @@ class PropertySpec extends SparkTestBase {
         .toDF("doc_id", "text")
       val expect = naive(docs)
       Seq(2, 999).foreach { cap =>
-        val got = graft.operators.TrainingData63
+        val got = graft.operators.DedupQueries
           .fullSubstringScrubOf(df, l, cap).collect()
           .map(r => r.getAs[Long]("doc_id") ->
             (r.getAs[Long]("n_tokens"), r.getAs[Long]("tokens_removed"),
@@ -184,7 +184,7 @@ class PropertySpec extends SparkTestBase {
     val docs = samples(docGen, 120).zipWithIndex
       .map { case (t, i) => (i.toLong, if (i % 2 == 0) "aa" else "bb", t) }
     val df = docs.toDF("doc_id", "lang", "text")
-    val out = graft.operators.TrainingData69.mattrOf(df)
+    val out = graft.operators.TextQueries.mattrOf(df)
       .collect().map(r => r.getString(0) -> r).toMap
     Seq("aa", "bb").foreach { lang =>
       val ds = docs.filter(_._2 == lang).sortBy(_._1)

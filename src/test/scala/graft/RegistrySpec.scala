@@ -34,4 +34,32 @@ class RegistrySpec extends AnyFunSuite {
     assert((o -- q).isEmpty, s"oracles without queries: ${(o -- q).mkString(", ")}")
   }
 
+  test("the registry holds all 458 queries") {
+    // a module dropped from SparkEntry.modules would silently take
+    // its queries with it; only the total notices
+    assert(SparkEntry.queries.size == 458)
+  }
+
+  test("every module key carries one of that module's prefixes") {
+    // serve.Queries keeps the reference's own query ids (a1_, q2_, ...)
+    // and declares no family prefix; every operator module does
+    val (reference, families) = SparkEntry.modules.partition(_ eq serve.Queries)
+    assert(reference.size == 1 && reference.head.prefixes.isEmpty)
+    families.foreach { m =>
+      assert(m.prefixes.nonEmpty, s"${m.getClass.getSimpleName} declares no prefix")
+      val stray = m.queries.keys.filterNot(k => m.prefixes.exists(k.startsWith))
+      assert(stray.isEmpty,
+        s"${m.getClass.getSimpleName} holds keys outside ${m.prefixes}: ${stray.mkString(", ")}")
+    }
+  }
+
+  test("no prefix is declared by two modules or claims another module's key") {
+    val families = SparkEntry.modules.filter(_.prefixes.nonEmpty)
+    val declared = families.flatMap(_.prefixes)
+    assert(declared.distinct.size == declared.size,
+      s"prefixes declared twice: ${declared.diff(declared.distinct).mkString(", ")}")
+    for (m <- families; o <- families if !(o eq m); k <- o.queries.keys)
+      assert(!m.prefixes.exists(k.startsWith),
+        s"key '$k' of ${o.getClass.getSimpleName} carries a prefix of ${m.getClass.getSimpleName}")
+  }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.Relational
 import graft.sources.Tables
 import graft.streaming.EventStreams
 
@@ -24,7 +23,7 @@ class StreamingSpec extends SparkTestBase {
     val streamed = spark.table("ev_stream_test")
       .select(col("day"), col("event_type"), col("n"))
       .orderBy("day", "event_type").collect().toSeq
-    val batch = Relational.evTumblingDaily(spark, sf)
+    val batch = SparkEntry.queries("ev_tumbling_daily")(spark, sf)
       .select(col("day"), col("event_type"), col("n"))
       .orderBy("day", "event_type").collect().toSeq
     assert(streamed == batch)
@@ -41,7 +40,7 @@ class StreamingSpec extends SparkTestBase {
     val streamed = spark.table("ev_hop_stream_test")
       .select(col("win_start"), col("event_type"), col("n"))
       .orderBy("win_start", "event_type").collect().toSeq
-    val batch = Relational.evHoppingDaily(spark, sf)
+    val batch = SparkEntry.queries("ev_hopping_daily")(spark, sf)
       .select(col("win_start"), col("event_type"), col("n"))
       .orderBy("win_start", "event_type").collect().toSeq
     assert(streamed == batch)
@@ -63,7 +62,7 @@ class StreamingSpec extends SparkTestBase {
     val appended = spark.table("ev_append_test")
       .select(col("day"), col("event_type"), col("n"))
       .orderBy("day", "event_type").collect().toSeq
-    val closedBatch = Relational.evTumblingDaily(spark, sf)
+    val closedBatch = SparkEntry.queries("ev_tumbling_daily")(spark, sf)
       .filter((unix_millis(col("day")) + lit(24L * 3600 * 1000)) <= horizon)
       .select(col("day"), col("event_type"), col("n"))
       .orderBy("day", "event_type").collect().toSeq
@@ -248,7 +247,7 @@ class StreamingSpec extends SparkTestBase {
         sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_caught"))
       .orderBy(col("bucket")).collect()
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2))).toSeq
-    val batchCurve = operators.TrainingData53.dedupLshRecallCurve(spark, sf)
+    val batchCurve = SparkEntry.queries("dedup_lsh_recall_curve")(spark, sf)
       .select(col("bucket"), col("n_pairs"), col("n_caught"))
       .orderBy(col("bucket")).collect()
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2))).toSeq
@@ -273,7 +272,7 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSet
     // the df-cap is a whole-corpus statistic (periodic recompute in
     // production) — the streaming twin is the UNCAPPED detector
-    val batch = operators.TrainingData54
+    val batch = operators.DedupQueries
       .exactSubstringOf(docs.select(col("doc_id"), col("text")),
         10, Int.MaxValue)
       .collect().map(_.toSeq).toSet
@@ -377,13 +376,13 @@ class StreamingSpec extends SparkTestBase {
         max("n_opens").as("n_opens"))
       .select(col("day").cast("string"), col("peak_active"), col("n_opens"))
       .orderBy("day").collect().toSeq
-    val batch = graft.operators.TrainingData4.evPeakConcurrency(spark, truncDir)
+    val batch = SparkEntry.queries("ev_peak_concurrency")(spark, truncDir)
       .select(col("day").cast("string"), col("peak_active"), col("n_opens"))
       .orderBy("day").collect().toSeq
     assert(streamed.nonEmpty && streamed == batch)
     // the grid matters on µs data: at least one day's raw-µs peak may
     // differ, but opens never do (quantization moves, never drops)
-    val rawBatch = graft.operators.TrainingData4.evPeakConcurrency(spark, sf)
+    val rawBatch = SparkEntry.queries("ev_peak_concurrency")(spark, sf)
       .select(col("day").cast("string"), col("n_opens"))
       .orderBy("day").collect().toSeq
     assert(streamed.map(r => (r.getString(0), r.getLong(2))) ==
@@ -403,7 +402,7 @@ class StreamingSpec extends SparkTestBase {
       .select(col("event_id"), to_timestamp(col("tss")).as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
       .write.parquet(s"$dir/events.parquet")
-    val batch = graft.operators.TrainingData4.evPeakConcurrency(spark, dir)
+    val batch = SparkEntry.queries("ev_peak_concurrency")(spark, dir)
       .select(col("day").cast("string"), col("peak_active"), col("n_opens"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(batch.contains(("2024-03-02", 3L, 2L)),
@@ -522,7 +521,7 @@ class StreamingSpec extends SparkTestBase {
     q.stop()
     val streamed = spark.table("attr_test")
 
-    val batch = graft.operators.TrainingData6
+    val batch = SparkEntry
       .queries("ev_attribution")(spark, sf).collect()
     def agg(channelCol: String): Map[String, (Long, Double)] =
       streamed.groupBy(col(channelCol).as("channel"))
@@ -571,7 +570,7 @@ class StreamingSpec extends SparkTestBase {
       .map(r => r.getAs[java.sql.Date]("day").toString ->
         (r.getAs[Long]("cum_n"), r.getAs[Long]("cum_conv"),
           r.getAs[Double]("llr"), r.getAs[String]("decision"))).toMap
-    val batch = graft.operators.TrainingData16
+    val batch = SparkEntry
       .queries("a_sprt_monitor")(spark, sf).collect()
     assert(batch.length == streamed.size && batch.nonEmpty)
     batch.foreach { r =>
@@ -619,7 +618,7 @@ class StreamingSpec extends SparkTestBase {
       .map(r => r.getAs[java.sql.Date]("month").toString ->
         (r.getAs[Long]("n_orders"), r.getAs[Double]("mean_price"),
           r.getAs[Double]("var_price"))).toMap
-    val batch = graft.operators.TrainingData20
+    val batch = SparkEntry
       .queries("a_var_merge")(spark, sf).collect()
     assert(batch.length == streamed.size && batch.nonEmpty)
     batch.foreach { r =>
@@ -659,7 +658,7 @@ class StreamingSpec extends SparkTestBase {
       .collect()
       .map(r => r.getAs[Int]("bucket_rank") ->
         (r.getAs[Long]("n_events"), r.getAs[Long]("max_late_us"))).toMap
-    val batch = graft.operators.TrainingData20
+    val batch = SparkEntry
       .queries("ev_watermark_lateness")(spark, sf).collect()
     assert(batch.map(_.getAs[Long]("n_events")).sum ==
       streamed.values.map(_._1).sum)
@@ -705,7 +704,7 @@ class StreamingSpec extends SparkTestBase {
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_events"), r.getAs[Long]("span_us"),
           r.getAs[Double]("twap"))).toMap
-    val batch = graft.operators.TrainingData29
+    val batch = SparkEntry
       .queries("w_twap")(spark, sf).collect()
     assert(batch.length == streamed.size && batch.nonEmpty)
     batch.foreach { r =>
@@ -762,7 +761,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // the SAME hash decomposition the batch op sketches
-    val items = graft.operators.TrainingData21.hllBase(spark, sf)
+    val items = graft.operators.AnalyticsQueries.hllBase(spark, sf)
       .select(col("grp"), col("reg"), col("rnk")).collect()
       .map(r => EventStreams.HllItem(r.getString(0), r.getInt(1), r.getInt(2)))
     val mem = MemoryStream[EventStreams.HllItem]
@@ -790,7 +789,7 @@ class StreamingSpec extends SparkTestBase {
         r.getAs[String]("grp") -> (r.getAs[Double]("estimate"),
           r.getAs[Long]("n_zero_registers"))
       }.toMap
-    val batch = graft.operators.TrainingData21
+    val batch = SparkEntry
       .queries("a_hll_registers")(spark, sf).collect()
     assert(batch.length == streamed.size && batch.nonEmpty)
     batch.foreach { r =>
@@ -872,7 +871,7 @@ class StreamingSpec extends SparkTestBase {
     val maxDay = act.map(_._2).max
     val trailing = byUser.toSeq.filter(_ < maxDay).groupBy(_ + 1)
       .map { case (d, xs) => d -> xs.size.toLong }
-    val batch = graft.operators.TrainingData40
+    val batch = SparkEntry
       .queries("ev_growth_accounting")(spark, sf).collect()
     assert(batch.nonEmpty)
     batch.foreach { r =>

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData10
 
 /** Invariant pins for the round-9 batch-6 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData10Spec extends SparkTestBase {
 
   test("theil-sen: pair count exact, slope between pairwise extremes") {
-    val r = TrainingData10.queries("w_theil_sen")(spark, sf).collect()
+    val r = SparkEntry.queries("w_theil_sen")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val n = row.getAs[Long]("n_days")
@@ -30,7 +29,7 @@ class TrainingData10Spec extends SparkTestBase {
   }
 
   test("equi-height histogram: balanced buckets, ordered disjoint bounds") {
-    val out = TrainingData10.queries("o_histogram_equiheight")(spark, sf)
+    val out = SparkEntry.queries("o_histogram_equiheight")(spark, sf)
       .collect()
     assert(out.map(_.getAs[Int]("bucket")).toSeq == (1 to 10))
     val n = graft.sources.Tables.table(spark, sf, "lineitem").count()
@@ -50,7 +49,7 @@ class TrainingData10Spec extends SparkTestBase {
   }
 
   test("fleiss kappa: probabilities bounded, kappa below perfect agreement") {
-    val r = TrainingData10.queries("a_fleiss_kappa")(spark, sf).collect()
+    val r = SparkEntry.queries("a_fleiss_kappa")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val pg = row.getAs[Double]("p_good"); val pb = row.getAs[Double]("p_bar")
@@ -65,7 +64,7 @@ class TrainingData10Spec extends SparkTestBase {
   }
 
   test("multiset set ops: bag identities hold per key") {
-    val out = TrainingData10.queries("set_ops_all_multiset")(spark, sf)
+    val out = SparkEntry.queries("set_ops_all_multiset")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     // recompute multiplicities: |A cap B| = min(a, b), |A \\ B| = max(a-b, 0)

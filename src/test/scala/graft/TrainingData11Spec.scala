@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData11
 import graft.functions.{TextFunctions => TF}
 
 /** Invariant pins for the round-9 batch-8 operators (contract
@@ -9,7 +8,7 @@ import graft.functions.{TextFunctions => TF}
 class TrainingData11Spec extends SparkTestBase {
 
   test("roc auc: matches the brute-force pairwise AUC exactly") {
-    val r = TrainingData11.queries("t_roc_auc")(spark, sf).collect()
+    val r = SparkEntry.queries("t_roc_auc")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val auc = row.getAs[Double]("auc")
@@ -41,7 +40,7 @@ class TrainingData11Spec extends SparkTestBase {
   }
 
   test("mutual info: information inequalities hold") {
-    val r = TrainingData11.queries("a_mutual_info")(spark, sf).collect()
+    val r = SparkEntry.queries("a_mutual_info")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val mi = row.getAs[Double]("mi_nats")
@@ -57,7 +56,7 @@ class TrainingData11Spec extends SparkTestBase {
   }
 
   test("good-turing: class shares + unseen mass form a probability budget") {
-    val out = TrainingData11.queries("t_good_turing")(spark, sf).collect()
+    val out = SparkEntry.queries("t_good_turing")(spark, sf).collect()
     assert(out.nonEmpty && out.map(_.getAs[Long]("r")).toSeq.sorted ==
       out.map(_.getAs[Long]("r")).toSeq, "ordered by r")
     val tokens = graft.sources.Tables.table(spark, sf, "documents")

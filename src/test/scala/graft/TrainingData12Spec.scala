@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData12
 import graft.functions.{TextFunctions => TF}
 
 /** Invariant pins for the round-9 batch-9 operators (contract
@@ -9,7 +8,7 @@ import graft.functions.{TextFunctions => TF}
 class TrainingData12Spec extends SparkTestBase {
 
   test("mad outliers: histogram median matches the driver-side sort") {
-    val out = TrainingData12.queries("a_mad_outliers")(spark, sf).collect()
+    val out = SparkEntry.queries("a_mad_outliers")(spark, sf).collect()
     assert(out.nonEmpty)
     val total = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == total,
@@ -38,7 +37,7 @@ class TrainingData12Spec extends SparkTestBase {
   }
 
   test("quota allocation: sums to the budget, within one of exact quota") {
-    val out = TrainingData12.queries("o_quota_allocation")(spark, sf).collect()
+    val out = SparkEntry.queries("o_quota_allocation")(spark, sf).collect()
     val total = out.map(_.getAs[Long]("n_docs")).sum
     assert(out.map(_.getAs[Long]("allocated")).sum == 1000L,
       "largest-remainder allocations sum exactly to the budget")
@@ -53,7 +52,7 @@ class TrainingData12Spec extends SparkTestBase {
   }
 
   test("binary hamming recall: ten queries, consistent bounded metrics") {
-    val out = TrainingData12.queries("e_binary_hamming_recall")(spark, sf)
+    val out = SparkEntry.queries("e_binary_hamming_recall")(spark, sf)
       .collect()
     assert(out.map(_.getAs[Long]("query_id")).toSeq == (0L until 10L))
     out.foreach { r =>

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData13
 
 /** Invariant pins for the round-9 batch-10 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData13Spec extends SparkTestBase {
 
   test("viterbi burst: emitted path prices to its cost and beats all-base") {
-    val out = TrainingData13.queries("w_viterbi_burst")(spark, sf).collect()
+    val out = SparkEntry.queries("w_viterbi_burst")(spark, sf).collect()
     assert(out.nonEmpty)
     val nDays = graft.sources.Tables.table(spark, sf, "orders")
       .select(to_date(col("o_orderdate"))).distinct().count()
@@ -37,7 +36,7 @@ class TrainingData13Spec extends SparkTestBase {
   }
 
   test("capture-recapture: counts consistent, estimate matches formula") {
-    val r = TrainingData13.queries("a_capture_recapture")(spark, sf)
+    val r = SparkEntry.queries("a_capture_recapture")(spark, sf)
       .collect().head
     val n = r.getAs[Long]("n_total"); val n1 = r.getAs[Long]("n1")
     val n2 = r.getAs[Long]("n2"); val m = r.getAs[Long]("m")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData14
 import graft.functions.{TextFunctions => TF}
 
 /** Invariant pins for the round-9 batch-11 operators (contract
@@ -38,7 +37,7 @@ class TrainingData14Spec extends SparkTestBase {
     assert(math.abs(total - 1.0) < 1e-9,
       s"KN bigram distribution for '$w1' must normalize, got $total")
     // and the query output is consistent: scored mass never exceeds total
-    val out = TrainingData14.queries("t_kneser_ney")(spark, sf).collect()
+    val out = SparkEntry.queries("t_kneser_ney")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       assert(r.getAs[Long]("n_scored") <= r.getAs[Long]("n_bigrams"))
@@ -48,7 +47,7 @@ class TrainingData14Spec extends SparkTestBase {
   }
 
   test("consistent hashing: only the new shard's captures move") {
-    val out = TrainingData14.queries("o_consistent_hash")(spark, sf).collect()
+    val out = SparkEntry.queries("o_consistent_hash")(spark, sf).collect()
     val total = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == total)
     out.foreach { r =>

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData15
 
 /** Invariant pins for the round-9 batch-12 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData15Spec extends SparkTestBase {
 
   test("diff-in-diff: cells partition the orders, estimator recomposes") {
-    val r = TrainingData15.queries("a_diff_in_diff")(spark, sf).collect().head
+    val r = SparkEntry.queries("a_diff_in_diff")(spark, sf).collect().head
     val total = graft.sources.Tables.table(spark, sf, "orders").count()
     val ns = Seq("n_treat_pre", "n_treat_post", "n_ctrl_pre", "n_ctrl_post")
       .map(r.getAs[Long])
@@ -22,7 +21,7 @@ class TrainingData15Spec extends SparkTestBase {
   }
 
   test("hashed features: conservation and collision accounting") {
-    val out = TrainingData15.queries("t_hashed_features")(spark, sf).collect()
+    val out = SparkEntry.queries("t_hashed_features")(spark, sf).collect()
     val docs = graft.sources.Tables.table(spark, sf, "documents")
     assert(out.length == docs.count())
     out.foreach { r =>
@@ -42,7 +41,7 @@ class TrainingData15Spec extends SparkTestBase {
   }
 
   test("ljung-box: rhos bounded, statistic recomposes, lag-0 sanity") {
-    val r = TrainingData15.queries("w_ljung_box")(spark, sf).collect().head
+    val r = SparkEntry.queries("w_ljung_box")(spark, sf).collect().head
     val n = r.getAs[Long]("n_days").toDouble
     val rhos = (1 to 7).map(k => r.getAs[Double](s"rho$k"))
     rhos.foreach(rho => assert(rho >= -1.0 - 1e-9 && rho <= 1.0 + 1e-9))

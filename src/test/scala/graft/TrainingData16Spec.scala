@@ -1,13 +1,12 @@
 package graft
 
-import graft.operators.TrainingData16
 
 /** Invariant pins for the round-9 batch-13 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData16Spec extends SparkTestBase {
 
   test("isotonic calibration: minmax formula equals driver-side PAVA") {
-    val out = TrainingData16.queries("t_isotonic_calibration")(spark, sf)
+    val out = SparkEntry.queries("t_isotonic_calibration")(spark, sf)
       .collect().sortBy(_.getAs[Long]("bin"))
     assert(out.nonEmpty)
     // monotone non-decreasing on the 6-dp grid
@@ -42,7 +41,7 @@ class TrainingData16Spec extends SparkTestBase {
   }
 
   test("sprt: llr recomposes from cumulative counts, decisions consistent") {
-    val out = TrainingData16.queries("a_sprt_monitor")(spark, sf).collect()
+    val out = SparkEntry.queries("a_sprt_monitor")(spark, sf).collect()
     assert(out.nonEmpty)
     var cn = 0L; var cc = 0L
     out.sortBy(_.getAs[java.sql.Date]("day").getTime).foreach { r =>

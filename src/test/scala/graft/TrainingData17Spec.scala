@@ -1,13 +1,12 @@
 package graft
 
-import graft.operators.TrainingData17
 
 /** Invariant pins for the round-9 batch-14 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData17Spec extends SparkTestBase {
 
   test("zonemap prune: sorted layout dominates arrival, accounting exact") {
-    val out = TrainingData17.queries("o_zonemap_prune")(spark, sf).collect()
+    val out = SparkEntry.queries("o_zonemap_prune")(spark, sf).collect()
       .map(r => r.getAs[String]("layout") -> r).toMap
     val total = graft.sources.Tables.table(spark, sf, "lineitem").count()
     val arr = out("arrival"); val srt = out("price_sorted")
@@ -33,7 +32,7 @@ class TrainingData17Spec extends SparkTestBase {
   }
 
   test("dp histogram: noise is the declared laplace inverse-cdf draw") {
-    val out = TrainingData17.queries("t_dp_histogram")(spark, sf).collect()
+    val out = SparkEntry.queries("t_dp_histogram")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val noise = r.getAs[Double]("noise")

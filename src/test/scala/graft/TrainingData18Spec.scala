@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData18
 import graft.functions.{TextFunctions => TF}
 
 /** Invariant pins for the round-9 batch-15 operators (contract
@@ -9,7 +8,7 @@ import graft.functions.{TextFunctions => TF}
 class TrainingData18Spec extends SparkTestBase {
 
   test("cdc chunking: chunks conserve tokens, boundary rule stable") {
-    val out = TrainingData18.queries("t_cdc_chunking")(spark, sf).collect()
+    val out = SparkEntry.queries("t_cdc_chunking")(spark, sf).collect()
     val docs = graft.sources.Tables.table(spark, sf, "documents")
     assert(out.length == docs.count())
     val tokTotal = docs
@@ -51,7 +50,7 @@ class TrainingData18Spec extends SparkTestBase {
   }
 
   test("cdc dedup: store accounting consistent") {
-    val r = TrainingData18.queries("dedup_cdc_chunks")(spark, sf)
+    val r = SparkEntry.queries("dedup_cdc_chunks")(spark, sf)
       .collect().head
     assert(r.getAs[Long]("distinct_chunks") <= r.getAs[Long]("total_chunks"))
     assert(r.getAs[Long]("stored_tokens") <= r.getAs[Long]("total_tokens"))
@@ -59,13 +58,13 @@ class TrainingData18Spec extends SparkTestBase {
     val savings = r.getAs[Double]("savings_ratio")
     assert(savings >= 0.0 && savings < 1.0)
     // per-doc distinct totals upper-bound the corpus distinct count
-    val perDoc = TrainingData18.queries("t_cdc_chunking")(spark, sf)
+    val perDoc = SparkEntry.queries("t_cdc_chunking")(spark, sf)
       .agg(sum(col("n_distinct_chunks"))).head().getLong(0)
     assert(r.getAs[Long]("distinct_chunks") <= perDoc)
   }
 
   test("winsorized mean: robust means bracket, clamps are order stats") {
-    val r = TrainingData18.queries("a_winsorized_mean")(spark, sf)
+    val r = SparkEntry.queries("a_winsorized_mean")(spark, sf)
       .collect().head
     val lo = r.getAs[Double]("lo_clamp"); val hi = r.getAs[Double]("hi_clamp")
     assert(lo <= hi)

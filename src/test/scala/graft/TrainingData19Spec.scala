@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData19
 import graft.functions.{TextFunctions => TF}
 
 /** Invariant pins for the round-9 batch-16 operators (contract
@@ -9,7 +8,7 @@ import graft.functions.{TextFunctions => TF}
 class TrainingData19Spec extends SparkTestBase {
 
   test("ivf nprobe sweep: recall and cost are monotone in nprobe") {
-    val out = TrainingData19.queries("sim_ivf_nprobe_sweep")(spark, sf)
+    val out = SparkEntry.queries("sim_ivf_nprobe_sweep")(spark, sf)
       .collect().sortBy(_.getAs[Int]("nprobe"))
     assert(out.map(_.getAs[Int]("nprobe")).toSeq == Seq(1, 2, 4))
     out.sliding(2).foreach {
@@ -33,7 +32,7 @@ class TrainingData19Spec extends SparkTestBase {
   }
 
   test("jackknife: folds partition corpus, SE matches driver replay") {
-    val r = TrainingData19.queries("a_jackknife_variance")(spark, sf)
+    val r = SparkEntry.queries("a_jackknife_variance")(spark, sf)
       .collect().head
     val docs = graft.sources.Tables.table(spark, sf, "documents")
     assert(r.getAs[Long]("n_docs") == docs.count())

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData20
 
 /** Invariant pins for the round-9 batch-15 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData20Spec extends SparkTestBase {
 
   test("a_var_merge: partial merge is exact and matches direct moments") {
-    val out = TrainingData20.queries("a_var_merge")(spark, sf).collect()
+    val out = SparkEntry.queries("a_var_merge")(spark, sf).collect()
     assert(out.nonEmpty)
     assert(out.forall(_.getAs[Boolean]("partials_match")),
       "day-partial merge must equal the direct month aggregate bit-exactly")
@@ -35,7 +34,7 @@ class TrainingData20Spec extends SparkTestBase {
   }
 
   test("q_dq_referential: synthetic star is clean; totals line up") {
-    val out = TrainingData20.queries("q_dq_referential")(spark, sf).collect()
+    val out = SparkEntry.queries("q_dq_referential")(spark, sf).collect()
     assert(out.length == 7)
     assert(out.forall(_.getAs[Boolean]("passed")),
       "driver testdata satisfies every FK and domain expectation")
@@ -70,7 +69,7 @@ class TrainingData20Spec extends SparkTestBase {
   }
 
   test("ev_watermark_lateness: buckets partition the stream; shares sum to 1") {
-    val out = TrainingData20.queries("ev_watermark_lateness")(spark, sf)
+    val out = SparkEntry.queries("ev_watermark_lateness")(spark, sf)
       .collect()
     val total = out.map(_.getAs[Long]("n_events")).sum
     assert(total == graft.sources.Tables.table(spark, sf, "events").count())
@@ -95,7 +94,7 @@ class TrainingData20Spec extends SparkTestBase {
   }
 
   test("t_l_diversity: diversity bounds and risk accounting hold") {
-    val out = TrainingData20.queries("t_l_diversity")(spark, sf).collect()
+    val out = SparkEntry.queries("t_l_diversity")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       assert(r.getAs[Long]("min_diversity") >= 1L)

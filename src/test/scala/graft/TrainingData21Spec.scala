@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData21
 
 /** Invariant pins for the round-9 batch-16 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData21Spec extends SparkTestBase {
 
   test("changepoint: split maximizes the between-segment score (driver replay)") {
-    val out = TrainingData21.queries("w_changepoint_binseg")(spark, sf)
+    val out = SparkEntry.queries("w_changepoint_binseg")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     // replay one year's argmax from the raw daily series
@@ -39,7 +38,7 @@ class TrainingData21Spec extends SparkTestBase {
   }
 
   test("hll: estimate within canonical error bound and merge-exact") {
-    val out = TrainingData21.queries("a_hll_registers")(spark, sf).collect()
+    val out = SparkEntry.queries("a_hll_registers")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       assert(r.getAs[Boolean]("merge_exact"),
@@ -53,7 +52,7 @@ class TrainingData21Spec extends SparkTestBase {
   }
 
   test("spatial knn: grid candidates contain the true brute-force top-3") {
-    val out = TrainingData21.queries("j_spatial_knn")(spark, sf).collect()
+    val out = SparkEntry.queries("j_spatial_knn")(spark, sf).collect()
     // brute-force replay over all points for each query
     val denom = 4503599627370496.0
     val hex = md5(col("event_id").cast("string"))
@@ -84,7 +83,7 @@ class TrainingData21Spec extends SparkTestBase {
   }
 
   test("join cardinality: FK edges estimate exactly when stats are fresh") {
-    val out = TrainingData21.queries("o_join_cardinality_est")(spark, sf)
+    val out = SparkEntry.queries("o_join_cardinality_est")(spark, sf)
       .collect()
     assert(out.length == 4)
     out.foreach { r =>

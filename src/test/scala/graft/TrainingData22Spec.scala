@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData22
 
 /** Invariant pins for the round-9 batch-17 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData22Spec extends SparkTestBase {
 
   test("interpolate: spine is contiguous, known days pass through, fills bracket") {
-    val out = TrainingData22.queries("w_interpolate_linear")(spark, sf)
+    val out = SparkEntry.queries("w_interpolate_linear")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     // contiguous calendar spine
@@ -47,7 +46,7 @@ class TrainingData22Spec extends SparkTestBase {
   }
 
   test("span corruption: stats are consistent and match a driver replay") {
-    val out = TrainingData22.queries("t_span_corruption")(spark, sf).collect()
+    val out = SparkEntry.queries("t_span_corruption")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val n = r.getAs[Long]("n_tokens")

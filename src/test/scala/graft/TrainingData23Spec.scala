@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData23
 
 /** Invariant pins for the round-9 batch-18 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData23Spec extends SparkTestBase {
 
   test("self-bleu: precisions in [0,1], bigram <= unigram, pairs add up") {
-    val out = TrainingData23.queries("t_self_bleu")(spark, sf).collect()
+    val out = SparkEntry.queries("t_self_bleu")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val b1 = r.getAs[Double]("self_bleu1")
@@ -31,7 +30,7 @@ class TrainingData23Spec extends SparkTestBase {
   }
 
   test("dp median: released bin comes from the exponential-mechanism argmax") {
-    val r = TrainingData23.queries("t_dp_median")(spark, sf).collect()
+    val r = SparkEntry.queries("t_dp_median")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val rel = row.getAs[Long]("released_bin")
@@ -65,7 +64,7 @@ class TrainingData23Spec extends SparkTestBase {
   }
 
   test("quality gate: routing partitions docs; failure reasons respect modality") {
-    val out = TrainingData23.queries("mm_quality_gate")(spark, sf).collect()
+    val out = SparkEntry.queries("mm_quality_gate")(spark, sf).collect()
     assert(out.map(_.getAs[String]("modality")).sorted.toSeq ==
       Seq("audio", "image", "video"))
     val total = out.map(_.getAs[Long]("n_docs")).sum

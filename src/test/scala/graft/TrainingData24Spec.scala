@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData24
 
 /** Invariant pins for the round-9 batch-19 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData24Spec extends SparkTestBase {
 
   test("pattern regex: motif counts match a driver regex replay") {
-    val out = TrainingData24.queries("ev_pattern_regex")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_pattern_regex")(spark, sf).collect()
     assert(out.nonEmpty)
     // driver replay over the raw events for every user
     val traces = graft.sources.Tables.table(spark, sf, "events")
@@ -35,7 +34,7 @@ class TrainingData24Spec extends SparkTestBase {
   }
 
   test("bh fdr: step-up rule holds — rejections are exactly ranks <= k*") {
-    val out = TrainingData24.queries("a_bh_fdr")(spark, sf).collect()
+    val out = SparkEntry.queries("a_bh_fdr")(spark, sf).collect()
     assert(out.nonEmpty)
     val m = out.length.toDouble
     // recompute the step-up from the published p-values (6-dp rounded,

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData25
 
 /** Invariant pins for the round-9 batch-20 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData25Spec extends SparkTestBase {
 
   test("systematic sample: fixed rate, full stratum coverage accounting") {
-    val out = TrainingData25.queries("o_systematic_sample")(spark, sf)
+    val out = SparkEntry.queries("o_systematic_sample")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     val nPop = out.map(_.getAs[Long]("n_pop")).sum
@@ -28,7 +27,7 @@ class TrainingData25Spec extends SparkTestBase {
   }
 
   test("tail index: Hill estimator matches a driver replay of top-65") {
-    val r = TrainingData25.queries("a_tail_index")(spark, sf).collect()
+    val r = SparkEntry.queries("a_tail_index")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val xs = graft.sources.Tables.table(spark, sf, "documents")

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData26
 
 /** Invariant pins for the round-9 batch-21 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData26Spec extends SparkTestBase {
 
   test("prefix sharing: savings accounting and a planted shared prefix") {
-    val out = TrainingData26.queries("t_prefix_sharing")(spark, sf).collect()
+    val out = SparkEntry.queries("t_prefix_sharing")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       assert(r.getAs[Long]("n_prefix_groups") <= r.getAs[Long]("n_docs"))
@@ -40,7 +39,7 @@ class TrainingData26Spec extends SparkTestBase {
   }
 
   test("hash uniformity: chi2 replay and uniform verdict on md5 routing") {
-    val r = TrainingData26.queries("o_hash_uniformity")(spark, sf).collect()
+    val r = SparkEntry.queries("o_hash_uniformity")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     assert(row.getAs[Long]("n_buckets") == 64L)
@@ -64,7 +63,7 @@ class TrainingData26Spec extends SparkTestBase {
   }
 
   test("interarrival: gap moments match a driver replay per event type") {
-    val out = TrainingData26.queries("ev_interarrival")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_interarrival")(spark, sf).collect()
     assert(out.map(_.getAs[String]("event_type")).length >= 3)
     val events = graft.sources.Tables.table(spark, sf, "events")
       .select(col("event_type"), unix_micros(col("ts")), col("event_id"))

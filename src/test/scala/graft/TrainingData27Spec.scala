@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData27
 
 /** Invariant pins for the round-9 batch-22 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData27Spec extends SparkTestBase {
 
   test("ivm delta: maintained view equals direct recompute everywhere") {
-    val out = TrainingData27.queries("w_ivm_delta")(spark, sf).collect()
+    val out = SparkEntry.queries("w_ivm_delta")(spark, sf).collect()
     assert(out.nonEmpty)
     assert(out.forall(_.getAs[Boolean]("ivm_matches_direct")),
       "insert+retract merge must reproduce the recomputed view bit-exactly")
@@ -24,7 +23,7 @@ class TrainingData27Spec extends SparkTestBase {
   }
 
   test("max drawdown: matches a driver replay of the deviation series") {
-    val r = TrainingData27.queries("w_max_drawdown")(spark, sf).collect()
+    val r = SparkEntry.queries("w_max_drawdown")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val daily = graft.sources.Tables.table(spark, sf, "orders")

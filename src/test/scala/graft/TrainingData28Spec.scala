@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData28
 
 /** Invariant pins for the round-9 batch-23 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData28Spec extends SparkTestBase {
 
   test("pareto frontier: matches the quadratic dominance definition") {
-    val out = TrainingData28.queries("o_pareto_frontier")(spark, sf)
+    val out = SparkEntry.queries("o_pareto_frontier")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     // differential: the linear sweep must equal the O(n²) skyline
@@ -39,7 +38,7 @@ class TrainingData28Spec extends SparkTestBase {
   }
 
   test("basket pairs: support bounds and lift recomposition hold") {
-    val out = TrainingData28.queries("q_basket_pairs")(spark, sf).collect()
+    val out = SparkEntry.queries("q_basket_pairs")(spark, sf).collect()
     assert(out.nonEmpty && out.length <= 20)
     val items = graft.sources.Tables.table(spark, sf, "lineitem")
       .join(graft.sources.Tables.table(spark, sf, "part"),
@@ -72,7 +71,7 @@ class TrainingData28Spec extends SparkTestBase {
   }
 
   test("domain cap: per-source kept counts, cutoff, and shares agree") {
-    val out = TrainingData28.queries("t_domain_cap")(spark, sf).collect()
+    val out = SparkEntry.queries("t_domain_cap")(spark, sf).collect()
     assert(out.nonEmpty)
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), col("source"),

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData29
 
 /** Invariant pins for the round-9 batch-24 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData29Spec extends SparkTestBase {
 
   test("ARI: bounds, self-agreement, and a hand-checked 2x2 case") {
-    val out = TrainingData29.queries("sim_ari")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_ari")(spark, sf).collect()
     assert(out.length == 3)
     assert(out.map(_.getAs[String]("comparison")).toSet ==
       Set("cellsA_vs_label", "cellsA_vs_cellsB", "cellsB_vs_label"))
@@ -48,7 +47,7 @@ class TrainingData29Spec extends SparkTestBase {
   }
 
   test("RAKE: word scores and phrase scores recompose on the corpus") {
-    val out = TrainingData29.queries("t_rake_keywords")(spark, sf).collect()
+    val out = SparkEntry.queries("t_rake_keywords")(spark, sf).collect()
     assert(out.nonEmpty && out.length <= 25)
     // phrases contain no stopword tokens and are at most 4 words
     val stops = graft.functions.TextFunctions.stopwords.toSet
@@ -97,7 +96,7 @@ class TrainingData29Spec extends SparkTestBase {
   }
 
   test("TWAP: constant-value users equal that value; spans conserve") {
-    val out = TrainingData29.queries("w_twap")(spark, sf).collect()
+    val out = SparkEntry.queries("w_twap")(spark, sf).collect()
     assert(out.nonEmpty)
     // differential on the full small-SF events table
     val ev = graft.sources.Tables.table(spark, sf, "events")

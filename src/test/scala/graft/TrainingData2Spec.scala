@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingData2
 
 /** Behavior checks for the round-4 training-data operators, on
   * planted corpora with known-correct answers (the DuckDB oracle
@@ -28,7 +27,7 @@ class TrainingData2Spec extends SparkTestBase {
       (2L, ("word " * 30).trim + " supercalifragilisticexpialidocious", "en"), // flag_max_word
       (3L, ("xx " * 25).trim, "en"),                     // no stopword + short words
       (4L, good + " with {braces} inside", "en")))       // flag_symbol
-    val r = TrainingData2.tC4Filters(spark, dir)
+    val r = SparkEntry.queries("t_c4_filters")(spark, dir)
       .select("doc_id", "flag_short", "flag_max_word", "flag_no_stopword",
         "flag_symbol", "keep")
       .as[(Long, Boolean, Boolean, Boolean, Boolean, Boolean)]
@@ -46,7 +45,7 @@ class TrainingData2Spec extends SparkTestBase {
       (1L, "the window slides over the stream and the window closes at the end", "en"),
       (2L, "completely unrelated text about cooking pasta with garlic and fresh basil", "en"),
       (3L, "spark window merge spark window merge all three terms appear here often", "en")))
-    val r = TrainingData2.tBm25(spark, dir)
+    val r = SparkEntry.queries("t_bm25")(spark, dir)
       .select("doc_id", "bm25").as[(Long, Double)].collect()
     val byId = r.toMap
     assert(r.head._1 === 3L, "doc with all three terms ranks first")
@@ -55,7 +54,7 @@ class TrainingData2Spec extends SparkTestBase {
   }
 
   test("token budget allocates by weight and never overfills") {
-    val r = TrainingData2.oTokenBudget(spark, sf)
+    val r = SparkEntry.queries("o_token_budget")(spark, sf)
       .select("lang", "allocated_tokens", "n_docs", "n_selected",
         "selected_tokens", "fill_rate")
       .as[(String, Long, Long, Long, Long, Double)].collect()
@@ -76,7 +75,7 @@ class TrainingData2Spec extends SparkTestBase {
       (0L, span + " unique tail zero one two three four five", "en"),
       (1L, span + " other words here that differ from doc zero", "en"),
       (2L, "nothing shared with any other document in this tiny corpus at all", "en")))
-    val r = TrainingData2.dedupSegments(spark, dir)
+    val r = SparkEntry.queries("dedup_segments")(spark, dir)
       .select("doc_id", "n_dup_segments", "dup_tokens")
       .as[(Long, Long, Long)].collect().map(t => t._1 -> t).toMap
     assert(r(0L)._2 == 1 && r(0L)._3 == 8, "doc 0 shares the planted span")
@@ -85,7 +84,7 @@ class TrainingData2Spec extends SparkTestBase {
   }
 
   test("semdedup drops only same-cell lower-id-matched vectors") {
-    val r = TrainingData2.simSemDedup(spark, sf)
+    val r = SparkEntry.queries("sim_semdedup")(spark, sf)
       .select("vec_id", "kept_id", "max_cos")
       .as[(Long, Long, Double)].collect()
     r.foreach { case (v, kept, cos) =>
@@ -102,7 +101,7 @@ class TrainingData2Spec extends SparkTestBase {
       (2L, ("bbb " * 20).trim, "de"),
       (3L, ("bbb " * 20).trim, "de"),
       (4L, ("aaa " * 10).trim + " " + ("bbb " * 10).trim, "en")))
-    val w = TrainingData2.tDsirWeights(spark, dir)
+    val w = SparkEntry.queries("t_dsir_weights")(spark, dir)
       .select("doc_id", "log_weight").as[(Long, Double)].collect().toMap
     assert(w(0L) > w(4L) && w(4L) > w(2L),
       s"target-exclusive > mixed > raw-exclusive: $w")
@@ -133,7 +132,7 @@ class TrainingData2Spec extends SparkTestBase {
   }
 
   test("heavy-hitters query pins the MG contract on real data") {
-    val r = TrainingData2.aHeavyHitters(spark, sf)
+    val r = SparkEntry.queries("a_heavy_hitters")(spark, sf)
       .select("in_sketch", "est_le_exact", "err_bound_ok")
       .as[(Boolean, Boolean, Boolean)].collect()
     assert(r.nonEmpty, "heavy set must be non-empty at sf0.001")
@@ -158,7 +157,7 @@ class TrainingData2Spec extends SparkTestBase {
   }
 
   test("knn graph: edge counts bounded by k, mutual edges by half") {
-    val r = TrainingData2.simKnnGraph(spark, sf)
+    val r = SparkEntry.queries("sim_knn_graph")(spark, sf)
       .select("n_vectors", "n_edges", "n_mutual")
       .as[(Long, Long, Long)].collect()
     assert(r.map(_._1).sum == 500, "every vector lands in exactly one cell")
@@ -169,7 +168,7 @@ class TrainingData2Spec extends SparkTestBase {
   }
 
   test("classifier inference: label matches logit sign, score is a probability") {
-    val r = TrainingData2.tClassifierInfer(spark, sf)
+    val r = SparkEntry.queries("t_classifier_infer")(spark, sf)
       .select("logit", "score", "keep")
       .as[(Double, Double, Boolean)].collect()
     r.foreach { case (logit, score, keep) =>
@@ -182,7 +181,7 @@ class TrainingData2Spec extends SparkTestBase {
   }
 
   test("dataset card totals reconcile with the corpus") {
-    val r = TrainingData2.tDatasetCard(spark, sf)
+    val r = SparkEntry.queries("t_dataset_card")(spark, sf)
       .select("n_docs", "n_exact_dups", "mean_quality")
       .as[(Long, Long, Double)].collect()
     assert(r.map(_._1).sum == 500)
@@ -210,7 +209,7 @@ class TrainingData2Spec extends SparkTestBase {
       (1L, (common + " ") * 6 + common, "en"),
       (2L, (common + " ") * 6 + common, "en"),
       (3L, "every bigram here appears exactly once nowhere else in this corpus today", "en")))
-    val r = TrainingData2.tPerplexity(spark, dir)
+    val r = SparkEntry.queries("t_perplexity")(spark, dir)
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
     assert(r(0L) < r(3L), s"common-bigram doc must score lower ce: $r")
     r.values.foreach(ce => assert(ce > 0.0))

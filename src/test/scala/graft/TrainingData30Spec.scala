@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData30, TrainingData5}
+import graft.operators.GraphQueries
 
 /** Invariant pins for the round-9 batch-25 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData30Spec extends SparkTestBase {
 
   test("MASE backtest: driver-side replay of the seasonal-naive score") {
-    val out = TrainingData30.queries("w_backtest_mase")(spark, sf).collect()
+    val out = SparkEntry.queries("w_backtest_mase")(spark, sf).collect()
     assert(out.nonEmpty)
     val ev = graft.sources.Tables.table(spark, sf, "events")
       .select(col("event_type"), to_date(col("ts")).as("day"))
@@ -38,9 +38,9 @@ class TrainingData30Spec extends SparkTestBase {
   }
 
   test("BFS layers: driver-side BFS agrees layer by layer") {
-    val out = TrainingData30.queries("g_bfs_layers")(spark, sf).collect()
+    val out = SparkEntry.queries("g_bfs_layers")(spark, sf).collect()
     assert(out.nonEmpty)
-    val edges = TrainingData5.knnUndirected(spark, sf).collect()
+    val edges = GraphQueries.knnUndirected(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val seed = edges.map(_._1).min
@@ -65,7 +65,7 @@ class TrainingData30Spec extends SparkTestBase {
   }
 
   test("Shapley credit: conservation and the uniform-split replay") {
-    val out = TrainingData30.queries("ev_shapley_credit")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_shapley_credit")(spark, sf).collect()
     assert(out.nonEmpty)
     val ev = graft.sources.Tables.table(spark, sf, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("tsl"),

@@ -3,7 +3,6 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData31
 
 /** Invariant pins for the round-9 batch-26 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -14,7 +13,7 @@ class TrainingData31Spec extends SparkTestBase {
       .map("%02x".format(_)).mkString
 
   test("CUPED: driver-side moment replay and arm partition") {
-    val out = TrainingData31.queries("a_cuped")(spark, sf).collect()
+    val out = SparkEntry.queries("a_cuped")(spark, sf).collect()
     assert(out.length == 2)
     assert(out.map(_.getAs[String]("arm")).toSeq == Seq("A", "B"))
     val ev = graft.sources.Tables.table(spark, sf, "events")
@@ -61,7 +60,7 @@ class TrainingData31Spec extends SparkTestBase {
   }
 
   test("Naive Bayes: confusion rows cover the test split exactly") {
-    val out = TrainingData31.queries("t_naive_bayes")(spark, sf).collect()
+    val out = SparkEntry.queries("t_naive_bayes")(spark, sf).collect()
     assert(out.nonEmpty)
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), col("lang")).collect()
@@ -114,7 +113,7 @@ class TrainingData31Spec extends SparkTestBase {
   }
 
   test("pHash dedup: driver replay of banding, verify, and collapse") {
-    val out = TrainingData31.queries("mm_phash_dedup")(spark, sf).collect()
+    val out = SparkEntry.queries("mm_phash_dedup")(spark, sf).collect()
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData32
 
 /** Invariant pins for the round-9 batch-27 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData32Spec extends SparkTestBase {
 
   test("Kalman: driver replay of the (x, P) recursion per year") {
-    val out = TrainingData32.queries("w_kalman_1d")(spark, sf).collect()
+    val out = SparkEntry.queries("w_kalman_1d")(spark, sf).collect()
     assert(out.nonEmpty)
     val daily = graft.sources.Tables.table(spark, sf, "orders")
       .groupBy(col("o_orderdate").cast("string").as("day"))
@@ -55,7 +54,7 @@ class TrainingData32Spec extends SparkTestBase {
   }
 
   test("HITS: L-inf normalization and score bounds hold") {
-    val out = TrainingData32.queries("g_hits")(spark, sf).collect()
+    val out = SparkEntry.queries("g_hits")(spark, sf).collect()
     assert(out.length > 1)
     val auth = out.map(_.getAs[Double]("authority"))
     val hub = out.map(_.getAs[Double]("hub"))
@@ -70,7 +69,7 @@ class TrainingData32Spec extends SparkTestBase {
   }
 
   test("absorbing Markov: purchase absorbs at 0, sweeps replay exactly") {
-    val out = TrainingData32.queries("ev_absorbing_markov")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_absorbing_markov")(spark, sf).collect()
     assert(out.nonEmpty)
     val p = out.find(_.getAs[String]("event_type") == "purchase")
     assert(p.isDefined && p.get.getAs[Double]("t_absorb_20") == 0.0)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData33
 
 /** Invariant pins for the round-9 batch-28 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -16,7 +15,7 @@ class TrainingData33Spec extends SparkTestBase {
       .sortBy(_._1)
 
   test("ESD sweep: driver replay of the 5 remove-and-rescore rounds") {
-    val out = TrainingData33.queries("w_anomaly_esd")(spark, sf).collect()
+    val out = SparkEntry.queries("w_anomaly_esd")(spark, sf).collect()
     assert(out.length == 5)
     var remaining = dailyCents()
     (1 to 5).zip(out).foreach { case (i, row) =>
@@ -39,7 +38,7 @@ class TrainingData33Spec extends SparkTestBase {
   }
 
   test("James-Stein: shrinkage pulls every mean toward the grand mean") {
-    val out = TrainingData33.queries("a_james_stein")(spark, sf).collect()
+    val out = SparkEntry.queries("a_james_stein")(spark, sf).collect()
     assert(out.length > 3)
     val grand = out.head.getAs[Double]("grand_mean")
     out.foreach { row =>
@@ -68,7 +67,7 @@ class TrainingData33Spec extends SparkTestBase {
   }
 
   test("Haar pyramid: perfect reconstruction from (s, d) at each level") {
-    val out = TrainingData33.queries("w_haar_decompose")(spark, sf).collect()
+    val out = SparkEntry.queries("w_haar_decompose")(spark, sf).collect()
     val series = dailyCents().map(_._2)
     // driver replay of the 3 pairing levels
     var cur = series

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData34
 
 /** Invariant pins for the round-9 batch-29 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData34Spec extends SparkTestBase {
 
   test("GARCH: driver replay of the (r, sigma2) recursion per year") {
-    val out = TrainingData34.queries("w_garch_filter")(spark, sf).collect()
+    val out = SparkEntry.queries("w_garch_filter")(spark, sf).collect()
     assert(out.nonEmpty)
     val daily = graft.sources.Tables.table(spark, sf, "orders")
       .groupBy(col("o_orderdate").cast("string").as("day"))
@@ -39,7 +38,7 @@ class TrainingData34Spec extends SparkTestBase {
   }
 
   test("negbin fit: zeros-included moments replay; Poisson bound") {
-    val out = TrainingData34.queries("a_negbin_fit")(spark, sf).collect()
+    val out = SparkEntry.queries("a_negbin_fit")(spark, sf).collect()
     assert(out.nonEmpty)
     val ev = graft.sources.Tables.table(spark, sf, "events")
       .select(col("event_type"), col("user_id")).collect()
@@ -69,7 +68,7 @@ class TrainingData34Spec extends SparkTestBase {
   }
 
   test("DoReMi step: weights stay a distribution; hard domains gain") {
-    val out = TrainingData34.queries("t_doremi_mixture")(spark, sf).collect()
+    val out = SparkEntry.queries("t_doremi_mixture")(spark, sf).collect()
     assert(out.length > 1)
     val wBefore = out.map(_.getAs[Double]("weight_before")).sum
     val wAfter = out.map(_.getAs[Double]("weight_after")).sum

@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData35
+import graft.operators.SimilarityQueries
 
 /** Invariant pins for the round-9 batch-30 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData35Spec extends SparkTestBase {
 
   test("POT-GPD: threshold rank, exceedance moments, and estimators") {
-    val out = TrainingData35.queries("w_pot_gpd")(spark, sf).collect()
+    val out = SparkEntry.queries("w_pot_gpd")(spark, sf).collect()
     assert(out.length == 1)
     val row = out.head
     val daily = graft.sources.Tables.table(spark, sf, "orders")
@@ -37,7 +37,7 @@ class TrainingData35Spec extends SparkTestBase {
   }
 
   test("greedy coverage: replay, diminishing gains, running total") {
-    val out = TrainingData35.queries("t_submodular_coverage")(spark, sf)
+    val out = SparkEntry.queries("t_submodular_coverage")(spark, sf)
       .collect()
     assert(out.nonEmpty && out.length <= 8)
     val docs = graft.sources.Tables.table(spark, sf, "documents")
@@ -63,13 +63,13 @@ class TrainingData35Spec extends SparkTestBase {
   }
 
   test("hubness: histogram masses and the k-out-degree identity") {
-    val out = TrainingData35.queries("sim_hubness")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_hubness")(spark, sf).collect()
     assert(out.nonEmpty)
     val nVec = graft.sources.Tables.table(spark, sf, "embeddings").count()
     // histogram covers every vector exactly once
     assert(out.map(_.getAs[Long]("n_nodes")).sum == nVec)
     // Σ in-degree = |edges| (each directed edge lands once)
-    val edges = TrainingData35.knnDirectedEdges(spark, sf)
+    val edges = SimilarityQueries.knnDirectedEdges(spark, sf)
     val totalIn = out.map(r =>
       r.getAs[Long]("in_degree") * r.getAs[Long]("n_nodes")).sum
     assert(totalIn == edges.count())

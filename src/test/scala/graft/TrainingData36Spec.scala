@@ -1,20 +1,20 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData35, TrainingData36}
+import graft.operators.SimilarityQueries
 
 /** Invariant pins for the round-9 batch-31 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData36Spec extends SparkTestBase {
 
   test("assortativity: bounded, and matches a driver-side recompute") {
-    val out = TrainingData36.queries("g_assortativity")(spark, sf).collect()
+    val out = SparkEntry.queries("g_assortativity")(spark, sf).collect()
     assert(out.length == 1)
     val row = out.head
     val r = row.getAs[Double]("assortativity")
     assert(r >= -1.0 && r <= 1.0)
     // differential: recompute from the same directed edge set
-    val e = TrainingData35.knnDirectedEdges(spark, sf)
+    val e = SimilarityQueries.knnDirectedEdges(spark, sf)
       .select(col("src"), col("dst")).collect()
       .map(x => (x.getLong(0), x.getLong(1)))
     val und = (e ++ e.map(_.swap)).distinct
@@ -31,7 +31,7 @@ class TrainingData36Spec extends SparkTestBase {
   }
 
   test("periodogram: dense ranks, share order, period identity") {
-    val out = TrainingData36.queries("w_periodogram")(spark, sf).collect()
+    val out = SparkEntry.queries("w_periodogram")(spark, sf).collect()
     assert(out.length == 5)
     assert(out.map(_.getAs[Int]("rank")).toSeq == Seq(1, 2, 3, 4, 5))
     val shares = out.map(_.getAs[Double]("power_share")).toSeq
@@ -49,7 +49,7 @@ class TrainingData36Spec extends SparkTestBase {
   }
 
   test("silhouette: membership partition, bounds, mean within min/max") {
-    val out = TrainingData36.queries("sim_silhouette")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_silhouette")(spark, sf).collect()
     assert(out.nonEmpty && out.length <= 8)
     val nVec = graft.sources.Tables.table(spark, sf, "embeddings").count()
     assert(out.map(_.getAs[Long]("n_members")).sum == nVec)

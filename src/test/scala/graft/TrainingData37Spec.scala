@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData37
 
 /** Invariant pins for the round-9 batch-32 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -15,7 +14,7 @@ class TrainingData37Spec extends SparkTestBase {
       .collect().map(_.getAs[Long]("m")).toSeq
 
   test("permutation test: p-value grid, counts, and t_obs replay") {
-    val out = TrainingData37.queries("a_permutation_test")(spark, sf).collect()
+    val out = SparkEntry.queries("a_permutation_test")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val p = r.getAs[Double]("p_value")
@@ -39,7 +38,7 @@ class TrainingData37Spec extends SparkTestBase {
   }
 
   test("hodges-lehmann: matches a driver-side walsh-median replay") {
-    val out = TrainingData37.queries("a_hodges_lehmann")(spark, sf).collect()
+    val out = SparkEntry.queries("a_hodges_lehmann")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val xs = daily()
@@ -60,7 +59,7 @@ class TrainingData37Spec extends SparkTestBase {
   }
 
   test("theil: decomposition identity and non-negativity") {
-    val out = TrainingData37.queries("a_theil_index")(spark, sf).collect()
+    val out = SparkEntry.queries("a_theil_index")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val tt = r.getAs[Double]("t_total")

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData38
 
 /** Invariant pins for the round-9 batch-33 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData38Spec extends SparkTestBase {
 
   test("readability: counters replay on a driver-side sample, band rule") {
-    val out = TrainingData38.queries("t_readability")(spark, sf).collect()
+    val out = SparkEntry.queries("t_readability")(spark, sf).collect()
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.length.toLong == nDocs)
     val texts = graft.sources.Tables.table(spark, sf, "documents")
@@ -31,7 +30,7 @@ class TrainingData38Spec extends SparkTestBase {
   }
 
   test("fertility: >= 1, and word/subword masses replay") {
-    val out = TrainingData38.queries("t_tokenizer_fertility")(spark, sf).collect()
+    val out = SparkEntry.queries("t_tokenizer_fertility")(spark, sf).collect()
     assert(out.nonEmpty)
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == nDocs)
@@ -54,7 +53,7 @@ class TrainingData38Spec extends SparkTestBase {
   }
 
   test("boilerplate suffix: counts ordered, shares consistent") {
-    val out = TrainingData38.queries("t_boilerplate_suffix")(spark, sf).collect()
+    val out = SparkEntry.queries("t_boilerplate_suffix")(spark, sf).collect()
     assert(out.nonEmpty && out.length <= 10)
     val ns = out.map(_.getAs[Long]("n_docs")).toSeq
     assert(ns.zip(ns.tail).forall { case (a, b) => a >= b })

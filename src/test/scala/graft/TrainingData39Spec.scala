@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData39
 
 /** Invariant pins for the round-9 batch-34 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData39Spec extends SparkTestBase {
 
   test("intrinsic dim: positive, finite, bounded by ambient dimension era") {
-    val out = TrainingData39.queries("e_intrinsic_dim")(spark, sf).collect()
+    val out = SparkEntry.queries("e_intrinsic_dim")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val nVec = graft.sources.Tables.table(spark, sf, "embeddings").count()
@@ -22,7 +21,7 @@ class TrainingData39Spec extends SparkTestBase {
   }
 
   test("ndcg: bounded by 1, consistent with hit counts") {
-    val out = TrainingData39.queries("sim_ndcg")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_ndcg")(spark, sf).collect()
     assert(out.nonEmpty && out.length <= 10)
     out.foreach { r =>
       val n = r.getAs[Long]("n_hits")
@@ -44,7 +43,7 @@ class TrainingData39Spec extends SparkTestBase {
   }
 
   test("centroid drift: bounded, halves partition each label") {
-    val out = TrainingData39.queries("e_centroid_drift")(spark, sf).collect()
+    val out = SparkEntry.queries("e_centroid_drift")(spark, sf).collect()
     assert(out.nonEmpty)
     val byLabel = graft.sources.Tables.table(spark, sf, "embeddings")
       .groupBy(col("label").cast("long").as("label"))

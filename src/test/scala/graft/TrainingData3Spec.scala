@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingData3
 
 /** Semantic checks for the rank-stat / sketch / collocation / layout
   * operators (the DuckDB oracle checks cross-engine equivalence;
@@ -12,7 +11,7 @@ class TrainingData3Spec extends SparkTestBase {
   import spark.implicits._
 
   test("spearman: bounded on real data, exactly ±1 on monotone data") {
-    val r = TrainingData3.aSpearman(spark, sf)
+    val r = SparkEntry.queries("a_spearman")(spark, sf)
       .select("spearman_rho").as[Double].collect()
     assert(r.nonEmpty)
     r.foreach(rho => assert(rho >= -1.0 && rho <= 1.0))
@@ -23,13 +22,13 @@ class TrainingData3Spec extends SparkTestBase {
       (1 to 50).map(i => ("D", i, -3 * i))
     rows.toDF("l_returnflag", "l_quantity", "l_extendedprice")
       .write.parquet(s"$dir/lineitem.parquet")
-    val planted = TrainingData3.aSpearman(spark, dir)
+    val planted = SparkEntry.queries("a_spearman")(spark, dir)
       .select("flag", "spearman_rho").as[(String, Double)].collect().toMap
     assert(planted("M") == 1.0 && planted("D") == -1.0)
   }
 
   test("count-min never underestimates and is exact sans collisions") {
-    val r = TrainingData3.aCountMin(spark, sf)
+    val r = SparkEntry.queries("a_countmin")(spark, sf)
       .select("exact_c", "cm_est", "est_ge_exact")
       .as[(Long, Long, Boolean)].collect()
     assert(r.length == 10)
@@ -39,7 +38,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("pmi: top bigrams are count-ordered and pmi is finite") {
-    val r = TrainingData3.tPmiBigrams(spark, sf)
+    val r = SparkEntry.queries("t_pmi_bigrams")(spark, sf)
       .select("n_xy", "pmi").as[(Long, Double)].collect()
     assert(r.length == 20)
     assert(r.map(_._1).toSeq == r.map(_._1).toSeq.sortBy(-_))
@@ -55,14 +54,14 @@ class TrainingData3Spec extends SparkTestBase {
         (3L, "a", e2), (4L, "a", e2), (5L, "b", e1))
       .toDF("vec_id", "label", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
-    val r = TrainingData3.gComponents(spark, dir)
+    val r = SparkEntry.queries("g_components")(spark, dir)
       .select("component", "n_members", "max_member")
       .as[(Long, Long, Long)].collect().toSet
     assert(r == Set((0L, 3L, 2L), (3L, 2L, 4L)))
   }
 
   test("pagerank: 50 nodes, positive ranks, mass bounded by 1") {
-    val r = TrainingData3.gPagerank(spark, sf)
+    val r = SparkEntry.queries("g_pagerank")(spark, sf)
       .select("pagerank").as[Double].collect()
     assert(r.length > 0 && r.length <= 50) // capped by corpus vocabulary
     r.foreach(pr => assert(pr > 0.0 && pr < 1.0))
@@ -71,7 +70,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("tfidf: per-doc top-3, scores non-increasing within doc") {
-    val r = TrainingData3.tTfidfTopk(spark, sf)
+    val r = SparkEntry.queries("t_tfidf_topk")(spark, sf)
       .select("doc_id", "rk", "tfidf").as[(Long, Int, Double)].collect()
     r.groupBy(_._1).foreach { case (_, rows) =>
       assert(rows.length <= 3)
@@ -82,7 +81,7 @@ class TrainingData3Spec extends SparkTestBase {
 
   test("lateral top-2 equals the window formulation") {
     import org.apache.spark.sql.expressions.Window
-    val viaSql = TrainingData3.sqlLateral(spark, sf)
+    val viaSql = SparkEntry.queries("sql_lateral")(spark, sf)
       .as[(String, String, Double)].collect().toSeq
     val c = graft.sources.Tables.table(spark, sf, "customer")
     val n = graft.sources.Tables.table(spark, sf, "nation")
@@ -97,7 +96,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("ewma seeds on each year's first day and stays in the prefix range") {
-    val r = TrainingData3.wEwmaRevenue(spark, sf)
+    val r = SparkEntry.queries("w_ewma_revenue")(spark, sf)
       .select(year($"day").as("yr"), $"day", $"revenue", $"ewma")
       .as[(Int, java.sql.Timestamp, Double, Double)].collect()
       .groupBy(_._1)
@@ -114,7 +113,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("disjunctive revenue equals the sum of its three disjuncts") {
-    val whole = TrainingData3.q19Disjunctive(spark, sf)
+    val whole = SparkEntry.queries("q19_disjunctive")(spark, sf)
       .as[(Double, Long)].head()
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val p = spark.read.parquet(s"$sf/part.parquet")
@@ -136,7 +135,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("cdc apply: live keys = keys whose final event is not a tombstone") {
-    val live = TrainingData3.wCdcApply(spark, sf)
+    val live = SparkEntry.queries("w_cdc_apply")(spark, sf)
       .agg(sum($"n_live")).as[Long].head()
     val o = spark.read.parquet(s"$sf/orders.parquet")
     val expected = o.groupBy($"o_custkey")
@@ -146,7 +145,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("q8: market share is a valid fraction of total revenue") {
-    val r = TrainingData3.q8MarketShare(spark, sf)
+    val r = SparkEntry.queries("q8_market_share")(spark, sf)
       .select("nation_revenue", "total_revenue", "mkt_share")
       .as[(Double, Double, Double)].collect()
     assert(r.nonEmpty)
@@ -158,7 +157,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("ks drift: bounded, and exactly 0 for identical samples") {
-    val real = TrainingData3.aKsDrift(spark, sf)
+    val real = SparkEntry.queries("a_ks_drift")(spark, sf)
       .select("ks_stat").as[Double].head()
     assert(real >= 0.0 && real <= 1.0)
     val dir = tmpDir()
@@ -167,13 +166,13 @@ class TrainingData3Spec extends SparkTestBase {
       (i.toLong + 100, java.sql.Timestamp.valueOf("1999-03-01 00:00:00"), (i % 7) * 100.0)))
     rows.toDF("o_orderkey", "o_orderdate", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
-    val same = TrainingData3.aKsDrift(spark, dir)
+    val same = SparkEntry.queries("a_ks_drift")(spark, dir)
       .select("ks_stat").as[Double].head()
     assert(same == 0.0)
   }
 
   test("gini: bounded on real data, exactly 0 for equal values") {
-    val g = TrainingData3.aGiniRevenue(spark, sf)
+    val g = SparkEntry.queries("a_gini_revenue")(spark, sf)
       .select("gini").as[Double].head()
     assert(g >= 0.0 && g < 1.0)
     val dir = tmpDir()
@@ -182,20 +181,20 @@ class TrainingData3Spec extends SparkTestBase {
       .toDF("o_custkey", "o_orderdate", "o_totalprice")
       .withColumn("o_orderkey", $"o_custkey")
       .write.parquet(s"$dir/orders.parquet")
-    val flat = TrainingData3.aGiniRevenue(spark, dir)
+    val flat = SparkEntry.queries("a_gini_revenue")(spark, dir)
       .select("gini").as[Double].head()
     assert(flat == 0.0)
   }
 
   test("benford: observed shares partition the corpus over digits 1-9") {
-    val r = TrainingData3.aBenford(spark, sf)
+    val r = SparkEntry.queries("a_benford")(spark, sf)
       .select("digit", "obs_share").as[(Int, Double)].collect()
     assert(r.map(_._1).forall(dgt => dgt >= 1 && dgt <= 9))
     assert(math.abs(r.map(_._2).sum - 1.0) < 1e-9)
   }
 
   test("null-safe join pairs the NULL-keyed groups") {
-    val r = TrainingData3.jNullsafe(spark, sf)
+    val r = SparkEntry.queries("j_nullsafe")(spark, sf)
       .select($"seg", $"revenue").collect()
     val nullRow = r.filter(_.isNullAt(0))
     assert(nullRow.length == 1, "exactly one NULL-keyed group")
@@ -204,14 +203,14 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("pivot-multi cells reconcile with the plain group-by") {
-    val r = TrainingData3.r5PivotMulti(spark, sf)
+    val r = SparkEntry.queries("r5_pivot_multi")(spark, sf)
     val totalN = r.select(($"F_n" + $"O_n" + $"P_n").as("n"))
       .agg(sum($"n")).as[Long].head()
     assert(totalN == spark.read.parquet(s"$sf/orders.parquet").count())
   }
 
   test("mode is the argmax of the per-status priority counts") {
-    val r = TrainingData3.aModeStatus(spark, sf)
+    val r = SparkEntry.queries("a_mode_status")(spark, sf)
       .select("o_orderstatus", "mode_priority", "n")
       .as[(String, String, Long)].collect()
     val counts = spark.read.parquet(s"$sf/orders.parquet")
@@ -226,7 +225,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("autocorr is a valid correlation; +1 on a planted linear series") {
-    val r = TrainingData3.aAutocorr(spark, sf)
+    val r = SparkEntry.queries("a_autocorr")(spark, sf)
       .select("autocorr_lag1").as[Double].head()
     assert(r >= -1.0 && r <= 1.0)
     val dir = tmpDir()
@@ -236,13 +235,13 @@ class TrainingData3Spec extends SparkTestBase {
       .write.parquet(s"$dir/orders.parquet")
     // one order per day, totals strictly arithmetic → lag-1 pairs
     // perfectly linear
-    val planted = TrainingData3.aAutocorr(spark, dir)
+    val planted = SparkEntry.queries("a_autocorr")(spark, dir)
       .select("autocorr_lag1").as[Double].head()
     assert(math.abs(planted - 1.0) < 1e-6)
   }
 
   test("rolling median lies within its trailing window's range") {
-    val rows = TrainingData3.wRollingMedian(spark, sf)
+    val rows = SparkEntry.queries("w_rolling_median")(spark, sf)
       .select("revenue", "rolling_median").as[(Double, Double)].collect()
     val revs = rows.map(_._1)
     rows.zipWithIndex.foreach { case ((_, med), i) =>
@@ -252,7 +251,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("shard manifest covers the corpus and respects the byte budget") {
-    val r = TrainingData3.mmShardManifest(spark, sf)
+    val r = SparkEntry.queries("mm_shard_manifest")(spark, sf)
       .select("shard", "n_docs", "shard_bytes").as[(Long, Long, Long)].collect()
     assert(r.map(_._2).sum == 500)
     assert(r.map(_._1).sorted.toSeq == r.map(_._1).toSeq.sorted)
@@ -272,7 +271,7 @@ class TrainingData3Spec extends SparkTestBase {
         (3L, "a", e2), (4L, "a", e2))
       .toDF("vec_id", "label", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
-    val r = TrainingData3.gTriangles(spark, dir)
+    val r = SparkEntry.queries("g_triangles")(spark, dir)
       .select("n_nodes", "n_edges", "n_triangles", "clustering_coeff")
       .as[(Long, Long, Long, Double)].head()
     // 3-clique: 3 edges, 1 triangle, 3 wedges (the dangling pair's
@@ -281,7 +280,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("skew factor is max over average key multiplicity") {
-    val r = TrainingData3.aSkewMetrics(spark, sf)
+    val r = SparkEntry.queries("a_skew_metrics")(spark, sf)
       .select("n_keys", "n_rows", "max_rows", "skew_factor")
       .as[(Long, Long, Long, Double)].head()
     assert(r._4 >= 1.0, "max is at least the average")
@@ -304,7 +303,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("recursive growth index: seeds at 100, compounds year ratios") {
-    val r = TrainingData3.sqlRecursive(spark, sf)
+    val r = SparkEntry.queries("sql_recursive")(spark, sf)
       .select("rev", "growth_index").as[(Double, Double)].collect()
     val years = spark.read.parquet(s"$sf/orders.parquet")
       .select(year($"o_orderdate").as("yr"))
@@ -318,7 +317,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("fill-forward: spine is dense and gaps carry the last value") {
-    val rows = TrainingData3.wFillForward(spark, sf)
+    val rows = SparkEntry.queries("w_fill_forward")(spark, sf)
       .select($"day", $"revenue_filled", $"is_gap")
       .as[(java.sql.Date, Double, Boolean)].collect()
     assert(rows.length >= rows.count(!_._3), "spine covers at least observed days")
@@ -329,7 +328,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("pivot/unpivot round-trip equals the plain group-by") {
-    val viaPivot = TrainingData3.sqlPivot(spark, sf)
+    val viaPivot = SparkEntry.queries("sql_pivot")(spark, sf)
       .as[(Long, String, Double)].collect().toSeq
     val direct = spark.read.parquet(s"$sf/orders.parquet")
       .groupBy(year($"o_orderdate").cast("long").as("y"), $"o_orderstatus")
@@ -340,7 +339,7 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("interval suite: clamping and next-monday semantics") {
-    val r = TrainingData3.cIntervalSuite(spark, sf)
+    val r = SparkEntry.queries("c_interval_suite")(spark, sf)
       .select($"d", $"plus_1m", $"month_end", $"next_monday")
       .as[(java.sql.Date, java.sql.Date, java.sql.Date, java.sql.Date)]
       .collect()
@@ -360,13 +359,13 @@ class TrainingData3Spec extends SparkTestBase {
       (100L, ts, "O", 99999.0)
     rows.toDF("o_orderkey", "o_orderdate", "o_orderstatus", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
-    val r = TrainingData3.aIqrOutliers(spark, dir)
+    val r = SparkEntry.queries("a_iqr_outliers")(spark, dir)
       .select("n", "n_outliers").as[(Long, Long)].head()
     assert(r == ((100L, 1L)))
   }
 
   test("z-order buckets are 16x16 tiles covering every row") {
-    val r = TrainingData3.oZorderLayout(spark, sf)
+    val r = SparkEntry.queries("o_zorder_layout")(spark, sf)
       .select("n", "cell_span").as[(Long, Long)].collect()
     val total = spark.read.parquet(s"$sf/lineitem.parquet").count()
     assert(r.map(_._1).sum == total)
@@ -375,8 +374,8 @@ class TrainingData3Spec extends SparkTestBase {
   }
 
   test("g_label_prop: communities partition the similarity-graph nodes, at least as fine as components") {
-    val comm = TrainingData3.gLabelProp(spark, sf).collect()
-    val comp = TrainingData3.gComponents(spark, sf).collect()
+    val comm = SparkEntry.queries("g_label_prop")(spark, sf).collect()
+    val comp = SparkEntry.queries("g_components")(spark, sf).collect()
     // same node universe: both operate on the cosine>=0.3 graph
     assert(comm.map(_.getAs[Long]("n_members")).sum ==
       comp.map(_.getAs[Long]("n_members")).sum)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData40
 
 /** Invariant pins for the round-9 batch-35 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -15,7 +14,7 @@ class TrainingData40Spec extends SparkTestBase {
       .map { case (d, rs) => (d, rs.map(_.getAs[Long]("user_id")).toSet) }
 
   test("growth accounting: identities against raw day sets") {
-    val out = TrainingData40.queries("ev_growth_accounting")(spark, sf)
+    val out = SparkEntry.queries("ev_growth_accounting")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     val act = activeByDay()
@@ -39,7 +38,7 @@ class TrainingData40Spec extends SparkTestBase {
   }
 
   test("stickiness: bounded by 1, wau bounds avg_dau") {
-    val out = TrainingData40.queries("ev_stickiness")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_stickiness")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val s = r.getAs[Double]("stickiness")
@@ -50,7 +49,7 @@ class TrainingData40Spec extends SparkTestBase {
   }
 
   test("bot flag: one row per user, flag rule replays") {
-    val out = TrainingData40.queries("ev_bot_flag")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_bot_flag")(spark, sf).collect()
     val nUsers = graft.sources.Tables.table(spark, sf, "events")
       .select(col("user_id")).distinct().count()
     assert(out.length.toLong == nUsers)

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData41
 
 /** Invariant pins for the round-9 batch-36 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData41Spec extends SparkTestBase {
 
   test("runs test: counts partition, runs replay from the sign sequence") {
-    val out = TrainingData41.queries("a_runs_test")(spark, sf).collect()
+    val out = SparkEntry.queries("a_runs_test")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_above") + r.getAs[Long]("n_below") ==
@@ -34,7 +33,7 @@ class TrainingData41Spec extends SparkTestBase {
   }
 
   test("vocab growth: sublinear beta, good log-log fit, exact vocab") {
-    val out = TrainingData41.queries("t_vocab_growth")(spark, sf).collect()
+    val out = SparkEntry.queries("t_vocab_growth")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
@@ -53,7 +52,7 @@ class TrainingData41Spec extends SparkTestBase {
   }
 
   test("threshold sweep: monotone non-increasing yield, 0.9 matches dedup op") {
-    val out = TrainingData41.queries("t_jaccard_threshold_sweep")(spark, sf)
+    val out = SparkEntry.queries("t_jaccard_threshold_sweep")(spark, sf)
       .collect().sortBy(_.getAs[Double]("threshold"))
     assert(out.map(_.getAs[Double]("threshold")).toSeq ==
       Seq(0.5, 0.6, 0.7, 0.8, 0.9))

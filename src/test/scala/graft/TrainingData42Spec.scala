@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData42
 
 /** Invariant pins for the round-9 batch-37 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData42Spec extends SparkTestBase {
 
   test("pacf: lag-1 equals acf-1, all bounded, driver DL replay") {
-    val out = TrainingData42.queries("w_pacf")(spark, sf).collect()
+    val out = SparkEntry.queries("w_pacf")(spark, sf).collect()
     assert(out.length == 7)
     val acf = out.map(r => r.getAs[Int]("lag") -> r.getAs[Double]("acf")).toMap
     val pacf = out.map(r => r.getAs[Int]("lag") -> r.getAs[Double]("pacf")).toMap
@@ -36,7 +35,7 @@ class TrainingData42Spec extends SparkTestBase {
   }
 
   test("pq subspace audit: 8 subspaces, bounded shares, code budget") {
-    val out = TrainingData42.queries("e_pq_subspace_audit")(spark, sf).collect()
+    val out = SparkEntry.queries("e_pq_subspace_audit")(spark, sf).collect()
     assert(out.length == 8)
     val nVec = graft.sources.Tables.table(spark, sf, "embeddings").count()
     out.foreach { r =>
@@ -54,7 +53,7 @@ class TrainingData42Spec extends SparkTestBase {
   }
 
   test("langid confusion: margins conserve the corpus, f1 is the harmonic mean") {
-    val out = TrainingData42.queries("t_langid_confusion")(spark, sf).collect()
+    val out = SparkEntry.queries("t_langid_confusion")(spark, sf).collect()
     assert(out.nonEmpty)
     val n = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_actual")).sum == n)

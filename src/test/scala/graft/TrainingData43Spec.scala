@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData43
 
 /** Invariant pins for the round-9 batch-38 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData43Spec extends SparkTestBase {
 
   test("entropy rate: information inequalities hold") {
-    val out = TrainingData43.queries("ev_entropy_rate")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_entropy_rate")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val hm = r.getAs[Double]("h_marginal")
@@ -23,7 +22,7 @@ class TrainingData43Spec extends SparkTestBase {
   }
 
   test("burstiness: content words above function words, driver replay") {
-    val out = TrainingData43.queries("t_term_burstiness")(spark, sf).collect()
+    val out = SparkEntry.queries("t_term_burstiness")(spark, sf).collect()
     assert(out.nonEmpty && out.length <= 20)
     val bs = out.map(_.getAs[Double]("burstiness")).toSeq
     assert(bs.zip(bs.tail).forall { case (a, b) => a >= b })
@@ -44,7 +43,7 @@ class TrainingData43Spec extends SparkTestBase {
   }
 
   test("beta posterior: shrinkage toward 1/2, CI brackets the mean") {
-    val out = TrainingData43.queries("a_beta_posterior")(spark, sf).collect()
+    val out = SparkEntry.queries("a_beta_posterior")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val raw = r.getAs[Double]("raw_share")

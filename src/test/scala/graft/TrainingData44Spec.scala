@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData44
 
 /** Invariant pins for the round-9 batch-39 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData44Spec extends SparkTestBase {
 
   test("ses grid: 9 alphas, dense rank, driver replay of one alpha") {
-    val out = TrainingData44.queries("w_ses_grid")(spark, sf).collect()
+    val out = SparkEntry.queries("w_ses_grid")(spark, sf).collect()
     assert(out.length == 9)
     assert(out.map(_.getAs[Int]("rank")).sorted.toSeq == (1 to 9).toSeq)
     val xs = graft.sources.Tables.table(spark, sf, "orders")
@@ -33,7 +32,7 @@ class TrainingData44Spec extends SparkTestBase {
   }
 
   test("encoding advisor: ndv/runs replay against a driver-side pass") {
-    val out = TrainingData44.queries("o_encoding_advisor")(spark, sf).collect()
+    val out = SparkEntry.queries("o_encoding_advisor")(spark, sf).collect()
     assert(out.length == 2)
     val rows = graft.sources.Tables.table(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
@@ -59,19 +58,19 @@ class TrainingData44Spec extends SparkTestBase {
     // exercised) without the ~1M-reduce-task DAG-scheduler grind the
     // old 999999 conf paid (~17 min of the suite wall, round-12
     // verdict #5) — the invariant tested is identical.
-    val base = TrainingData44.queries("o_encoding_advisor")(spark, sf)
+    val base = SparkEntry.queries("o_encoding_advisor")(spark, sf)
       .collect().map(_.toSeq).toSeq
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "4999")
-      val capped = TrainingData44.queries("o_encoding_advisor")(spark, sf)
+      val capped = SparkEntry.queries("o_encoding_advisor")(spark, sf)
         .collect().map(_.toSeq).toSeq
       assert(capped == base)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   test("session depth: mass conserves events, depths positive") {
-    val out = TrainingData44.queries("ev_session_depth")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_session_depth")(spark, sf).collect()
     assert(out.nonEmpty)
     val nEvents = graft.sources.Tables.table(spark, sf, "events").count()
     // Σ depth · n_sessions = total events (every event in exactly one session)

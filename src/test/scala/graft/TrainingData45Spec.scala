@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TrainingData45}
+import graft.operators.Dedup
 
 /** Invariant pins for the round-9 batch-40 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -24,7 +24,7 @@ class TrainingData45Spec extends SparkTestBase {
       .filter(col("n") > 1).collect()
     assert(groups.exists(r => r.getAs[Long]("survivor") == donor.getLong(0)))
     // the registered query itself runs clean
-    val out = TrainingData45.queries("dedup_normalized")(spark, sf).collect()
+    val out = SparkEntry.queries("dedup_normalized")(spark, sf).collect()
     out.foreach { r =>
       assert(r.getAs[Long]("n_members") >= 2)
       assert(r.getAs[Long]("survivor") <= r.getAs[Long]("max_member"))
@@ -32,7 +32,7 @@ class TrainingData45Spec extends SparkTestBase {
   }
 
   test("anisotropy: bounded by 1, global row present, label masses") {
-    val out = TrainingData45.queries("e_anisotropy")(spark, sf).collect()
+    val out = SparkEntry.queries("e_anisotropy")(spark, sf).collect()
     assert(out.nonEmpty)
     val global = out.filter(_.getAs[Long]("label") == -1L)
     assert(global.length == 1)
@@ -52,7 +52,7 @@ class TrainingData45Spec extends SparkTestBase {
   }
 
   test("dup quality bias: masses partition the corpus, t replays") {
-    val out = TrainingData45.queries("t_dup_quality_bias")(spark, sf).collect()
+    val out = SparkEntry.queries("t_dup_quality_bias")(spark, sf).collect()
     val nPairsDocs = Dedup.minhashLshPairs(spark, sf, portableHashes = true)
       .select(explode(array(col("d1"), col("d2"))).as("d")).distinct().count()
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()

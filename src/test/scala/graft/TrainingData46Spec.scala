@@ -1,25 +1,24 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData46
 
 /** Invariant pins for the round-9 batch-41 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData46Spec extends SparkTestBase {
 
   test("mcnemar: cells partition the corpus, margins match the filters") {
-    val out = TrainingData46.queries("a_mcnemar_filters")(spark, sf).collect()
+    val out = SparkEntry.queries("a_mcnemar_filters")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val n = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(r.getAs[Long]("n_both") + r.getAs[Long]("n_a_only") +
       r.getAs[Long]("n_b_only") + r.getAs[Long]("n_neither") == n)
     // margin A = the registered C4 keep count
-    val keepA = graft.operators.TrainingData2.queries("t_c4_filters")(spark, sf)
+    val keepA = SparkEntry.queries("t_c4_filters")(spark, sf)
       .filter(col("keep")).count()
     assert(r.getAs[Long]("n_both") + r.getAs[Long]("n_a_only") == keepA)
     // margin B = the registered classifier keep count
-    val keepB = graft.operators.TrainingData2
+    val keepB = SparkEntry
       .queries("t_classifier_infer")(spark, sf).filter(col("keep")).count()
     assert(r.getAs[Long]("n_both") + r.getAs[Long]("n_b_only") == keepB)
     assert(Set("no_discordance", "filters_differ", "consistent")
@@ -27,7 +26,7 @@ class TrainingData46Spec extends SparkTestBase {
   }
 
   test("cross-correlation: 15 lags, bounded, lag-0 is plain corr") {
-    val out = TrainingData46.queries("w_cross_correlation")(spark, sf).collect()
+    val out = SparkEntry.queries("w_cross_correlation")(spark, sf).collect()
     assert(out.length == 15)
     assert(out.map(_.getAs[Int]("lag")).toSeq == (-7 to 7).toSeq)
     out.foreach { r =>
@@ -43,7 +42,7 @@ class TrainingData46Spec extends SparkTestBase {
   }
 
   test("shard balance: masses partition, balance bounded by 1") {
-    val out = TrainingData46.queries("mm_shard_balance")(spark, sf).collect()
+    val out = SparkEntry.queries("mm_shard_balance")(spark, sf).collect()
     assert(out.nonEmpty)
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == nDocs)
@@ -59,7 +58,7 @@ class TrainingData46Spec extends SparkTestBase {
       if (mods > 1) assert(b > 0.0)
     }
     // shard count agrees with the registered manifest
-    val manifest = graft.operators.TrainingData3
+    val manifest = SparkEntry
       .queries("mm_shard_manifest")(spark, sf).count()
     assert(out.length.toLong == manifest)
   }

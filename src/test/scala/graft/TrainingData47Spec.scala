@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData47
 
 /** Invariant pins for the round-9 batch-42 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData47Spec extends SparkTestBase {
 
   test("perplexity buckets: partition the corpus, ordered by entropy") {
-    val out = TrainingData47.queries("t_perplexity_buckets")(spark, sf)
+    val out = SparkEntry.queries("t_perplexity_buckets")(spark, sf)
       .collect().sortBy(_.getAs[String]("bucket"))
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == nDocs)
@@ -32,7 +31,7 @@ class TrainingData47Spec extends SparkTestBase {
   }
 
   test("lorenz: monotone convex-ish curve ending at 1") {
-    val out = TrainingData47.queries("a_lorenz_points")(spark, sf)
+    val out = SparkEntry.queries("a_lorenz_points")(spark, sf)
       .collect().sortBy(_.getAs[Int]("decile"))
     assert(out.map(_.getAs[Int]("decile")).toSeq == (1 to 10).toSeq)
     val shares = out.map(_.getAs[Double]("cum_revenue_share")).toSeq
@@ -49,7 +48,7 @@ class TrainingData47Spec extends SparkTestBase {
   }
 
   test("dedup funnel: tiers ordered, marginals bounded by flags") {
-    val out = TrainingData47.queries("dedup_funnel")(spark, sf)
+    val out = SparkEntry.queries("dedup_funnel")(spark, sf)
       .collect().sortBy(_.getAs[Int]("tier"))
     assert(out.map(_.getAs[String]("method")).toSeq ==
       Seq("exact", "normalized", "minhash_lsh"))

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData48
 
 /** Invariant pins for the round-9 batch-43 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData48Spec extends SparkTestBase {
 
   test("modularity: degree mass conserves, Q bounded, identity holds") {
-    val out = TrainingData48.queries("g_modularity")(spark, sf).collect()
+    val out = SparkEntry.queries("g_modularity")(spark, sf).collect()
     assert(out.nonEmpty)
     val p = out.map(_.getAs[Long]("d_c")).sum
     // ordered-pair masses: Σ d_c = |P|, within ≤ degree mass per label
@@ -27,7 +26,7 @@ class TrainingData48Spec extends SparkTestBase {
   }
 
   test("turning points: driver replay, verdict rule") {
-    val out = TrainingData48.queries("w_turning_points")(spark, sf).collect()
+    val out = SparkEntry.queries("w_turning_points")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val xs = graft.sources.Tables.table(spark, sf, "orders")
@@ -47,7 +46,7 @@ class TrainingData48Spec extends SparkTestBase {
   }
 
   test("bigram entropy: bounded by ln(distinct), masses replay") {
-    val out = TrainingData48.queries("t_char_bigram_entropy")(spark, sf)
+    val out = SparkEntry.queries("t_char_bigram_entropy")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     val total = graft.sources.Tables.table(spark, sf, "documents")

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData49
 
 /** Invariant pins for the round-9 batch-44 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData49Spec extends SparkTestBase {
 
   test("asof hit rate: monotone in tolerance, bounded, fixed view count") {
-    val out = TrainingData49.queries("j_asof_hit_rate")(spark, sf)
+    val out = SparkEntry.queries("j_asof_hit_rate")(spark, sf)
       .collect().sortBy(_.getAs[Long]("tolerance_sec"))
     assert(out.map(_.getAs[Long]("tolerance_sec")).toSeq ==
       Seq(60L, 3600L, 86400L))
@@ -26,7 +25,7 @@ class TrainingData49Spec extends SparkTestBase {
   }
 
   test("neyman: budget exact, shares normalize, sd drives allocation") {
-    val out = TrainingData49.queries("t_neyman_allocation")(spark, sf).collect()
+    val out = SparkEntry.queries("t_neyman_allocation")(spark, sf).collect()
     assert(out.nonEmpty)
     assert(out.map(_.getAs[Long]("n_alloc")).sum == 1000L)
     val shares = out.map(_.getAs[Double]("share"))
@@ -40,7 +39,7 @@ class TrainingData49Spec extends SparkTestBase {
   }
 
   test("storage tiers: partition rows, age ranges disjoint and ordered") {
-    val out = TrainingData49.queries("o_storage_tiers")(spark, sf)
+    val out = SparkEntry.queries("o_storage_tiers")(spark, sf)
       .collect().sortBy(_.getAs[Long]("min_age_days"))
     val n = graft.sources.Tables.table(spark, sf, "orders").count()
     assert(out.map(_.getAs[Long]("n_orders")).sum == n)

@@ -2,17 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingData4
+import graft.operators.SimilarityQueries
 
 /** Invariant pins for the round-7 embedding extensions. Value-level
   * correctness is the DuckDB oracle's job (full-replay oracles in
-  * TrainingData4.oracles); these pin the structural contracts that an
+  * SimilarityQueries.oracles); these pin the structural contracts that an
   * oracle hash can't express as clearly.
   */
 class TrainingData4Spec extends SparkTestBase {
 
   test("sim_kmeans: every vector assigned exactly once, clusters in 1..8, cos in [-1,1]") {
-    val out = TrainingData4.simKmeans(spark, sf).cache()
+    val out = SparkEntry.queries("sim_kmeans")(spark, sf).cache()
     try {
       val n = graft.sources.Tables.table(spark, sf, "embeddings").count()
       assert(out.count() == n)
@@ -27,7 +27,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("sim_cluster_purity: members sum to corpus, purity in (0,1]") {
-    val out = TrainingData4.simClusterPurity(spark, sf).cache()
+    val out = SparkEntry.queries("sim_cluster_purity")(spark, sf).cache()
     try {
       val n = graft.sources.Tables.table(spark, sf, "embeddings").count()
       assert(out.agg(sum(col("n_members"))).head.getLong(0) == n)
@@ -40,7 +40,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("e_pq_codes: one row per vector, code_sum within the 8x16 codebook bounds") {
-    val out = TrainingData4.ePqCodes(spark, sf).cache()
+    val out = SparkEntry.queries("e_pq_codes")(spark, sf).cache()
     try {
       val n = graft.sources.Tables.table(spark, sf, "embeddings").count()
       assert(out.count() == n)
@@ -73,7 +73,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("t_split_contamination: valid split labels, positive counts, symmetric shared-gram counts") {
-    val out = TrainingData4.tSplitContamination(spark, sf).cache()
+    val out = SparkEntry.queries("t_split_contamination")(spark, sf).cache()
     try {
       val splits = Set("train", "val", "test")
       val rows = out.collect()
@@ -90,7 +90,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("t_oov_rate: three splits, rate consistent with counts, non-vacuous OOV") {
-    val out = TrainingData4.tOovRate(spark, sf).cache()
+    val out = SparkEntry.queries("t_oov_rate")(spark, sf).cache()
     try {
       val rows = out.collect()
       assert(rows.map(_.getAs[String]("split")).toSet == Set("train", "val", "test"))
@@ -106,7 +106,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("ev_peak_concurrency: sweep conserves opens/closes and peak bounds hold") {
-    val out = TrainingData4.evPeakConcurrency(spark, sf).cache()
+    val out = SparkEntry.queries("ev_peak_concurrency")(spark, sf).cache()
     try {
       val n = graft.sources.Tables.table(spark, sf, "events").count()
       // every event opens exactly once, somewhere
@@ -121,7 +121,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("j_interval_overlap: pair counts bounded by active-user pairs, argmax pair ordered") {
-    val out = TrainingData4.jIntervalOverlap(spark, sf).cache()
+    val out = SparkEntry.queries("j_interval_overlap")(spark, sf).cache()
     try {
       val activePairs = graft.sources.Tables.table(spark, sf, "events")
         .groupBy(to_date(col("ts")).as("day"))
@@ -136,7 +136,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("e_quantize_int8: codes bounded in [0,255], full dim coverage, distortion below one step") {
-    val out = TrainingData4.eQuantizeInt8(spark, sf).cache()
+    val out = SparkEntry.queries("e_quantize_int8")(spark, sf).cache()
     try {
       assert(out.filter(col("max_code") > 255 || col("max_code") < 0).count() == 0L)
       assert(out.filter(col("n_dims") =!= 64).count() == 0L)
@@ -172,7 +172,7 @@ class TrainingData4Spec extends SparkTestBase {
     val leak = (1 to 13).map(i => s"u$i").mkString(" ")
     val docsDf = (boilerDocs ++ Seq((idA, leak), (idB, leak)))
       .toDF("doc_id", "text")
-    val capped = graft.operators.TrainingData4
+    val capped = graft.operators.TextQueries
       .splitContaminationOf(docsDf, maxDf = 64).collect()
     // only the rare leak registers: one ordered pair each way, one
     // shared gram, one leaky doc
@@ -184,7 +184,7 @@ class TrainingData4Spec extends SparkTestBase {
     assert(got == expected, s"got $got")
     // with the cap lifted the boilerplate floods every split pair —
     // the contrast that shows the cap is doing the dropping
-    val uncapped = graft.operators.TrainingData4
+    val uncapped = graft.operators.TextQueries
       .splitContaminationOf(docsDf, maxDf = 1000)
       .agg(sum(col("n_leaky_docs"))).head.getLong(0)
     assert(uncapped > 200L, s"uncapped leaky-doc mass $uncapped")
@@ -204,24 +204,24 @@ class TrainingData4Spec extends SparkTestBase {
     }
     val emb = ((1 to 6).map(i => (i.toLong, jit(a, i))) ++
       (7 to 12).map(i => (i.toLong, jit(b, i)))).toDF("vec_id", "e")
-    val out = graft.operators.TrainingData4.kmeansConvergedOf(emb).collect()
+    val out = graft.operators.SimilarityQueries.kmeansConvergedOf(emb).collect()
     assert(out.length == 12)
     val iters = out.map(_.getAs[Long]("iters")).distinct
     assert(iters.length == 1 && iters.head >= 2 && iters.head < 6,
       s"expected early stop, got iters=${iters.toSeq}")
     // fixed point reached → deterministic across reruns
-    val again = graft.operators.TrainingData4.kmeansConvergedOf(emb).collect()
+    val again = graft.operators.SimilarityQueries.kmeansConvergedOf(emb).collect()
     assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted ==
       again.map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
     // gate corpus: hits the documented cap, still one row per vector
-    val full = graft.operators.TrainingData4.simKmeansConverged(spark, sf)
+    val full = SparkEntry.queries("sim_kmeans_converged")(spark, sf)
     val n = graft.sources.Tables.table(spark, sf, "embeddings").count()
     assert(full.count() == n)
     assert(full.select(col("iters")).distinct().head().getLong(0) == 6L)
   }
 
   test("sim_ivf_pq_search: 5 results per query, positive distances, no self-matches") {
-    val out = TrainingData4.simIvfPqSearch(spark, sf).cache()
+    val out = SparkEntry.queries("sim_ivf_pq_search")(spark, sf).cache()
     try {
       val rows = out.collect()
       val perQuery = rows.groupBy(_.getAs[Long]("query_id"))
@@ -239,7 +239,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("sim_ann_recall_eval: one row per query, recall consistent with hits") {
-    val out = TrainingData4.simAnnRecallEval(spark, sf).collect()
+    val out = SparkEntry.queries("sim_ann_recall_eval")(spark, sf).collect()
     assert(out.length == 10)
     out.foreach { r =>
       assert(r.getAs[Long]("n_returned") == 5L)
@@ -253,7 +253,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("sql_recursive_batched: batch folds reproduce the sequential product bit-for-bit") {
-    val out = graft.operators.TrainingData3.sqlRecursiveBatched(spark, sf)
+    val out = SparkEntry.queries("sql_recursive_batched")(spark, sf)
       .orderBy(col("yr"), col("mo")).collect()
     assert(out.length > 33, "needs 3+ batches of 16 to exercise the recursion")
     // sequential replay in plain Scala over the SAME monthly doubles:
@@ -275,7 +275,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("t_k_anonymity: rollup internally consistent, corpus covered, non-vacuous risk") {
-    val out = TrainingData4.tKAnonymity(spark, sf).collect()
+    val out = SparkEntry.queries("t_k_anonymity")(spark, sf).collect()
     val n = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == n, "every document audited")
     out.foreach { r =>
@@ -293,7 +293,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("ev_rfm_segments: users and events conserved, well-formed quartile labels") {
-    val out = TrainingData4.evRfmSegments(spark, sf).collect()
+    val out = SparkEntry.queries("ev_rfm_segments")(spark, sf).collect()
     val ev = graft.sources.Tables.table(spark, sf, "events")
     assert(out.map(_.getAs[Long]("n_users")).sum ==
       ev.select(countDistinct(col("user_id"))).head().getLong(0))
@@ -306,7 +306,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("t_ngram_novelty: first document is fully novel, rates bounded, corpus covered") {
-    val out = TrainingData4.tNgramNovelty(spark, sf).collect()
+    val out = SparkEntry.queries("t_ngram_novelty")(spark, sf).collect()
     val docs = graft.sources.Tables.table(spark, sf, "documents")
     assert(out.length == docs.count())
     out.foreach { r =>
@@ -322,7 +322,7 @@ class TrainingData4Spec extends SparkTestBase {
   }
 
   test("w_cusum_drift: non-negative statistic, both alarm states, full day coverage") {
-    val out = TrainingData4.wCusumDrift(spark, sf).collect()
+    val out = SparkEntry.queries("w_cusum_drift")(spark, sf).collect()
     val days = graft.sources.Tables.table(spark, sf, "orders")
       .select(col("o_orderdate")).distinct().count()
     assert(out.length == days)
@@ -346,7 +346,7 @@ class TrainingData4Spec extends SparkTestBase {
       (1L, Seq(0.5, 1.0, -2.0)),
       (2L, Seq(0.5, 3.0, 4.0)),
       (3L, Seq(0.5, 2.0, 0.0))).toDF("vec_id", "e")
-    val out = graft.operators.TrainingData4.quantizeInt8Of(emb).collect()
+    val out = graft.operators.EmbeddingQueries.quantizeInt8Of(emb).collect()
     assert(out.length == 3)
     // no NaN/null leaked into any aggregate
     out.foreach { r =>
@@ -358,7 +358,7 @@ class TrainingData4Spec extends SparkTestBase {
     // reconstruction exact
     val flat = Seq((1L, Seq(2.0, 2.0)), (2L, Seq(2.0, 2.0)))
       .toDF("vec_id", "e")
-    val fo = graft.operators.TrainingData4.quantizeInt8Of(flat).collect()
+    val fo = graft.operators.EmbeddingQueries.quantizeInt8Of(flat).collect()
     fo.foreach { r =>
       assert(r.getAs[Long]("sum_code") == 0L && r.getAs[Long]("max_code") == 0L)
       assert(r.getAs[Double]("mean_abs_err") == 0.0)

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData50
 
 /** Invariant pins for the round-9 batch-45 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData50Spec extends SparkTestBase {
 
   test("t-closeness: bounded EMD, masses partition the corpus") {
-    val out = TrainingData50.queries("t_t_closeness")(spark, sf).collect()
+    val out = SparkEntry.queries("t_t_closeness")(spark, sf).collect()
     assert(out.nonEmpty)
     val n = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == n)
@@ -22,7 +21,7 @@ class TrainingData50Spec extends SparkTestBase {
   }
 
   test("partial correlation: bounded, collapses when z explains all") {
-    val out = TrainingData50.queries("a_partial_corr")(spark, sf).collect()
+    val out = SparkEntry.queries("a_partial_corr")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     Seq("r_xy", "r_xz", "r_yz", "partial_r_xy_given_z").foreach { c =>
@@ -37,7 +36,7 @@ class TrainingData50Spec extends SparkTestBase {
   }
 
   test("hurst: sizes present, H in (0,1), mean R/S grows with block size") {
-    val out = TrainingData50.queries("w_hurst")(spark, sf)
+    val out = SparkEntry.queries("w_hurst")(spark, sf)
       .collect().sortBy(_.getAs[Long]("block_size"))
     assert(out.map(_.getAs[Long]("block_size")).toSeq ==
       Seq(16L, 32L, 64L, 128L))

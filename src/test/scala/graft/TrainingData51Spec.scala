@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData51
 
 /** Invariant pins for the round-9 batch-46 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData51Spec extends SparkTestBase {
 
   test("tail dependence: conditionals bounded by their margins") {
-    val out = TrainingData51.queries("a_tail_dependence")(spark, sf).collect()
+    val out = SparkEntry.queries("a_tail_dependence")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_both_hi") <= r.getAs[Long]("n_x_hi"))
@@ -24,7 +23,7 @@ class TrainingData51Spec extends SparkTestBase {
   }
 
   test("season strength: both F in [0,1], seasonal beats trendless resid") {
-    val out = TrainingData51.queries("w_season_strength")(spark, sf).collect()
+    val out = SparkEntry.queries("w_season_strength")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val fs = r.getAs[Double]("f_seasonal")
@@ -33,14 +32,14 @@ class TrainingData51Spec extends SparkTestBase {
     assert(ft >= 0.0 && ft <= 1.0)
     assert(r.getAs[Long]("n_days_used") > 0)
     // consistency with the registered decomposition's row count
-    val rows = graft.operators.TrainingData9
+    val rows = SparkEntry
       .queries("w_seasonal_decompose")(spark, sf)
       .filter(col("residual").isNotNull).count()
     assert(r.getAs[Long]("n_days_used") == rows)
   }
 
   test("rich club: monotone shrinking club, phi bounded by 1") {
-    val out = TrainingData51.queries("g_rich_club")(spark, sf)
+    val out = SparkEntry.queries("g_rich_club")(spark, sf)
       .collect().sortBy(_.getAs[Long]("k"))
     assert(out.nonEmpty)
     val ns = out.map(_.getAs[Long]("n_rich")).toSeq

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData52
 
 /** Invariant pins for the round-9 batch-47 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData52Spec extends SparkTestBase {
 
   test("participation ratio: within [1, dim], counts match") {
-    val out = TrainingData52.queries("e_participation_ratio")(spark, sf)
+    val out = SparkEntry.queries("e_participation_ratio")(spark, sf)
       .collect()
     assert(out.length == 1)
     val r = out.head
@@ -21,7 +20,7 @@ class TrainingData52Spec extends SparkTestBase {
   }
 
   test("circadian: one row per user, entropy bounded by ln(active hours)") {
-    val out = TrainingData52.queries("ev_circadian")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_circadian")(spark, sf).collect()
     val nUsers = graft.sources.Tables.table(spark, sf, "events")
       .select(col("user_id")).distinct().count()
     assert(out.length.toLong == nUsers)
@@ -38,7 +37,7 @@ class TrainingData52Spec extends SparkTestBase {
   }
 
   test("freshness: three tables, reference is the newest, staleness >= 0") {
-    val out = TrainingData52.queries("q_dq_freshness")(spark, sf).collect()
+    val out = SparkEntry.queries("q_dq_freshness")(spark, sf).collect()
     assert(out.length == 3)
     assert(out.map(_.getAs[String]("table_name")).toSet ==
       Set("orders", "lineitem", "events"))

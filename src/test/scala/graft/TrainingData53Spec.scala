@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData53
 
 /** Invariant pins for the round-9 batch-48 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData53Spec extends SparkTestBase {
 
   test("lsh recall curve: buckets in range, recalls bounded, theory monotone") {
-    val out = TrainingData53.queries("dedup_lsh_recall_curve")(spark, sf)
+    val out = SparkEntry.queries("dedup_lsh_recall_curve")(spark, sf)
       .collect().sortBy(_.getAs[Double]("bucket"))
     // sf0.001 may have no >= 0.7 near-dup pairs at all — curve empty
     out.foreach { r =>
@@ -25,7 +24,7 @@ class TrainingData53Spec extends SparkTestBase {
   }
 
   test("retention decay: k grid dense, rates bounded, driver replay of k=1") {
-    val out = TrainingData53.queries("ev_retention_decay")(spark, sf)
+    val out = SparkEntry.queries("ev_retention_decay")(spark, sf)
       .collect().sortBy(_.getAs[Long]("k"))
     assert(out.map(_.getAs[Long]("k")).toSeq == (1L to 14L).toSeq)
     out.foreach { r =>
@@ -49,7 +48,7 @@ class TrainingData53Spec extends SparkTestBase {
   }
 
   test("cohens h: proportions replay, magnitude rule, bounded h") {
-    val out = TrainingData53.queries("a_cohens_h")(spark, sf).collect()
+    val out = SparkEntry.queries("a_cohens_h")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_weekend_purchases") <=

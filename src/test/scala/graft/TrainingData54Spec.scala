@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData54
+import graft.operators.DedupQueries
 
 /** Invariant pins for the round-10 batch-54 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -23,7 +23,7 @@ class TrainingData54Spec extends SparkTestBase {
       doc(4L, (1 to 3).map(i => s"y$i") ++ span.take(11) ++
         Seq("z1", "z2", "z3") ++ span.drop(5) ++ Seq("y4"): _*))
       .toDF("doc_id", "text")
-    val out = TrainingData54.exactSubstringOf(docs, 10, 64)
+    val out = DedupQueries.exactSubstringOf(docs, 10, 64)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getAs[Long]("span_tokens"), r.getAs[Long]("n_anchors"),
@@ -53,7 +53,7 @@ class TrainingData54Spec extends SparkTestBase {
     // boilerplate; (1,2) survives on its df=2 middle anchors
     // (s3..s12, s4..s13, s5..s14 → run 3 → span 12), the doc-4 pairs
     // lose every anchor
-    val out = TrainingData54.exactSubstringOf(docs, 10, 2)
+    val out = DedupQueries.exactSubstringOf(docs, 10, 2)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getAs[Long]("span_tokens"), r.getAs[Long]("n_anchors"),
@@ -62,7 +62,7 @@ class TrainingData54Spec extends SparkTestBase {
   }
 
   test("exact substring dedup on the corpus: spans bounded by doc length, symmetric-free") {
-    val out = TrainingData54.queries("dedup_exact_substring")(spark, sf)
+    val out = SparkEntry.queries("dedup_exact_substring")(spark, sf)
       .collect()
     assert(out.nonEmpty, "the generator plants verbatim spans")
     val nToks = graft.sources.Tables.table(spark, sf, "documents")
@@ -80,7 +80,7 @@ class TrainingData54Spec extends SparkTestBase {
   }
 
   test("rerank agreement: driver replay of the two orders and Kendall tau") {
-    val out = TrainingData54.queries("r_rerank_agreement")(spark, sf)
+    val out = SparkEntry.queries("r_rerank_agreement")(spark, sf)
       .collect().map(r => r.getLong(0) ->
         (r.getAs[Long]("n_concordant"), r.getAs[Long]("n_discordant"),
           r.getAs[Double]("kendall_tau"), r.getAs[Long]("rerank_top1_bi_rank")))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData54, TrainingData55}
+import graft.operators.DedupQueries
 
 /** Invariant pins for the round-10 batch-55 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -24,7 +24,7 @@ class TrainingData55Spec extends SparkTestBase {
         Seq("z1", "z2", "z3") ++ span.drop(5) ++ Seq("y4"): _*),
       doc(6L, Seq("t1", "t2", "t3") ++ span ++ Seq("t4"): _*))
       .toDF("doc_id", "text")
-    val out = TrainingData55.substringScrubOf(docs, 10, 64)
+    val out = DedupQueries.substringScrubOf(docs, 10, 64)
       .collect()
       .map(r => r.getLong(0) ->
         (r.getAs[Long]("n_tokens"), r.getAs[Long]("tokens_removed"),
@@ -36,10 +36,10 @@ class TrainingData55Spec extends SparkTestBase {
   }
 
   test("substring scrub on the corpus: exactly the detector's later docs, bounded cuts") {
-    val scrub = TrainingData55.queries("dedup_substring_scrub")(spark, sf)
+    val scrub = SparkEntry.queries("dedup_substring_scrub")(spark, sf)
       .collect()
     assert(scrub.nonEmpty)
-    val laterDocs = TrainingData54.queries("dedup_exact_substring")(spark, sf)
+    val laterDocs = SparkEntry.queries("dedup_exact_substring")(spark, sf)
       .select(col("doc_b")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(scrub.map(_.getLong(0)).toSet == laterDocs,
@@ -54,7 +54,7 @@ class TrainingData55Spec extends SparkTestBase {
   }
 
   test("mrr/map: driver replay of label-relevance retrieval metrics") {
-    val out = TrainingData55.queries("sim_mrr_map")(spark, sf)
+    val out = SparkEntry.queries("sim_mrr_map")(spark, sf)
       .collect().map(r => r.getLong(0) ->
         (r.getAs[Long]("n_relevant_at_10"), r.getAs[Double]("reciprocal_rank"),
           r.getAs[Double]("avg_precision"), r.getAs[Double]("mrr_at_10"),

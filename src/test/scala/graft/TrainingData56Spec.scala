@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData56
 
 /** Invariant pins for the round-10 batch-56 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData56Spec extends SparkTestBase {
 
   test("quality logreg: descent trace improves and replays on the driver") {
-    val out = TrainingData56.queries("t_quality_logreg")(spark, sf)
+    val out = SparkEntry.queries("t_quality_logreg")(spark, sf)
       .collect()
     assert(out.map(_.getLong(0)).toSeq == (1L to 5L))
     val losses = out.map(_.getAs[Double]("log_loss")).toSeq
@@ -22,7 +21,7 @@ class TrainingData56Spec extends SparkTestBase {
       assert(acc >= 0.0 && acc <= 1.0)
     }
     // driver replay of the full descent from the same features
-    val feats = graft.operators.TrainingData2.tC4Filters(spark, sf)
+    val feats = SparkEntry.queries("t_c4_filters")(spark, sf)
       .select(col("doc_id"), col("n_tokens"), col("avg_word_len"), col("keep"))
       .collect()
       .sortBy(_.getLong(0))
@@ -59,7 +58,7 @@ class TrainingData56Spec extends SparkTestBase {
   }
 
   test("holt grid: 9 cells, dense rank, driver replay of one (alpha, beta)") {
-    val out = TrainingData56.queries("w_holt_grid")(spark, sf).collect()
+    val out = SparkEntry.queries("w_holt_grid")(spark, sf).collect()
     assert(out.length == 9)
     assert(out.map(_.getAs[Int]("rank")).sorted.toSeq == (1 to 9).toSeq)
     val xs = graft.sources.Tables.table(spark, sf, "orders")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TrainingData57}
+import graft.operators.Dedup
 
 /** Invariant pins for the round-10 batch-57 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -16,7 +16,7 @@ class TrainingData57Spec extends SparkTestBase {
   }
 
   test("dp top-k: gumbel scores replay on the driver, release is the true argmax set") {
-    val out = TrainingData57.queries("t_dp_topk")(spark, sf).collect()
+    val out = SparkEntry.queries("t_dp_topk")(spark, sf).collect()
     assert(out.map(_.getLong(0)).toSeq == (1L to 5L))
     val counts = graft.sources.Tables.table(spark, sf, "documents")
       .select(explode(split(col("text"), " ")).as("token"))
@@ -38,7 +38,7 @@ class TrainingData57Spec extends SparkTestBase {
   }
 
   test("source matrix: canonical cells, mass equals the LSH pair set, shares sum to 1") {
-    val out = TrainingData57.queries("dedup_source_matrix")(spark, sf)
+    val out = SparkEntry.queries("dedup_source_matrix")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     val nPairs = Dedup.minhashLshPairs(spark, sf, portableHashes = true).count()
@@ -53,7 +53,7 @@ class TrainingData57Spec extends SparkTestBase {
   }
 
   test("mad anomalies: driver replay of median/MAD and the 3.5 flag rule") {
-    val out = TrainingData57.queries("w_mad_anomalies")(spark, sf).collect()
+    val out = SparkEntry.queries("w_mad_anomalies")(spark, sf).collect()
     val cents = graft.sources.Tables.table(spark, sf, "orders")
       .groupBy(col("o_orderdate").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)

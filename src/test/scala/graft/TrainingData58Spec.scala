@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData58
 
 /** Invariant pins for the round-10 batch-58 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData58Spec extends SparkTestBase {
 
   test("data card: one row, every column replays against direct scans") {
-    val out = TrainingData58.queries("t_data_card")(spark, sf).collect()
+    val out = SparkEntry.queries("t_data_card")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val docs = graft.sources.Tables.table(spark, sf, "documents")
@@ -34,7 +33,7 @@ class TrainingData58Spec extends SparkTestBase {
   }
 
   test("bot flags: every flagged user violates a rule, every violator is flagged") {
-    val out = TrainingData58.queries("ev_bot_flags")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_bot_flags")(spark, sf).collect()
     assert(out.nonEmpty, "relative thresholds must flag a tail")
     out.foreach { r =>
       val fr = r.getAs[Boolean]("flag_rate")

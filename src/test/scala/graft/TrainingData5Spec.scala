@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TrainingData5}
+import graft.operators.{Dedup, GraphQueries}
 
 /** Invariant pins for the round-9 curation/retrieval operators —
   * properties the DuckDB oracle's hash match can't express (the
@@ -28,7 +28,7 @@ class TrainingData5Spec extends SparkTestBase {
       .agg(countDistinct(col("split")).as("ns"))
       .filter(col("ns") > 1).count()
     assert(straddle == 0, s"$straddle groups straddle splits")
-    val out = TrainingData5.queries("t_leakage_safe_split")(spark, sf)
+    val out = SparkEntry.queries("t_leakage_safe_split")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
@@ -38,7 +38,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("rrf fusion: dense top-5 per query, score consistent with the ranks") {
-    val out = TrainingData5.queries("sim_rrf_fusion")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_rrf_fusion")(spark, sf).collect()
     val byQ = out.groupBy(_.getLong(0))
     assert(byQ.nonEmpty)
     byQ.foreach { case (_, rows) =>
@@ -59,8 +59,8 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("adamic-adar: predicted pairs are non-adjacent 2-hop pairs with positive score") {
-    val out = TrainingData5.queries("g_adamic_adar")(spark, sf)
-    val und = TrainingData5.knnUndirected(spark, sf)
+    val out = SparkEntry.queries("g_adamic_adar")(spark, sf)
+    val und = GraphQueries.knnUndirected(spark, sf)
     assert(out.count() > 0, "fixture produced no candidate links")
     val adjacentLeaks = out.join(und,
       col("u") === col("src") && col("v") === col("dst")).count()
@@ -71,7 +71,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("temperature mix: alpha shares normalize and compress toward uniform") {
-    val rows = TrainingData5.queries("t_temperature_mix")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_temperature_mix")(spark, sf).collect()
     val raw = rows.map(_.getAs[Double]("raw_share"))
     val alpha = rows.map(_.getAs[Double]("alpha_share"))
     assert(math.abs(raw.sum - 1.0) < 1e-4 && math.abs(alpha.sum - 1.0) < 1e-4)
@@ -85,7 +85,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("calibration bins: partition the corpus, rates and means in-range") {
-    val rows = TrainingData5.queries("t_calibration_ece")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_calibration_ece")(spark, sf).collect()
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == nDocs)
     rows.foreach { r =>
@@ -101,7 +101,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("dow seasonality: day-weighted seasonal index averages to exactly 1") {
-    val rows = TrainingData5.queries("w_dow_seasonality")(spark, sf).collect()
+    val rows = SparkEntry.queries("w_dow_seasonality")(spark, sf).collect()
     assert(rows.length == 7, "every weekday must appear")
     val days = rows.map(_.getAs[Long]("n_days"))
     val idx = rows.map(_.getAs[Double]("seasonal_index"))
@@ -111,7 +111,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("chi-square: output self-consistent (dof, effect size, bounds)") {
-    val r = TrainingData5.queries("a_chi_square")(spark, sf).head()
+    val r = SparkEntry.queries("a_chi_square")(spark, sf).head()
     val chi2 = r.getAs[Double]("chi2")
     val n = r.getAs[Long]("n_docs"); val rr = r.getAs[Long]("n_langs")
     val cc = r.getAs[Long]("n_sources")
@@ -125,7 +125,7 @@ class TrainingData5Spec extends SparkTestBase {
   test("holt-winters: fold equals a bit-exact sequential Scala replay") {
     // day renders ISO (NTZ LocalDateTime today; string-sort == time-sort
     // for any temporal encoding the schema contract allows)
-    val out = TrainingData5.queries("w_holt_winters")(spark, sf)
+    val out = SparkEntry.queries("w_holt_winters")(spark, sf)
       .collect().map(r => (r.get(0).toString, r.getDouble(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5)))
     assert(out.length > 14, "needs at least two full weekly seasons")
@@ -152,7 +152,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("kmv sketch: exact below k, engaged estimator above, error consistent") {
-    val rows = TrainingData5.queries("a_kmv_distinct")(spark, sf).collect()
+    val rows = SparkEntry.queries("a_kmv_distinct")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.exists(_.getAs[Int]("kmv_k") == 8),
       "no source reached k distinct values — estimator never engaged")
@@ -171,7 +171,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("compaction plan: bins dense, capacity respected, FFD-tight") {
-    val rows = TrainingData5.queries("o_compaction_plan")(spark, sf).collect()
+    val rows = SparkEntry.queries("o_compaction_plan")(spark, sf).collect()
       .map(r => (r.getAs[Long]("n_docs"), r.getAs[Int]("bin"),
         r.getAs[Long]("cap")))
     val cap = rows.head._3
@@ -188,7 +188,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("psi drift: buckets partition both periods, contributions non-negative") {
-    val rows = TrainingData5.queries("a_psi_drift")(spark, sf).collect()
+    val rows = SparkEntry.queries("a_psi_drift")(spark, sf).collect()
     val total = graft.sources.Tables.table(spark, sf, "events").count()
     assert(rows.map(r => r.getAs[Long]("n_ref") + r.getAs[Long]("n_cur")).sum
       == total, "bucket counts must conserve the event stream")
@@ -202,7 +202,7 @@ class TrainingData5Spec extends SparkTestBase {
   }
 
   test("domain filter: kept accounting matches the keep flag") {
-    val rows = TrainingData5.queries("t_domain_filter")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_domain_filter")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val kept = r.getAs[Long]("n_docs_kept")

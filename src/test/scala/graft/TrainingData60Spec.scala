@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData60
 
 /** Invariant pins for the round-10 batch-60 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData60Spec extends SparkTestBase {
 
   test("dau/mau: driver replay of DAU / trailing-28d MAU per day") {
-    val out = TrainingData60.queries("ev_dau_mau")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_dau_mau")(spark, sf).collect()
     assert(out.nonEmpty)
     val ud = graft.sources.Tables.table(spark, sf, "events")
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
@@ -30,7 +29,7 @@ class TrainingData60Spec extends SparkTestBase {
   }
 
   test("hill tail: driver replay of the adaptive-k estimator") {
-    val out = TrainingData60.queries("ev_hill_tail")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_hill_tail")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val counts = graft.sources.Tables.table(spark, sf, "events")

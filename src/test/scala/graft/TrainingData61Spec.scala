@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TrainingData61}
+import graft.operators.Dedup
 
 /** Invariant pins for the round-10 batch-61 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData61Spec extends SparkTestBase {
 
   test("banding advisor: s-curve math exact, wider bands catch more of both masses") {
-    val out = TrainingData61.queries("dedup_banding_advisor")(spark, sf)
+    val out = SparkEntry.queries("dedup_banding_advisor")(spark, sf)
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out.keySet == Set(4L, 8L, 16L, 32L))
     out.foreach { case (b, r) =>

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData62
 
 /** Invariant pins for the round-10 batch-62 operator (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData62Spec extends SparkTestBase {
 
   test("cube: every grouping level conserves the grand totals, gid says who's null") {
-    val out = TrainingData62.queries("sql_cube")(spark, sf).collect()
+    val out = SparkEntry.queries("sql_cube")(spark, sf).collect()
     val n = graft.sources.Tables.table(spark, sf, "orders").count()
     // gid 0 = detail, 1 = priority rolled up, 2 = status rolled up,
     // 3 = grand total; each level's counts sum to the corpus

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData54, TrainingData55, TrainingData63}
+import graft.operators.DedupQueries
 
 /** The recall contract of two-tier exact-substring dedup: no shared
   * span is dropped at ANY document frequency — the pair tier covers
@@ -26,16 +26,16 @@ class TrainingData63Spec extends SparkTestBase {
     val clean = (201L to 250L).map(id =>
       doc(id, (1 to 40).map(i => s"c${id}_$i")))
     val docs = (planted ++ clean).toDF("doc_id", "text")
-    val cap = TrainingData54.SubstrMaxDf
+    val cap = DedupQueries.SubstrMaxDf
 
     // the pair tier alone is BLIND to the span (df 200 > cap) — the
     // round-10 hole, kept as a documented contract of that tier
-    assert(TrainingData54.exactSubstringOf(docs, 10, cap).count() == 0L)
-    assert(TrainingData55.substringScrubOf(docs, 10, cap).count() == 0L)
+    assert(DedupQueries.exactSubstringOf(docs, 10, cap).count() == 0L)
+    assert(DedupQueries.substringScrubOf(docs, 10, cap).count() == 0L)
 
     // the high-df tier sees it in EVERY copy with the exact length:
     // 21 anchors (30 − 10 + 1), all df = 200, one island per doc
-    val islands = TrainingData63.highDfIslandsOf(docs, 10, cap).collect()
+    val islands = DedupQueries.highDfIslandsOf(docs, 10, cap).collect()
     assert(islands.length == 200)
     islands.foreach { r =>
       assert(r.getAs[Long]("span_start") == 7L) // after 6 filler tokens
@@ -45,7 +45,7 @@ class TrainingData63Spec extends SparkTestBase {
 
     // the full scrub removes the span from all but the canonical
     // min-doc copy: 199 ledger rows, one 30-token interval each
-    val ledger = TrainingData63.fullSubstringScrubOf(docs, 10, cap).collect()
+    val ledger = DedupQueries.fullSubstringScrubOf(docs, 10, cap).collect()
     assert(ledger.length == 199)
     assert(ledger.map(_.getAs[Long]("doc_id")).toSet == (2L to 200L).toSet)
     ledger.foreach { r =>
@@ -74,12 +74,12 @@ class TrainingData63Spec extends SparkTestBase {
         doc(id, (1 to 25).map(i => s"q${id}_$i"))))
       .toDF("doc_id", "text")
     def run(cap: Int): Seq[(Long, Long, Long, Long)] =
-      TrainingData63.fullSubstringScrubOf(docs, 10, cap).collect().toSeq
+      DedupQueries.fullSubstringScrubOf(docs, 10, cap).collect().toSeq
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
           r.getAs[Long]("tokens_removed"), r.getAs[Long]("n_intervals")))
     val low = run(2)        // nearly everything routes high-df
     val high = run(999)     // everything routes through the pair tier
-    val mid = run(TrainingData54.SubstrMaxDf)
+    val mid = run(DedupQueries.SubstrMaxDf)
     assert(low.nonEmpty && low == high && low == mid,
       s"ledger must not depend on the tier split:\nlow=$low\nhigh=$high")
     // and the ledger covers every doc with an earlier-shared span:
@@ -97,7 +97,7 @@ class TrainingData63Spec extends SparkTestBase {
       doc(id, a ++ (1 to 5).map(i => s"m${id}_$i") ++ b ++
         Seq(s"t${id}_1", s"t${id}_2")))
       .toDF("doc_id", "text")
-    val out = TrainingData63.highDfIslandsOf(docs, 10, 2)
+    val out = DedupQueries.highDfIslandsOf(docs, 10, 2)
       .filter(col("doc_id") === 1L).collect()
       .map(r => (r.getAs[Long]("span_start"), r.getAs[Long]("span_tokens"),
         r.getAs[Long]("min_gram_df")))

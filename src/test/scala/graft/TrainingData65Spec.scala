@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData4, TrainingData65}
+import graft.operators.TextQueries
 
 /** Recall contract of two-tier decontamination: the leakage matrix
   * is invariant to where the df cap sits (the cap is a work split,
@@ -30,14 +30,14 @@ class TrainingData65Spec extends SparkTestBase {
     val docs = (trainIds.map(id =>
       (id, s"$leak f${id}_a f${id}_b f${id}_c")) :+
       ((valId, s"$leak g_a g_b g_c"))).toDF("doc_id", "text")
-    val cap = TrainingData4.ContaminationMaxDf
+    val cap = TextQueries.ContaminationMaxDf
 
     // the capped pair-tier matrix is blind to it (the round-10-class
     // hole, demonstrated): df 201 > 64 drops the gram entirely
-    assert(TrainingData4.splitContaminationOf(docs, cap).count() == 0)
+    assert(TextQueries.splitContaminationOf(docs, cap).count() == 0)
 
     // the two-tier matrix reports every leaky doc in both directions
-    val full = TrainingData65.contaminationFullOf(docs, cap).collect()
+    val full = TextQueries.contaminationFullOf(docs, cap).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getAs[Long]("n_leaky_docs"), r.getAs[Long]("n_shared_grams"))).toMap
     assert(full(("val", "train")) == (200L, 1L))   // 200 contaminated train docs
@@ -91,7 +91,7 @@ class TrainingData65Spec extends SparkTestBase {
           .toDF("doc_id", "text")
         val expect = naive(docs)
         Seq(2, 999).foreach { cap =>
-          val got = TrainingData65.contaminationFullOf(df, cap).collect()
+          val got = TextQueries.contaminationFullOf(df, cap).collect()
             .map(r => (r.getString(0), r.getString(1)) ->
               (r.getAs[Long]("n_leaky_docs"),
                 r.getAs[Long]("n_shared_grams"))).toMap
@@ -103,7 +103,7 @@ class TrainingData65Spec extends SparkTestBase {
   test("leakage matrix is cap-invariant on the corpus (tiers must agree with the ideal join)") {
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
-    def m(cap: Int) = TrainingData65.contaminationFullOf(docs, cap)
+    def m(cap: Int) = TextQueries.contaminationFullOf(docs, cap)
       .collect().map(_.toSeq).toSeq
     val lo = m(2)     // corpus max 13-gram df is small: most routes high-df
     val hi = m(9999)  // everything routes through the pair tier

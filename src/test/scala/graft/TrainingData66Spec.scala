@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData4, TrainingData66}
+import graft.operators.DedupQueries
 import graft.functions.Similarity
 
 /** Invariant pins for the batch-66 observability operators beyond
@@ -20,7 +20,7 @@ class TrainingData66Spec extends SparkTestBase {
       (8L to 10L).map(id =>
         (id, (1 to 12).map(i => s"w${id}_$i").mkString(" "))))
       .toDF("doc_id", "text")
-    val out = TrainingData66.tierCensusOf(docs, 10, 2).collect()
+    val out = DedupQueries.tierCensusOf(docs, 10, 2).collect()
       .map(r => r.getString(0) -> (r.getAs[Long]("n_grams"),
         r.getAs[Long]("n_postings"), r.getAs[Long]("max_df"),
         r.getAs[Long]("pair_work"))).toMap
@@ -35,13 +35,13 @@ class TrainingData66Spec extends SparkTestBase {
   }
 
   test("pq recall eval: reconciles row-for-row with its two composed operators") {
-    val pq = TrainingData4.queries("sim_ivf_pq_search")(spark, sf)
+    val pq = SparkEntry.queries("sim_ivf_pq_search")(spark, sf)
       .groupBy(col("query_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("n")).toMap
     val bf = Similarity.bruteForceTopK(spark, sf, 10, 5)
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val out = TrainingData66.queries("sim_pq_recall_eval")(spark, sf)
+    val out = SparkEntry.queries("sim_pq_recall_eval")(spark, sf)
       .collect()
     assert(out.length == pq.size && out.nonEmpty)
     out.foreach { r =>
@@ -52,7 +52,7 @@ class TrainingData66Spec extends SparkTestBase {
       assert(r.getAs[Double]("recall_at_5") == hits.toDouble / 5.0)
     }
     // hits really are intersections with the exact ground truth
-    val pqPairs = TrainingData4.queries("sim_ivf_pq_search")(spark, sf)
+    val pqPairs = SparkEntry.queries("sim_ivf_pq_search")(spark, sf)
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expect = pqPairs.groupBy(_._1)

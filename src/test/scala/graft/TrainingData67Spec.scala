@@ -1,13 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData67
 
 /** Invariant pins for the batch-67 planning audits. */
 class TrainingData67Spec extends SparkTestBase {
 
   test("pack efficiency reconciles with the packer and never exceeds the ideal bin count") {
-    val pack = graft.operators.TrainingData
+    val pack = SparkEntry
       .queries("t_pack_sequences")(spark, sf)
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_bins"),
@@ -15,7 +14,7 @@ class TrainingData67Spec extends SparkTestBase {
       .collect()
       .map(r => r.getString(0) ->
         (r.getAs[Long]("n_bins"), r.getAs[Long]("total_tokens"))).toMap
-    val eff = TrainingData67.queries("t_pack_efficiency")(spark, sf).collect()
+    val eff = SparkEntry.queries("t_pack_efficiency")(spark, sf).collect()
     assert(eff.nonEmpty && eff.length == pack.size)
     eff.foreach { r =>
       val shard = r.getString(0)
@@ -47,7 +46,7 @@ class TrainingData67Spec extends SparkTestBase {
       .collect()
       .map(r => r.getString(0) -> (r.getAs[Long]("n"), r.getAs[Long]("s")))
       .toMap
-    val out = TrainingData67.queries("a_dp_mean")(spark, sf).collect()
+    val out = SparkEntry.queries("a_dp_mean")(spark, sf).collect()
     assert(out.nonEmpty && out.length == truth.size)
     out.foreach { r =>
       val lang = r.getString(0)
@@ -70,7 +69,7 @@ class TrainingData67Spec extends SparkTestBase {
   }
 
   test("curriculum phases: quantile boundaries are monotone and budgets reconcile") {
-    val out = TrainingData67.queries("t_curriculum_phases")(spark, sf)
+    val out = SparkEntry.queries("t_curriculum_phases")(spark, sf)
       .collect()
       .groupBy(_.getString(0)).view.mapValues(_.sortBy(_.getAs[Long]("phase")))
     val perLang = graft.sources.Tables.table(spark, sf, "documents")

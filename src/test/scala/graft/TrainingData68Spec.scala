@@ -1,20 +1,20 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData21, TrainingData68}
+import graft.operators.AnalyticsQueries
 
 /** Invariant pins for HLL set algebra beyond the oracle hash. */
 class TrainingData68Spec extends SparkTestBase {
 
   test("sketch union is merge-associative: pair union estimate equals a directly-built union sketch") {
-    val out = TrainingData68.queries("a_hll_set_algebra")(spark, sf).collect()
+    val out = SparkEntry.queries("a_hll_set_algebra")(spark, sf).collect()
     assert(out.nonEmpty)
     // rebuild each pair's union segment DIRECTLY (rows of both groups
     // sketched as one) through the registered estimator DAG — the
     // register-wise max merge must land the identical estimate, the
     // semilattice property that lets 1000 executors sketch shards
     // independently and combine
-    val base = TrainingData21.hllBase(spark, sf)
+    val base = AnalyticsQueries.hllBase(spark, sf)
       .select(col("grp"), col("reg"), col("rnk")).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
     def direct(groups: Set[String]): Double = {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData5, TrainingData69}
+import graft.operators.GraphQueries
 
 /** Invariant pins for the round-11 batch-69 operators: each one is a
   * NAIVE driver replay (or adjacency contract) independent of the
@@ -15,7 +15,7 @@ class TrainingData69Spec extends SparkTestBase {
 
   test("mattr: difference-array result equals the naive sliding-window scan") {
     val W = 25
-    val out = TrainingData69.queries("t_mattr")(spark, sf).collect()
+    val out = SparkEntry.queries("t_mattr")(spark, sf).collect()
     assert(out.nonEmpty)
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
@@ -48,7 +48,7 @@ class TrainingData69Spec extends SparkTestBase {
   }
 
   test("croston: fold equals a driver foldLeft over the zero-filled spine") {
-    val out = TrainingData69.queries("w_croston")(spark, sf).collect()
+    val out = SparkEntry.queries("w_croston")(spark, sf).collect()
     assert(out.nonEmpty)
     val brandOf = graft.sources.Tables.table(spark, sf, "part")
       .select(col("p_partkey"), col("p_brand"))
@@ -85,7 +85,7 @@ class TrainingData69Spec extends SparkTestBase {
   }
 
   test("mann-whitney: midrank U equals the naive all-pairs count") {
-    val out = TrainingData69.queries("a_mann_whitney")(spark, sf).collect()
+    val out = SparkEntry.queries("a_mann_whitney")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val rows = graft.sources.Tables.table(spark, sf, "orders")
@@ -112,9 +112,9 @@ class TrainingData69Spec extends SparkTestBase {
   }
 
   test("jaccard links: scores replay from adjacency sets; pairs non-adjacent") {
-    val out = TrainingData69.queries("g_jaccard_links")(spark, sf).collect()
+    val out = SparkEntry.queries("g_jaccard_links")(spark, sf).collect()
     assert(out.nonEmpty)
-    val und = TrainingData5.knnUndirected(spark, sf)
+    val und = GraphQueries.knnUndirected(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = und.groupBy(_._1).map { case (k, es) => k -> es.map(_._2).toSet }
     out.foreach { r =>

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.Similarity
-import graft.operators.{TrainingData5, TrainingData6}
+import graft.operators.{AnalyticsQueries, GraphQueries}
 
 /** Invariant pins for the round-9 batch-2 operators — properties the
   * DuckDB oracle's hash match can't express (the oracle proves engine
@@ -10,7 +10,7 @@ import graft.operators.{TrainingData5, TrainingData6}
 class TrainingData6Spec extends SparkTestBase {
 
   test("mann-kendall: S bounded, z sign and trend label consistent") {
-    val r = TrainingData6.queries("a_mann_kendall")(spark, sf).collect()
+    val r = SparkEntry.queries("a_mann_kendall")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val n = row.getAs[Long]("n_days"); val s = row.getAs[Long]("s_stat")
@@ -25,7 +25,7 @@ class TrainingData6Spec extends SparkTestBase {
   }
 
   test("gopher rules: per-rule counts bound the conjunctive keep") {
-    val out = TrainingData6.queries("t_gopher_rules")(spark, sf).collect()
+    val out = SparkEntry.queries("t_gopher_rules")(spark, sf).collect()
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == nDocs,
       "rule table must conserve the corpus")
@@ -40,7 +40,7 @@ class TrainingData6Spec extends SparkTestBase {
   }
 
   test("attribution: both models conserve purchase count and revenue") {
-    val out = TrainingData6.queries("ev_attribution")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_attribution")(spark, sf).collect()
     val purchases = graft.sources.Tables.table(spark, sf, "events")
       .filter(col("event_type") === "purchase")
     val nP = purchases.count()
@@ -59,7 +59,7 @@ class TrainingData6Spec extends SparkTestBase {
   }
 
   test("kcore: output IS the fixpoint — recomputed degrees match, all >= 3") {
-    val out = TrainingData6.queries("g_kcore")(spark, sf)
+    val out = SparkEntry.queries("g_kcore")(spark, sf)
     val rows = out.collect()
     assert(rows.nonEmpty, "sf0.01 knn graph must have a non-empty 3-core")
     assert(rows.forall(_.getAs[Long]("core_deg") >= 3),
@@ -67,7 +67,7 @@ class TrainingData6Spec extends SparkTestBase {
     // differential: degrees of the induced subgraph on the core's
     // node set must reproduce the query output exactly
     val coreNodes = out.select(col("node")).localCheckpoint()
-    val und = TrainingData5.knnUndirected(spark, sf)
+    val und = GraphQueries.knnUndirected(spark, sf)
     val recomputed = und
       .join(coreNodes.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(coreNodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
@@ -77,7 +77,7 @@ class TrainingData6Spec extends SparkTestBase {
   }
 
   test("poisson bootstrap: 64 replicates, CI brackets the point estimate") {
-    val r = TrainingData6.queries("a_poisson_bootstrap")(spark, sf).collect()
+    val r = SparkEntry.queries("a_poisson_bootstrap")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     assert(row.getAs[Long]("b_reps") == 64)
@@ -94,7 +94,7 @@ class TrainingData6Spec extends SparkTestBase {
     // total of n Poisson(1) draws is Poisson(n))
     val ev = graft.sources.Tables.table(spark, sf, "events")
     val n = ev.count()
-    val tArr = array(TrainingData6.poissonT.map(v => lit(v)): _*)
+    val tArr = array(AnalyticsQueries.poissonT.map(v => lit(v)): _*)
     val masses = ev
       .withColumn("b", explode(sequence(lit(0), lit(7)))) // 8 replicates suffice
       .withColumn("h", conv(substring(md5(concat(
@@ -109,7 +109,7 @@ class TrainingData6Spec extends SparkTestBase {
   }
 
   test("mmr: dense steps, distinct picks, scores non-increasing, greedy head") {
-    val out = TrainingData6.queries("sim_mmr")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_mmr")(spark, sf).collect()
     val byQ = out.groupBy(_.getAs[Long]("query_id"))
     assert(byQ.size == 5)
     byQ.foreach { case (qid, rows) =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TrainingData70}
+import graft.operators.Dedup
 
 /** Invariant pins for the round-11 batch-70 operators — naive driver
   * replays independent of the operators' zero-cell / profile /
@@ -13,7 +13,7 @@ class TrainingData70Spec extends SparkTestBase {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("cramers v: orders pair replays from the dense contingency grid") {
-    val out = TrainingData70.queries("a_cramers_v")(spark, sf).collect()
+    val out = SparkEntry.queries("a_cramers_v")(spark, sf).collect()
     assert(out.length == 3)
     val rows = graft.sources.Tables.table(spark, sf, "orders")
       .select(col("o_orderpriority"), col("o_orderstatus"))
@@ -48,7 +48,7 @@ class TrainingData70Spec extends SparkTestBase {
   }
 
   test("hoeffding sample advisor: exact-moment replay; bound ordering") {
-    val out = TrainingData70.queries("a_hoeffding_sample")(spark, sf).collect()
+    val out = SparkEntry.queries("a_hoeffding_sample")(spark, sf).collect()
     assert(out.length == 6)
     val cents = graft.sources.Tables.table(spark, sf, "orders")
       .select(round(col("o_totalprice") * 100).cast("long").as("c"))
@@ -74,7 +74,7 @@ class TrainingData70Spec extends SparkTestBase {
   }
 
   test("hill diversity: per-lang replay; the Hill ladder is monotone") {
-    val out = TrainingData70.queries("t_hill_diversity")(spark, sf).collect()
+    val out = SparkEntry.queries("t_hill_diversity")(spark, sf).collect()
     assert(out.nonEmpty)
     val toks = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
@@ -106,7 +106,7 @@ class TrainingData70Spec extends SparkTestBase {
   }
 
   test("b-bit minhash: estimates replay from the signatures; pairs at the lsh threshold") {
-    val out = TrainingData70.queries("dedup_bbit_minhash")(spark, sf).collect()
+    val out = SparkEntry.queries("dedup_bbit_minhash")(spark, sf).collect()
     assert(out.nonEmpty)
     val sigs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("doc_id"),

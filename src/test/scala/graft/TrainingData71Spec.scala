@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData71
 
 /** Invariant pins for the round-11 batch-71 operators: full driver
   * replays of the ABTT pipeline (quantized sums → covariance →
@@ -14,7 +13,7 @@ class TrainingData71Spec extends SparkTestBase {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("abtt isotropy: end-to-end driver replay of the correction") {
-    val out = TrainingData71.queries("e_abtt_isotropy")(spark, sf).collect()
+    val out = SparkEntry.queries("e_abtt_isotropy")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val vecs = graft.sources.Tables.table(spark, sf, "embeddings")
@@ -75,7 +74,7 @@ class TrainingData71Spec extends SparkTestBase {
   }
 
   test("fano dispersion: empty-minute-free variance equals the dense replay") {
-    val out = TrainingData71.queries("ev_fano_dispersion")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_fano_dispersion")(spark, sf).collect()
     assert(out.nonEmpty)
     val ev = graft.sources.Tables.table(spark, sf, "events")
       .select(col("event_type"), expr("unix_micros(ts) div 60000000")

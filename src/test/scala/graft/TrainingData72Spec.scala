@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData72
 
 /** Invariant pins for the round-11 batch-72 operators. */
 class TrainingData72Spec extends SparkTestBase {
@@ -10,7 +9,7 @@ class TrainingData72Spec extends SparkTestBase {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("char entropy gate: per-doc entropy replays; gates partition the corpus") {
-    val out = TrainingData72.queries("t_char_entropy_gate")(spark, sf)
+    val out = SparkEntry.queries("t_char_entropy_gate")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     val docs = graft.sources.Tables.table(spark, sf, "documents")
@@ -42,7 +41,7 @@ class TrainingData72Spec extends SparkTestBase {
   }
 
   test("kendall tau-b: exact pair counts replay; tau within [-1, 1]") {
-    val out = TrainingData72.queries("a_kendall_taub")(spark, sf).collect()
+    val out = SparkEntry.queries("a_kendall_taub")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val daily = graft.sources.Tables.table(spark, sf, "orders")
@@ -75,7 +74,7 @@ class TrainingData72Spec extends SparkTestBase {
   }
 
   test("rowgroup advisor: widths replay from exact lengths; groups cover rows") {
-    val out = TrainingData72.queries("o_rowgroup_advisor")(spark, sf).collect()
+    val out = SparkEntry.queries("o_rowgroup_advisor")(spark, sf).collect()
     assert(out.length == 4)
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(length(col("text")) + length(col("lang")) +

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData73
+import graft.operators.SimilarityQueries
 
 /** Invariant pins for the round-11 batch-73 operators: full driver
   * replays of LOF off the shared k-NN edges and of the log-rank
@@ -13,9 +13,9 @@ class TrainingData73Spec extends SparkTestBase {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("lof: scores replay from the edge list; non-returned rows score lower") {
-    val out = TrainingData73.queries("sim_lof_outliers")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_lof_outliers")(spark, sf).collect()
     assert(out.nonEmpty && out.length <= 20)
-    val (edgesDf, assignedDf) = TrainingData73.lofInputs(spark, sf)
+    val (edgesDf, assignedDf) = SimilarityQueries.lofInputs(spark, sf)
     val emb = assignedDf.select(col("vec_id"), col("e"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     val edges = edgesDf.select(col("src"), col("dst"))
@@ -51,7 +51,7 @@ class TrainingData73Spec extends SparkTestBase {
   }
 
   test("logrank: chi2 replays from the dense risk-set ledger") {
-    val out = TrainingData73.queries("ev_logrank")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_logrank")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val ev = graft.sources.Tables.table(spark, sf, "events")

@@ -3,7 +3,7 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData6, TrainingData73, TrainingData74}
+import graft.operators.{AnalyticsQueries, SimilarityQueries}
 
 /** Invariant pins for the round-11 batch-74 operators: a complete
   * driver replay of the BCa construction (hash weights → reps →
@@ -53,7 +53,7 @@ class TrainingData74Spec extends SparkTestBase {
     else 0.5 * (1.0 - erf(-z / math.sqrt(2.0)))
 
   test("bca bootstrap: full driver replay of corrections and order stats") {
-    val out = TrainingData74.queries("a_bootstrap_bca")(spark, sf).collect()
+    val out = SparkEntry.queries("a_bootstrap_bca")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val rows = graft.sources.Tables.table(spark, sf, "events")
@@ -64,7 +64,7 @@ class TrainingData74Spec extends SparkTestBase {
     val n = rows.length
     val theta = rows.map(_._2).sum.toDouble / n.toDouble / 1e6
     // rep means from the md5 Poisson weights
-    val ts = TrainingData6.poissonT
+    val ts = AnalyticsQueries.poissonT
     val reps = (0 until 64).map { b =>
       var (nb, sb) = (0L, 0L)
       rows.foreach { case (id, m, _) =>
@@ -105,9 +105,9 @@ class TrainingData74Spec extends SparkTestBase {
   }
 
   test("eps advisor: cutoffs are the exact order statistics of edge cosines") {
-    val out = TrainingData74.queries("sim_eps_advisor")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_eps_advisor")(spark, sf).collect()
     assert(out.length == 3)
-    val (edgesDf, assignedDf) = TrainingData73.lofInputs(spark, sf)
+    val (edgesDf, assignedDf) = SimilarityQueries.lofInputs(spark, sf)
     val emb = assignedDf.select(col("vec_id"), col("e"))
       .collect().map(x => x.getLong(0) -> x.getSeq[Double](1).toArray).toMap
     def dot(a: Array[Double], b: Array[Double]): Double =
@@ -131,7 +131,7 @@ class TrainingData74Spec extends SparkTestBase {
   }
 
   test("dq profile: counts replay; key columns are unique") {
-    val out = TrainingData74.queries("q_dq_profile")(spark, sf).collect()
+    val out = SparkEntry.queries("q_dq_profile")(spark, sf).collect()
     assert(out.length == 18)
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("lang")).collect().map(_.getString(0))

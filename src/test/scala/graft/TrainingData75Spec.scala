@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TrainingData75}
+import graft.operators.Dedup
 
 /** Invariant pins for the round-11 batch-75 operators. */
 class TrainingData75Spec extends SparkTestBase {
@@ -10,7 +10,7 @@ class TrainingData75Spec extends SparkTestBase {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("method agreement: categories partition the union of both pair sets") {
-    val out = TrainingData75.queries("dedup_method_agreement")(spark, sf)
+    val out = SparkEntry.queries("dedup_method_agreement")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     val lex = Dedup.minhashLshPairs(spark, sf, portableHashes = true)
@@ -39,7 +39,7 @@ class TrainingData75Spec extends SparkTestBase {
   }
 
   test("hypothetical rank: counts replay; rank/cume monotone in the value") {
-    val out = TrainingData75.queries("a_hypothetical_rank")(spark, sf)
+    val out = SparkEntry.queries("a_hypothetical_rank")(spark, sf)
       .collect()
     assert(out.length == 3)
     val cents = graft.sources.Tables.table(spark, sf, "orders")

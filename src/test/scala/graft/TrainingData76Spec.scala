@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData76
 
 /** Invariant pins for the round-11 batch-76 operators: complete
   * driver replays of the ANOVA/Brown–Forsythe moment machinery, the
@@ -61,7 +60,7 @@ class TrainingData76Spec extends SparkTestBase {
     else "p>=0.10"
 
   test("a_anova_f: full driver replay of moments, F, effect sizes, p") {
-    val out = TrainingData76.queries("a_anova_f")(spark, sf).collect()
+    val out = SparkEntry.queries("a_anova_f")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val (df1, df2, f, eta2, omega2, xm) = anovaReplay(rows())
@@ -75,7 +74,7 @@ class TrainingData76Spec extends SparkTestBase {
   }
 
   test("a_levene_bf: exact group medians and the deviation ANOVA") {
-    val out = TrainingData76.queries("a_levene_bf")(spark, sf).collect()
+    val out = SparkEntry.queries("a_levene_bf")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val data = rows()
@@ -109,7 +108,7 @@ class TrainingData76Spec extends SparkTestBase {
       .collect().map(_.getAs[Long]("x")).toSeq
 
   test("a_jarque_bera: central-moment folds, JB and the closed-form p") {
-    val out = TrainingData76.queries("a_jarque_bera")(spark, sf).collect()
+    val out = SparkEntry.queries("a_jarque_bera")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val xs = daily()
@@ -138,7 +137,7 @@ class TrainingData76Spec extends SparkTestBase {
   }
 
   test("w_durbin_watson: OLS fit + residual walk replay") {
-    val out = TrainingData76.queries("w_durbin_watson")(spark, sf).collect()
+    val out = SparkEntry.queries("w_durbin_watson")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val ys = daily()

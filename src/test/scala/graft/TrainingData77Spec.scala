@@ -3,7 +3,6 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData77
 
 /** Invariant pins for the round-11 batch-77 operators: an
   * independent Scala replay of the whole k-means dataflow feeding
@@ -65,7 +64,7 @@ class TrainingData77Spec extends SparkTestBase {
   }
 
   test("sim_davies_bouldin: independent replay of scatter, separation, index") {
-    val out = TrainingData77.queries("sim_davies_bouldin")(spark, sf)
+    val out = SparkEntry.queries("sim_davies_bouldin")(spark, sf)
       .collect().map(r => r.getAs[Long]("cluster") -> r).toMap
     val emb = normalized()
     val (a2, cents) = kmeansReplay(emb)
@@ -101,7 +100,7 @@ class TrainingData77Spec extends SparkTestBase {
   }
 
   test("sim_calinski_harabasz: SSW/SSB replay off the same clustering") {
-    val out = TrainingData77.queries("sim_calinski_harabasz")(spark, sf)
+    val out = SparkEntry.queries("sim_calinski_harabasz")(spark, sf)
       .collect()
     assert(out.length == 1)
     val r = out.head
@@ -142,7 +141,7 @@ class TrainingData77Spec extends SparkTestBase {
   }
 
   test("e_matryoshka_cka: quantized Gram loop replay; prefix monotonicity") {
-    val rows = TrainingData77.queries("e_matryoshka_cka")(spark, sf)
+    val rows = SparkEntry.queries("e_matryoshka_cka")(spark, sf)
       .collect().map(r => r.getAs[Long]("prefix_dim") -> r).toMap
     val raw = graft.sources.Tables.table(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -185,7 +184,7 @@ class TrainingData77Spec extends SparkTestBase {
   }
 
   test("e_jl_distortion: full replay including the k-NN edge set") {
-    val out = TrainingData77.queries("e_jl_distortion")(spark, sf).collect()
+    val out = SparkEntry.queries("e_jl_distortion")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     val emb = normalized()

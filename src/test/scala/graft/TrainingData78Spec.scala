@@ -3,7 +3,7 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TrainingData78}
+import graft.operators.Dedup
 
 /** Invariant pins for the round-11 batch-78 operators: a full
   * driver replay of both Granger directions with an INDEPENDENT
@@ -84,7 +84,7 @@ class TrainingData78Spec extends SparkTestBase {
   }
 
   test("w_granger_causality: both directions replay; Cramer solve is a true OLS") {
-    val out = TrainingData78.queries("w_granger_causality")(spark, sf)
+    val out = SparkEntry.queries("w_granger_causality")(spark, sf)
       .collect().map(r => r.getAs[String]("direction") -> r).toMap
     val d = daily()
     val vol = d.map(_._1); val rev = d.map(_._2)
@@ -133,7 +133,7 @@ class TrainingData78Spec extends SparkTestBase {
   }
 
   test("w_cooks_distance: per-day influence replay, top-10 ordering") {
-    val out = TrainingData78.queries("w_cooks_distance")(spark, sf).collect()
+    val out = SparkEntry.queries("w_cooks_distance")(spark, sf).collect()
     val ys = daily().map(_._2)
     val m = ys.size
     val st = (1 to m).map(BigInt(_)).sum.toDouble
@@ -189,7 +189,7 @@ class TrainingData78Spec extends SparkTestBase {
   }
 
   test("dedup_cohens_kappa: cell arithmetic + the semantic rater replay") {
-    val out = TrainingData78.queries("dedup_cohens_kappa")(spark, sf)
+    val out = SparkEntry.queries("dedup_cohens_kappa")(spark, sf)
       .collect()
     assert(out.length == 1)
     val r = out.head
@@ -216,7 +216,7 @@ class TrainingData78Spec extends SparkTestBase {
   }
 
   test("t_semantic_leakage: full replay under the md5-nibble split rule") {
-    val out = TrainingData78.queries("t_semantic_leakage")(spark, sf)
+    val out = SparkEntry.queries("t_semantic_leakage")(spark, sf)
       .collect()
     def splitOf(id: Long): String = md5hex(id.toString).charAt(0) match {
       case 'c' | 'd' => "val"

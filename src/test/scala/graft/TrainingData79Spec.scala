@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData79
 
 /** Invariant pins for the round-11 batch-79 operators: integer-state
   * Page–Hinkley replay, a Nelson–Aalen replay plus the FH-vs-KM
@@ -14,7 +13,7 @@ class TrainingData79Spec extends SparkTestBase {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("w_page_hinkley: exact integer PH replay per year") {
-    val out = TrainingData79.queries("w_page_hinkley")(spark, sf)
+    val out = SparkEntry.queries("w_page_hinkley")(spark, sf)
       .collect().map(r => r.getAs[Long]("year") -> r).toMap
     val daily = graft.sources.Tables.table(spark, sf, "orders")
       .groupBy(col("o_orderdate").as("day"))
@@ -46,7 +45,7 @@ class TrainingData79Spec extends SparkTestBase {
   }
 
   test("ev_nelson_aalen: ledger replay; FH dominates KM at every event day") {
-    val out = TrainingData79.queries("ev_nelson_aalen")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_nelson_aalen")(spark, sf).collect()
     assert(out.nonEmpty)
     // replay the duration ledger
     val ev = graft.sources.Tables.table(spark, sf, "events")
@@ -99,7 +98,7 @@ class TrainingData79Spec extends SparkTestBase {
   }
 
   test("mm_byte_entropy: per-doc histogram replay; bounds and verdicts") {
-    val out = TrainingData79.queries("mm_byte_entropy")(spark, sf)
+    val out = SparkEntry.queries("mm_byte_entropy")(spark, sf)
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     val docs = graft.sources.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), col("text")).collect()
@@ -126,7 +125,7 @@ class TrainingData79Spec extends SparkTestBase {
   }
 
   test("o_bloom_advisor: closed forms; fpp monotonicity") {
-    val out = TrainingData79.queries("o_bloom_advisor")(spark, sf).collect()
+    val out = SparkEntry.queries("o_bloom_advisor")(spark, sf).collect()
     assert(out.length == 8) // 4 tables × 2 fpp
     val ln2 = math.log(2.0)
     out.foreach { r =>

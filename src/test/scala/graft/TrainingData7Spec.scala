@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData7
 
 /** Invariant pins for the round-9 batch-3 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData7Spec extends SparkTestBase {
 
   test("markov stationary: probability vector, fixpoint of the chain") {
-    val out = TrainingData7.queries("ev_markov_stationary")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_markov_stationary")(spark, sf).collect()
     assert(out.length >= 2, "at least two event types transition")
     val pi = out.map(r => r.getAs[String]("state") ->
       r.getAs[Double]("p_stationary")).toMap
@@ -37,7 +36,7 @@ class TrainingData7Spec extends SparkTestBase {
   }
 
   test("kmv jaccard: estimates bounded, sketch tracks exact similarity") {
-    val out = TrainingData7.queries("a_kmv_jaccard")(spark, sf).collect()
+    val out = SparkEntry.queries("a_kmv_jaccard")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val je = r.getAs[Double]("j_exact"); val js = r.getAs[Double]("j_est")
@@ -51,7 +50,7 @@ class TrainingData7Spec extends SparkTestBase {
   }
 
   test("pca power: unit-norm component, positive spectrum bounds") {
-    val out = TrainingData7.queries("e_pca_power")(spark, sf).collect()
+    val out = SparkEntry.queries("e_pca_power")(spark, sf).collect()
     assert(out.length == 64, "one loading per embedding dimension")
     val norm = out.map(r => math.pow(r.getAs[Double]("loading"), 2)).sum
     assert(math.abs(norm - 1.0) < 1e-4, s"||v||^2 = $norm must be 1")
@@ -63,7 +62,7 @@ class TrainingData7Spec extends SparkTestBase {
   }
 
   test("partition skew: skew >= 1, balance in (0, 1], corpus conserved") {
-    val out = TrainingData7.queries("o_partition_skew")(spark, sf).collect()
+    val out = SparkEntry.queries("o_partition_skew")(spark, sf).collect()
     val nDocs = graft.sources.Tables.table(spark, sf, "documents").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == nDocs)
     out.foreach { r =>

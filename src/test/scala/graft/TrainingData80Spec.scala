@@ -3,7 +3,7 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData5, TrainingData80}
+import graft.operators.GraphQueries
 
 /** Invariant pins for the round-11 batch-80 operators: a full DP
   * replay of the DTW alignment (plus its metric laws), a Scala BFS
@@ -67,7 +67,7 @@ class TrainingData80Spec extends SparkTestBase {
   }
 
   test("w_dtw_brand_demand: full DP replay, metric laws") {
-    val out = TrainingData80.queries("w_dtw_brand_demand")(spark, sf)
+    val out = SparkEntry.queries("w_dtw_brand_demand")(spark, sf)
       .collect()
     assert(out.length == 1)
     val r = out.head
@@ -86,9 +86,9 @@ class TrainingData80Spec extends SparkTestBase {
   }
 
   test("g_harmonic_centrality: Scala BFS replay from the 4 md5 roots") {
-    val out = TrainingData80.queries("g_harmonic_centrality")(spark, sf)
+    val out = SparkEntry.queries("g_harmonic_centrality")(spark, sf)
       .collect().map(r => r.getAs[Long]("root") -> r).toMap
-    val edges = TrainingData5.knnUndirected(spark, sf)
+    val edges = GraphQueries.knnUndirected(spark, sf)
       .select(col("src"), col("dst")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val adj = edges.groupBy(_._1).map { case (k, vs) =>
@@ -119,7 +119,7 @@ class TrainingData80Spec extends SparkTestBase {
   }
 
   test("q_referential_integrity: orphan replay; TPC-H edges intact") {
-    val out = TrainingData80.queries("q_referential_integrity")(spark, sf)
+    val out = SparkEntry.queries("q_referential_integrity")(spark, sf)
       .collect()
     assert(out.length == 4)
     def keys(t: String, k: String): (Long, Set[Long]) = {
@@ -168,7 +168,7 @@ class TrainingData80Spec extends SparkTestBase {
   }
 
   test("a_qq_normal: quantile grid + probit + correlation replay") {
-    val out = TrainingData80.queries("a_qq_normal")(spark, sf).collect()
+    val out = SparkEntry.queries("a_qq_normal")(spark, sf).collect()
     assert(out.length == 19)
     val xs = graft.sources.Tables.table(spark, sf, "orders")
       .groupBy(col("o_orderdate"))

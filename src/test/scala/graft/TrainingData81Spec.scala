@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData81
 
 /** Invariant pins for the round-11 batch-81 operators: a matrix
   * replay of the mixing walk (plus TV laws), a complete Friedman
@@ -14,7 +13,7 @@ class TrainingData81Spec extends SparkTestBase {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("ev_markov_mixing: transition replay, TV walk, monotone tail") {
-    val out = TrainingData81.queries("ev_markov_mixing")(spark, sf)
+    val out = SparkEntry.queries("ev_markov_mixing")(spark, sf)
       .collect()
     assert(out.length == 16)
     // replay the chain
@@ -64,7 +63,7 @@ class TrainingData81Spec extends SparkTestBase {
   }
 
   test("a_friedman_test: complete-block midrank replay") {
-    val out = TrainingData81.queries("a_friedman_test")(spark, sf)
+    val out = SparkEntry.queries("a_friedman_test")(spark, sf)
       .collect().map(r => r.getAs[String]("priority") -> r).toMap
     val cells = graft.sources.Tables.table(spark, sf, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("day"),
@@ -115,7 +114,7 @@ class TrainingData81Spec extends SparkTestBase {
   }
 
   test("a_simpsons_slopes: per-group OLS replay; pooled consistency") {
-    val out = TrainingData81.queries("a_simpsons_slopes")(spark, sf)
+    val out = SparkEntry.queries("a_simpsons_slopes")(spark, sf)
       .collect().map(r => r.getAs[String]("group_flag") -> r).toMap
     val rows = graft.sources.Tables.table(spark, sf, "lineitem")
       .select(col("l_returnflag"), col("l_quantity").cast("long"),

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData82
 
 /** Invariant pins for the round-12 batch-82 operators: full driver
   * replays of the signed-rank z, the Bollinger windows, the Wilder
@@ -62,7 +61,7 @@ class TrainingData82Spec extends SparkTestBase {
       else if (zm >= 1959963L) "p<0.05"
       else if (zm >= 1644853L) "p<0.10"
       else "p>=0.10"
-    val out = TrainingData82.queries("a_wilcoxon_signrank")(spark, sf)
+    val out = SparkEntry.queries("a_wilcoxon_signrank")(spark, sf)
       .collect()
     assert(out.length == 1)
     val r = out.head
@@ -97,7 +96,7 @@ class TrainingData82Spec extends SparkTestBase {
         else None
       }
     }
-    val out = TrainingData82.queries("w_bollinger_bands")(spark, sf)
+    val out = SparkEntry.queries("w_bollinger_bands")(spark, sf)
       .withColumn("day", col("day").cast("string"))
       .collect()
       .map(r => (r.getAs[String]("day"),
@@ -113,7 +112,7 @@ class TrainingData82Spec extends SparkTestBase {
       (day, math.max(cur - prev, 0L), math.max(prev - cur, 0L))
     }
     val byYear = deltas.groupBy(_._1.take(4).toInt)
-    val out = TrainingData82.queries("w_rsi_wilder")(spark, sf)
+    val out = SparkEntry.queries("w_rsi_wilder")(spark, sf)
       .collect().map(r => r.getAs[Long]("year") -> r).toMap
     assert(out.size == byYear.size)
     byYear.foreach { case (yr, rows) =>
@@ -154,7 +153,7 @@ class TrainingData82Spec extends SparkTestBase {
     val t =
       if (rss > 0.0) (b - 1.0) / math.sqrt((rss / (m - 2).toDouble) / sxxC)
       else 0.0
-    val out = TrainingData82.queries("w_adf_test")(spark, sf).collect()
+    val out = SparkEntry.queries("w_adf_test")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_obs") == m.toLong)
@@ -184,7 +183,7 @@ class TrainingData82Spec extends SparkTestBase {
           (ns(src).toDouble * ct(tok).toDouble))
       (src, math.floor(contrib * 1.0e9).toLong)
     }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    val out = TrainingData82.queries("t_unigram_kl")(spark, sf)
+    val out = SparkEntry.queries("t_unigram_kl")(spark, sf)
       .collect().map(r => r.getAs[String]("source") -> r).toMap
     assert(out.keySet == ns.keySet)
     ns.keySet.foreach { src =>
@@ -218,7 +217,7 @@ class TrainingData82Spec extends SparkTestBase {
       scored.sortBy { case (did, sc) => (-sc, did) }.take(3).zipWithIndex
         .map { case ((did, sc), i) => (qid, did, r6(sc), i + 1) }
     }
-    val out = TrainingData82.queries("sim_maxsim_multivector")(spark, sf)
+    val out = SparkEntry.queries("sim_maxsim_multivector")(spark, sf)
       .collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Double]("maxsim_score"), r.getAs[Int]("rk"))).toSeq

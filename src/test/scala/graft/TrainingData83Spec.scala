@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData5, TrainingData83}
+import graft.operators.GraphQueries
 
 /** Invariant pins for the round-12 batch-83 operators: exact ECDF
   * replay of the KS test, a bit-exact spectral-entropy replay, a
@@ -39,7 +39,7 @@ class TrainingData83Spec extends SparkTestBase {
       else if (lm >= 1358098L) "p<0.05"
       else if (lm >= 1223847L) "p<0.10"
       else "p>=0.10"
-    val out = TrainingData83.queries("a_ks_two_sample")(spark, sf).collect()
+    val out = SparkEntry.queries("a_ks_two_sample")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_weekend") == n1)
@@ -79,7 +79,7 @@ class TrainingData83Spec extends SparkTestBase {
     val h = hqs.toDouble / 1.0e9
     val hNorm = h / math.log(kMax.toDouble)
     val top = powers.map(_ / tp).max
-    val out = TrainingData83.queries("w_spectral_entropy")(spark, sf)
+    val out = SparkEntry.queries("w_spectral_entropy")(spark, sf)
       .collect()
     assert(out.length == 1)
     val r = out.head
@@ -91,7 +91,7 @@ class TrainingData83Spec extends SparkTestBase {
   }
 
   test("g_betweenness_sampled: full Brandes replay in nano-unit arithmetic") {
-    val edges = TrainingData5.knnUndirected(spark, sf)
+    val edges = GraphQueries.knnUndirected(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     def md5hex(s: String): String =
@@ -139,7 +139,7 @@ class TrainingData83Spec extends SparkTestBase {
     }
     val expected = bq.toSeq.sortBy { case (v, b) => (-b, v) }.take(10)
       .map { case (v, b) => (v, r6(b.toDouble / 1.0e9)) }
-    val out = TrainingData83.queries("g_betweenness_sampled")(spark, sf)
+    val out = SparkEntry.queries("g_betweenness_sampled")(spark, sf)
       .collect().map(r => (r.getAs[Long]("node"),
         r.getAs[Double]("betweenness"))).toSeq
     assert(out == expected)
@@ -166,7 +166,7 @@ class TrainingData83Spec extends SparkTestBase {
           if (cuts >= 3L) "dynamic" else "static"))
       }
     }.sortBy(_._1)
-    val out = TrainingData83.queries("mm_scene_cuts")(spark, sf)
+    val out = SparkEntry.queries("mm_scene_cuts")(spark, sf)
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_frames"),
         r.getAs[Long]("n_cuts"), r.getAs[Long]("max_delta"),

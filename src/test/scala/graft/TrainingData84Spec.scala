@@ -3,7 +3,6 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData84
 
 /** Invariant pins for the round-12 batch-84 operators: exact
   * md5-dyadic replays of the FIM cuts and MLM masking census, and a
@@ -35,7 +34,7 @@ class TrainingData84Spec extends SparkTestBase {
         (0.3 + 0.4 * u60(s"$id:fim2"))).toLong
       (id, len, cut1, cut2 - cut1, len - cut2)
     }
-    val out = TrainingData84.queries("t_fim_split")(spark, sf)
+    val out = SparkEntry.queries("t_fim_split")(spark, sf)
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("len_chars"),
         r.getAs[Long]("prefix_len"), r.getAs[Long]("middle_len"),
@@ -67,7 +66,7 @@ class TrainingData84Spec extends SparkTestBase {
       (id, toks.length.toLong, masked, aMask, aRand, aKeep,
         r6(masked.toDouble / toks.length.toDouble))
     }
-    val out = TrainingData84.queries("t_mlm_masking")(spark, sf)
+    val out = SparkEntry.queries("t_mlm_masking")(spark, sf)
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
         r.getAs[Long]("n_masked"), r.getAs[Long]("n_mask_token"),
@@ -106,7 +105,7 @@ class TrainingData84Spec extends SparkTestBase {
     val expected = sel.map { case (o, id, d0) =>
       (o, id, r6(d0), r6(radius))
     }
-    val out = TrainingData84.queries("sim_kcenter_coreset")(spark, sf)
+    val out = SparkEntry.queries("sim_kcenter_coreset")(spark, sf)
       .collect()
       .map(r => (r.getAs[Int]("sel_order"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("sel_dist"), r.getAs[Double]("coverage_radius")))

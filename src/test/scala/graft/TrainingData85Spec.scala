@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{TrainingData2, TrainingData85}
 
 /** Invariant pins for the round-12 batch-85 operators: width-model
   * replay of the broadcast advisor, a full EWMA-chart fold replay,
@@ -33,7 +32,7 @@ class TrainingData85Spec extends SparkTestBase {
         if (est <= 10L * 1024 * 1024) "broadcast" else "shuffle",
         if (est * 100 <= 10L * 1024 * 1024) "broadcast" else "shuffle")
     }.sortBy(_._1)
-    val out = TrainingData85.queries("o_broadcast_advisor")(spark, sf)
+    val out = SparkEntry.queries("o_broadcast_advisor")(spark, sf)
       .collect()
       .map(r => (r.getAs[String]("table_name"), r.getAs[Long]("n_rows"),
         r.getAs[Long]("est_row_bytes"), r.getAs[Long]("est_bytes"),
@@ -68,7 +67,7 @@ class TrainingData85Spec extends SparkTestBase {
       if (breach) { ooc += 1.0; if (first < 0.0) first = t + 1.0 }
       z = z2; pw = pw2; t += 1.0
     }
-    val out = TrainingData85.queries("w_ewma_control")(spark, sf).collect()
+    val out = SparkEntry.queries("w_ewma_control")(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_days") == n)
@@ -95,7 +94,7 @@ class TrainingData85Spec extends SparkTestBase {
       (id, len, b, st, u, dg, score,
         if (score > 0.05) "code" else "prose")
     }
-    val out = TrainingData85.queries("t_code_detect")(spark, sf)
+    val out = SparkEntry.queries("t_code_detect")(spark, sf)
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("len"),
         r.getAs[Long]("n_brace"), r.getAs[Long]("n_stmt"),
@@ -105,7 +104,7 @@ class TrainingData85Spec extends SparkTestBase {
   }
 
   test("t_stump_split: IG replay; the theta=10 left side is pure non-keep") {
-    val lbl = TrainingData2.tC4Filters(spark, sf)
+    val lbl = SparkEntry.queries("t_c4_filters")(spark, sf)
       .select(col("n_tokens"),
         when(col("keep"), 1L).otherwise(0L).as("y"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -133,7 +132,7 @@ class TrainingData85Spec extends SparkTestBase {
       .map { case ((th, nl, pl, nr, pr, ig), i) =>
         (i + 1, th, nl, pl, nr, pr, ig)
       }
-    val out = TrainingData85.queries("t_stump_split")(spark, sf)
+    val out = SparkEntry.queries("t_stump_split")(spark, sf)
       .collect()
       .map(r => (r.getAs[Int]("rank"), r.getAs[Long]("threshold"),
         r.getAs[Long]("n_left"), r.getAs[Long]("pos_left"),

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData8
 
 /** Invariant pins for the round-9 batch-4 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData8Spec extends SparkTestBase {
 
   test("welch: counts conserved, dof within the Welch-Satterthwaite bounds") {
-    val r = TrainingData8.queries("a_welch_ttest")(spark, sf).collect()
+    val r = SparkEntry.queries("a_welch_ttest")(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val ev = graft.sources.Tables.table(spark, sf, "events")
@@ -24,7 +23,7 @@ class TrainingData8Spec extends SparkTestBase {
   }
 
   test("kaplan-meier: monotone survival, shrinking risk set, events conserved") {
-    val out = TrainingData8.queries("ev_survival_km")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_survival_km")(spark, sf).collect()
     assert(out.nonEmpty, "some user purchases after signup")
     val sorted = out.sortBy(_.getAs[Long]("t_days"))
     val surv = sorted.map(_.getAs[Double]("s_km"))
@@ -48,7 +47,7 @@ class TrainingData8Spec extends SparkTestBase {
   }
 
   test("ipf raking: final column scale lands exactly on uniform marginals") {
-    val out = TrainingData8.queries("a_ipf_raking")(spark, sf).collect()
+    val out = SparkEntry.queries("a_ipf_raking")(spark, sf).collect()
     val n = out.map(_.getAs[Long]("n_docs")).sum
     val nS = out.map(_.getAs[String]("source")).distinct.length
     val target = n.toDouble / nS
@@ -64,7 +63,7 @@ class TrainingData8Spec extends SparkTestBase {
   }
 
   test("standardize: shares sum to 1, dim-1 mean matches the raw average") {
-    val out = TrainingData8.queries("e_standardize")(spark, sf).collect()
+    val out = SparkEntry.queries("e_standardize")(spark, sf).collect()
     assert(out.map(_.getAs[Int]("dim")).toSeq == (1 to 64))
     val shares = out.map(_.getAs[Double]("var_share")).sum
     assert(math.abs(shares - 1.0) < 1e-4, s"var shares sum to $shares")

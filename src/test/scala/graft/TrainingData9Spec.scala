@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingData9
 
 /** Invariant pins for the round-9 batch-5 operators (contract
   * properties beyond the oracle's engine-equality hash). */
 class TrainingData9Spec extends SparkTestBase {
 
   test("rocchio: dense re-ranked top-5, self excluded, ranks well-formed") {
-    val out = TrainingData9.queries("sim_rocchio_prf")(spark, sf).collect()
+    val out = SparkEntry.queries("sim_rocchio_prf")(spark, sf).collect()
     val byQ = out.groupBy(_.getAs[Long]("query_id"))
     assert(byQ.size == 5)
     byQ.foreach { case (qid, rows) =>
@@ -26,7 +25,7 @@ class TrainingData9Spec extends SparkTestBase {
   }
 
   test("local clustering: coefficients in [0,1], triangles within wedges") {
-    val out = TrainingData9.queries("g_local_clustering")(spark, sf).collect()
+    val out = SparkEntry.queries("g_local_clustering")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val deg = r.getAs[Long]("deg"); val tri = r.getAs[Long]("tri")
@@ -38,7 +37,7 @@ class TrainingData9Spec extends SparkTestBase {
   }
 
   test("seasonal decompose: additive identity, centered seasonal, edge nulls") {
-    val out = TrainingData9.queries("w_seasonal_decompose")(spark, sf).collect()
+    val out = SparkEntry.queries("w_seasonal_decompose")(spark, sf).collect()
     assert(out.nonEmpty)
     // the 7 distinct seasonal values re-center to zero
     val seasonal = out.filter(!_.isNullAt(3)).map(_.getAs[Double]("seasonal"))
@@ -63,7 +62,7 @@ class TrainingData9Spec extends SparkTestBase {
   }
 
   test("path mining: valid trigrams over the event alphabet, ordered counts") {
-    val out = TrainingData9.queries("ev_path_mining")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_path_mining")(spark, sf).collect()
     assert(out.length <= 20)
     val types = Set("signup", "error", "click", "view", "purchase")
     out.foreach { r =>
@@ -77,7 +76,7 @@ class TrainingData9Spec extends SparkTestBase {
   }
 
   test("ltv cohort: cumulative is non-decreasing, conserves purchase revenue") {
-    val out = TrainingData9.queries("ev_ltv_cohort")(spark, sf).collect()
+    val out = SparkEntry.queries("ev_ltv_cohort")(spark, sf).collect()
     assert(out.nonEmpty)
     out.groupBy(_.getAs[java.sql.Date]("cohort")).foreach { case (_, rows) =>
       val sorted = rows.sortBy(_.getAs[Long]("week_offset"))
