@@ -30,20 +30,12 @@ object Bench {
     val t0Main = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - t0Main) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // budget covers the whole main (both passes + suspects); the
     // driver's observed ceiling is ~30 min for the full pipeline, so
     // default leaves headroom for sbt/JVM startup outside our clock
     val timeBudget =
       sys.env.getOrElse("SPARK_GRAFT_TIME_BUDGET", "1250").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("WARN")
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Barrier
 import graft.operators.Grain
 
 /** IVF-PQ index build/search split out of the registered
@@ -41,7 +42,7 @@ object IvfPq {
         Grain.bounded(md5(col("vec_id").cast("string")), col("vec_id"))))
     val coarse = ranked.filter(col("rn") <= nCells)
       .select(col("rn").cast("long").as("cid"), col("e").as("ce"))
-    val assigned = assignResidual(coarse, emb).localCheckpoint(eager = false)
+    val assigned = assignResidual(coarse, emb).transform(Barrier.materialize)
     val subCode = ranked.filter(col("rn") > nCells)
       .select((col("rn") - nCells).cast("long").as("scid"), col("vec_id"))
       .join(assigned, "vec_id")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Barrier
 import graft.QueryModule
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
@@ -421,11 +422,7 @@ object AnalyticsQueries extends QueryModule {
     // (~50× fewer hashes on natural-language token distributions)
     val vocab = docs(s, dir).select(explode(TF.tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("exact_c"))
-      // localCheckpoint, not cache(): three consumers (sketch, top-k,
-      // probe) reuse the materialized vocab, and the blocks are freed
-      // by ContextCleaner when the query is dropped — cache() entries
-      // live in CacheManager for the whole session
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize) // consumed by the sketch, top-k and probe
     val sketch = vocab
       .select(col("exact_c"),
         posexplode(array((0 until cmDepth).map(j => cmBucket(j, col("term"))): _*)))
@@ -636,7 +633,7 @@ object AnalyticsQueries extends QueryModule {
   val aChiSquare: Q = (s, dir) => {
     val cells = docs(s, dir).groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint(eager = false) // consumed by both margins and the fold
+      .transform(Barrier.materialize) // consumed by both margins and the fold
     val rowT = cells.groupBy(col("lang")).agg(sum(col("o")).as("rt"))
     val colT = cells.groupBy(col("source")).agg(sum(col("o")).as("ct"))
     val n = cells.agg(sum(col("o")).as("n"),
@@ -723,7 +720,7 @@ object AnalyticsQueries extends QueryModule {
     val tagged = ev.crossJoin(broadcast(span))
       .withColumn("period", when(col("day") <= col("mid"), "ref")
         .otherwise(lit("cur")))
-      .localCheckpoint(eager = false) // consumed by the rank pass and the bucketing
+      .transform(Barrier.materialize) // consumed by the rank pass and the bucketing
     val ref = tagged.filter(col("period") === "ref")
     val n = ref.count()
     val ranked = Ranking.withGlobalRank(ref, "rk", col("value"), col("event_id"))
@@ -781,7 +778,7 @@ object AnalyticsQueries extends QueryModule {
     val daily = Tables.table(s, dir, "orders")
       .groupBy(col("o_orderdate").as("day"))
       .agg(expr("SUM(CAST(o_totalprice AS DECIMAL(18,2)))").as("rev"))
-      .localCheckpoint(eager = false) // consumed by both pair sides + ties + n
+      .transform(Barrier.materialize) // consumed by both pair sides + ties + n
     val sSt = daily.alias("a")
       .join(daily.alias("b"), col("a.day") < col("b.day")) // calendar²-bounded
       .agg(coalesce(sum(when(col("b.rev") > col("a.rev"), 1L)
@@ -835,7 +832,7 @@ object AnalyticsQueries extends QueryModule {
     val base = Tables.table(s, dir, "events")
       .select(col("event_id"),
         floor(dec(col("value")) * 1000000).cast("long").as("m"))
-      .localCheckpoint(eager = false) // consumed by the explode and the point agg
+      .transform(Barrier.materialize) // consumed by the explode and the point agg
     val tArr = array(poissonT.map(lit): _*)
     val rep = base
       .withColumn("b", explode(sequence(lit(0), lit(bN - 1))))
@@ -889,14 +886,14 @@ object AnalyticsQueries extends QueryModule {
       .distinct()
       .withColumn("h", conv(substring(md5(col("tok")), 1, 12), 16, 10)
         .cast("long"))
-      .localCheckpoint(eager = false) // consumed by the sketch and both pair sides
+      .transform(Barrier.materialize) // consumed by the sketch and both pair sides
     val mink = udaf(new graft.functions.TopKAgg(k))
     val sk = toks.groupBy(col("source"))
       .agg(count(lit(1)).as("n_tok"),
         mink((-col("h")).cast("double"), col("h")).as("mins"))
       .select(col("source"), col("n_tok"),
         expr("transform(mins, m -> m._2)").as("harr"))
-      .localCheckpoint(eager = false) // joined twice (both pair endpoints)
+      .transform(Barrier.materialize) // joined twice (both pair endpoints)
     val pairs = toks.alias("x")
       .join(toks.alias("y"), col("x.tok") === col("y.tok") &&
         col("x.source") < col("y.source"))
@@ -987,7 +984,7 @@ object AnalyticsQueries extends QueryModule {
   val aIpfRaking: Q = (s, dir) => {
     val counts = docs(s, dir).groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // consumed by both dims and the grid
+      .transform(Barrier.materialize) // consumed by both dims and the grid
     val langs = counts.select(col("lang")).distinct()
     val sources = counts.select(col("source")).distinct()
     val grid = langs.crossJoin(broadcast(sources))
@@ -1090,7 +1087,7 @@ object AnalyticsQueries extends QueryModule {
   val aMutualInfo: Q = (s, dir) => {
     val cells = docs(s, dir).groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint(eager = false) // consumed by both margins and the MI fold
+      .transform(Barrier.materialize) // consumed by both margins and the MI fold
     val rowT = cells.groupBy(col("lang")).agg(sum(col("o")).as("rt"))
     val colT = cells.groupBy(col("source")).agg(sum(col("o")).as("ct"))
     val n = cells.agg(sum(col("o")).as("n"))
@@ -1143,9 +1140,9 @@ object AnalyticsQueries extends QueryModule {
       .select(col("source"),
         floor(TF.qualityScore(col("text")) * lit(1000000.0)).cast("long")
           .as("q"))
-      .localCheckpoint(eager = false) // histogram pass + final per-source pass
+      .transform(Barrier.materialize) // histogram pass + final per-source pass
     val hist = v.groupBy(col("q")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // carries + both median selections
+      .transform(Barrier.materialize) // carries + both median selections
     val n = hist.agg(sum(col("c"))).head().getLong(0)
     val k1 = (n + 1) / 2; val k2 = (n + 2) / 2
     def middle2(h: DataFrame, vc: String): Long = {
@@ -1160,7 +1157,7 @@ object AnalyticsQueries extends QueryModule {
     val med2 = middle2(hist, "q")
     val dh = hist.groupBy(abs(col("q") * 2 - med2).as("d2"))
       .agg(sum(col("c")).as("c"))
-      .localCheckpoint(eager = false) // same two-phase walk as the value histogram
+      .transform(Barrier.materialize) // same two-phase walk as the value histogram
     val mad4 = middle2(dh, "d2") // 2×(2×MAD) in micro units
     v.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1222,7 +1219,7 @@ object AnalyticsQueries extends QueryModule {
       (col("o_custkey") % 2 === 0).as("treat"),
       to_date(col("o_orderdate")).as("day"),
       col("o_totalprice").cast("decimal(18,2)").as("price"))
-      .localCheckpoint(eager = false) // consumed by the range probe + the cell agg
+      .transform(Barrier.materialize) // consumed by the range probe + the cell agg
     val mm = o.agg(min(col("day")), max(col("day"))).head()
     val lo = mm.getDate(0).toLocalDate; val hi = mm.getDate(1).toLocalDate
     val mid = lo.plusDays(java.time.temporal.ChronoUnit.DAYS.between(lo, hi) / 2)
@@ -1305,12 +1302,12 @@ object AnalyticsQueries extends QueryModule {
     val o = Tables.table(s, dir, "orders")
       .select(col("o_orderkey"),
         col("o_totalprice").cast("decimal(18,2)").as("v"))
-      .localCheckpoint(eager = false) // count + rank pass
+      .transform(Barrier.materialize) // count + rank pass
     val n = o.count()
     val kLo = math.ceil(0.05 * n).toLong
     val kHi = n - kLo // symmetric 5% tails
     val ranked = Ranking.withGlobalRank(o, "rk", col("v"), col("o_orderkey"))
-      .localCheckpoint(eager = false) // boundary probe + the clamped aggregate
+      .transform(Barrier.materialize) // boundary probe + the clamped aggregate
     val bounds = ranked
       .agg(min(when(col("rk") === kLo + 1, col("v"))).as("lo"),
         min(when(col("rk") === kHi, col("v"))).as("hi")).head()
@@ -1653,7 +1650,7 @@ object AnalyticsQueries extends QueryModule {
         when(conv(substring(md5(concat(lit("cuped:"),
           col("user_id").cast("string"))), 1, 2), 16, 10)
           .cast("long") % 2 === 0, "A").otherwise("B"))
-      .localCheckpoint(eager = false) // consumed by the pooled AND per-arm moments
+      .transform(Barrier.materialize) // consumed by the pooled AND per-arm moments
     val pooled = perUser.agg(count(lit(1)).as("n"),
         sum(col("x")).cast("long").as("sx"),
         sum(col("y")).cast("long").as("sy"),
@@ -1710,7 +1707,7 @@ object AnalyticsQueries extends QueryModule {
       .withColumn("mean_g", d(col("s1")) / d(col("n")))
       .withColumn("ss_within", d(col("s2")) -
         d(col("s1")) * d(col("s1")) / d(col("n")))
-      .localCheckpoint(eager = false) // consumed by the pooled scalars AND output
+      .transform(Barrier.materialize) // consumed by the pooled scalars AND output
     // grand mean of GROUP MEANS and the cross-group sums, folded in
     // sorted source order (G rows)
     val pooled = g.agg(
@@ -1817,7 +1814,7 @@ object AnalyticsQueries extends QueryModule {
     val daily = dailyCents(s, dir)
       .withColumn("we", dayofweek(col("day")).isin(1, 7))
       .withColumn("t", row_number().over(Grain.bounded(col("day"))).cast("long"))
-      .localCheckpoint(eager = false) // consumed by the observed agg AND the rep grid
+      .transform(Barrier.materialize) // consumed by the observed agg AND the rep grid
     val obs = daily.agg(count(lit(1)).cast("long").as("n_days"),
       sum(when(col("we"), 1L).otherwise(0L)).cast("long").as("n_we"),
       sum(when(col("we"), col("m")).otherwise(0L)).cast("long").as("s_we"),
@@ -1864,7 +1861,7 @@ object AnalyticsQueries extends QueryModule {
   // arithmetic end to end.
   // ---------------------------------------------------------------
   val aHodgesLehmann: Q = (s, dir) => {
-    val daily = dailyCents(s, dir).localCheckpoint(eager = false) // both pair sides
+    val daily = dailyCents(s, dir).transform(Barrier.materialize) // both pair sides
     val pairs = daily.alias("a")
       .join(daily.alias("b"), col("a.day") <= col("b.day")) // calendar²-bounded
       .select((col("a.m") + col("b.m")).as("w"))
@@ -1872,7 +1869,7 @@ object AnalyticsQueries extends QueryModule {
     // Walsh-pair frame only ever surrenders its two middle VALUES,
     // and w is an exact long, so histogram narrowing (map-side count
     // passes, shuffle ≤ B rows) finds them without the former range
-    // exchange + checkpoint + P-way sort of the 2.9M-pair frame (the
+    // exchange + barrier + P-way sort of the 2.9M-pair frame (the
     // w_theil_sen probe: ~3.9 s of machinery for 2 rows). The pair
     // count is analytic — n(n+1)/2 — so the ranks are driver-side.
     val nD = daily.count()
@@ -1911,7 +1908,7 @@ object AnalyticsQueries extends QueryModule {
       .join(Tables.table(s, dir, "customer")
         .select(col("c_custkey").as("o_custkey"), col("c_nationkey")),
         Seq("o_custkey"))
-      .localCheckpoint(eager = false) // consumed by totals, the total fold, the nation folds
+      .transform(Barrier.materialize) // consumed by totals, the total fold, the nation folds
     val tot = cust.agg(count(lit(1)).cast("long").as("n"),
       sum(col("x")).cast("long").as("sx"))
       .withColumn("mu", d(col("sx")) / d(col("n")))
@@ -1929,7 +1926,7 @@ object AnalyticsQueries extends QueryModule {
       .crossJoin(broadcast(tot))
       .withColumn("share", d(col("sg")) / d(col("sx")))
       .withColumn("xbar", d(col("sg")) / d(col("ng")))
-      .localCheckpoint(eager = false) // consumed by the between fold AND the within join
+      .transform(Barrier.materialize) // consumed by the between fold AND the within join
     val tBetween = gs
       .select(col("c_nationkey"),
         (col("share") * log(col("xbar") / col("mu"))).as("term"))
@@ -1979,7 +1976,7 @@ object AnalyticsQueries extends QueryModule {
       .groupBy(col("o_orderdate").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("m"))
-      .localCheckpoint(eager = false) // median pick AND the sign sequence
+      .transform(Barrier.materialize) // median pick AND the sign sequence
     val n0 = daily.agg(count(lit(1)).cast("long").as("n0"))
     val med = daily
       .withColumn("rk", row_number().over(Grain.bounded(col("m"), col("day")))
@@ -2180,7 +2177,7 @@ object AnalyticsQueries extends QueryModule {
       .agg(count(lit(1)).cast("long").as("x"),
         sum((col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long")).cast("long").as("y"))
-      .localCheckpoint(eager = false) // two rank picks AND the count pass
+      .transform(Barrier.materialize) // two rank picks AND the count pass
     val n = daily.agg(count(lit(1)).cast("long").as("n"))
     def thresh(c: String, q: Double, out: String): DataFrame =
       daily.withColumn("rk",
@@ -2326,8 +2323,8 @@ object AnalyticsQueries extends QueryModule {
   }
 
   val aHllSetAlgebra: Q = (s, dir) => {
-    val base = hllBase(s, dir).localCheckpoint(eager = false)
-    val vecs = regVectors(base).localCheckpoint(eager = false) // both lattice sides
+    val base = hllBase(s, dir).transform(Barrier.materialize)
+    val vecs = regVectors(base).transform(Barrier.materialize) // both lattice sides
     val pairs = vecs.select(col("grp").as("grp_a"), col("regs").as("ra"))
       .crossJoin(vecs.select(col("grp").as("grp_b"), col("regs").as("rb")))
       .filter(col("grp_a") < col("grp_b"))
@@ -2592,7 +2589,7 @@ object AnalyticsQueries extends QueryModule {
       .agg(count(lit(1)).cast("long").as("x"),
         sum((col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
           .cast("long").as("y"))
-      .localCheckpoint(eager = false) // both sides of the day-pair lattice
+      .transform(Barrier.materialize) // both sides of the day-pair lattice
     val a = daily.alias("a"); val b = daily.alias("b")
     val pairs = a.join(b, col("a.day") < col("b.day"))
       .select(
@@ -2681,7 +2678,7 @@ object AnalyticsQueries extends QueryModule {
         expr("CAST(floor(CAST(value AS DECIMAL(18,2)) * 1000000) AS BIGINT)")
           .as("m"),
         round(col("value") * 100).cast("long").as("cents"))
-      .localCheckpoint(eager = false) // reps + point + the central power sums
+      .transform(Barrier.materialize) // reps + point + the central power sums
     val tArr = array(poissonT.map(lit): _*)
     val rep = base
       .withColumn("b", explode(sequence(lit(0), lit(BcaB - 1))))
@@ -2903,7 +2900,7 @@ object AnalyticsQueries extends QueryModule {
       .select(col("o_orderpriority").as("g"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long").as("x"))
-      .localCheckpoint(eager = false) // feeds the median pass AND the deviation pass
+      .transform(Barrier.materialize) // feeds the median pass AND the deviation pass
     val vals = xs.groupBy(col("g"), col("x"))
       .agg(count(lit(1)).cast("long").as("c"))
     val w = org.apache.spark.sql.expressions.Window
@@ -3049,7 +3046,7 @@ object AnalyticsQueries extends QueryModule {
       .groupBy(col("o_orderdate").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("x"))
-      .localCheckpoint(eager = false) // moments + quantile pass
+      .transform(Barrier.materialize) // moments + quantile pass
     val mo = daily.agg(count(lit(1)).cast("long").as("n"),
       sum(col("x")).cast("decimal(38,0)").as("sx"),
       // widen BEFORE multiplying: day-grain revenue cents square
@@ -3076,7 +3073,7 @@ object AnalyticsQueries extends QueryModule {
     val pts = grid
       .select(col("p"), col("n"), col("q_c"), col("mean_c"), col("sd_c"),
         z.as("z"))
-      .localCheckpoint(eager = false) // rows + the correlation fold
+      .transform(Barrier.materialize) // rows + the correlation fold
     val corr = pts
       .select(col("p"), d(col("q_c")).as("q"), col("z"))
       .agg(count(lit(1)).cast("long").as("k"),
@@ -3166,7 +3163,7 @@ object AnalyticsQueries extends QueryModule {
         col("o_orderpriority").as("trt"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("v"))
-      .localCheckpoint(eager = false) // completeness filter + both join sides
+      .transform(Barrier.materialize) // completeness filter + both join sides
     val kAll = cell.agg(countDistinct(col("trt")).cast("long").as("k"))
     val complete = cell.groupBy(col("day"))
       .agg(count(lit(1)).cast("long").as("nt"))
@@ -3183,7 +3180,7 @@ object AnalyticsQueries extends QueryModule {
     val rsum = ranked.groupBy(col("trt"))
       .agg(count(lit(1)).cast("long").as("n_blocks"),
         sum(col("rank2")).cast("long").as("r2"))
-      .localCheckpoint(eager = false) // the χ² fold + the per-treatment rows
+      .transform(Barrier.materialize) // the χ² fold + the per-treatment rows
     val chi = rsum.crossJoin(broadcast(kAll))
       .select(col("trt"), col("n_blocks"), col("k"), col("r2"))
       .groupBy(col("n_blocks"), col("k"))
@@ -3275,14 +3272,14 @@ object AnalyticsQueries extends QueryModule {
       .groupBy(to_date(date_trunc("month", col("o_orderdate"))).as("m"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("rev"))
-      .localCheckpoint(eager = false) // both sides of the year-lag self-join
+      .transform(Barrier.materialize) // both sides of the year-lag self-join
     val cur = monthly.alias("c"); val prv = monthly.alias("p")
     val pairs = cur.join(prv,
         col("c.m") === add_months(col("p.m"), 12))
       .select((col("c.rev") - col("p.rev")).as("dd"))
       .filter(col("dd") =!= 0L)
       .select(col("dd"), abs(col("dd")).as("ad"))
-      .localCheckpoint(eager = false) // rank join reads it twice + tie census
+      .transform(Barrier.materialize) // rank join reads it twice + tie census
     val a = pairs.alias("a"); val b = pairs.alias("b")
     // grouping (a.dd, a.ad) sums the per-a quantity over the k_a
     // identical a rows too, so the agg carries k·(rank2 − 1); the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.functions.{SimHashAgg, TextFunctions => TF}
 import ColumnIdioms.docs
 
@@ -57,7 +58,7 @@ object Dedup {
     * that EMIT pairs; consumers that aggregate/checkpoint the stream
     * (the threshold sweep, dupGroups' edge collect) were paying a
     * full range exchange + sort that Catalyst only eliminates below
-    * joins/aggregates, not below a localCheckpoint materialization
+    * joins/aggregates, not below a [[graft.Barrier]]
     * (probed: the Sort+rangepartitioning survive in those plans). */
   private def prefixJaccardPairsRaw(base: DataFrame, threshold: Double): DataFrame = {
     // ---- stage 1: identical-set collapse (blocked) ----
@@ -72,13 +73,7 @@ object Dedup {
       .agg(min(col("doc_id")).as("rep"),
         sort_array(collect_list(col("doc_id"))).as("members"),
         first(col("items")).as("items"))
-      // localCheckpoint, not cache(): both give the multi-consumer
-      // materialization barrier, but cache() registers the plan in
-      // CacheManager FOREVER (a long-lived session leaks blocks and
-      // every later action pays a plan-substitution scan over the
-      // registry); checkpoint blocks are freed by ContextCleaner as
-      // soon as the query's DataFrame is dropped
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     // ---- stage 2: AllPairs prefix filter over representatives ----
     // Prefix filtering is only as selective as its global item
     // order: prefixes must hold each set's RAREST items, so order by
@@ -102,7 +97,7 @@ object Dedup {
       // always safe; smaller never is.
       .withColumn("p",
         (col("n") - ceil(col("n") * threshold - lit(1e-9)) + 1).cast("int"))
-      .localCheckpoint(eager = false) // self-cleaning barrier (see stage-1 note)
+      .transform(Barrier.materialize)
     val pre = withArr.select(col("gkey"), col("lang"), col("source"),
       col("n"), explode(slice(col("items"), lit(1), col("p"))).as("it"))
     val a = pre.alias("a"); val b = pre.alias("b")
@@ -229,7 +224,7 @@ object Dedup {
       .groupBy(col("gkey"), col("lang"), col("source"))
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         first(col("items")).as("items"))
-      .localCheckpoint(eager = false) // multi-consumer barrier, self-cleaning
+      .transform(Barrier.materialize)
     // stage 2: rarest-first ordering (selectivity only — any total
     // order is exact), then ASYMMETRIC candidates: A-prefix × B-full
     val reps = groups.select(col("gkey"), col("lang"), col("source"), col("items"))
@@ -245,7 +240,7 @@ object Dedup {
       // ε-guard as in prefixJaccardPairs: never shrink the prefix
       .withColumn("p",
         (col("n") - ceil(col("n") * threshold - lit(1e-9)) + 1).cast("int"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val pre = withArr.select(col("gkey"), col("lang"), col("source"),
       col("n"), explode(slice(col("items"), lit(1), col("p"))).as("it"))
     val full = withArr.select(col("gkey"), col("lang"), col("source"),
@@ -328,7 +323,7 @@ object Dedup {
   /** Unordered LSH pair stream (same set as [[minhashLshPairs]]) —
     * the input shape for [[dupGroups]]-style aggregate consumers,
     * which otherwise pay the global (d1, d2) range sort inside their
-    * checkpoint materialization (see [[prefixJaccardPairsRaw]]). */
+    * barrier (see [[prefixJaccardPairsRaw]]). */
   private[graft] def minhashLshPairsRaw(s: SparkSession, dir: String, k: Int = 64,
       bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.7,
       portableHashes: Boolean = false): DataFrame = {
@@ -346,20 +341,17 @@ object Dedup {
       .withColumn("gkey", setKey(col("sh")))
     // ONE materialization barrier for the whole pipeline: the
     // collapsed groups (members ride along) plus the 64-perm
-    // signature, computed during the same checkpoint job. The
+    // signature, computed during the job that first reads it. The
     // barrier is load-bearing twice over: without it CollapseProject
     // inlines the signature into the band lambda below and the
     // interpreted HOF re-evaluates it once PER BAND (16× per row —
     // measured 450 s vs <10 s at sf0.1), and the frame is consumed
     // by four plans (banding, both verify sides, member expansion).
-    // localCheckpoint, not cache(): same barrier, but the blocks are
-    // freed by ContextCleaner when the query is dropped instead of
-    // living in CacheManager's registry for the session's lifetime.
     val base = grouped.groupBy(col("gkey"))
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         first(col("sh")).as("sh"))
       .withColumn("sig", graft.plans.HashExpressions.minhash(col("sh"), k))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val groups = base.select(col("gkey"), col("members"))
     // band join carries only (band, bucket, gkey) — the shingle
     // sets are joined back exactly once per surviving pair, so the
@@ -423,7 +415,7 @@ object Dedup {
       .select(col("doc_id"), TF.md5ShingleHashes(col("text"), shingleN).as("sh"))
       .withColumn("is_new", col("doc_id") % 10 === 0)
       .withColumn("sig", graft.plans.HashExpressions.minhash(col("sh"), k))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     // Spark buckets on xxhash64 of the band slice while the DuckDB
     // oracle joins on the raw band-key STRING: a 64-bit band-hash
     // collision (~2^-64 per band pair) would create a Spark-only
@@ -458,66 +450,86 @@ object Dedup {
       .orderBy(col("new_doc_id"))
   }
 
-  /** Resolve near-dup PAIRS into canonical duplicate GROUPS
-    * (connected components by iterative min-label propagation).
-    * Pair output is inherently quadratic in dup-group size (a
-    * 10-copy document yields 45 pairs — measured 18× blowup on a
-    * 10×-duplicated corpus); group output is linear in documents,
-    * which is the shape a 100 TB dedup must emit. Dup clusters have
-    * tiny diameters, so propagation converges in a few rounds;
-    * iteration stops at fixpoint.
+  /** Resolve near-dup PAIRS into canonical duplicate GROUPS: the
+    * connected components of the pair graph ([[componentLabels]]),
+    * one row per group of two or more documents, canonical id = the
+    * smallest member. Pair output is inherently quadratic in
+    * dup-group size (a 10-copy document yields 45 pairs — measured
+    * 18× blowup on a 10×-duplicated corpus); group output is linear
+    * in documents, which is the shape a 100 TB dedup must emit.
     */
-  def dupGroups(pairs: DataFrame, maxIter: Int = 10,
-      localEdgeThreshold: Long = 5000000L): DataFrame = {
-    // localCheckpoint: reused every propagation round, self-cleaning
-    // once the groups DataFrame is dropped (cache() leaked the edge
-    // blocks for the session's lifetime)
-    val edges = pairs.select(col("d1"), col("d2")).localCheckpoint(eager = false)
-    val nEdges = edges.count()
-    // Hybrid: near-dup pair graphs are orders of magnitude smaller
-    // than the corpus (only documents WITH a near-dup appear), so up
-    // to ~5M edges union-find on the driver wins — one collect in,
-    // one parallelize out, no per-iteration jobs. Beyond that, the
-    // distributed min-label propagation below takes over. Both paths
-    // emit identical groups (DedupSpec pins this).
-    if (nEdges <= localEdgeThreshold) return dupGroupsLocal(edges)
-    var labels = edges.select(col("d1").as("id")).union(edges.select(col("d2")))
-      .distinct().withColumn("rep", col("id")).localCheckpoint(eager = false)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // neighbor minimum over both edge directions; the lazy
-      // localCheckpoint truncates lineage when called (an iterative
-      // plan otherwise doubles every round and analysis cost
-      // dominates), and its blocks are stored by the first job over
-      // nbr — the convergence probe, or the next round's join when
-      // the probe is skipped. The previous cache()-then-checkpoint
-      // form leaked one CacheManager entry per round
-      val nbr = edges.join(labels, col("d1") === col("id"))
-        .select(col("d2").as("id"), col("rep"))
-        .union(edges.join(labels, col("d2") === col("id"))
-          .select(col("d1").as("id"), col("rep")))
-        .union(labels)
-        .groupBy(col("id")).agg(min(col("rep")).as("rep"))
-        .localCheckpoint(eager = false)
-      // dup clusters have tiny diameter: skip the convergence job
-      // for the first two rounds (they almost always suffice)
-      converged = i >= 1 &&
-        nbr.join(labels.withColumnRenamed("rep", "old"), "id")
-          .filter(col("rep") =!= col("old")).isEmpty
-      labels = nbr
-      i += 1
-    }
-    labels.groupBy(col("rep").as("canonical_id"))
+  def dupGroups(pairs: DataFrame, localEdgeThreshold: Long = MaxLocalEdges): DataFrame =
+    componentLabels(pairs.select(col("d1"), col("d2")), localEdgeThreshold)
+      .groupBy(col("rep").as("canonical_id"))
       .agg(count(lit(1)).as("group_size"),
         sort_array(collect_list(col("id"))).as("members"))
       .filter(col("group_size") > 1)
       .orderBy(col("canonical_id"))
+
+  /** Edge count up to which [[componentLabels]] runs the driver
+    * union-find. */
+  val MaxLocalEdges = 5000000L
+
+  /** Connected components of an undirected edge list (two id columns,
+    * any names): one `(id, rep)` row per node that appears in an
+    * edge, `rep` the smallest id of its component.
+    *
+    * Hybrid: near-dup and similarity graphs are orders of magnitude
+    * smaller than the corpus (only items WITH a near neighbor
+    * appear), so up to `localEdgeThreshold` edges a driver
+    * union-find wins — one collect in, one parallelize out, no
+    * per-round jobs. Beyond that, distributed min-label propagation
+    * takes over: each round every node takes the min label among
+    * itself and its neighbors plus one pointer jump (path halving),
+    * so convergence is O(log diameter) rounds, each one join + one
+    * min-aggregate; the loop runs to a fixpoint, and the driver only
+    * reads the changed-label count. Both paths emit identical labels
+    * (DedupSpec and DifferentialSpec pin this).
+    */
+  private[graft] def componentLabels(edges: DataFrame,
+      localEdgeThreshold: Long): DataFrame = {
+    val undirected = edges.toDF("a", "b").transform(Barrier.materialize)
+    if (undirected.count() <= localEdgeThreshold) return unionFindLabels(undirected)
+    val both = undirected.union(undirected.select(col("b").as("a"), col("a").as("b")))
+      .transform(Barrier.materialize) // read by every round's join
+    var labels = both.select(col("a").as("id")).distinct()
+      .withColumn("rep", col("id")).transform(Barrier.materialize)
+    var changed = 1L
+    while (changed > 0) {
+      val viaNbr = both.join(labels.withColumnRenamed("id", "nid"),
+          col("b") === col("nid"))
+        .select(col("a").as("id"), col("rep"))
+      // no barrier on nbrMin: both sides of the halving self-join
+      // recompute it from barriered inputs — two shallow stages,
+      // cheaper than a third materialization per round
+      val nbrMin = labels.select(col("id"), col("rep")).union(viaNbr)
+        .groupBy(col("id")).agg(min(col("rep")).as("rep"))
+      // pointer jumping (path halving): follow the representative one
+      // hop — rep ← rep(rep) — so label distance halves each round
+      // and convergence is O(log diameter), not O(diameter). One jump
+      // per round measures fastest: more jumps shave rounds but
+      // re-execute nbrMin per self-join side and lose more than they
+      // save. Without any jump, a chain-shaped near-dup cluster costs
+      // one distributed round per hop. The self-join uses no alias
+      // qualifiers: a qualified column (`x.id`) under a barrier leaves
+      // it with constraints on attribute ids that Spark's self-join
+      // deduplication does not rewrite, and the next round's union
+      // then fails in the optimizer ("key not found: id#…").
+      val next = nbrMin
+        .join(nbrMin.select(col("id").as("rid"), col("rep").as("rrep")),
+          col("rep") === col("rid"), "left")
+        .select(col("id"), least(col("rep"), coalesce(col("rrep"), col("rep"))).as("rep"))
+        .transform(Barrier.materialize)
+      changed = next.join(labels.withColumnRenamed("rep", "old"), "id")
+        .filter(col("rep") < col("old")).count()
+      labels = next
+    }
+    labels
   }
 
   /** Driver-side union-find (path compression + union by min) for
-    * pair graphs that fit comfortably in driver memory. */
-  private def dupGroupsLocal(edges: DataFrame): DataFrame = {
+    * edge lists that fit comfortably in driver memory. */
+  private def unionFindLabels(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val es = edges.as[(Long, Long)].collect()
@@ -537,14 +549,9 @@ object Dedup {
         if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
       }
     }
-    val members = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
-      .map((id: Long) => (find(id), id))
-    members.toDF("rep", "id")
-      .groupBy(col("rep").as("canonical_id"))
-      .agg(count(lit(1)).as("group_size"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .filter(col("group_size") > 1)
-      .orderBy(col("canonical_id"))
+    es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
+      .map((id: Long) => (id, find(id)))
+      .toDF("id", "rep")
   }
 
   /** Winnowing near-dup pairs: documents whose winnowing-fingerprint
@@ -620,12 +627,11 @@ object Dedup {
         col("source"), hashes.as("hs"))
       .withColumn("gkey", setKey(col("hs"), col("lang"), col("source")))
     // ONE materialization barrier: collapsed groups + the 64-bit
-    // simhash in the same checkpoint job (the token-hash array is
+    // simhash in the same stored frame (the token-hash array is
     // consumed by simhash64 inside the projection and dropped, so
     // the materialized block holds only key/members/simhash). Both
     // sides of the band self-join and the member expansion read the
-    // materialized frame. (localCheckpoint = same barrier as cache()
-    // but self-cleaning, see prefixJaccardPairs stage-1 note)
+    // materialized frame.
     val base = grouped
       .groupBy(col("gkey"), col("lang"), col("source"))
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
@@ -633,7 +639,7 @@ object Dedup {
       .withColumn("simhash",
         graft.plans.HashExpressions.simhash64(col("hs")))
       .drop("hs")
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val groups = base.select(col("gkey"), col("members"))
     val sh = base.select(col("gkey"), col("lang"), col("source"),
       col("simhash"))

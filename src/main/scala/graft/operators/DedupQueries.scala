@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
@@ -138,7 +139,7 @@ object DedupQueries extends QueryModule {
             .cast("string"))))
       .drop("grams0")
       .withColumn("n", size(col("items")))
-      .localCheckpoint(eager = false) // consumed by df-count, posting, verify, expand
+      .transform(Barrier.materialize) // consumed by df-count, posting, verify, expand
     // stage 2: rarest-first global order (ascending document
     // frequency, ties by item text — selectivity only, any total
     // order is exact), then per-group indexed prefix of
@@ -152,7 +153,7 @@ object DedupQueries extends QueryModule {
         x => x.getField("it")).as("items_o"))
     val g2 = groups0.join(ordered, Seq("gkey"), "left")
       .withColumn("p", least(col("n"), lit(kq + 1)))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val idx = g2.filter(col("n") > 0)
       .select(col("gkey"), col("lang"), col("source"), col("len"),
         explode(slice(col("items_o"), lit(1), col("p"))).as("it"))
@@ -458,19 +459,19 @@ object DedupQueries extends QueryModule {
   // ---------------------------------------------------------------
   val dedupFunnel: Q = (s, dir) => {
     val docs = Tables.table(s, dir, "documents")
-      .select(col("doc_id"), col("text")).localCheckpoint(eager = false)
+      .select(col("doc_id"), col("text")).transform(Barrier.materialize)
     def dupDocsByKey(key: Column): DataFrame =
       docs.select(col("doc_id"), key.as("k"))
         .withColumn("n", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("k"))))
         .filter(col("n") > 1).select(col("doc_id"))
-    val exact = dupDocsByKey(md5(col("text"))).localCheckpoint(eager = false)
+    val exact = dupDocsByKey(md5(col("text"))).transform(Barrier.materialize)
     val canon = trim(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z0-9]+", " "), " +", " "))
-    val norm = dupDocsByKey(md5(canon)).localCheckpoint(eager = false)
+    val norm = dupDocsByKey(md5(canon)).transform(Barrier.materialize)
     val near = Dedup.minhashLshPairs(s, dir, portableHashes = true)
       .select(explode(array(col("d1"), col("d2"))).as("doc_id"))
-      .distinct().localCheckpoint(eager = false)
+      .distinct().transform(Barrier.materialize)
     val t1 = exact.agg(count(lit(1)).cast("long").as("n_flagged"))
       .select(lit(1).as("tier"), lit("exact").as("method"), col("n_flagged"),
         col("n_flagged").as("n_new"))
@@ -576,14 +577,14 @@ object DedupQueries extends QueryModule {
     require(l >= 2, "anchor length must be at least 2 tokens")
     require(maxDf >= 2, "df cap below 2 drops every pair-producing gram")
     islandsFromGrams(
-      gramPostings(docsDf, l).localCheckpoint(eager = false), // df count + join sides
+      gramPostings(docsDf, l).transform(Barrier.materialize), // df count + join sides
       maxDf)
   }
 
   /** Token-position postings — one row per (doc, pos, gram). Shared
     * by the pair tier and the high-df tier (DedupQueries), which
     * MUST agree on the gram universe or spans could fall between the
-    * tiers; the composed full scrub checkpoints this once and feeds
+    * tiers; the composed full scrub materializes this once and feeds
     * both. One shingle string per position; docs shorter than L
     * produce no anchors (sequence(1, size-L+1) would run DESCENDING
     * when size < L — the filter is load-bearing, not cosmetic). */
@@ -782,7 +783,7 @@ object DedupQueries extends QueryModule {
     val bucketed = Dedup.ngramJaccardPairs(s, dir, 3, 0.5)
       .withColumn("bucket", floor(col("jaccard") * 20.0) / 20.0)
       .groupBy(col("bucket")).agg(count(lit(1)).cast("long").as("n"))
-      .localCheckpoint(eager = false) // all four configs fold the same buckets
+      .transform(Barrier.materialize) // all four configs fold the same buckets
     def fold(v: String): Column =
       expr("aggregate(sort_array(collect_list(named_struct(" +
         s"'bucket', bucket, 'v', $v))), 0D, (a, q) -> a + q.v)")
@@ -877,7 +878,7 @@ object DedupQueries extends QueryModule {
     require(l >= 2, "anchor length must be at least 2 tokens")
     require(maxDf >= 2, "cap below 2 would route unique grams here")
     highDfIslandsFromGrams(
-      gramPostings(docsDf, l).localCheckpoint(eager = false), l, maxDf)
+      gramPostings(docsDf, l).transform(Barrier.materialize), l, maxDf)
   }
 
   private[operators] def highDfIslandsFromGrams(g: DataFrame, l: Int,
@@ -936,7 +937,7 @@ object DedupQueries extends QueryModule {
 
   /** DataFrame-level entry — the spec surface for the planted-span
     * recall pin. Same output schema as the pair-tier scrub. The
-    * token-position postings are computed ONCE (checkpointed) and
+    * token-position postings are computed ONCE (one barrier) and
     * feed both tiers — the tokenize/shingle pass over the corpus is
     * the dominant linear cost at scale and must not run twice. */
   def fullSubstringScrubOf(docsDf: DataFrame, l: Int, maxDf: Int): DataFrame = {
@@ -944,7 +945,7 @@ object DedupQueries extends QueryModule {
     require(maxDf >= 2, "cap below 2 would route unpaired grams to the " +
       "high-df tier and misclassify single-doc grams")
     val docs = docsDf.select(col("doc_id"), col("text"))
-    val g = gramPostings(docs, l).localCheckpoint(eager = false)
+    val g = gramPostings(docs, l).transform(Barrier.materialize)
     val iv1 = islandsFromGrams(g, maxDf)
       .select(col("db").as("doc_id"),
         (col("pa_start") + col("diag")).as("s"),
@@ -1112,7 +1113,7 @@ object DedupQueries extends QueryModule {
         when(col("in_lex").isNotNull && col("in_sem").isNotNull, "both")
           .when(col("in_lex").isNotNull, "lexical_only")
           .otherwise("semantic_only").as("category"))
-      .localCheckpoint(eager = false) // the category agg + the union total
+      .transform(Barrier.materialize) // the category agg + the union total
     val tot = j.agg(count(lit(1)).cast("long").as("n_union"))
     j.groupBy(col("category"))
       .agg(count(lit(1)).cast("long").as("n_pairs"),

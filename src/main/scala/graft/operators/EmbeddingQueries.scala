@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.functions.Similarity
 import graft.sources.Tables
@@ -78,7 +79,7 @@ object EmbeddingQueries extends QueryModule {
   val ePqCodes: Q = (s, dir) => {
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e"))
-      .localCheckpoint(eager = false) // consumed by seeds AND the encode pass
+      .transform(Barrier.materialize) // consumed by seeds AND the encode pass
     val subsOf = (df: DataFrame) => df.select(col("vec_id"), col("e"),
       posexplode(transform(sequence(lit(0), lit(7)),
         mm => slice(col("e"), mm * lit(8) + 1, lit(8)))).as(Seq("m", "sub")))
@@ -166,7 +167,7 @@ object EmbeddingQueries extends QueryModule {
           " / (CAST(n_vec AS DOUBLE) * 1099511627776.0))"))
       // materialize the 4096-double cm row: the fold's element_at(cm)
       // must read a VALUE, not re-run the projection it collapsed into
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
       .withColumn("vf", expr(
         s"""aggregate(
            |  sequence(1, 12),
@@ -175,7 +176,7 @@ object EmbeddingQueries extends QueryModule {
            |    (wv, z) -> transform(wv, x -> x / sqrt(aggregate(wv,
            |      CAST(0.0 AS DOUBLE), (a, y) -> a + y * y)))))""".stripMargin))
       // materialize vf before wf/lam reference it (same collapse trap)
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
       .withColumn("wf", expr(matvec("vf")))
       .withColumn("lam", expr(
         s"aggregate(sequence(1, $dim), CAST(0.0 AS DOUBLE)," +
@@ -216,7 +217,7 @@ object EmbeddingQueries extends QueryModule {
       .withColumn("var_q",
         (d(col("s2")) - d(col("s1")) * d(col("s1")) / d(col("n")))
           / d(col("n")))
-      .localCheckpoint(eager = false) // consumed by the share denominator + output
+      .transform(Barrier.materialize) // consumed by the share denominator + output
     val tot = per.agg(expr(
       "aggregate(sort_array(collect_list(struct(dim, var_q))), 0D," +
         " (a, x) -> a + x.var_q)").as("tv"))
@@ -260,7 +261,7 @@ object EmbeddingQueries extends QueryModule {
     val ex = emb
       .select(col("vec_id"), posexplode(col("e")).as(Seq("pos", "v")))
       .withColumn("q", floor(col("v") * lit(1048576.0)).cast("long"))
-      .localCheckpoint(eager = false) // stats pass + code pass
+      .transform(Barrier.materialize) // stats pass + code pass
     val stats = ex.groupBy(col("pos"))
       .agg(sum(col("q")).as("sq"), count(lit(1)).as("n"))
     val codes = ex.join(broadcast(stats), "pos")
@@ -272,7 +273,7 @@ object EmbeddingQueries extends QueryModule {
           expr("shiftleft(bit, CAST(pos AS INT))"))).as("lo"),
         sum(when(col("pos") >= 32,
           expr("shiftleft(bit, CAST(pos AS INT) - 32)"))).as("hi"))
-      .localCheckpoint(eager = false) // query side + corpus side of the search
+      .transform(Barrier.materialize) // query side + corpus side of the search
     val q = broadcast(codes.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
         col("hi").as("qhi")))
@@ -409,7 +410,7 @@ object EmbeddingQueries extends QueryModule {
   val ePqSubspaceAudit: Q = (s, dir) => {
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e"))
-      .localCheckpoint(eager = false) // consumed by seeds AND the encode pass
+      .transform(Barrier.materialize) // consumed by seeds AND the encode pass
     val subsOf = (df: DataFrame) => df.select(col("vec_id"), col("e"),
       posexplode(transform(sequence(lit(0), lit(7)),
         mm => slice(col("e"), mm * lit(8) + 1, lit(8)))).as(Seq("m", "sub")))
@@ -428,7 +429,7 @@ object EmbeddingQueries extends QueryModule {
       .agg(min(struct(col("dist").as("dist"), col("cid").as("cid"))).as("best"))
       .select(col("vec_id"), col("m"), col("best.cid").as("code"),
         col("best.dist").as("dist"))
-      .localCheckpoint(eager = false) // stats leg AND hot-code leg
+      .transform(Barrier.materialize) // stats leg AND hot-code leg
     val stats = best.groupBy(col("m"))
       .agg(count(lit(1)).cast("long").as("n_vectors"),
         countDistinct(col("code")).cast("long").as("n_codes_used"),
@@ -467,7 +468,7 @@ object EmbeddingQueries extends QueryModule {
       .withColumn("nrm", sqrt(Similarity.dot(col("e0"), col("e0"))))
       .select(col("vec_id"), col("label"),
         transform(col("e0"), x => x / col("nrm")).as("e"))
-      .localCheckpoint(eager = false) // global leg AND per-label leg
+      .transform(Barrier.materialize) // global leg AND per-label leg
     def meanNormSq(df: DataFrame, key: Column, keyName: String): DataFrame =
       df.select(key.as(keyName), col("vec_id"),
           posexplode(col("e")).as(Seq("pos", "v")))
@@ -515,7 +516,7 @@ object EmbeddingQueries extends QueryModule {
       .select(col("vec_id"), expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0)" +
           " AS BIGINT))").as("qv"))
-      .localCheckpoint(eager = false) // Gram pass AND the count
+      .transform(Barrier.materialize) // Gram pass AND the count
     val ex = q.select(col("qv"), posexplode(col("qv")).as(Seq("i0", "qi")))
     val aggExprs = (0 until dim).map(j =>
       sum(col("qi") * element_at(col("qv"), j + 1)).cast("long").as(s"s$j"))
@@ -573,7 +574,7 @@ object EmbeddingQueries extends QueryModule {
       .select(col("vec_id"), expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0)" +
           " AS BIGINT))").as("qv"))
-      .localCheckpoint(eager = false) // sums leg AND the per-vector projection leg
+      .transform(Barrier.materialize) // sums leg AND the per-vector projection leg
     val ex = q.select(col("qv"), posexplode(col("qv")).as(Seq("i0", "qi")))
     val gramExprs = (0 until dim).map(j =>
       sum(col("qi") * element_at(col("qv"), j + 1)).cast("long").as(s"s$j"))
@@ -605,7 +606,7 @@ object EmbeddingQueries extends QueryModule {
            |    / (CAST(n_vec AS DOUBLE) * 1099511627776.0)
            |  - element_at(mu, CAST(((k - 1) div $dim) + 1 AS INT))
            |    * element_at(mu, ((k - 1) % $dim) + 1))""".stripMargin))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
       .withColumn("vf", expr(
         s"""aggregate(
            |  sequence(1, 12),
@@ -613,7 +614,7 @@ object EmbeddingQueries extends QueryModule {
            |  (v, it) -> aggregate(array(0), ${matvec("v")},
            |    (wv, z) -> transform(wv, x -> x / sqrt(aggregate(wv,
            |      CAST(0.0 AS DOUBLE), (a, y) -> a + y * y)))))""".stripMargin))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
       .withColumn("wf", expr(matvec("vf")))
       .withColumn("lam", expr(
         s"aggregate(sequence(1, $dim), CAST(0.0 AS DOUBLE)," +
@@ -689,7 +690,7 @@ object EmbeddingQueries extends QueryModule {
       .select(col("vec_id"), expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0)" +
           " AS BIGINT))").as("qv"))
-      .localCheckpoint(eager = false) // Gram pass + sum pass + count share one scan
+      .transform(Barrier.materialize) // Gram pass + sum pass + count share one scan
     val ex = q.select(col("qv"), posexplode(col("qv")).as(Seq("i", "qi")))
     val gramAggs = (0 until dim).map(j =>
       sum(col("qi") * element_at(col("qv"), j + 1)).cast("long").as(s"g$j"))
@@ -703,7 +704,7 @@ object EmbeddingQueries extends QueryModule {
     val cent = gram.join(broadcast(si), "i").join(broadcast(sj), "j")
       .select(col("i"), col("j"), col("n"),
         (d(col("g")) - d(col("si")) * d(col("sj")) / d(col("n"))).as("c"))
-      .localCheckpoint(eager = false) // one bounded 4096-cell frame, three consumers
+      .transform(Barrier.materialize) // one bounded 4096-cell frame, three consumers
     def hsic(maxI: Int, maxJ: Int): Column =
       expr(s"aggregate(sort_array(collect_list(CASE WHEN i < $maxI AND" +
         s" j < $maxJ THEN named_struct('i', i, 'j', j, 'cc', c * c)" +
@@ -764,7 +765,7 @@ object EmbeddingQueries extends QueryModule {
            |    (a, i) -> a + element_at(e, i + 1)
            |      * element_at(__r, i * $dProj + k + 1)))"""
           .stripMargin.replaceAll("\n", " ")).as("pv"))
-      .localCheckpoint(eager = false) // both edge ends read it
+      .transform(Barrier.materialize) // both edge ends read it
     val ea = assigned.select(col("vec_id").as("src"), col("e").as("esrc"))
     val eb = assigned.select(col("vec_id").as("dst"), col("e").as("edst"))
     val pa = proj.select(col("vec_id").as("src"), col("pv").as("psrc"))
@@ -776,7 +777,7 @@ object EmbeddingQueries extends QueryModule {
           " 0D, (s, v) -> s + v)").as("od2"),
         expr("aggregate(zip_with(psrc, pdst, (a, b) -> (a - b) * (a - b))," +
           " 0D, (s, v) -> s + v)").as("pd2"))
-      .localCheckpoint(eager = false) // the excluded count + the ratio folds
+      .transform(Barrier.materialize) // the excluded count + the ratio folds
     val used = ed.filter(col("od2") > 1e-12)
       .select(col("src"), col("dst"), (col("pd2") / col("od2")).as("ratio"))
     val nTot = ed.agg(count(lit(1)).cast("long").as("n_edges"))

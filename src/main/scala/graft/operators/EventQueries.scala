@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.sources.Tables
 import ColumnIdioms._
@@ -213,7 +214,7 @@ object EventQueries extends QueryModule {
     val base = byUser.crossJoin(broadcast(anchor))
       .withColumn("recency_days",
         datediff(col("now_day"), col("last_day")).cast("long"))
-      .localCheckpoint(eager = false) // three rank passes + the rollup read it
+      .transform(Barrier.materialize) // three rank passes + the rollup read it
     val n = base.count()
     def quartile(rankCol: String): Column =
       expr(s"CAST((4 * ($rankCol - 1)) div $n AS BIGINT) + 1")
@@ -260,7 +261,7 @@ object EventQueries extends QueryModule {
       .withColumn("last_touch",
         coalesce(last(touch, ignoreNulls = true).over(w), lit("none")))
       .filter(col("event_type") === "purchase")
-      .localCheckpoint(eager = false) // consumed by both channel aggregates
+      .transform(Barrier.materialize) // consumed by both channel aggregates
     val byFirst = p.groupBy(col("first_touch").as("channel"))
       .agg(count(lit(1)).as("n_first"),
         sum(dec(col("value"))).as("fv"))
@@ -301,7 +302,7 @@ object EventQueries extends QueryModule {
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("cur"), col("nxt"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // consumed by states, row totals, cells, marginals
+      .transform(Barrier.materialize) // consumed by states, row totals, cells, marginals
   }
 
   /** One-row (states, s_n, pm) row-stochastic matrix frame off the
@@ -395,11 +396,11 @@ object EventQueries extends QueryModule {
   // days; each factor is one division of exact longs.
   // ---------------------------------------------------------------
   val evSurvivalKm: Q = (s, dir) => {
-    val ev = Tables.table(s, dir, "events").localCheckpoint(eager = false)
+    val ev = Tables.table(s, dir, "events").transform(Barrier.materialize)
     val hz = ev.agg(max(col("ts")).as("hzts"))
     val su = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts")).as("s0"))
-      .localCheckpoint(eager = false) // consumed by the purchase filter + durations
+      .transform(Barrier.materialize) // consumed by the purchase filter + durations
     val p0 = ev.filter(col("event_type") === "purchase")
       .join(su, "user_id").filter(col("ts") >= col("s0"))
       .groupBy(col("user_id")).agg(min(col("ts")).as("p0"))
@@ -409,7 +410,7 @@ object EventQueries extends QueryModule {
         when(col("p0").isNotNull, 1L).otherwise(0L).as("ev"),
         expr("(unix_micros(coalesce(p0, hzts)) - unix_micros(s0))" +
           " div 86400000000").as("t_days"))
-      .localCheckpoint(eager = false) // consumed by the N count + the time table
+      .transform(Barrier.materialize) // consumed by the N count + the time table
     val n = durs.agg(count(lit(1)).as("n_users"))
     val byT = durs.groupBy(col("t_days"))
       .agg(sum(col("ev")).cast("long").as("dd"), count(lit(1)).as("cc"))
@@ -499,11 +500,11 @@ object EventQueries extends QueryModule {
   // cohorts×offsets cells.
   // ---------------------------------------------------------------
   val evLtvCohort: Q = (s, dir) => {
-    val ev = Tables.table(s, dir, "events").localCheckpoint(eager = false)
+    val ev = Tables.table(s, dir, "events").transform(Barrier.materialize)
     val su = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts")).as("s0"))
       .withColumn("cohort", date_trunc("week", col("s0")).cast("date"))
-      .localCheckpoint(eager = false) // consumed by sizes and the purchase join
+      .transform(Barrier.materialize) // consumed by sizes and the purchase join
     val sizes = su.groupBy(col("cohort")).agg(count(lit(1)).as("n_users"))
     val buckets = ev.filter(col("event_type") === "purchase")
       .join(su, "user_id").filter(col("ts") >= col("s0"))
@@ -711,9 +712,9 @@ object EventQueries extends QueryModule {
         Seq("i"))
       .select(col("i"), col("j"), col("nij"), col("ni"),
         (d(col("nij")) / d(col("ni"))).as("p"))
-      .localCheckpoint(eager = false) // reused by all 20 sweeps + the output stats
+      .transform(Barrier.materialize) // reused by all 20 sweeps + the output stats
     val states = trans.select(col("i").as("st")).distinct()
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     // the chain is |event_types|²-bounded at ANY corpus scale (the
     // event stream already reduced through the pair-count aggregate),
     // so the 20 value-iteration sweeps run DRIVER-SIDE over the
@@ -806,12 +807,12 @@ object EventQueries extends QueryModule {
   // calendar aggregates.
   // ---------------------------------------------------------------
   val evGrowthAccounting: Q = (s, dir) => {
-    val act = activity(s, dir).localCheckpoint(eager = false) // window scan + max-day
+    val act = activity(s, dir).transform(Barrier.materialize) // window scan + max-day
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val cls = act
       .withColumn("prev", lag(col("day"), 1).over(w))
       .withColumn("nxt", lead(col("day"), 1).over(w))
-      .localCheckpoint(eager = false) // consumed by the day rollup AND the churn leg
+      .transform(Barrier.materialize) // consumed by the day rollup AND the churn leg
     val daily = cls.groupBy(col("day"))
       .agg(sum(when(col("prev").isNull, 1L).otherwise(0L))
           .cast("long").as("n_new"),
@@ -843,7 +844,7 @@ object EventQueries extends QueryModule {
   // dedup; the ratio is exact ints through two fixed divisions.
   // ---------------------------------------------------------------
   val evStickiness: Q = (s, dir) => {
-    val act = activity(s, dir).localCheckpoint(eager = false) // DAU leg + WAU leg
+    val act = activity(s, dir).transform(Barrier.materialize) // DAU leg + WAU leg
     val dau = act.groupBy(col("day")).agg(count(lit(1)).cast("long").as("dau"))
       .withColumn("week", date_trunc("week", col("day")).cast("date"))
       .groupBy(col("week"))
@@ -919,7 +920,7 @@ object EventQueries extends QueryModule {
       .filter(col("prev").isNotNull)
       .groupBy(col("prev"), col("event_type"))
       .agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint(eager = false) // row margins, totals, both entropy folds
+      .transform(Barrier.materialize) // row margins, totals, both entropy folds
     val rowm = pairs.groupBy(col("prev")).agg(sum(col("c")).cast("long").as("ci"))
     val colm = pairs.groupBy(col("event_type"))
       .agg(sum(col("c")).cast("long").as("cj"))
@@ -1025,7 +1026,7 @@ object EventQueries extends QueryModule {
   val evRetentionDecay: Q = (s, dir) => {
     val act = Tables.table(s, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      .localCheckpoint(eager = false) // anchor side, return side, max-day
+      .transform(Barrier.materialize) // anchor side, return side, max-day
     val maxd = act.agg(max(col("day")).as("maxd"))
     val anchors = act.crossJoin(broadcast(maxd))
       .select(col("user_id"), col("day"),
@@ -1041,7 +1042,7 @@ object EventQueries extends QueryModule {
       .agg(count(lit(1)).cast("long").as("n_base"),
         sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_returned"))
       .withColumn("p", d(col("n_returned")) / d(col("n_base")))
-      .localCheckpoint(eager = false) // regression AND the output rows
+      .transform(Barrier.materialize) // regression AND the output rows
     def fold(v: String): Column =
       expr(s"aggregate(sort_array(collect_list(struct(k, $v))), 0D," +
         s" (a, q) -> a + q.$v)")
@@ -1091,7 +1092,7 @@ object EventQueries extends QueryModule {
       .agg(count(lit(1)).cast("long").as("n_events"),
         countDistinct(col("day")).cast("long").as("active_days"))
       .withColumn("epd", d(col("n_events")) / d(col("active_days")))
-      .localCheckpoint(eager = false) // rank pass + the flag join share it
+      .transform(Barrier.materialize) // rank pass + the flag join share it
     val burst = ev.groupBy(col("user_id"), col("mi"))
       .agg(count(lit(1)).cast("long").as("c"))
       .groupBy(col("user_id"))
@@ -1142,7 +1143,7 @@ object EventQueries extends QueryModule {
   val evDauMau: Q = (s, dir) => {
     val userDays = Tables.table(s, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      .localCheckpoint(eager = false) // DAU side and the MAU fan-out share it
+      .transform(Barrier.materialize) // DAU side and the MAU fan-out share it
     val maxd = userDays.agg(max(col("day")).as("maxd"))
     val dau = userDays.groupBy(col("day"))
       .agg(countDistinct(col("user_id")).cast("long").as("dau"))
@@ -1176,7 +1177,7 @@ object EventQueries extends QueryModule {
   val evHillTail: Q = (s, dir) => {
     val per = Tables.table(s, dir, "events")
       .groupBy(col("user_id")).agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint(eager = false) // rank pass + the k scalar share it
+      .transform(Barrier.materialize) // rank pass + the k scalar share it
     val kf = per.agg(count(lit(1)).as("nu"))
       .select(least(lit(50L), greatest(lit(2L), expr("nu div 4")))
         .cast("long").as("kk"))
@@ -1252,11 +1253,11 @@ object EventQueries extends QueryModule {
   // the gold-frame class); the O−E and V folds run t-ascending.
   // ---------------------------------------------------------------
   val evLogrank: Q = (s, dir) => {
-    val ev = Tables.table(s, dir, "events").localCheckpoint(eager = false)
+    val ev = Tables.table(s, dir, "events").transform(Barrier.materialize)
     val hz = ev.agg(max(col("ts")).as("hzts"))
     val su = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts")).as("s0"))
-      .localCheckpoint(eager = false) // purchase filter + durations
+      .transform(Barrier.materialize) // purchase filter + durations
     val p0 = ev.filter(col("event_type") === "purchase")
       .join(su, "user_id").filter(col("ts") >= col("s0"))
       .groupBy(col("user_id")).agg(min(col("ts")).as("p0"))
@@ -1268,7 +1269,7 @@ object EventQueries extends QueryModule {
         when(col("p0").isNotNull, 1L).otherwise(0L).as("ev"),
         expr("(unix_micros(coalesce(p0, hzts)) - unix_micros(s0))" +
           " div 86400000000").as("t_days"))
-      .localCheckpoint(eager = false) // totals + the time table
+      .transform(Barrier.materialize) // totals + the time table
     val tots = durs.groupBy(col("g")).agg(count(lit(1)).cast("long").as("tot"))
     val byTG = durs.groupBy(col("t_days"), col("g"))
       .agg(sum(col("ev")).cast("long").as("dd"),

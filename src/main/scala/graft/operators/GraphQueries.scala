@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
@@ -19,18 +20,10 @@ object GraphQueries extends QueryModule {
   // ---------------------------------------------------------------
   // g_components — connected components over the embedding-cosine
   // similarity graph (the clustering step behind every near-dup
-  // "keep one per group" policy). Hybrid, same policy as
-  // Dedup.dupGroups: similarity graphs are orders of magnitude
-  // smaller than the corpus (only vectors WITH a near neighbor
-  // appear), so up to ~5M edges a driver union-find wins — one
-  // collect in, no per-iteration jobs; beyond that the distributed
-  // min-label propagation below takes over. Both paths emit
-  // identical components (DifferentialSpec + a direct equality spec
-  // pin this). The distributed path: each round every node takes
-  // the min label among itself and its neighbors + one pointer
-  // jump (path halving), so convergence is O(log diameter) rounds,
-  // each one join + one min-aggregate — all distributed; the driver
-  // only checks the converged-yet counter. Oracle: DuckDB
+  // "keep one per group" policy), labelled by the same hybrid
+  // kernel as Dedup.dupGroups (Dedup.componentLabels: driver
+  // union-find up to its edge threshold, distributed min-label
+  // propagation with pointer jumping beyond it). Oracle: DuckDB
   // recursive-CTE reachability (exact, iteration-free).
   // ---------------------------------------------------------------
   val gComponents: Q = (s, dir) =>
@@ -38,93 +31,11 @@ object GraphQueries extends QueryModule {
       .cosineNearDupPairs(s, dir, 0.3).select(col("v1"), col("v2")))
 
   private[graft] def gComponentsImpl(pairs: DataFrame,
-      localEdgeThreshold: Long = 5000000L): DataFrame = {
-    val undirected = pairs.localCheckpoint(eager = false)
-    if (undirected.count() <= localEdgeThreshold)
-      return gComponentsLocal(undirected)
-    val edges = undirected
-      .union(undirected.select(col("v2").as("v1"), col("v1").as("v2")))
-      .toDF("a", "b").cache()
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("rep", col("id")).localCheckpoint(eager = false)
-    var changed = 1L
-    while (changed > 0) {
-      val viaNbr = edges.join(labels.withColumnRenamed("id", "nid"),
-          col("b") === col("nid"))
-        .select(col("a").as("id"), col("rep"))
-      // eager localCheckpoint, not cache: every iterative-DataFrame
-      // loop grows its logical plan each round, and Catalyst
-      // re-plans (and can re-execute, racing the lazy cache through
-      // the self-join below) the whole nested lineage per action —
-      // cost compounds per round. Checkpointing truncates the plan
-      // to the materialized result, making every round O(1) work.
-      // (nbrMin itself stays lazy: both sides of the halving
-      // self-join recompute it from checkpointed inputs — two
-      // shallow stages, cheaper than a third eager materialization
-      // per round)
-      val nbrMin = labels.select(col("id"), col("rep")).union(viaNbr)
-        .groupBy(col("id")).agg(min(col("rep")).as("rep"))
-      // pointer jumping (path halving): follow the representative one
-      // hop — rep ← rep(rep) — so label distance halves each round
-      // and convergence is O(log diameter), not O(diameter). One jump
-      // per round measures fastest: more jumps shave rounds but
-      // re-execute the (lazy) nbrMin per self-join side and lose
-      // more than they save. Without any jump, a chain-shaped
-      // near-dup cluster costs one distributed round per hop.
-      // eager checkpoint, then a cheap count on the materialized
-      // result — measured FASTER than folding both into one lazy-
-      // checkpoint action (6.1-6.8 s vs 7.5-8.8 s at sf0.1): the
-      // combined job re-plans the deep lineage where the eager
-      // materialization keeps each job shallow
-      val next = nbrMin.alias("x")
-        .join(nbrMin.select(col("id").as("rid"), col("rep").as("rrep")).alias("y"),
-          col("x.rep") === col("rid"), "left")
-        .select(col("x.id").as("id"),
-          least(col("x.rep"), coalesce(col("rrep"), col("x.rep"))).as("rep"))
-        .localCheckpoint(eager = false)
-      changed = next.join(labels.withColumnRenamed("rep", "old"), "id")
-        .filter(col("rep") < col("old")).count()
-      labels = next
-    }
-    val out = labels.groupBy(col("rep").as("component"))
-      .agg(count(lit(1)).as("n_members"), max(col("id")).as("max_member"))
-      .orderBy(col("component"))
-    edges.unpersist()
-    out
-  }
-
-  /** Driver-side union-find (path compression + union by min) for
-    * similarity graphs under the hybrid threshold — min-id
-    * representative, so components match the propagation path
-    * exactly. Mirrors Dedup.dupGroupsLocal with this query's
-    * (component, n_members, max_member) output. */
-  private def gComponentsLocal(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val es = pairs.as[(Long, Long)].collect()
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-      var c = x // path compression
-      while (parent.getOrDefault(c, c) != c) {
-        val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-      }
-      r
-    }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // min id becomes the canonical representative
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
-    }
-    val members = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
-      .map((id: Long) => (find(id), id))
-    members.toDF("rep", "id")
+      localEdgeThreshold: Long = Dedup.MaxLocalEdges): DataFrame =
+    Dedup.componentLabels(pairs, localEdgeThreshold)
       .groupBy(col("rep").as("component"))
       .agg(count(lit(1)).as("n_members"), max(col("id")).as("max_member"))
       .orderBy(col("component"))
-  }
 
   // ---------------------------------------------------------------
   // g_label_prop — synchronous label propagation (Raghavan et al.
@@ -138,9 +49,8 @@ object GraphQueries extends QueryModule {
   // tiebreaks): no float policy needed, and the fixed iteration
   // count makes the unrolled DuckDB replay exact. Scale shape per
   // iteration: one edge⋈label join + a two-phase max(struct) argmax
-  // (never a window over the edge list); the label frame
-  // localCheckpoints per iteration — the iterative-loop lineage
-  // discipline (see gComponentsImpl).
+  // (never a window over the edge list); the label frame goes
+  // through a barrier per iteration to cut the loop's lineage.
   // ---------------------------------------------------------------
   private val lpIters = 4
 
@@ -149,9 +59,9 @@ object GraphQueries extends QueryModule {
       .cosineNearDupPairs(s, dir, 0.3).select(col("v1"), col("v2"))
     val edges = pairs
       .union(pairs.select(col("v2").as("v1"), col("v1").as("v2")))
-      .toDF("a", "b").localCheckpoint(eager = false)
+      .toDF("a", "b").transform(Barrier.materialize)
     var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("lab", col("id")).localCheckpoint(eager = false)
+      .withColumn("lab", col("id")).transform(Barrier.materialize)
     for (_ <- 1 to lpIters) {
       labels = edges
         .join(labels.select(col("id").as("b"), col("lab")), "b")
@@ -161,7 +71,7 @@ object GraphQueries extends QueryModule {
         .groupBy(col("a"))
         .agg(max(struct(col("c").as("c"), (-col("lab")).as("neg"))).as("m"))
         .select(col("a").as("id"), (-col("m.neg")).cast("long").as("lab"))
-        .localCheckpoint(eager = false)
+        .transform(Barrier.materialize)
     }
     labels.groupBy(col("lab").as("community"))
       .agg(count(lit(1)).as("n_members"), max(col("id")).as("max_member"))
@@ -188,11 +98,10 @@ object GraphQueries extends QueryModule {
     val base = docs(s, dir).select(col("doc_id"), TF.tokens(col("text")).as("toks"))
     val uni = base.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-    // localCheckpoint: reused as both broadcast filters and the rank
-    // vector's base each iteration; self-cleaning (vs a cache() entry
-    // held by CacheManager for the session)
+    // reused as both broadcast filters and the rank vector's base
+    // each iteration
     val top = uni.orderBy(desc("c"), col("w")).limit(prNodes)
-      .select(col("w").as("term")).localCheckpoint(eager = false)
+      .select(col("w").as("term")).transform(Barrier.materialize)
     val bi = base.filter(size(col("toks")) >= 2)
       .select(explode(expr("transform(sequence(1, size(toks) - 1), " +
         "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))")).as("b"))
@@ -204,7 +113,7 @@ object GraphQueries extends QueryModule {
     val ew = bi.join(
         bi.groupBy(col("src")).agg(sum(col("w")).cast("long").as("outw")),
         Seq("src"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     var r = top.select(col("term"), (lit(1.0) / lit(prNodes.toDouble)).as("pr"))
     for (_ <- 1 to prIters) {
       val folded = ew.join(r, ew("src") === r("term"))
@@ -227,13 +136,13 @@ object GraphQueries extends QueryModule {
   // the similarity graph: canonical (v1 < v2) edges joined three
   // ways, so each triangle counts exactly once; wedges come from
   // exact undirected degrees. The pair list is tiny after
-  // thresholding (it's cached for its three join roles), so the
+  // thresholding (one barrier serves its three join roles), so the
   // triangle join is bounded by the similarity graph, not the
   // corpus. Coefficient = 3·triangles / wedges, one double ratio.
   // ---------------------------------------------------------------
   val gTriangles: Q = (s, dir) => {
     val p = graft.functions.Similarity.cosineNearDupPairs(s, dir, 0.3)
-      .select(col("v1").as("a"), col("v2").as("b")).localCheckpoint(eager = false)
+      .select(col("v1").as("a"), col("v2").as("b")).transform(Barrier.materialize)
     val tri = p.alias("ab")
       .join(p.alias("bc"), col("ab.b") === col("bc.a"))
       .join(p.alias("ac"),
@@ -305,7 +214,7 @@ object GraphQueries extends QueryModule {
 
   val gAdamicAdar: Q = (s, dir) => {
     val und = knnUndirected(s, dir)
-      .localCheckpoint(eager = false) // consumed by deg, both hop sides, anti join
+      .transform(Barrier.materialize) // consumed by deg, both hop sides, anti join
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val a = und.alias("a"); val b = und.alias("b")
     val hops = a.join(b, col("a.dst") === col("b.src") &&
@@ -333,7 +242,7 @@ object GraphQueries extends QueryModule {
   // near-dup graph before community detection. Spark runs the peel
   // as a driver-bounded loop (≤ 8 rounds, early-exit at fixpoint —
   // the sim_kmeans_converged convention) of degree-count + two
-  // left-semi joins, localCheckpointing per round to bound lineage;
+  // left-semi joins, with a barrier per round to bound lineage;
   // the oracle unrolls the SAME 8 rounds as chained CTEs, and
   // fixpoint makes early-exit ≡ full-unroll. Scale shape: each round
   // is one count aggregate + hash semi-joins on the edge set (out-
@@ -341,20 +250,20 @@ object GraphQueries extends QueryModule {
   // ---------------------------------------------------------------
   val gKcore: Q = (s, dir) => {
     val kMin = 3; val maxRounds = 8
-    var edges = knnUndirected(s, dir).localCheckpoint(eager = false)
+    var edges = knnUndirected(s, dir).transform(Barrier.materialize)
     var nNodes = edges.select(col("src")).distinct().count()
     var r = 0; var done = false
     while (!done && r < maxRounds) {
       val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= kMin).select(col("src").as("node"))
-        .localCheckpoint(eager = false) // consumed by both semi-join sides + count
+        .transform(Barrier.materialize) // consumed by both semi-join sides + count
       val k = keep.count()
       if (k == nNodes) done = true
       else {
         edges = edges
           .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
           .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint(eager = false)
+          .transform(Barrier.materialize)
         nNodes = k
       }
       r += 1
@@ -388,7 +297,7 @@ object GraphQueries extends QueryModule {
   // ---------------------------------------------------------------
   val gLocalClustering: Q = (s, dir) => {
     val und = knnUndirected(s, dir)
-      .localCheckpoint(eager = false) // consumed by wedges (twice), closure, degrees
+      .transform(Barrier.materialize) // consumed by wedges (twice), closure, degrees
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val tri = und.alias("x")
       .join(und.alias("y"), col("x.src") === col("y.src") &&
@@ -421,7 +330,7 @@ object GraphQueries extends QueryModule {
   // driver-bounded loop (≤ 8 rounds, early-exit on an empty
   // frontier — the g_kcore convention): each round is one hash join
   // edges⋈frontier + distinct + one anti join against the visited
-  // set, localCheckpointed to bound lineage. The oracle unrolls the
+  // set, behind a barrier to bound lineage. The oracle unrolls the
   // SAME 8 rounds as chained CTEs; early-exit ≡ full unroll because
   // an empty frontier stays empty. Scale shape: frontier work is
   // |edges ⋈ frontier|, never pairwise; the visited set only grows
@@ -430,9 +339,9 @@ object GraphQueries extends QueryModule {
   // ---------------------------------------------------------------
   val gBfsLayers: Q = (s, dir) => {
     val maxHops = 8
-    val edges = knnUndirected(s, dir).localCheckpoint(eager = false)
+    val edges = knnUndirected(s, dir).transform(Barrier.materialize)
     val seed = edges.agg(min(col("src")).as("node"))
-    var frontier = seed.select(col("node")).localCheckpoint(eager = false)
+    var frontier = seed.select(col("node")).transform(Barrier.materialize)
     var visited = frontier
     val layers = scala.collection.mutable.ArrayBuffer[DataFrame](
       frontier.select(lit(0).cast("long").as("layer"), col("node")))
@@ -442,14 +351,14 @@ object GraphQueries extends QueryModule {
         .join(frontier.select(col("node").as("src")), Seq("src"))
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint(eager = false) // consumed by census, union, next round
+        .transform(Barrier.materialize) // consumed by census, union, next round
       if (next.isEmpty) done = true
       else {
         layers += next.select(lit(hop).cast("long").as("layer"), col("node"))
-        // lazy union, no checkpoint: every member frame is already
-        // materialized (seed + per-hop checkpoints), so re-writing
-        // the ever-growing visited set each hop was a pure extra job
-        // per hop; the anti-join just scans ≤maxHops cached parts
+        // lazy union, no barrier: every member frame is already
+        // materialized (seed + per-hop barriers), so re-writing the
+        // ever-growing visited set each hop was a pure extra job per
+        // hop; the anti-join just scans ≤maxHops stored parts
         visited = visited.union(next)
         frontier = next
       }
@@ -506,7 +415,7 @@ object GraphQueries extends QueryModule {
     val uni = base.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val top = uni.orderBy(desc("c"), col("w")).limit(hitsNodes)
-      .select(col("w").as("term")).localCheckpoint(eager = false)
+      .select(col("w").as("term")).transform(Barrier.materialize)
     val edges = base.filter(size(col("toks")) >= 2)
       .select(explode(expr("transform(sequence(1, size(toks) - 1), " +
         "i -> struct(element_at(toks, i) AS w1," +
@@ -516,7 +425,7 @@ object GraphQueries extends QueryModule {
       .join(broadcast(top.select(col("term").as("src"))), Seq("src"))
       .join(broadcast(top.select(col("term").as("dst"))), Seq("dst"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      .localCheckpoint(eager = false) // reused by all 8 half-steps
+      .transform(Barrier.materialize) // reused by all 8 half-steps
     // the graph is top-40²-bounded at ANY corpus scale, so the 4 HITS
     // iterations run DRIVER-SIDE over the collected edge list instead
     // of 8 checkpointed half-step jobs (each was a join + grouped
@@ -613,7 +522,7 @@ object GraphQueries extends QueryModule {
     // symmetrize: an undirected edge contributes both ordered pairs
     val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint(eager = false) // consumed by the degree count AND the pair join
+      .transform(Barrier.materialize) // consumed by the degree count AND the pair join
     val deg = und.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("long").as("deg"))
     val pairs = und
@@ -662,7 +571,7 @@ object GraphQueries extends QueryModule {
     val labeled = und
       .join(lab.select(col("vec_id").as("src"), col("label").as("ls")), Seq("src"))
       .join(lab.select(col("vec_id").as("dst"), col("label").as("ld")), Seq("dst"))
-      .localCheckpoint(eager = false) // total AND the per-label rollup
+      .transform(Barrier.materialize) // total AND the per-label rollup
     val tot = labeled.agg(count(lit(1)).cast("long").as("p"))
     labeled.groupBy(col("ls").as("label"))
       .agg(count(lit(1)).cast("long").as("d_c"),
@@ -703,10 +612,10 @@ object GraphQueries extends QueryModule {
       .select(col("src"), col("dst"))
     val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint(eager = false) // degrees AND the rich-edge count
+      .transform(Barrier.materialize) // degrees AND the rich-edge count
     val deg = und.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("long").as("deg"))
-      .localCheckpoint(eager = false) // node counts per k AND both edge-side joins
+      .transform(Barrier.materialize) // node counts per k AND both edge-side joins
     val ks = RichKs.map(lit)
     val rich = deg.select(col("id"), col("deg"),
         explode(array(ks: _*)).as("k"))
@@ -760,7 +669,7 @@ object GraphQueries extends QueryModule {
   // ---------------------------------------------------------------
   val gJaccardLinks: Q = (s, dir) => {
     val und = knnUndirected(s, dir)
-      .localCheckpoint(eager = false) // deg, both hop sides, anti join
+      .transform(Barrier.materialize) // deg, both hop sides, anti join
     val deg = und.groupBy(col("src").as("node")).agg(
       count(lit(1)).cast("long").as("deg"))
     val a = und.alias("a"); val b = und.alias("b")
@@ -808,18 +717,18 @@ object GraphQueries extends QueryModule {
   // ---------------------------------------------------------------
   // g_harmonic_centrality — 4 roots (smallest md5(node)), one
   // multi-root BFS: frames carry (root, node), each round is one
-  // hash join + distinct + per-root anti join, localCheckpointed
+  // hash join + distinct + per-root anti join behind a barrier
   // (the g_bfs_layers loop with a root column). Harmonic = Σ_l
   // n_l/l folded layer-ascending (≤ 8 exact-count terms);
   // eccentricity = max layer reached under the cap.
   // ---------------------------------------------------------------
   val gHarmonicCentrality: Q = (s, dir) => {
     val maxHops = 8
-    val edges = knnUndirected(s, dir).localCheckpoint(eager = false)
+    val edges = knnUndirected(s, dir).transform(Barrier.materialize)
     val roots = edges.select(col("src").as("node")).distinct()
       .orderBy(md5(col("node").cast("string")), col("node")).limit(4)
       .select(col("node").as("root"), col("node"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     var frontier = roots
     var visited = roots
     val layers = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -829,13 +738,13 @@ object GraphQueries extends QueryModule {
         .join(frontier.select(col("root"), col("node").as("src")), Seq("src"))
         .select(col("root"), col("dst").as("node")).distinct()
         .join(visited, Seq("root", "node"), "left_anti")
-        .localCheckpoint(eager = false)
+        .transform(Barrier.materialize)
       if (next.isEmpty) done = true
       else {
         layers += next.select(col("root"),
           lit(hop).cast("long").as("layer"), col("node"))
-        // lazy union, no checkpoint: member frames are already
-        // materialized (roots + per-hop checkpoints) — re-writing the
+        // lazy union, no barrier: member frames are already
+        // materialized (roots + per-hop barriers) — re-writing the
         // growing visited set each hop was a pure extra job per hop
         visited = visited.union(next)
         frontier = next
@@ -916,11 +825,11 @@ object GraphQueries extends QueryModule {
   // ---------------------------------------------------------------
   val gBetweennessSampled: Q = (s, dir) => {
     val maxHops = 8
-    val edges = knnUndirected(s, dir).localCheckpoint(eager = false)
+    val edges = knnUndirected(s, dir).transform(Barrier.materialize)
     val roots = edges.select(col("src").as("node")).distinct()
       .orderBy(md5(col("node").cast("string")), col("node")).limit(4)
       .select(col("node").as("root"), col("node"), lit(1L).as("sigma"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     var frontier = roots
     var visited = roots.select(col("root"), col("node"))
     val layers = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -932,12 +841,12 @@ object GraphQueries extends QueryModule {
         .groupBy(col("root"), col("dst").as("node"))
         .agg(sum(col("sigma")).cast("long").as("sigma"))
         .join(visited, Seq("root", "node"), "left_anti")
-        .localCheckpoint(eager = false)
+        .transform(Barrier.materialize)
       if (next.isEmpty) done = true
       else {
         layers += next
-        // lazy union, no checkpoint: member frames are already
-        // materialized (roots + per-hop checkpoints) — re-writing the
+        // lazy union, no barrier: member frames are already
+        // materialized (roots + per-hop barriers) — re-writing the
         // growing visited set each hop was a pure extra job per hop
         visited = visited.union(next.select(col("root"), col("node")))
         frontier = next
@@ -960,7 +869,7 @@ object GraphQueries extends QueryModule {
       dq = layers(i).join(terms, Seq("root", "node"), "left")
         .select(col("root"), col("node"), col("sigma"),
           coalesce(col("dq"), lit(0L)).as("dq"))
-        .localCheckpoint(eager = false)
+        .transform(Barrier.materialize)
       acc = acc.union(dq.select(col("root"), col("node"), col("dq")))
     }
     acc.groupBy(col("node"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.multimodal.Multimodal
 import graft.sources.Tables
@@ -142,7 +143,7 @@ object MultimodalQueries extends QueryModule {
       .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         min(col("doc_id")).as("gkey"))
-      .localCheckpoint(eager = false) // both band-join sides + member expansion
+      .transform(Barrier.materialize) // both band-join sides + member expansion
     val banded = base.select(col("gkey"), col("b0"), col("b1"), col("b2"),
       col("b3"), posexplode(array(col("b0"), col("b1"), col("b2"),
         col("b3"))).as(Seq("band", "key")))

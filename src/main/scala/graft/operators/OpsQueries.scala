@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
@@ -234,7 +235,7 @@ object OpsQueries extends QueryModule {
     val rows = Tables.table(s, dir, "lineitem")
       .select(col("l_extendedprice").cast("decimal(18,2)").as("v"),
         col("l_orderkey"), col("l_linenumber"))
-      .localCheckpoint(eager = false) // consumed by the count + the rank pass
+      .transform(Barrier.materialize) // consumed by the count + the rank pass
     val n = rows.count()
     Ranking
       .withGlobalRank(rows, "rk", col("v"), col("l_orderkey"),
@@ -265,12 +266,12 @@ object OpsQueries extends QueryModule {
     val budget = 1000L
     val cells = docs(s, dir).groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // totals + rank pass
+      .transform(Barrier.materialize) // totals + rank pass
     val tot = cells.agg(sum(col("c"))).head().getLong(0)
     val base = cells
       .withColumn("fl", expr(s"CAST((c * $budget) div $tot AS BIGINT)"))
       .withColumn("rem", expr(s"CAST((c * $budget) % $tot AS BIGINT)"))
-      .localCheckpoint(eager = false) // floor total + rank pass
+      .transform(Barrier.materialize) // floor total + rank pass
     val leftover = budget - base.agg(sum(col("fl"))).head().getLong(0)
     Ranking
       .withGlobalRank(base, "rk", -col("rem"), col("lang"), col("source"))
@@ -361,7 +362,7 @@ object OpsQueries extends QueryModule {
     val rows = Tables.table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice").cast("decimal(18,2)").as("price"))
-      .localCheckpoint(eager = false) // count + both layout rank passes
+      .transform(Barrier.materialize) // count + both layout rank passes
     val n = rows.count()
     val lo = lit("40000.00").cast("decimal(18,2)")
     val hi = lit("50000.00").cast("decimal(18,2)")
@@ -459,7 +460,7 @@ object OpsQueries extends QueryModule {
       .select(col("o_orderkey"), col("o_orderpriority"),
         md5(col("o_orderkey").cast("string")).as("h"))
     val ranked = Ranking.withGlobalRank(pop, "rk", col("h"), col("o_orderkey"))
-      .localCheckpoint(eager = false) // count + sample both read the ranked frame
+      .transform(Barrier.materialize) // count + sample both read the ranked frame
     val n = ranked.count()
     val k = math.max(1L, n / 256L)
     val sample = ranked.filter((col("rk") - 1) % k === 0)
@@ -552,7 +553,7 @@ object OpsQueries extends QueryModule {
       .filter(col("negbest") < col("prevmin"))
       .select(col("price_c").as("f_price_c"),
         col("best_size").as("f_best_size"))
-      .localCheckpoint(eager = false) // tiny; also severs the self-join lineage
+      .transform(Barrier.materialize) // tiny; also severs the self-join lineage
     p.join(broadcast(frontier),
         col("price_c") === col("f_price_c") &&
           col("p_size") === col("f_best_size"))
@@ -595,7 +596,7 @@ object OpsQueries extends QueryModule {
       .select(col("o_orderkey") +: AdvisorCols.map(col): _*)
       .repartitionByRange(nPart, col("o_orderkey"))
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eager = false) // carries AND the local-lag pass share one assignment
+      .transform(Barrier.materialize) // carries AND the local-lag pass share one assignment
     val w = Window.partitionBy(col("__pid")).orderBy(col("o_orderkey"))
     val lagged = AdvisorCols.foldLeft(parts) { (df, c) =>
       df.withColumn(s"chg_$c",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Two-phase distributed global ranking / cumulative sums.
   *
   * `row_number().over(Window.orderBy(...))` and global running sums
@@ -23,12 +25,10 @@ import org.apache.spark.sql.functions._
   *      the within-partition rank/running sum — P parallel sorted
   *      reducers, each over ~1/P of the data, never one global task.
   *
-  * The range-partitioned frame is localCheckpoint'ed before use:
-  * RangePartitioner samples its bounds per job, so without freezing,
-  * the carry job and the rank job could see DIFFERENT partition
-  * assignments and the offsets would be garbage. The checkpoint also
-  * truncates lineage and its blocks are freed by ContextCleaner once
-  * the query is dropped.
+  * The range-partitioned frame goes through [[graft.Barrier]] before
+  * use: RangePartitioner samples its bounds per job, so without
+  * freezing, the carry job and the rank job could see DIFFERENT
+  * partition assignments and the offsets would be garbage.
   *
   * Determinism: ranks are exact for ANY partition bounds as long as
   * both phases see the same assignment (guaranteed by the freeze) and
@@ -40,7 +40,7 @@ object Ranking {
     val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     df.repartitionByRange(nPart, sortCols: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
   }
 
   /** pid → exclusive-prefix offset, as a literal map expression

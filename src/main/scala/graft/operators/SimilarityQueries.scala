@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
@@ -120,16 +121,12 @@ object SimilarityQueries extends QueryModule {
     // The materialization barrier is load-bearing: without it
     // CollapseProject inlines the (interpreted, higher-order)
     // normalize transform into every use site — 16× per row in
-    // assignment, 2× per candidate pair. localCheckpoint, not
-    // cache(): same barrier, but self-cleaning (ContextCleaner frees
-    // the blocks when the query is dropped; cache() entries live in
-    // CacheManager for the session and tax every later action's
-    // plan-substitution scan)
+    // assignment, 2× per candidate pair.
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e0"))
       .withColumn("nrm", sqrt(Similarity.dot(col("e0"), col("e0"))))
       .select(col("vec_id"), transform(col("e0"), x => x / col("nrm")).as("e"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val cents = emb
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(nCells)
       .select(col("vec_id").as("cid"), col("e").as("ce"))
@@ -171,8 +168,8 @@ object SimilarityQueries extends QueryModule {
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e0"))
       .withColumn("nrm", sqrt(Similarity.dot(col("e0"), col("e0"))))
       .select(col("vec_id"), transform(col("e0"), x => x / col("nrm")).as("e"))
-      // normalize-once barrier, self-cleaning (see simSemDedup note)
-      .localCheckpoint(eager = false)
+      // normalize-once barrier (see simSemDedup note)
+      .transform(Barrier.materialize)
     val cents = emb
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(nCells)
       .select(col("vec_id").as("cid"), col("e").as("ce"))
@@ -182,14 +179,14 @@ object SimilarityQueries extends QueryModule {
       .topCellsByScore(emb, Similarity.collectCodebook(cents),
         1, "__csim", Similarity.dot)
       .select(col("vec_id"), col("e"), col("cell"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val a = assigned.alias("a"); val b = assigned.alias("b")
     // Top-k via a typed Aggregator, not a window: the pair join emits
     // ~n²/cells scored rows, and the map-side partial trims each
     // group to k before the shuffle — the window form would shuffle
     // and sort every pair. Edges are tiny after the trim and feed
     // three consumers (degree count + both sides of the mutual
-    // self-join), so cache them.
+    // self-join), so materialize them once.
     val topk = udaf(new graft.functions.TopKAgg(kNn))
     val edges = a.join(b, col("a.cell") === col("b.cell") &&
         col("a.vec_id") =!= col("b.vec_id"))
@@ -200,7 +197,7 @@ object SimilarityQueries extends QueryModule {
       .agg(first(col("cell")).as("cell"), topk(col("cos"), col("dst")).as("nn"))
       .select(col("cell"), col("src"), explode(col("nn")).as("n"))
       .select(col("cell"), col("src"), col("n._2").as("dst"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     (edges, assigned)
   }
 
@@ -276,7 +273,7 @@ object SimilarityQueries extends QueryModule {
   // SQ8), re-expressed Spark-first.
 
   /** L2-normalized corpus embeddings, materialized once (the
-    * localCheckpoint barrier stops CollapseProject from inlining the
+    * barrier stops CollapseProject from inlining the
     * interpreted higher-order normalize into every downstream use —
     * same rationale as sim_semdedup). */
   private def normalized(s: SparkSession, dir: String): DataFrame =
@@ -284,7 +281,7 @@ object SimilarityQueries extends QueryModule {
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e0"))
       .withColumn("nrm", sqrt(Similarity.dot(col("e0"), col("e0"))))
       .select(col("vec_id"), transform(col("e0"), x => x / col("nrm")).as("e"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
 
   // ---------------------------------------------------------------
   // sim_kmeans — one Lloyd iteration of spherical k-means (k=8):
@@ -352,10 +349,10 @@ object SimilarityQueries extends QueryModule {
   // real clustering stage SemDeDup / cluster-balanced sampling
   // assume), bounded at 6 assignment passes: assign → (stop if the
   // assignment equals the previous one) → recompute centroids →
-  // repeat. Every pass localCheckpoints (the iterative-loop lineage
-  // discipline: each iteration reads a materialized frame, not the
-  // whole prior dataflow), and the changed-assignment check is one
-  // count over a vec_id join of two checkpointed frames. The output
+  // repeat. Every pass goes through a barrier (each iteration reads
+  // a materialized frame, not the whole prior dataflow), and the
+  // changed-assignment check is one count over a vec_id join of two
+  // materialized frames. The output
   // carries `iters` (number of assignment passes), so the
   // convergence count itself is oracle-pinned: the DuckDB replay
   // unrolls all 6 passes and picks the first fixed point with the
@@ -404,7 +401,7 @@ object SimilarityQueries extends QueryModule {
     var iters = 0
     var done = false
     while (!done && iters < KmeansMaxIters) {
-      val a = kmeansAssignPass(emb, cents).localCheckpoint(eager = false)
+      val a = kmeansAssignPass(emb, cents).transform(Barrier.materialize)
       iters += 1
       if (prev != null) {
         val changed = a.select(col("vec_id"), col("cid"))
@@ -477,7 +474,7 @@ object SimilarityQueries extends QueryModule {
     val nCells = 16; val m8 = 8; val nProbe = 2; val nQueries = 10; val k = 5
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e"))
-      .localCheckpoint(eager = false) // consumed by seeds, assignment, and queries
+      .transform(Barrier.materialize) // consumed by seeds, assignment, and queries
     val idx = graft.functions.IvfPq.build(emb, nCells, m8)
     graft.functions.IvfPq.search(idx, emb.filter(col("vec_id") < nQueries),
       m8, nProbe, k)
@@ -671,7 +668,7 @@ object SimilarityQueries extends QueryModule {
     val dtoks = docs(s, dir)
       .select(col("doc_id"), explode(array_distinct(TF.tokens(col("text"))))
         .as("tok"))
-      .localCheckpoint(eager = false) // consumed as both query tokens and postings
+      .transform(Barrier.materialize) // consumed as both query tokens and postings
     val qtoks = dtoks.filter(col("doc_id") < nQ)
       .select(col("doc_id").as("query_id"), col("tok"))
     val lex = qtoks.join(dtoks, Seq("tok"))
@@ -741,7 +738,7 @@ object SimilarityQueries extends QueryModule {
       // keeps its parallelism); without it every step's window/join
       // pays 32-partition shuffle scheduling on a 60-row frame
       .coalesce(1)
-      .localCheckpoint(eager = false) // consumed by pair sims + every greedy step
+      .transform(Barrier.materialize) // consumed by pair sims + every greedy step
     val ps = cand.alias("x")
       .join(cand.alias("y"), col("x.query_id") === col("y.query_id") &&
         col("x.doc_id") =!= col("y.doc_id"))
@@ -749,7 +746,7 @@ object SimilarityQueries extends QueryModule {
         col("y.doc_id").as("b"),
         Similarity.cosine(col("x.e"), col("y.e")).as("psim"))
       .coalesce(1)
-      .localCheckpoint(eager = false) // nQ·depth² = 720 rows, reused 4×
+      .transform(Barrier.materialize) // nQ·depth² = 720 rows, reused 4×
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(desc("score"), col("doc_id"))
     var picked = cand
@@ -776,10 +773,10 @@ object SimilarityQueries extends QueryModule {
         .select(col("query_id"), lit(step).cast("int").as("step"),
           col("doc_id"), col("rel"), col("score"))
       // picked is referenced 3x per step (semi, anti, union): without
-      // a per-step checkpoint the lineage grows 3^k and Catalyst
+      // a per-step barrier the lineage grows 3^k and Catalyst
       // re-optimizes an exponentially growing plan (seconds of pure
       // driver CPU on 25-row frames)
-      picked = picked.union(next).coalesce(1).localCheckpoint(eager = false)
+      picked = picked.union(next).coalesce(1).transform(Barrier.materialize)
     }
     picked.select(col("query_id"), col("step"), col("doc_id"),
       round(col("rel"), 6).as("rel"), round(col("score"), 6).as("mmr"))
@@ -826,10 +823,10 @@ object SimilarityQueries extends QueryModule {
     val nQ = 5; val k = 5
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e"))
-      .localCheckpoint(eager = false) // consumed by both retrieval legs
+      .transform(Barrier.materialize) // consumed by both retrieval legs
     val qe = emb.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
-      .localCheckpoint(eager = false) // consumed by init retrieval + expansion
+      .transform(Barrier.materialize) // consumed by init retrieval + expansion
     val init = emb.join(broadcast(qe), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("doc_id"),
         Similarity.cosine(col("qe"), col("e")).as("cos0"), col("e"))
@@ -837,7 +834,7 @@ object SimilarityQueries extends QueryModule {
         Window.partitionBy(col("query_id"))
           .orderBy(desc("cos0"), col("doc_id"))))
       .filter(col("rk_init") <= k)
-      .localCheckpoint(eager = false) // consumed by the centroid + the rank join
+      .transform(Barrier.materialize) // consumed by the centroid + the rank join
     val cent = init
       .groupBy(col("query_id"))
       .agg(sort_array(collect_list(struct(col("rk_init"), col("e"))))
@@ -889,7 +886,7 @@ object SimilarityQueries extends QueryModule {
   val simIvfNprobeSweep: Q = (s, dir) => {
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e"))
-      .localCheckpoint(eager = false) // centroids + assignment + query probes
+      .transform(Barrier.materialize) // centroids + assignment + query probes
     val cents = emb
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(16)
       .select(col("vec_id").as("cid"), col("e").as("ce"))
@@ -910,7 +907,7 @@ object SimilarityQueries extends QueryModule {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("probe_rk"),
         Similarity.cosine(col("qe"), col("ne")).as("cos"))
-      .localCheckpoint(eager = false) // swept three times
+      .transform(Barrier.materialize) // swept three times
     val truth = Similarity.bruteForceTopK(s, dir, 10, 5)
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
     val sweep = Seq(1, 2, 4).map { p =>
@@ -937,7 +934,7 @@ object SimilarityQueries extends QueryModule {
   // (the TWAP shape). All Spark-first with full-replay DuckDB
   // oracles; float reductions use the repo's sorted-fold policy.
 
-  /** L2-normalized embeddings (the SimilarityQueries shape; checkpoint
+  /** L2-normalized embeddings (the SimilarityQueries shape; the
     * barrier keeps the interpreted normalize from re-inlining). */
   private def normalizedLabeled(s: SparkSession, dir: String): DataFrame =
     Tables.table(s, dir, "embeddings")
@@ -946,7 +943,7 @@ object SimilarityQueries extends QueryModule {
       .withColumn("nrm", sqrt(Similarity.dot(col("e0"), col("e0"))))
       .select(col("vec_id"), col("label"),
         transform(col("e0"), x => x / col("nrm")).as("e"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
 
   // ---------------------------------------------------------------
   // sim_ari — Adjusted Rand Index between clusterings: the standard
@@ -978,14 +975,14 @@ object SimilarityQueries extends QueryModule {
         .filter(col("rk") === 1)
         .select(col("vec_id"), col("cid"))
     }
-    val a = cells("ariA:").localCheckpoint(eager = false) // reused in 2 comparisons
-    val b = cells("ariB:").localCheckpoint(eager = false)
+    val a = cells("ariA:").transform(Barrier.materialize) // reused in 2 comparisons
+    val b = cells("ariB:").transform(Barrier.materialize)
     val lbl = emb.select(col("vec_id"), col("label").as("cid"))
     def ari(name: String, u: DataFrame, v: DataFrame): DataFrame = {
       val cont = u.select(col("vec_id"), col("cid").as("u"))
         .join(v.select(col("vec_id"), col("cid").as("v")), "vec_id")
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("nij"))
-        .localCheckpoint(eager = false) // ≤ 16×16 rows; 3 consumers below
+        .transform(Barrier.materialize) // ≤ 16×16 rows; 3 consumers below
       // pair counts stay in INTEGER arithmetic ((x·(x−1)) div 2 — the
       // product is always even) rather than Spark's double-returning
       // `/` operator, so they are exact at any corpus size
@@ -1120,7 +1117,7 @@ object SimilarityQueries extends QueryModule {
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e0"))
       .withColumn("nrm", sqrt(Similarity.dot(col("e0"), col("e0"))))
       .select(col("vec_id"), transform(col("e0"), x => x / col("nrm")).as("e"))
-      .localCheckpoint(eager = false) // consumed by seed pick AND the scoring scan
+      .transform(Barrier.materialize) // consumed by seed pick AND the scoring scan
     val cents = emb
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
       .withColumn("cid", row_number().over(
@@ -1227,7 +1224,7 @@ object SimilarityQueries extends QueryModule {
       .withColumn("full_rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(desc("cos_full"), col("neighbor_id"))))
-      .localCheckpoint(eager = false) // both pair-join sides + the top-1 probe
+      .transform(Barrier.materialize) // both pair-join sides + the top-1 probe
     val pairs = cand.alias("a").join(cand.alias("b"),
         col("a.query_id") === col("b.query_id") &&
           col("a.neighbor_id") < col("b.neighbor_id"))
@@ -1299,7 +1296,7 @@ object SimilarityQueries extends QueryModule {
         when(col("n_relevant_at_10") > 0,
           col("ap_sum") / d(col("n_relevant_at_10"))).otherwise(lit(0.0))
           .as("ap"))
-      .localCheckpoint(eager = false) // output rows AND the corpus-mean fold
+      .transform(Barrier.materialize) // output rows AND the corpus-mean fold
     def fold(v: String): Column =
       expr(s"aggregate(sort_array(collect_list(struct(query_id, $v))), 0D," +
         s" (a, q) -> a + q.$v)")
@@ -1321,7 +1318,7 @@ object SimilarityQueries extends QueryModule {
   // t_pack_sequences, mm_shard_manifest); this registers the CHAIN as
   // one dataflow with a single oracle on the final shard manifest, so
   // a regression anywhere in clean → plan → pack → manifest surfaces
-  // as one red row. Stage boundaries hand off through localCheckpoint
+  // as one red row. Stage boundaries hand off through a barrier
   // exactly where a frame has two consumers, so no stage recomputes an
   // earlier stage's work (the 100 TB equivalent is a persisted silver
   // table between jobs).
@@ -1373,7 +1370,7 @@ object SimilarityQueries extends QueryModule {
         graft.functions.Similarity.toDoubleArr(col("embedding")).as("e"))
 
   private def incrementalIndex(s: SparkSession, dir: String) = {
-    val emb = embAll(s, dir).localCheckpoint(eager = false) // base, batch, queries
+    val emb = embAll(s, dir).transform(Barrier.materialize) // base, batch, queries
     val (cents, baseAssigned) = graft.functions.Similarity
       .ivfSampleBuild(emb.filter(col("vec_id") % 4 =!= 3), 16)
     val newAssigned = graft.functions.Similarity
@@ -1485,7 +1482,7 @@ object SimilarityQueries extends QueryModule {
       .join(embs.select(col("vec_id").as("dst"), col("e").as("ed")), "dst")
       .select(col("src"), col("dst"),
         (lit(1.0) - Similarity.dot(col("es"), col("ed"))).as("dist"))
-      .localCheckpoint(eager = false) // kdist + reach + the lof neighbor join
+      .transform(Barrier.materialize) // kdist + reach + the lof neighbor join
     val kdist = de.groupBy(col("src").as("node"))
       .agg(max(col("dist")).as("kdist"))
     val lrd = de
@@ -1497,7 +1494,7 @@ object SimilarityQueries extends QueryModule {
         expr("aggregate(sort_array(collect_list(struct(dst, rd))), 0D," +
           " (a, x) -> a + x.rd)").as("srd"))
       .withColumn("lrd", d(col("nn")) / col("srd"))
-      .localCheckpoint(eager = false) // the p side and the o side of the LOF join
+      .transform(Barrier.materialize) // the p side and the o side of the LOF join
     val lof = de.select(col("src"), col("dst"))
       .join(lrd.select(col("src").as("dst"), col("lrd").as("lrd_o")), "dst")
       .groupBy(col("src"))
@@ -1551,7 +1548,7 @@ object SimilarityQueries extends QueryModule {
       .select(col("src"), col("dst"),
         graft.functions.Similarity.dot(col("es"), col("ed")).as("cos"))
     val ranked = Ranking.withGlobalRank(de, "rk",
-      col("cos"), col("src"), col("dst")).localCheckpoint(eager = false)
+      col("cos"), col("src"), col("dst")).transform(Barrier.materialize)
     val tot = ranked.agg(count(lit(1)).cast("long").as("n_edges"))
     val rates = array(EpsRates.map(lit): _*)
     ranked.crossJoin(broadcast(tot))
@@ -1605,11 +1602,11 @@ object SimilarityQueries extends QueryModule {
   // ---------------------------------------------------------------
   val simDaviesBouldin: Q = (s, dir) => {
     val (assign0, cents) = kmeansAssignCents(s, dir)
-    val assign = assign0.localCheckpoint(eager = false) // scatter + membership counts
+    val assign = assign0.transform(Barrier.materialize) // scatter + membership counts
     val cnorm = cents
       .select(col("cid"), col("ce"),
         Similarity.dot(col("ce"), col("ce")).as("cn2"))
-      .localCheckpoint(eager = false) // feeds scatter, pairwise M, and the join-back
+      .transform(Barrier.materialize) // feeds scatter, pairwise M, and the join-back
     val scat = assign.join(broadcast(cnorm.select(col("cid"), col("cn2"))), "cid")
       .select(col("cid"), col("vec_id"),
         sqrt(greatest(lit(0.0),
@@ -1661,7 +1658,7 @@ object SimilarityQueries extends QueryModule {
   // ---------------------------------------------------------------
   val simCalinskiHarabasz: Q = (s, dir) => {
     val (assign0, cents) = kmeansAssignCents(s, dir)
-    val assign = assign0.localCheckpoint(eager = false)
+    val assign = assign0.transform(Barrier.materialize)
     val cnorm = cents
       .select(col("cid"), col("ce"),
         Similarity.dot(col("ce"), col("ce")).as("cn2"))
@@ -1673,7 +1670,7 @@ object SimilarityQueries extends QueryModule {
       .agg(count(lit(1)).cast("long").as("n_members"),
         expr("aggregate(sort_array(collect_list(struct(vec_id, d2))), 0D," +
           " (a, q) -> a + q.d2)").as("sw"))
-      .localCheckpoint(eager = false) // feeds the SSW fold AND the SSB join
+      .transform(Barrier.materialize) // feeds the SSW fold AND the SSB join
     // exact quantized global mean of the NORMALIZED vectors
     val qsums = assign
       .select(posexplode(expr(
@@ -1770,20 +1767,20 @@ object SimilarityQueries extends QueryModule {
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding"))
         .as("e"))
-      .localCheckpoint(eager = false) // scanned once per greedy step
+      .transform(Barrier.materialize) // scanned once per greedy step
     val seed = emb
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(1)
-      .select(col("vec_id"), col("e")).localCheckpoint(eager = false)
+      .select(col("vec_id"), col("e")).transform(Barrier.materialize)
     val seedRow = seed.collect().head
     var selected = Seq((1, seedRow.getLong(0), 0.0))
     var minD = emb.crossJoin(broadcast(
         seed.select(col("e").as("ce"))))
       .select(col("vec_id"), col("e"),
         (lit(1.0) - Similarity.cosine(col("e"), col("ce"))).as("dm"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     for (i <- 2 to k) {
       val nxt = minD.orderBy(desc("dm"), col("vec_id")).limit(1)
-        .localCheckpoint(eager = false)
+        .transform(Barrier.materialize)
       val r = nxt.collect().head
       selected = selected :+ ((i, r.getAs[Long]("vec_id"),
         r.getAs[Double]("dm")))
@@ -1791,7 +1788,7 @@ object SimilarityQueries extends QueryModule {
         .select(col("vec_id"), col("e"),
           least(col("dm"),
             lit(1.0) - Similarity.cosine(col("e"), col("ce"))).as("dm"))
-        .localCheckpoint(eager = false)
+        .transform(Barrier.materialize)
     }
     val radius = minD.agg(max(col("dm"))).collect().head.getDouble(0)
     import s.implicits._

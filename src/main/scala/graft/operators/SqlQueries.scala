@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.sources.Tables
 import ColumnIdioms._
@@ -86,8 +87,8 @@ object SqlQueries extends QueryModule {
   // INPUT every level, so the yearly aggregate must be materialized
   // BEFORE the recursion. With `seq` inline as a CTE each of the 7
   // levels re-aggregated the full orders table (~3-4.5 s at sf0.1,
-  // 28 s at 80 monthly levels); localCheckpointing the 7-row frame
-  // first makes each level a scan of 7 cached rows (~job-overhead
+  // 28 s at 80 monthly levels); a barrier on the 7-row frame
+  // first makes each level a scan of 7 stored rows (~job-overhead
   // only). Same plan shape at 100 TB: the recursion input is always
   // a years-count row set, never the fact table.
   // ---------------------------------------------------------------
@@ -99,7 +100,7 @@ object SqlQueries extends QueryModule {
       // bounded single-partition window: one row per YEAR, regardless
       // of fact-table scale
       .withColumn("k", row_number().over(Grain.bounded(col("yr"))))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
       .createOrReplaceTempView("seq_rec")
     s.sql("""
       WITH RECURSIVE r(k, yr, rev, idx) AS (
@@ -124,7 +125,7 @@ object SqlQueries extends QueryModule {
   // the batch-start seed — same association again. 80 levels ⇒ 5
   // recursion iterations instead of 80 Spark jobs; at any scale the
   // recursion input is the batch count, never the fact table (both
-  // frames localCheckpoint before the UnionLoop re-evaluates them
+  // frames go through a barrier before the UnionLoop re-evaluates them
   // per iteration — the sql_recursive lesson).
   // ---------------------------------------------------------------
   val sqlRecursiveBatched: Q = (s, dir) => {
@@ -143,13 +144,13 @@ object SqlQueries extends QueryModule {
       // (k=1 has no ratio; batch 0's array starts at k=2)
       .withColumn("p", when(col("b") === 0, col("k") - 1)
         .otherwise(col("k") - col("b") * batchSize))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
       .createOrReplaceTempView("recb_lvl")
     s.table("recb_lvl").filter(col("k") >= 2)
       .groupBy(col("b"))
       .agg(expr("transform(sort_array(collect_list(struct(k, ratio)))," +
         " x -> x.ratio)").as("ratios"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
       .createOrReplaceTempView("recb_bat")
     s.sql("""
       WITH RECURSIVE rb(b, endv) AS (
@@ -203,7 +204,7 @@ object SqlQueries extends QueryModule {
   // by (count desc, key) bounds the output.
   // ---------------------------------------------------------------
   val setOpsAllMultiset: Q = (s, dir) => {
-    val li = Tables.table(s, dir, "lineitem").localCheckpoint(eager = false)
+    val li = Tables.table(s, dir, "lineitem").transform(Barrier.materialize)
     val a = li.filter(col("l_suppkey") % 2 === 0).select(col("l_partkey"))
     val b = li.filter(col("l_quantity") > 25).select(col("l_partkey"))
     val ia = a.intersectAll(b).groupBy(col("l_partkey"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
@@ -619,11 +620,11 @@ object TextQueries extends QueryModule {
     // along — functionally dependent on doc_id, so cardinality is
     // unchanged) is the only consumer of the raw token stream; the
     // 256-row bucket table then reduces the ≤ docs×256 per-doc frame
-    // instead of re-exploding the corpus. The checkpoint pins the
+    // instead of re-exploding the corpus. The barrier pins the
     // frame so its two consumers (λ table, final join) don't each
     // replay the tokenize — at sf0.1 this halves the query's work.
     val perDoc = tok.groupBy(col("doc_id"), col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("c")).localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("c")).transform(Barrier.materialize)
     val buckets = perDoc.groupBy(col("bucket")).agg(sum(col("c")).cast("long").as("cr"),
       sum(when(col("lang") === "en", col("c")).otherwise(0L)).cast("long").as("ct"))
     val totals = buckets.agg(sum(col("cr")).cast("long").as("nr"),
@@ -860,7 +861,7 @@ object TextQueries extends QueryModule {
 
   def splitContaminationOf(docsDf: DataFrame, maxDf: Int): DataFrame = {
     val grams = contaminationGrams(docsDf)
-      .localCheckpoint(eager = false) // consumed by the df count and both join sides
+      .transform(Barrier.materialize) // consumed by the df count and both join sides
     // df-cap BEFORE the self-join: grams is one row per (doc,
     // distinct shingle), so count(*) per shingle IS document
     // frequency; the aggregation, the cap join, and the self-join all
@@ -957,7 +958,7 @@ object TextQueries extends QueryModule {
     val grams = Tables.table(s, dir, "documents")
       .select(col("doc_id"), explode(array_distinct(
         graft.functions.TextFunctions.shingles(col("text"), 5))).as("g"))
-      .localCheckpoint(eager = false) // consumed by the min-doc agg and the join
+      .transform(Barrier.materialize) // consumed by the min-doc agg and the join
     val first = grams.groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
     grams.join(first, "g")
       .groupBy(col("doc_id"))
@@ -988,7 +989,7 @@ object TextQueries extends QueryModule {
     val emb = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), col("label").cast("long").as("label"),
         Similarity.toDoubleArr(col("embedding")).as("e"))
-      .localCheckpoint(eager = false) // seeds + both pair joins read it
+      .transform(Barrier.materialize) // seeds + both pair joins read it
     // best positive per anchor: label-blocked, cos >= 0.4
     val a = emb.select(col("vec_id").as("aid"), col("label").as("alab"),
       col("e").as("ae"))
@@ -1076,7 +1077,7 @@ object TextQueries extends QueryModule {
     val shared = perLang.crossJoin(broadcast(tot))
       .withColumn("raw_share", d(col("n_tokens")) / d(col("total_tokens")))
       .withColumn("w", pow(col("raw_share"), lit(alpha)))
-      .localCheckpoint(eager = false) // consumed by the normalizer and the output
+      .transform(Barrier.materialize) // consumed by the normalizer and the output
     val norm = shared.agg(
       expr("aggregate(sort_array(collect_list(struct(lang, w))), 0D," +
         " (a, x) -> a + x.w)").as("sum_w"))
@@ -1300,7 +1301,7 @@ object TextQueries extends QueryModule {
       .select(explode(TF.tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("r"))
     val ff = tf.groupBy(col("r")).agg(count(lit(1)).as("n_terms"))
-      .localCheckpoint(eager = false) // consumed by the self-join (both sides) + totals
+      .transform(Barrier.materialize) // consumed by the self-join (both sides) + totals
     val tot = ff.agg(sum(col("r") * col("n_terms")).as("t_tokens"),
       sum(when(col("r") === 1, col("n_terms"))).as("n1"))
     ff.orderBy(col("r")).limit(10).alias("a")
@@ -1353,7 +1354,7 @@ object TextQueries extends QueryModule {
       .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
       .withColumn("w1", substring_index(col("bigram"), " ", 1))
       .withColumn("w2", substring_index(col("bigram"), " ", -1))
-      .localCheckpoint(eager = false) // consumed by 3 stat aggregates + the lookup
+      .transform(Barrier.materialize) // consumed by 3 stat aggregates + the lookup
     val w1s = tb.groupBy(col("w1"))
       .agg(sum(col("c12")).cast("long").as("c1"),
         count(lit(1)).as("n1p_fwd"))
@@ -1413,7 +1414,7 @@ object TextQueries extends QueryModule {
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
       .withColumn("bucket",
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long") % 64)
-      .localCheckpoint(eager = false) // distinct-token stats + bucket regroup
+      .transform(Barrier.materialize) // distinct-token stats + bucket regroup
     val perBucket = tokc.groupBy(col("doc_id"), col("bucket"))
       .agg(sum(col("c")).as("bc"), count(lit(1)).as("n_toks_in"))
     val perDoc = perBucket.groupBy(col("doc_id"))
@@ -1469,7 +1470,7 @@ object TextQueries extends QueryModule {
           .as("pos"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("w"), sum(col("pos")).cast("long").as("s"))
-      .localCheckpoint(eager = false) // prefix self-join (both sides) + final join
+      .transform(Barrier.materialize) // prefix self-join (both sides) + final join
     // exact prefix sums over observed bins via a bounded self-join
     // (≤10×10 pairs — no window, no exchange worth naming)
     val pref = bins.alias("a")
@@ -1481,7 +1482,7 @@ object TextQueries extends QueryModule {
       .select(col("bin").as("i"), col("cw"), col("cs"))
       .union(s.range(1).select(lit(-1L).as("i"), lit(0L).as("cw"),
         lit(0L).as("cs")))
-      .localCheckpoint(eager = false) // both interval endpoints read it
+      .transform(Barrier.materialize) // both interval endpoints read it
     // intervals (j..k] in prefix space: j−1 = pj.i < pk.i = k
     val intervals = pref.alias("pk")
       .join(broadcast(pref.select(col("i").as("j0"), col("cw").as("w0"),
@@ -1894,13 +1895,13 @@ object TextQueries extends QueryModule {
         sum(when(col("stop"), 1L).otherwise(0L)).over(
           Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
       .filter(!col("stop"))
-      .localCheckpoint(eager = false) // consumed by occurrences AND word stats
+      .transform(Barrier.materialize) // consumed by occurrences AND word stats
     val occ = seg.groupBy(col("doc_id"), col("phrase_id"))
       .agg(expr("transform(sort_array(collect_list(struct(pos, tok)))," +
           " x -> x.tok)").as("words"),
         count(lit(1)).as("len"))
       .filter(col("len") <= 4)
-      .localCheckpoint(eager = false) // word stats + scoring both read it
+      .transform(Barrier.materialize) // word stats + scoring both read it
     val members = occ.select(col("doc_id"), col("phrase_id"), col("len"),
       posexplode(col("words")).as(Seq("wpos", "tok")))
     val wordScore = members.groupBy(col("tok"))
@@ -1949,7 +1950,7 @@ object TextQueries extends QueryModule {
         (conv(substring(md5(concat(lit("nb:"),
           col("doc_id").cast("string"))), 1, 2), 16, 10)
           .cast("long") % 5 === 0).as("is_test"))
-      .localCheckpoint(eager = false) // consumed by train counts AND test scoring
+      .transform(Barrier.materialize) // consumed by train counts AND test scoring
     val trainTok = split.filter(!col("is_test"))
       .select(col("lang"), explode(TF.tokens(col("text"))).as("tok"))
     val counts = trainTok.groupBy(col("lang"), col("tok"))
@@ -2014,7 +2015,7 @@ object TextQueries extends QueryModule {
       .select(col("source"), explode(TF.tokens(col("text"))).as("tok"))
     val byDom = tok.groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("cdt"))
-      .localCheckpoint(eager = false) // feeds corpus counts AND the lp join
+      .transform(Barrier.materialize) // feeds corpus counts AND the lp join
     val corpus = byDom.groupBy(col("tok"))
       .agg(sum(col("cdt")).cast("long").as("ct"))
     val total = corpus.agg(sum(col("ct")).cast("long").as("tt"))
@@ -2029,7 +2030,7 @@ object TextQueries extends QueryModule {
       .crossJoin(broadcast(total))
       .withColumn("mean_nll", d(col("nll_u")) / d(col("n_tok")) / 1000000.0)
       .withColumn("w0", d(col("n_tok")) / d(col("tt")))
-      .localCheckpoint(eager = false) // consumed by the corpus mean AND the output
+      .transform(Barrier.materialize) // consumed by the corpus mean AND the output
     val overall = dom.agg(
       (d(sum(col("nll_u"))) / d(sum(col("n_tok"))) / 1000000.0).as("nll_bar"))
     val scored = dom.crossJoin(broadcast(overall))
@@ -2064,7 +2065,7 @@ object TextQueries extends QueryModule {
     val post = Tables.table(s, dir, "documents")
       .select(col("doc_id"), explode(TF.tokens(col("text"))).as("tok"))
       .distinct()
-      .localCheckpoint(eager = false) // scanned once per round (8 rounds)
+      .transform(Barrier.materialize) // scanned once per round (8 rounds)
     var covered = post.select(col("tok")).limit(0)
     val rounds = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var stop = false
@@ -2072,14 +2073,14 @@ object TextQueries extends QueryModule {
       val gains = post.join(covered, Seq("tok"), "left_anti")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
       val winner = gains.orderBy(desc("gain"), col("doc_id")).limit(1)
-        .localCheckpoint(eager = false) // consumed by output, covered update
+        .transform(Barrier.materialize) // consumed by output, covered update
       if (winner.isEmpty) stop = true
       else {
         covered = covered
           .union(post.join(broadcast(winner.select(col("doc_id"))),
             Seq("doc_id")).select(col("tok")))
           .distinct()
-          .localCheckpoint(eager = false) // next round's anti side + the count
+          .transform(Barrier.materialize) // next round's anti side + the count
         val total = covered.count()
         rounds += winner.select(lit(i.toLong).as("round"), col("doc_id"),
           col("gain"), lit(total).as("covered_total"))
@@ -2223,7 +2224,7 @@ object TextQueries extends QueryModule {
       .select(col("doc_id"), md5(col("doc_id").cast("string")).as("key"),
         TF.tokenCount(col("text")).as("n_tok"))
     val ranked = Ranking.withGlobalRank(base, "rk", col("key"), col("doc_id"))
-      .localCheckpoint(eager = false) // posting join + the cumsum input
+      .transform(Barrier.materialize) // posting join + the cumsum input
     val novel = Tables.table(s, dir, "documents")
       .select(col("doc_id"), explode(array_distinct(TF.tokens(col("text"))))
         .as("tok"))
@@ -2278,15 +2279,15 @@ object TextQueries extends QueryModule {
   private val SweepThresholds = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
 
   val tJaccardThresholdSweep: Q = (s, dir) => {
-    // no checkpoint on the raw pair stream: its ONE consumer is the
-    // exploded sweep below, whose own checkpoint is the shared
-    // barrier for the five threshold readers — the former extra
+    // no barrier on the raw pair stream: its ONE consumer is the
+    // exploded sweep below, whose own barrier is shared by the five
+    // threshold readers — the former extra
     // materialization re-paid the full t=0.5 pair join once per run
     val pairs = Dedup.jaccardPairsRaw(s, dir, SweepThresholds.head)
     val sweep = pairs.select(col("d1"), col("d2"), col("jaccard"),
         explode(array(SweepThresholds.map(lit): _*)).as("threshold"))
       .filter(col("jaccard") >= col("threshold"))
-      .localCheckpoint(eager = false) // pair-count AND doc-count consumers
+      .transform(Barrier.materialize) // pair-count AND doc-count consumers
     val np = sweep.groupBy(col("threshold"))
       .agg(count(lit(1)).cast("long").as("n_pairs"))
     val nd = sweep
@@ -2309,7 +2310,7 @@ object TextQueries extends QueryModule {
   val tLangidConfusion: Q = (s, dir) => {
     val pred = Tables.table(s, dir, "documents")
       .select(col("lang"), TF.langId(col("text")).as("predicted"))
-      .localCheckpoint(eager = false) // diagonal, row margins, column margins
+      .transform(Barrier.materialize) // diagonal, row margins, column margins
     val diag = pred.filter(col("lang") === col("predicted"))
       .groupBy(col("lang")).agg(count(lit(1)).cast("long").as("tp"))
     val actual = pred.groupBy(col("lang"))
@@ -2403,7 +2404,7 @@ object TextQueries extends QueryModule {
       .withColumn("vr",
         (d(col("sqq")) - d(col("sq")) * d(col("sq")) / d(col("n"))) /
           (d(col("n")) - lit(1.0)) / lit(1e12))
-      .localCheckpoint(eager = false) // both sides of the Welch contrast
+      .transform(Barrier.materialize) // both sides of the Welch contrast
     val dup = m.filter(col("is_dup"))
       .select(col("n").as("n_dup"), col("mean").as("mean_dup"),
         col("vr").as("v_dup"))
@@ -2433,7 +2434,7 @@ object TextQueries extends QueryModule {
   val tPerplexityBuckets: Q = (s, dir) => {
     val toks = Tables.table(s, dir, "documents")
       .select(col("doc_id"), posexplode(TF.tokens(col("text"))).as(Seq("pos", "w")))
-      .localCheckpoint(eager = false) // LM counts AND the scoring pass
+      .transform(Barrier.materialize) // LM counts AND the scoring pass
     val lm = toks.groupBy(col("w")).agg(count(lit(1)).cast("long").as("c"))
     val tot = toks.agg(count(lit(1)).cast("long").as("t"))
     val nll = toks.join(lm, Seq("w")).crossJoin(broadcast(tot))
@@ -2529,7 +2530,7 @@ object TextQueries extends QueryModule {
         sqrt((d(col("sqq")) - d(col("sq")) * d(col("sq")) / d(col("n"))) /
           (d(col("n")) - lit(1.0))) / lit(1000000.0))
       .withColumn("wgt", d(col("n")) * col("sd"))
-      .localCheckpoint(eager = false) // Σw fold AND the allocation pass
+      .transform(Barrier.materialize) // Σw fold AND the allocation pass
     val tot = m.agg(expr("aggregate(sort_array(collect_list(struct(lang, wgt)))," +
       " 0D, (a, x) -> a + x.wgt)").as("sw"))
     val shares = m.crossJoin(broadcast(tot))
@@ -2537,7 +2538,7 @@ object TextQueries extends QueryModule {
       .withColumn("exact", d(lit(NeymanBudget)) * col("share"))
       .withColumn("base", floor(col("exact")).cast("long"))
       .withColumn("rem", col("exact") - d(col("base")))
-      .localCheckpoint(eager = false) // leftover count AND the remainder rank
+      .transform(Barrier.materialize) // leftover count AND the remainder rank
     val leftover = shares.agg(
       (lit(NeymanBudget) - sum(col("base"))).cast("long").as("k"))
     shares.crossJoin(broadcast(leftover))
@@ -2576,7 +2577,7 @@ object TextQueries extends QueryModule {
       .cast("long")
     val base = Tables.table(s, dir, "documents")
       .select(col("lang"), col("source"), decile.as("dec"))
-      .localCheckpoint(eager = false) // cell counts AND the global baseline
+      .transform(Barrier.materialize) // cell counts AND the global baseline
     val cells = base.groupBy(col("lang"), col("source"), col("dec"))
       .agg(count(lit(1)).cast("long").as("c"))
     val cellTot = cells.groupBy(col("lang"), col("source"))
@@ -2630,7 +2631,7 @@ object TextQueries extends QueryModule {
   // ulps; the quantization keeps five chained steps from compounding
   // them), and every corpus reduction is a sorted fold by doc_id —
   // bit-stable under any partitioning (the round-6 discipline).
-  // Scale shape: one feature scan localCheckpointed, then per step
+  // Scale shape: one feature scan behind a barrier, then per step
   // ONE aggregate over the corpus (map-side combining collect_list
   // folds — bounded by corpus rows, no shuffle growth) feeding a
   // 3-double driver update; 5 steps = 5 bounded jobs, the k-means /
@@ -2646,7 +2647,7 @@ object TextQueries extends QueryModule {
         log(lit(1.0) + d(col("n_tokens"))).as("x1"),
         col("avg_word_len").as("x2"),
         when(col("keep"), 1.0).otherwise(0.0).as("y"))
-      .localCheckpoint(eager = false) // five gradient passes share one scan
+      .transform(Barrier.materialize) // five gradient passes share one scan
     def fold(v: String): Column =
       expr("aggregate(sort_array(collect_list(named_struct(" +
         s"'doc_id', doc_id, 'v', $v))), 0D, (a, q) -> a + q.v)")
@@ -2773,7 +2774,7 @@ object TextQueries extends QueryModule {
     val docs = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
         size(split(col("text"), " ")).cast("long").as("nt"))
-      .localCheckpoint(eager = false) // aggregate, rank, and dup passes share it
+      .transform(Barrier.materialize) // aggregate, rank, and dup passes share it
     val agg = docs.agg(
       count(lit(1)).cast("long").as("n_docs"),
       countDistinct(col("lang")).cast("long").as("n_langs"),
@@ -2838,10 +2839,10 @@ object TextQueries extends QueryModule {
       .filter(col("doc_id") =!= col("canonical_id"))
       .select(col("doc_id"))
     // stage barrier: `clean` feeds BOTH the per-source stats and the
-    // plan join-back — checkpoint so the dedup funnel runs once
+    // plan join-back — materialize so the dedup funnel runs once
     val clean = exactSurvivors
       .join(dropNearDup, Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     // stage 2: epoch plan (t_source_epochs' recipe over the CLEANED
     // corpus): budget_r = tot·w / (Σw · src_tokens); every doc gets
     // floor(r) epochs, +1 where its md5-uniform u < frac(r)
@@ -2946,7 +2947,7 @@ object TextQueries extends QueryModule {
     * mass-duplicated leak and the cap-invariance pin. */
   def contaminationFullOf(docsDf: DataFrame, maxDf: Int): DataFrame =
     contaminationEvidence(
-      contaminationGrams(docsDf).localCheckpoint(eager = false), maxDf)
+      contaminationGrams(docsDf).transform(Barrier.materialize), maxDf)
       .groupBy(col("split_from"), col("split_to"))
       .agg(countDistinct(col("doc_to")).cast("long").as("n_leaky_docs"),
         countDistinct(col("sh")).cast("long").as("n_shared_grams"))
@@ -3218,7 +3219,7 @@ object TextQueries extends QueryModule {
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
     val st = toks.groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint(eager = false) // corpus totals + the contribution pass
+      .transform(Barrier.materialize) // corpus totals + the contribution pass
     val perSource = st.groupBy(col("source"))
       .agg(sum(col("c")).cast("long").as("ns"),
         count(lit(1)).cast("long").as("vocab_s"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.QueryModule
 import graft.sources.Tables
 import ColumnIdioms._
@@ -184,10 +185,10 @@ object TpchQueries extends QueryModule {
         col("l_shipdate") < to_timestamp(lit("1996-04-01")))
       .groupBy(col("l_suppkey"))
       .agg(sum(rev).as("total_rev"))
-      // supplier-bounded (≤ #suppliers rows); the checkpoint stops the
+      // supplier-bounded (≤ #suppliers rows); the barrier stops the
       // max-rev scalar and the filter branch from EACH re-scanning and
       // re-aggregating lineitem — one quarter-of-lineitem scan total
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     srev.crossJoin(broadcast(srev.agg(max(col("total_rev")).as("max_rev"))))
       .filter(col("total_rev") === col("max_rev"))
       .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
@@ -622,7 +623,7 @@ object TpchQueries extends QueryModule {
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("brand"))
       .distinct()
-      .localCheckpoint(eager = false) // three consumers: count, supports, postings
+      .transform(Barrier.materialize) // three consumers: count, supports, postings
     val nb = items.agg(countDistinct(col("ok")).as("n_baskets"))
     val itemSupp = items.groupBy(col("brand"))
       .agg(count(lit(1)).as("supp_item"))
@@ -667,7 +668,7 @@ object TpchQueries extends QueryModule {
     val legs = leg("orders", col("o_orderdate"))
       .unionAll(leg("lineitem", col("l_shipdate")))
       .unionAll(leg("events", col("ts")))
-      .localCheckpoint(eager = false) // the global max AND the output rows
+      .transform(Barrier.materialize) // the global max AND the output rows
     val ref = legs.agg(max(col("max_date")).as("ref_date"))
     legs.crossJoin(broadcast(ref))
       .select(col("table_name"), col("n_rows"), col("max_date"),
@@ -727,7 +728,7 @@ object TpchQueries extends QueryModule {
     def edge(child: String, ck: String, parent: String,
         pk: String): DataFrame = {
       val c = Tables.table(s, dir, child).select(col(ck).as("k"))
-        .localCheckpoint(eager = false) // total + anti-join legs share one scan
+        .transform(Barrier.materialize) // total + anti-join legs share one scan
       val p = Tables.table(s, dir, parent).select(col(pk).as("k"))
       val tot = c.agg(count(lit(1)).cast("long").as("n_child_rows"))
       val orp = c.join(p, Seq("k"), "left_anti")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Barrier
 import graft.QueryModule
 import graft.sources.Tables
 import ColumnIdioms._
@@ -416,7 +417,7 @@ object WindowQueries extends QueryModule {
       // low-cardinality window family (never the fact stream)
       .withColumn("t", row_number().over(
         Window.partitionBy(col("yr")).orderBy(col("day"))).cast("int"))
-      .localCheckpoint(eager = false) // consumed by the fold input and the join back
+      .transform(Barrier.materialize) // consumed by the fold input and the join back
     val perYear = daily.groupBy(col("yr"))
       .agg(sort_array(collect_list(struct(col("t"), col("rev")))).as("days"))
     // textual pieces — Spark SQL lambdas have no let-binding, so the
@@ -474,14 +475,14 @@ object WindowQueries extends QueryModule {
           expr("CAST(SUM(rev) OVER (PARTITION BY yr ORDER BY day" +
             " ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS DOUBLE)") / 7.0))
       .withColumn("detr", d(col("rev")) - col("trend"))
-      .localCheckpoint(eager = false) // consumed by the dow means and the output
+      .transform(Barrier.materialize) // consumed by the dow means and the output
     val dowM = daily.filter(col("detr").isNotNull)
       .groupBy(dayofweek(col("day")).as("dow"))
       .agg(count(lit(1)).as("n"),
         expr("aggregate(sort_array(collect_list(struct(day, detr))), 0D," +
           " (a, x) -> a + x.detr)").as("sd"))
       .withColumn("m", col("sd") / d(col("n")))
-      .localCheckpoint(eager = false) // consumed by the grand mean + the join
+      .transform(Barrier.materialize) // consumed by the grand mean + the join
     val grand = dowM.agg((expr(
       "aggregate(sort_array(collect_list(struct(dow, m))), 0D," +
         " (a, x) -> a + x.m)") / d(count(lit(1)))).as("gm"))
@@ -525,7 +526,7 @@ object WindowQueries extends QueryModule {
       .agg(expr("SUM(CAST(o_totalprice AS DECIMAL(18,2)))").as("rev"))
       .withColumn("dayn", datediff(col("day"), lit("1970-01-01").cast("date"))
         .cast("long"))
-      .localCheckpoint(eager = false) // consumed by both pair sides + intercepts
+      .transform(Barrier.materialize) // consumed by both pair sides + intercepts
     val slopes = daily.alias("a")
       .join(daily.alias("b"), col("a.day") < col("b.day")) // calendar²-bounded
       // nullif guard: Selection's narrowing filters reference the
@@ -538,9 +539,9 @@ object WindowQueries extends QueryModule {
         col("a.dayn").as("da"), col("b.dayn").as("db"))
       // materialize once: the slope distribution peaks hard at 0, so
       // selection runs 2 histogram passes + stats + final — 4 scans;
-      // one ~23 MB checkpoint beats 4 BNLJ+division re-evaluations
+      // one ~23 MB barrier beats 4 BNLJ+division re-evaluations
       // (and is a second pushdown barrier above the nullif guard)
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     // the pair count is analytic — every ordered day pair contributes
     // exactly one slope — and the median needs only the VALUES at
     // ranks k1/k2, so selection (histogram narrowing, map-side count
@@ -1005,7 +1006,7 @@ object WindowQueries extends QueryModule {
       .withColumn("yr", year(col("day")))
       .withColumn("t", row_number().over(
         Window.partitionBy(col("yr")).orderBy(col("day"))).cast("int"))
-      .localCheckpoint(eager = false) // consumed by the fold input and the join back
+      .transform(Barrier.materialize) // consumed by the fold input and the join back
     val perYear = daily.groupBy(col("yr"))
       .agg(sort_array(collect_list(struct(col("t"), col("z")))).as("days"))
     // textual pieces — no let-binding in SQL lambdas, so P⁻ and K
@@ -1066,7 +1067,7 @@ object WindowQueries extends QueryModule {
       .groupBy(col("o_orderdate").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("m"))
-      .localCheckpoint(eager = false) // scanned once per round (5 rounds)
+      .transform(Barrier.materialize) // scanned once per round (5 rounds)
     var remaining = daily
     val rounds = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (i <- 1 to 5) {
@@ -1082,10 +1083,10 @@ object WindowQueries extends QueryModule {
         .select(lit(i.toLong).as("iteration"), col("day"),
           (d(col("m")) / 100.0).as("revenue"),
           round(col("r"), 6).as("r_stat"), (col("r") > 3.0).as("flagged"))
-        .localCheckpoint(eager = false) // consumed by output AND the anti join
+        .transform(Barrier.materialize) // consumed by output AND the anti join
       rounds += worst
       remaining = remaining.join(broadcast(worst.select(col("day"))),
-        Seq("day"), "left_anti").localCheckpoint(eager = false)
+        Seq("day"), "left_anti").transform(Barrier.materialize)
     }
     rounds.reduce(_ unionAll _).orderBy(col("iteration"))
   }
@@ -1114,7 +1115,7 @@ object WindowQueries extends QueryModule {
       .withColumn("idx", row_number().over(Grain.bounded(col("day")))
         .cast("long"))
       .select(col("idx"), col("v"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     var approx = daily
     val out = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (lvl <- 1 to 3) {
@@ -1125,7 +1126,7 @@ object WindowQueries extends QueryModule {
           sum(col("v")).cast("long").as("ssum"),
           sum(when(col("idx") % 2 === 1, col("v")).otherwise(-col("v")))
             .cast("long").as("sdiff"))
-        .localCheckpoint(eager = false) // consumed by detail output AND next level
+        .transform(Barrier.materialize) // consumed by detail output AND next level
       out += paired.filter(col("cnt") === 2)
         .select(lit(lvl.toLong).as("level"), lit("d").as("coef"),
           col("j").as("idx"), col("sdiff").as("value"))
@@ -1196,7 +1197,7 @@ object WindowQueries extends QueryModule {
       .withColumn("yr", year(col("day")))
       .withColumn("t", row_number().over(
         Window.partitionBy(col("yr")).orderBy(col("day"))).cast("int"))
-      .localCheckpoint(eager = false) // consumed by the fold input and the join back
+      .transform(Barrier.materialize) // consumed by the fold input and the join back
     val perYear = daily.groupBy(col("yr"))
       .agg(sort_array(collect_list(struct(col("t"), col("x")))).as("days"))
     // r uses the PREVIOUS x carried in state; σ² uses the previous
@@ -1249,7 +1250,7 @@ object WindowQueries extends QueryModule {
       .groupBy(col("o_orderdate").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("m"))
-      .localCheckpoint(eager = false) // consumed by the rank scan AND the excess scan
+      .transform(Barrier.materialize) // consumed by the rank scan AND the excess scan
     val n = daily.agg(count(lit(1)).as("n"))
     val u = daily
       .withColumn("rk", row_number().over(Grain.bounded(col("m"), col("day")))
@@ -1399,12 +1400,12 @@ object WindowQueries extends QueryModule {
     // Column substitution re-inlines φ_{k−1,·} into every reference
     // (CollapseProject undoes any column sharing), and the tree
     // grows ~4^k — at k=7 plan compilation alone measured 23 s. A
-    // localCheckpoint per level (a ONE-ROW frame — microseconds)
+    // barrier per level (a ONE-ROW frame — microseconds)
     // freezes each level's doubles as scanned columns, so level k
     // references values, not expression trees; the arithmetic and
     // its order are unchanged, hence bit-identical to the oracle's
     // fully-expanded text.
-    var cur = withRho.withColumn("p_1_1", col("rho1")).localCheckpoint(eager = false)
+    var cur = withRho.withColumn("p_1_1", col("rho1")).transform(Barrier.materialize)
     for (k <- 2 to PacfLags) {
       val num = (1 until k).foldLeft(col(s"rho$k")) { (acc, j) =>
         acc - col(s"p_${k - 1}_$j") * col(s"rho${k - j}")
@@ -1412,11 +1413,11 @@ object WindowQueries extends QueryModule {
       val den = (1 until k).foldLeft(lit(1.0): Column) { (acc, j) =>
         acc - col(s"p_${k - 1}_$j") * col(s"rho$j")
       }
-      cur = cur.withColumn(s"p_${k}_$k", num / den).localCheckpoint(eager = false)
+      cur = cur.withColumn(s"p_${k}_$k", num / den).transform(Barrier.materialize)
       cur = cur.select(col("*") +: (1 until k).map(j =>
         (col(s"p_${k - 1}_$j") - col(s"p_${k}_$k") * col(s"p_${k - 1}_${k - j}"))
           .as(s"p_${k}_$j")): _*)
-        .localCheckpoint(eager = false)
+        .transform(Barrier.materialize)
     }
     val out = cur.select(col("n") +:
       (1 to PacfLags).flatMap(k => Seq(
@@ -1606,7 +1607,7 @@ object WindowQueries extends QueryModule {
         .cast("long")).cast("long").as("m"))
       .withColumn("rk", (row_number().over(Grain.bounded(col("day"))) - 1)
         .cast("long"))
-      .localCheckpoint(eager = false) // consumed once per block size
+      .transform(Barrier.materialize) // consumed once per block size
     val grid = daily
       .select(col("day"), col("m"), col("rk"),
         explode(array(HurstSizes.map(lit): _*)).as("s"))
@@ -1635,7 +1636,7 @@ object WindowQueries extends QueryModule {
       .withColumn("mean_rs", col("sum_rs") / d(col("n_blocks")))
       .withColumn("lx", log(d(col("s"))))
       .withColumn("ly", log(col("mean_rs")))
-      .localCheckpoint(eager = false) // the 4-row regression AND the output rows
+      .transform(Barrier.materialize) // the 4-row regression AND the output rows
     def fold(v: String): Column =
       expr(s"aggregate(sort_array(collect_list(struct(s, $v))), 0D," +
         s" (a, q) -> a + q.$v)")
@@ -1677,14 +1678,14 @@ object WindowQueries extends QueryModule {
           expr("CAST(SUM(rev) OVER (PARTITION BY yr ORDER BY day" +
             " ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS DOUBLE)") / 7.0))
       .withColumn("detr", d(col("rev")) - col("trend"))
-      .localCheckpoint(eager = false) // dow means AND the strength pass
+      .transform(Barrier.materialize) // dow means AND the strength pass
     val dowM = daily.filter(col("detr").isNotNull)
       .groupBy(dayofweek(col("day")).as("dow"))
       .agg(count(lit(1)).as("n"),
         expr("aggregate(sort_array(collect_list(struct(day, detr))), 0D," +
           " (a, x) -> a + x.detr)").as("sd"))
       .withColumn("m", col("sd") / d(col("n")))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val grand = dowM.agg((expr(
       "aggregate(sort_array(collect_list(struct(dow, m))), 0D," +
         " (a, x) -> a + x.m)") / d(count(lit(1)))).as("gm"))
@@ -1788,7 +1789,7 @@ object WindowQueries extends QueryModule {
       .groupBy(col("o_orderdate").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("m"))
-      .localCheckpoint(eager = false) // two rank passes + the output rows
+      .transform(Barrier.materialize) // two rank passes + the output rows
     val bounds = daily.agg(count(lit(1)).cast("long").as("n"))
       .withColumn("lo", expr("(n + 1) div 2"))
       .withColumn("hi", expr("(n + 2) div 2"))
@@ -1899,7 +1900,7 @@ object WindowQueries extends QueryModule {
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("y"))
       .withColumn("t", row_number().over(w).cast("long"))
-      .localCheckpoint(eager = false) // frozen (day, t, y) grid feeds fit + residuals
+      .transform(Barrier.materialize) // frozen (day, t, y) grid feeds fit + residuals
     val m = daily.agg(count(lit(1)).cast("long").as("n"),
       sum(col("t")).cast("decimal(38,0)").as("st"),
       sum((col("t") * col("t")).cast("decimal(38,0)")).as("stt"),
@@ -1989,7 +1990,7 @@ object WindowQueries extends QueryModule {
       .withColumn("vol_l", lag(col("vol"), 1).over(w))
       .withColumn("rev_l", lag(col("rev"), 1).over(w))
       .filter(col("vol_l").isNotNull)
-      .localCheckpoint(eager = false) // both directions read the same lagged grid
+      .transform(Barrier.materialize) // both directions read the same lagged grid
     def granger(yc: String, ylc: String, xlc: String,
         label: String): DataFrame = {
       val y = col(yc); val yl = col(ylc); val xl = col(xlc)
@@ -2154,7 +2155,7 @@ object WindowQueries extends QueryModule {
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("y"))
       .withColumn("t", row_number().over(w).cast("long"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val m = daily.agg(count(lit(1)).cast("long").as("m"),
       sum(col("t")).cast("decimal(38,0)").as("st"),
       sum((col("t") * col("t")).cast("decimal(38,0)")).as("stt"),
@@ -2173,7 +2174,7 @@ object WindowQueries extends QueryModule {
       .select(col("m"), col("day"), col("t"), col("tbar"), col("sxx"),
         (d(col("y")) - col("icept") - col("slope") * d(col("t"))).as("e"))
       .withColumn("e2", col("e") * col("e"))
-      .localCheckpoint(eager = false) // s² fold + the per-day influence pass
+      .transform(Barrier.materialize) // s² fold + the per-day influence pass
     // order-free RSS (the w_granger_causality discipline): milli-
     // cent-floored residual squares summed exactly in decimal(38,0),
     // hi/lo-split back to double. A day-ascending double fold is
@@ -2397,7 +2398,7 @@ object WindowQueries extends QueryModule {
         col("l_quantity").cast("long").as("q"))
       .groupBy(col("brand"), col("mon"))
       .agg(sum(col("q")).cast("long").as("q"))
-      .localCheckpoint(eager = false) // spine + both series legs
+      .transform(Barrier.materialize) // spine + both series legs
     val spine = bl.select(col("mon")).distinct()
     def leg(brand: String, nm: String): DataFrame =
       spine.join(bl.filter(col("brand") === brand)
@@ -2592,7 +2593,7 @@ object WindowQueries extends QueryModule {
         .cast("long")).cast("long").as("y"))
       .withColumn("yl", lag(col("y"), 1).over(w))
       .filter(col("yl").isNotNull)
-      .localCheckpoint(eager = false) // moment row + residual pass
+      .transform(Barrier.materialize) // moment row + residual pass
     def q6(name: String): Column =
       expr(s"CAST($name div 1000000 AS BIGINT)").cast("double") *
         lit(1.0e6)
@@ -2653,7 +2654,7 @@ object WindowQueries extends QueryModule {
     // series folds as ONE array row per frequency — identical terms
     // in identical order to the former exploded day×frequency grid
     val pw = fourierPower(s, dir)
-      .localCheckpoint(eager = false) // total + share/entropy pass
+      .transform(Barrier.materialize) // total + share/entropy pass
     val tot = pw.agg(count(lit(1)).cast("long").as("kk"),
       expr("aggregate(sort_array(collect_list(struct(k, p))), 0D," +
         " (a, x) -> a + x.p)").as("tp"))
@@ -2698,7 +2699,7 @@ object WindowQueries extends QueryModule {
       .groupBy(col("o_orderdate").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")).cast("long").as("x"))
-      .localCheckpoint(eager = false) // moment row + the fold
+      .transform(Barrier.materialize) // moment row + the fold
     val mo = daily.agg(count(lit(1)).cast("long").as("n"),
       sum(col("x")).cast("decimal(38,0)").as("sx"),
       sum(col("x").cast("decimal(38,0)") * col("x"))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.functions.{IvfPq, Similarity}
 
 /** Persisted ANN index — the build-once/search-many serving shape a
@@ -55,7 +56,7 @@ object AnnIndex {
       nCells: Int = 16, m8: Int = 8): Unit = {
     val emb = Tables.table(s, sfDir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e"))
-      .localCheckpoint(eager = false)
+      .transform(Barrier.materialize)
     val idx = IvfPq.build(emb, nCells, m8)
     idx.coarse.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/coarse")
     idx.subCode.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/subcode")

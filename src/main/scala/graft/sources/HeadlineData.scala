@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Deterministic headline-pipeline tables derived from the driver's
   * `documents` parquet, so every pipeline operator (SURVEY §2) is
   * checkable against the DuckDB oracle: the SAME derivation exists
@@ -32,16 +34,14 @@ import org.apache.spark.sql.functions._
 object HeadlineData {
   val Today = "2024-01-03" // injectable CURRENT_DATE for F3-queries
 
-  /** Serving-layer shared-scan cache (the engine analog of the
-    * reference dashboard's `st.cache_data`, dashboard.py:35-148):
-    * every serve query reads the same derived silver, so memoize
-    * one cached plan per (session, dir) instead of re-deriving —
-    * this also avoids re-running the mock-index global window. */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+  /** Serving-layer shared scan (the engine analog of the reference
+    * dashboard's `st.cache_data`, dashboard.py:35-148): every serve
+    * query reads the same derived silver, so it is one [[graft.Barrier]]
+    * per (session, dir) in the [[Tables]] memo: released at application
+    * end, rebuilt after a lost block. */
   def silverCached(spark: SparkSession, sfDir: String): DataFrame =
-    memo.computeIfAbsent((spark, sfDir), _ => silver(spark, sfDir).cache())
+    Tables.memoized(spark, sfDir, "silver (derived)")(
+      Barrier.materialize(silver(spark, sfDir)))
 
   def bronze(spark: SparkSession, sfDir: String): DataFrame =
     Tables.table(spark, sfDir, "documents").select(

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
+import graft.Barrier
+
 /** Sink surface mirroring the reference (SURVEY §2.1):
   * S2 CSV sink (UTF-8, header), S5 full-replace bronze,
   * S6 key-idempotent append (ON CONFLICT DO NOTHING analog),
@@ -163,7 +165,7 @@ object Sinks {
     * conflict clause instead. Table existence is probed explicitly
     * via JDBC metadata — connection/auth failures propagate rather
     * than being mistaken for "table absent" and silently appending
-    * the whole batch. The anti-join is localCheckpointed before the
+    * the whole batch. The anti-join goes through a barrier before the
     * count so the remote key scan runs once, not once for count and
     * again for the write.
     */
@@ -178,7 +180,7 @@ object Sinks {
           .select(col(key))
         // materialize the survivor set once: count() and save() below
         // would otherwise each re-run the remote key scan + anti-join
-        batch.join(existing, Seq(key), "left_anti").localCheckpoint(eager = false)
+        batch.join(existing, Seq(key), "left_anti").transform(Barrier.materialize)
       }
     val n = fresh.count()
     if (n > 0)

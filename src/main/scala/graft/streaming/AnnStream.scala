@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.Barrier
 import graft.functions.Similarity
 import graft.sources.AnnIndex
 
@@ -41,7 +42,7 @@ object AnnStream {
       outPath: String, k: Int = 5, nProbe: Int = 4): StreamingQuery = {
     // read the static artifact ONCE; both frames are reused every
     // trigger (centroids are broadcast inside the search)
-    val cents = spark.read.parquet(s"$indexDir/centroids").localCheckpoint(eager = false)
+    val cents = spark.read.parquet(s"$indexDir/centroids").transform(Barrier.materialize)
     val assigned = spark.read.parquet(s"$indexDir/assignments")
       .select(col("vec_id"), col("e"), col("cell"))
     spark.readStream.schema(querySchema)

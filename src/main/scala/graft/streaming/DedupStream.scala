@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Barrier
 import graft.functions.{TextFunctions => TF}
 
 /** Streaming near-dup detection — the stream-static twin of
@@ -48,7 +49,7 @@ object DedupStream {
     * pipeline's maintained artifact, written bucketed on
     * (band, bucket). */
   def corpusIndex(corpus: DataFrame): CorpusIndex = {
-    val s = signed(corpus).localCheckpoint(eager = false)
+    val s = signed(corpus).transform(Barrier.materialize)
     CorpusIndex(banded(s), s.select(col("doc_id"), col("sh")))
   }
 
@@ -94,7 +95,7 @@ object DedupStream {
   def flagPairs(newDocs: DataFrame, index: CorpusIndex): DataFrame = {
     // one barrier per batch: both the band fan-out and the verify
     // side consume the signed frame
-    val s = signed(newDocs).localCheckpoint(eager = false)
+    val s = signed(newDocs).transform(Barrier.materialize)
     val cand = banded(s).alias("n")
       .join(index.bands.alias("o"),
         col("n.band") === col("o.band") && col("n.bucket") === col("o.bucket"))
@@ -132,7 +133,7 @@ object DedupStream {
     * REGARDLESS of arrival order or batch boundaries (the
     * StreamingSpec pin). Per-batch work stays linear in the batch:
     * the merged index is touched only through the (band, bucket)
-    * meet, and the merge is a union of ALREADY-checkpointed per-batch
+    * meet, and the merge is a union of ALREADY-materialized per-batch
     * legs — only the new batch's leg is materialized each trigger, so
     * per-batch cost never re-scans the accumulated index (the union
     * lineage grows one flat node per batch, never a recompute chain).
@@ -152,10 +153,10 @@ object DedupStream {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint(eager = false) // one materialization: index
+        val b = batch.transform(Barrier.materialize) // one materialization: index
         val bIdx = corpusIndex(b)       // merge AND the flag pass
-        // append WITHOUT re-checkpointing the old legs: corpusIndex
-        // already checkpointed the new batch's frames
+        // append WITHOUT re-materializing the old legs: corpusIndex
+        // already materialized the new batch's frames
         index =
           if (index == null) bIdx
           else CorpusIndex(

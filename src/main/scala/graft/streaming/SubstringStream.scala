@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Barrier
+
 /** Streaming twin of the exact-substring detector
   * (operators.DedupQueries.exactSubstringOf): documents arrive
   * continuously; each micro-batch merges its L-token anchor grams
@@ -25,7 +27,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Scale shape: per-batch work is the batch's grams joined against
   * matching postings (linear in the batch for bounded gram
   * fan-out); island windows partition by (pair, diagonal). Index
-  * frames are localCheckpointed per merge so lineage stays flat.
+  * frames go through a barrier per merge so lineage stays flat.
   */
 object SubstringStream {
   private val L = 10
@@ -81,9 +83,9 @@ object SubstringStream {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bg = grams(batch).localCheckpoint(eager = false)
+        val bg = grams(batch).transform(Barrier.materialize)
         index = if (index == null) bg
-          else index.unionAll(bg).localCheckpoint(eager = false)
+          else index.unionAll(bg).transform(Barrier.materialize)
         flagSpans(bg, index).write.mode("append").parquet(outPath)
         ()
       }

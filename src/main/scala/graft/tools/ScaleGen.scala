@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** sf1-equivalent corpus generator: a COPIES× key-shifted union of
@@ -20,14 +20,12 @@ import org.apache.spark.sql.functions._
   *
   * Usage: SPARK_GRAFT_SCALE_COPIES=10 sbt "runMain graft.tools.ScaleGen"
   *        → /tmp/graft_sfN/{table}.parquet
+  * SPARK_GRAFT_CPUS sizes local parallelism and shuffle partitions,
+  * as in Bench.
   */
 object ScaleGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session("ERROR")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT",

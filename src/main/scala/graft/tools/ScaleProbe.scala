@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Duplicate-blowup scale probe: build an N×-duplicated copy of the
@@ -10,14 +10,12 @@ import org.apache.spark.sql.functions._
   * so pair OUTPUT grows ~N² while candidate GENERATION must stay
   * ~linear (identical-set collapse + prefix filtering + LSH bands).
   * Usage: SPARK_GRAFT_SCALE_COPIES=10 sbt "runMain graft.tools.ScaleProbe"
+  * SPARK_GRAFT_CPUS sizes local parallelism and shuffle partitions,
+  * as in Bench.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session("ERROR")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val dir = s"/tmp/graft_scale_${copies}x"

@@ -86,16 +86,24 @@ class DedupSpec extends SparkTestBase {
 
   test("dup groups: local union-find and distributed propagation agree") {
     import spark.implicits._
-    // transitive chain spanning both directions + two isolated pairs
-    val pairs = Seq((5L, 9L), (1L, 9L), (2L, 3L), (20L, 21L), (3L, 7L))
-      .toDF("d1", "d2")
-    val local = Dedup.dupGroups(pairs)
-      .as[(Long, Long, Seq[Long])].collect().toSeq
-    val dist = Dedup.dupGroups(pairs, localEdgeThreshold = 0L)
-      .as[(Long, Long, Seq[Long])].collect().toSeq
-    assert(local == dist)
-    assert(local == Seq((1L, 3L, Seq(1L, 5L, 9L)), (2L, 3L, Seq(2L, 3L, 7L)),
-      (20L, 2L, Seq(20L, 21L))))
+    val cases = Seq(
+      // transitive chain spanning both directions + two isolated pairs
+      Seq((5L, 9L), (1L, 9L), (2L, 3L), (20L, 21L), (3L, 7L)) ->
+        Seq((1L, 3L, Seq(1L, 5L, 9L)), (2L, 3L, Seq(2L, 3L, 7L)),
+          (20L, 2L, Seq(20L, 21L))),
+      // a 16-node chain: its far end is 15 hops from the canonical
+      // id, so propagation must run to a fixpoint, not a round cap
+      (0L until 15L).map(i => (i, i + 1)) ->
+        Seq((0L, 16L, (0L to 15L).toSeq)))
+    cases.foreach { case (edges, expected) =>
+      val pairs = edges.toDF("d1", "d2")
+      val local = Dedup.dupGroups(pairs)
+        .as[(Long, Long, Seq[Long])].collect().toSeq
+      val dist = Dedup.dupGroups(pairs, localEdgeThreshold = 0L)
+        .as[(Long, Long, Seq[Long])].collect().toSeq
+      assert(local == expected, "driver union-find")
+      assert(dist == expected, "distributed propagation")
+    }
   }
 
   test("dup groups over planted minhash pairs keep doc 0 as canonical") {

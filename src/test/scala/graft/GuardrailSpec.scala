@@ -45,6 +45,25 @@ class GuardrailSpec extends AnyFunSuite {
         " — use Grain.bounded/Grain.whole (and verify the input is grain-sized)")
   }
 
+  test("materialization goes through Barrier (one policy point)") {
+    // Barrier.materialize is the one place that chooses how a frame
+    // is materialized (lazy local checkpoint today), so the policy
+    // can change in one file; a raw checkpoint/cache/persist
+    // anywhere else re-spreads it across call sites.
+    // Matched as words, so a call without parentheses is caught too.
+    val call = """\.(cache|persist|localCheckpoint|checkpoint|cacheTable)\b""".r
+    val sqlCache = """(?i)\bcache\s+(lazy\s+)?table\b""".r
+    val offenders = mainSources.collect {
+      case (p, src) if !p.endsWith("Barrier.scala") && {
+          val code = codeOnly(src)
+          call.findFirstIn(code).isDefined || sqlCache.findFirstIn(code).isDefined
+        } => p.toString
+    }
+    assert(offenders.isEmpty,
+      s"raw materialization call outside Barrier: ${offenders.mkString(", ")}" +
+        " — use Barrier.materialize")
+  }
+
   test("no driver-side collect on corpus-shaped paths (spot list)") {
     // collect() in main source is allowed only at documented bounded
     // seams (carry rows per partition, advisor grids, driver-stepped
@@ -57,8 +76,7 @@ class GuardrailSpec extends AnyFunSuite {
     val allowed = Map(
       "Ranking.scala" -> 3,        // P carry rows per range partition
       "Dedup.scala" -> 1,          // union-find arm, <=5M edges thresholded
-      "GraphQueries.scala" -> 3,   // dup-group union-find, same threshold;
-                                   // HITS edges + 40 top terms
+      "GraphQueries.scala" -> 2,   // HITS edges + 40 top terms
       "OpsQueries.scala" -> 1,     // encoding-advisor carries, 4096 cap
       "TextQueries.scala" -> 1,    // one-row logistic fit coefficients
       "SimilarityQueries.scala" -> 3, // k-center driver-stepped 1-row steps
@@ -66,7 +84,7 @@ class GuardrailSpec extends AnyFunSuite {
       "Reports.scala" -> 1,        // validation summary, report-sized
       "Sinks.scala" -> 1,          // batch's distinct partition values
       "Bench.scala" -> 1,          // benchmark main, driver tool
-      "PlanDump.scala" -> 1,       // plan-inspection tool, not a query
+      "Explain.scala" -> 1,        // plan-inspection tool, not a query
       // round-13 optimization seams — every one constant-bounded:
       "Selection.scala" -> 2,      // 1-row stats + <=nBuckets counts/pass
       "Similarity.scala" -> 1,     // collectCodebook: <=nCells (cid, ce)

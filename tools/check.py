@@ -34,6 +34,14 @@ def normalize(df):
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
+def mem_limit_mb():
+    """Half of this host's MemTotal, in MB."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 2048
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
 def main():
     if "--skip-verify" not in sys.argv:
         r = subprocess.run(
@@ -49,11 +57,12 @@ def main():
     # large-SF probes (the 10x ScaleGen corpus) push pair-emitting
     # oracles (sim_knn_graph's windowed n²/cells scoring) past RAM;
     # cap memory and let DuckDB spill instead of dying
-    # 64GB: high enough that every feasible oracle runs in RAM (the
-    # box has 128GB), low enough to spill instead of dying if one
-    # grows pathological
+    # half of MemTotal: high enough that every feasible oracle runs in
+    # RAM, low enough to leave the rest of the host (and the Spark
+    # JVM) room and to spill instead of dying if one grows
+    # pathological
     try:
-        con.execute("SET memory_limit='64GB'")
+        con.execute(f"SET memory_limit='{mem_limit_mb()}MB'")
         con.execute("SET temp_directory='/tmp/duckdb_spill'")
     except Exception:
         pass
