@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.enrich.{Enrich, Enricher}
 import graft.model.{RawHeadline, Schemas}
+import graft.sources.Tables
 
 /** Silver enrichment (reference entry point B, SURVEY §3.2):
   * anti-join pending detection → optional batch limit → enrich →
@@ -31,11 +32,9 @@ object EnrichJob {
       bronze("link") === col("raw_link"), "left_anti")
 
   private def readSilver(spark: SparkSession, path: String): DataFrame =
-    try spark.read.schema(Schemas.enriched).parquet(path)
-    catch { case _: org.apache.spark.sql.AnalysisException =>  // first run
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.enriched)
-    }
+    if (Tables.exists(spark, path)) spark.read.schema(Schemas.enriched).parquet(path)
+    else spark.createDataFrame( // first run
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.enriched)
 
   /** Returns number of newly enriched rows appended. Re-running with
     * the same bronze is a no-op (idempotence property, SURVEY §5).
@@ -44,7 +43,7 @@ object EnrichJob {
       enricher: Enricher, now: Timestamp,
       batchLimit: Option[Int] = None): Long = {
     import spark.implicits._
-    val bronze = spark.read.parquet(bronzePath)
+    val bronze = spark.read.schema(Schemas.raw).parquet(bronzePath)
     val silver = readSilver(spark, silverPath)
 
     val todo = {
@@ -52,11 +51,11 @@ object EnrichJob {
       val p = pending(bronze, silver).dropDuplicates("link")
       batchLimit.fold(p)(p.limit)  // reference batches 50 (llm_enricher.py:400-424)
     }
-    if (todo.isEmpty) return 0L    // Q1 pending-count gate (dag:80-108)
-
     val enriched = Enrich.enrichBatch(spark, todo.as[RawHeadline], enricher, now)
     // write-side conflict-skip (S6): guards keys that landed in the
-    // sink after the pending scan, mirroring ON CONFLICT DO NOTHING
+    // sink after the pending scan, mirroring ON CONFLICT DO NOTHING.
+    // It is also the Q1 pending-count gate (dag:80-108): an empty
+    // batch counts 0 and writes nothing.
     graft.sources.Sinks.appendDedup(enriched.toDF(), silverPath, "raw_link")
   }
 }

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Sinks, Tables}
@@ -42,11 +42,15 @@ object IngestJob {
       .drop("rn")
   }
 
+  /** Writes bronze and returns its row count, observed on the rows
+    * the write consumes (no re-read of the written files). */
   def run(spark: SparkSession, rawDir: String, bronzePath: String): Long = {
     val latest = Tables.latestFile(spark, rawDir)
       .getOrElse(throw new IllegalStateException(s"no csv under $rawDir"))
+    val written = Observation()
     val cleaned = clean(Tables.rawHeadlinesCsv(spark, latest))
+      .observe(written, count(lit(1)).as("rows"))
     Sinks.overwrite(cleaned, bronzePath)
-    spark.read.parquet(bronzePath).count()
+    written.get("rows").asInstanceOf[Long]
   }
 }

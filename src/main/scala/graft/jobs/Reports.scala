@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Data-quality / pipeline reporting (reference: Q2 validation suite
   * dags/g1_enrichement_dag.py:124-194; Q3 processing report
@@ -47,22 +48,37 @@ object Reports {
     ValidationReport(total, errors, avgConf, rate, warnings)
   }
 
-  /** Q3: processing summary + top-5 categories today (O4). */
+  /** Q3: processing summary + top-5 categories today (O4), in two
+    * actions. One grouping-set aggregate over silver: its grand-total
+    * row holds the totals and the average processing time, and its
+    * per-category rows hold today's counts, from which the top 5 are
+    * picked on the driver. One aggregate over bronze and its
+    * [[EnrichJob.pending]] anti-join counts raw and pending rows. */
   def summary(bronze: DataFrame, silver: DataFrame, today: LocalDate): ProcessingReport = {
-    val day = onDay(silver, today)
-    val top5 = day.filter(col("category") =!= "Erro")
-      .groupBy(col("category")).count()
-      .orderBy(desc("count"), col("category")).limit(5)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val stats = silver.agg(
-      count(lit(1)).as("total"),
-      round(avg(col("processing_time_seconds")), 3).as("avg_time")).head()
+    val isToday = to_date(col("processed_at")) === lit(java.sql.Date.valueOf(today))
+    val byCategory = silver.rollup(col("category"))
+      .agg(grouping_id().cast("long").as("gid"),
+        count(lit(1)).as("total"),
+        round(avg(col("processing_time_seconds")), 3).as("avg_time"),
+        count(when(isToday, 1)).as("today"))
+      .collect() // report-sized: categories + 1 rows
+    // no grand-total row when silver is empty
+    val grand = byCategory.find(_.getLong(1) == 1L)
+    val top5 = byCategory
+      .filter(r => r.getLong(1) == 0L && !r.isNullAt(0) &&
+        r.getString(0) != "Erro" && r.getLong(4) > 0)
+      .map(r => (r.getString(0), r.getLong(4))).toSeq
+      .sortBy { case (c, n) => (-n, UTF8String.fromString(c)) } // Spark's string order
+      .take(5)
+    val raw = bronze.select(lit(false).as("pending"))
+      .unionByName(EnrichJob.pending(bronze, silver).select(lit(true).as("pending")))
+      .agg(count(when(!col("pending"), 1)), count(when(col("pending"), 1))).head()
     ProcessingReport(
-      totalRaw = bronze.count(),
-      totalProcessed = stats.getLong(0),
-      processedToday = day.count(),
-      avgProcessingTime = if (stats.isNullAt(1)) None else Some(stats.getDouble(1)),
-      pending = EnrichJob.pending(bronze, silver).count(),
+      totalRaw = raw.getLong(0),
+      totalProcessed = grand.fold(0L)(_.getLong(2)),
+      processedToday = grand.fold(0L)(_.getLong(4)),
+      avgProcessingTime = grand.filterNot(_.isNullAt(3)).map(_.getDouble(3)),
+      pending = raw.getLong(1),
       topCategories = top5)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
 /** Declared-bounded window frames — the audit seam for every
@@ -37,4 +37,13 @@ object Grain {
     * declared grain-bounded input. */
   def whole: WindowSpec =
     Window.partitionBy()
+
+  /** A declared grain-bounded frame (an aggregate over a date range,
+    * say) gathered into one partition and sorted there. An `orderBy`
+    * would plan a range exchange, which costs a sampling job and a
+    * shuffle; a frame this small needs neither. The output is one
+    * partition, so windows over it (partitioned or [[bounded]]) plan
+    * no further exchange. */
+  def sortedBounded(df: DataFrame, sortCols: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(sortCols: _*)
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 import graft.Barrier
 
@@ -23,20 +24,26 @@ object Sinks {
   /** S6: append only rows whose `key` is absent from the sink —
     * first-write-wins like the reference's
     * `INSERT .. ON CONFLICT (raw_link) DO NOTHING`
-    * (scripts/llm_enricher.py:285-309). The probe reads a keys-only
-    * projection (column-pruned scan); new rows are deduped in-batch
-    * first. Returns rows appended.
+    * (scripts/llm_enricher.py:285-309). The probe reads only the key
+    * column, with its schema pinned so no footer-reading job runs;
+    * new rows are deduped in-batch first. The survivors go through a
+    * barrier: the count and the write read the stored rows, so `df`
+    * (an enrichment `mapPartitions`, say) runs once per row, and an
+    * empty batch writes nothing (not even an empty part file).
+    * Returns rows appended.
     */
   def appendDedup(df: DataFrame, path: String, key: String): Long = {
     val spark = df.sparkSession
     val batch = df.dropDuplicates(key)
     val fresh =
-      try {
-        val existing = spark.read.parquet(path).select(col(key))
+      if (!Tables.exists(spark, path)) batch
+      else {
+        val existing = spark.read.schema(StructType(Seq(df.schema(key)))).parquet(path)
         batch.join(existing, Seq(key), "left_anti")
-      } catch { case _: org.apache.spark.sql.AnalysisException => batch }
-    val n = fresh.count()
-    if (n > 0) fresh.write.mode(SaveMode.Append).parquet(path)
+      }
+    val stored = fresh.transform(Barrier.materialize)
+    val n = stored.count()
+    if (n > 0) stored.write.mode(SaveMode.Append).parquet(path)
     n
   }
 
@@ -65,14 +72,12 @@ object Sinks {
     val spark = df.sparkSession
     val batch = df.dropDuplicates(key)
     val (merged, replaced, nBatch) =
-      try {
+      if (Tables.exists(spark, path)) {
         val existing = spark.read.parquet(path)
         val keep = existing.join(batch.select(col(key)), Seq(key), "left_anti")
         val repl = existing.count() - keep.count()
         (keep.unionByName(batch), repl, batch.count())
-      } catch { case _: org.apache.spark.sql.AnalysisException =>
-        (batch, 0L, batch.count())
-      }
+      } else (batch, 0L, batch.count())
     val hconf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(path)
     val fs = dst.getFileSystem(hconf)
@@ -100,15 +105,13 @@ object Sinks {
     val parts = batch.select(col(partitionCol)).distinct()
       .collect().map(_.get(0)).toSeq // driver-bounded: days per batch
     val (merged, replaced, nBatch) =
-      try {
+      if (Tables.exists(spark, path)) {
         val touched = spark.read.parquet(path)
           .filter(col(partitionCol).isin(parts: _*)) // partition-pruned
         val keep = touched.join(batch.select(col(key)), Seq(key), "left_anti")
         val repl = touched.count() - keep.count()
         (keep.unionByName(batch), repl, batch.count())
-      } catch { case _: org.apache.spark.sql.AnalysisException =>
-        (batch, 0L, batch.count())
-      }
+      } else (batch, 0L, batch.count())
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {

@@ -107,6 +107,16 @@ object Tables {
     }
   }
 
+  /** Whether a sink has stored anything at `path` yet. Sinks probe
+    * this instead of catching the reader's AnalysisException on a
+    * first run: once a session has run an `Observation`
+    * ([[graft.jobs.IngestJob]]), Spark's observation listener logs
+    * every failed analysis as an ERROR with its stack trace. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** CSV bronze read with an explicit schema — never inferSchema
     * (determinism, SURVEY §1.2). Matches the reference's CSV form:
     * header `title,link,source,scraped_at`, UTF-8

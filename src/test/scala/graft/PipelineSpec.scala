@@ -2,11 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.graftbridge.JobCounter
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
-import graft.enrich.MockEnricher
-import graft.jobs.{EnrichJob, GoldJob, IngestJob, Reports}
-import graft.model.Domains
+import graft.enrich.{Enricher, MockEnricher}
+import graft.jobs.{EnrichJob, GoldJob, IngestJob, ProcessingReport, Reports}
+import graft.model.{Domains, Schemas}
 import graft.sources.Tables
 
 /** End-to-end pipeline over FIXTURES.md fixture A: the reference's
@@ -58,6 +60,93 @@ class PipelineSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$work/silver").count() == 5)
   }
 
+  test("enrich classifies each appended row once; a re-run classifies none and writes no file") {
+    val work = tmpDir()
+    writeFixtureCsv(s"$work/raw/headlines.csv")
+    IngestJob.run(spark, s"$work/raw", s"$work/bronze")
+    val now = Timestamp.valueOf("2024-03-01 09:00:00")
+    val calls = spark.sparkContext.longAccumulator("classify calls")
+    val counting = new CountingEnricher(calls)
+    assert(EnrichJob.run(spark, s"$work/bronze", s"$work/silver", counting, now) == 5)
+    assert(calls.value == 5, s"${calls.value} classify calls for 5 appended rows")
+    def files = new java.io.File(s"$work/silver").list().count(_.endsWith(".parquet"))
+    val before = files
+    calls.reset()
+    assert(EnrichJob.run(spark, s"$work/bronze", s"$work/silver", counting, now) == 0)
+    assert(calls.value == 0, s"${calls.value} classify calls on a re-run")
+    assert(files == before, "a re-run appending nothing added a file")
+  }
+
+  test("job budgets: ingest, enrich and summary") {
+    val work = tmpDir()
+    writeFixtureCsv(s"$work/raw/headlines.csv")
+    val now = Timestamp.valueOf("2024-03-01 09:00:00")
+    val (ingested, ingestJobs) =
+      JobCounter(spark)(IngestJob.run(spark, s"$work/raw", s"$work/bronze"))
+    assert(ingested == 5)
+    val (appended, enrichJobs) = JobCounter(spark)(
+      EnrichJob.run(spark, s"$work/bronze", s"$work/silver", MockEnricher, now))
+    assert(appended == 5)
+    val (_, rerunJobs) = JobCounter(spark)(
+      EnrichJob.run(spark, s"$work/bronze", s"$work/silver", MockEnricher, now))
+    val bronze = spark.read.schema(Schemas.raw).parquet(s"$work/bronze")
+    val silver = spark.read.schema(Schemas.enriched).parquet(s"$work/silver")
+    val (report, summaryJobs) = JobCounter(spark)(
+      Reports.summary(bronze, silver, java.time.LocalDate.of(2024, 3, 1)))
+    assert(report.totalRaw == 5 && report.pending == 0)
+    assert(ingestJobs <= 3, s"ingest ran $ingestJobs Spark jobs")
+    assert(enrichJobs <= 10, s"first enrich ran $enrichJobs Spark jobs")
+    assert(rerunJobs <= 9, s"re-run enrich ran $rerunJobs Spark jobs")
+    assert(summaryJobs <= 5, s"summary ran $summaryJobs Spark jobs")
+  }
+
+  test("summary over an empty silver reports zeros and no averages") {
+    val work = tmpDir()
+    writeFixtureCsv(s"$work/raw/headlines.csv")
+    IngestJob.run(spark, s"$work/raw", s"$work/bronze")
+    val bronze = spark.read.schema(Schemas.raw).parquet(s"$work/bronze")
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), Schemas.enriched)
+    val today = java.time.LocalDate.of(2024, 3, 1)
+    assert(Reports.summary(bronze, empty, today) ==
+      ProcessingReport(totalRaw = 5, totalProcessed = 0, processedToday = 0,
+        avgProcessingTime = None, pending = 5, topCategories = Seq.empty))
+    val v = Reports.validate(empty, today)
+    assert(v.totalToday == 0 && v.errorsToday == 0 && v.avgConfidence.isEmpty &&
+      v.warnings.isEmpty)
+  }
+
+  test("summary equals its per-scalar queries on null links, duplicate keys and ties") {
+    import spark.implicits._
+    val today = java.time.LocalDate.of(2024, 3, 2)
+    val t0 = Timestamp.valueOf("2024-03-01 10:00:00")
+    val t1 = Timestamp.valueOf("2024-03-02 10:00:00")
+    val bronze = Seq(("a", t0), ("b", t0), ("b", t0), ("c", t0), (null, t0), ("z", t1))
+      .toDF("link", "scraped_at")
+      .select(lit("title").as("title"), col("link"), lit("G1").as("source"), col("scraped_at"))
+    // key "a" twice, a null key, an 'Erro' and a null category, and count ties
+    val silverRows = Seq(("a", "Economia", t1, 1.0), ("a", "Economia", t1, 2.0),
+      ("b", "Política", t0, 4.0), (null, "Erro", t1, 0.5), ("d", null, t1, 0.25),
+      ("e", "Esportes", t1, 1.0), ("f", "Cultura", t1, 1.0), ("g", "Saúde", t1, 1.0),
+      ("h", "Tecnologia", t1, 1.0), ("i", "Política", t1, 1.0), ("j", "Ciência", t1, 1.0))
+    val silver = silverRows.toDF("raw_link", "category", "processed_at", "processing_time_seconds")
+      .withColumn("sentiment", lit("Neutra"))
+    val day = silver.filter(to_date(col("processed_at")) === lit(java.sql.Date.valueOf(today)))
+    val stats = silver.agg(count(lit(1)), round(avg(col("processing_time_seconds")), 3)).head()
+    val expected = ProcessingReport(
+      totalRaw = bronze.count(),
+      totalProcessed = stats.getLong(0),
+      processedToday = day.count(),
+      avgProcessingTime = Some(stats.getDouble(1)),
+      pending = EnrichJob.pending(bronze, silver).count(),
+      topCategories = day.filter(col("category") =!= "Erro")
+        .groupBy(col("category")).count()
+        .orderBy(desc("count"), col("category")).limit(5)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
+    assert(expected.pending == 3 && expected.topCategories.head == ("Economia", 2L))
+    assert(Reports.summary(bronze, silver, today) == expected)
+  }
+
   test("ingest cleaning: short titles dropped, relative urls normalized, dupes removed") {
     val work = tmpDir()
     val rows = Seq(
@@ -72,6 +161,15 @@ class PipelineSpec extends SparkTestBase {
     assert(bronze.count() == 2)
     val links = bronze.select("link").collect().map(_.getString(0)).toSet
     assert(links.contains("https://g1.globo.com/economia/news1"))
+  }
+
+  test("ingest of a drop with no surviving rows counts 0 and writes an empty bronze") {
+    Seq(Seq("short,https://site/x2,G1,2024-03-01T08:00:00.000000"), Seq.empty).foreach { rows =>
+      val work = tmpDir()
+      writeCsv(s"$work/raw/h.csv", rows)
+      assert(IngestJob.run(spark, s"$work/raw", s"$work/bronze") == 0)
+      assert(spark.read.schema(Schemas.raw).parquet(s"$work/bronze").count() == 0)
+    }
   }
 
   test("validation report thresholds and summary counts") {
@@ -155,6 +253,14 @@ class PipelineSpec extends SparkTestBase {
 }
 
 object PipelineSpec {
+  /** The mock enricher, counting its `classify` calls. */
+  final class CountingEnricher(calls: LongAccumulator) extends Enricher {
+    override def classify(title: String, rowIndex: Long): (String, String, Double) = {
+      calls.add(1)
+      MockEnricher.classify(title, rowIndex)
+    }
+  }
+
   /** FIXTURES.md fixture A — the reference's 5 test headlines. */
   val fixtureTitles: Seq[String] = Seq(
     "Economia brasileira cresce 2.5% no terceiro trimestre",
