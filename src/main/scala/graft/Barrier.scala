@@ -32,6 +32,14 @@ import org.apache.spark.sql.graftbridge.BlockBridge
   * ContextCleaner frees its blocks once the returned DataFrame is
   * unreachable.
   *
+  * What the planner sees: a barrier's scan reports
+  * `UnknownPartitioning` (PlanSpec pins it), whatever partitioning
+  * the stored frame had. A keyed aggregate, join or window over a
+  * barrier re-shuffles, and a `coalesce(1)` put before the barrier is
+  * lost to the planner; put it after ([[operators.Grain.storedBounded]]).
+  * The stored partitions themselves keep their index and row order,
+  * which [[operators.Ranking]] numbers rows by.
+  *
   * Failure model, as it stands:
   *  - the blocks live in executor storage and are not replicated, so
   *    losing an executor that holds one fails the query instead of

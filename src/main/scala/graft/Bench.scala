@@ -106,6 +106,12 @@ object Bench {
     // regardless of budget: an unmeasured query is a void record,
     // strictly worse than a cold one.
     selected.foreach { case (name, fn) => runOnce(name, fn) }
+    // generated classes compiled so far: a warm pass that compiles
+    // again has outgrown the session's codegen cache (LocalSpark)
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+    val pass1Compiles = compiles
     // pass 2: second rep, budget-gated per launch, GATE-RISK-FIRST.
     // After pass 1 we KNOW each query's cold time, so we know
     // exactly which queries the regression gate would flag if the
@@ -267,7 +273,7 @@ object Bench {
         ",",
         s"""},"median":${jmap(medians)},"gc_sec":${jmap(gcByQ)},"persisted_rdds":${
           byTime.map { case (k, _) => "\"" + k + "\":" + rddCensus.getOrElse(k, -1) }
-            .mkString("{", ",", "}")}}""")
+            .mkString("{", ",", "}")},"codegen_compiles":{"pass1":$pass1Compiles,"later":${compiles - pass1Compiles}}}""")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailPath), detailJson + "\n")
     catch { case _: Throwable => () }

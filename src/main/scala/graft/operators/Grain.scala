@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
+import graft.Barrier
+
 /** Declared-bounded window frames — the audit seam for every
   * unpartitioned window in the engine.
   *
@@ -46,4 +48,14 @@ object Grain {
     * no further exchange. */
   def sortedBounded(df: DataFrame, sortCols: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(sortCols: _*)
+
+  /** A declared grain-bounded frame computed once and read as one
+    * partition by every consumer: stored through [[graft.Barrier]],
+    * then coalesced. The coalesce goes after the barrier: a barrier's
+    * scan reports `UnknownPartitioning`, so a coalesce before it would
+    * be lost and the next aggregate would plan an exchange. Over the
+    * result, aggregates and windows (partitioned or [[bounded]]) plan
+    * no exchange. */
+  def storedBounded(df: DataFrame): DataFrame =
+    df.transform(Barrier.materialize).coalesce(1)
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
 import org.apache.spark.sql.types.StructType
 
 import graft.Barrier
@@ -28,9 +28,10 @@ object Sinks {
     * column, with its schema pinned so no footer-reading job runs;
     * new rows are deduped in-batch first. The survivors go through a
     * barrier: the count and the write read the stored rows, so `df`
-    * (an enrichment `mapPartitions`, say) runs once per row, and an
-    * empty batch writes nothing (not even an empty part file).
-    * Returns rows appended.
+    * runs once per row, and an empty batch writes nothing (not even
+    * an empty part file). Returns rows appended. Enrichment does not
+    * come here: it skips known keys before classifying
+    * ([[graft.enrich.Enrich.appendFresh]]).
     */
   def appendDedup(df: DataFrame, path: String, key: String): Long = {
     val spark = df.sparkSession
@@ -54,11 +55,13 @@ object Sinks {
     * (old rows whose key is absent from the batch) ∪ (the batch,
     * in-batch deduped on `key`). Returns (replaced, inserted).
     *
-    * Mechanics: the merge output is materialized to a staging dir
-    * FIRST (the union plan lazily reads the live sink — overwriting
-    * in place would corrupt the read), then swapped in with two FS
-    * renames. Idempotent: re-running the same batch replaces rows
-    * with identical content.
+    * Mechanics: the deduped batch goes through a barrier, so `df` (an
+    * enrichment `mapPartitions`, say) runs once per row however many
+    * jobs read the batch. The merge output is materialized to a
+    * staging dir FIRST (the union plan lazily reads the live sink —
+    * overwriting in place would corrupt the read), then swapped in
+    * with two FS renames. Idempotent: re-running the same batch
+    * replaces rows with identical content.
     *
     * Scale note: this variant rewrites the WHOLE sink — correct but
     * O(sink) per batch. At 100 TB use [[upsertReplacePartitioned]],
@@ -70,23 +73,19 @@ object Sinks {
   def upsertReplace(df: DataFrame, path: String, key: String)
       : (Long, Long) = {
     val spark = df.sparkSession
-    val batch = df.dropDuplicates(key)
-    val (merged, replaced, nBatch) =
-      if (Tables.exists(spark, path)) {
-        val existing = spark.read.parquet(path)
-        val keep = existing.join(batch.select(col(key)), Seq(key), "left_anti")
-        val repl = existing.count() - keep.count()
-        (keep.unionByName(batch), repl, batch.count())
-      } else (batch, 0L, batch.count())
+    val batch = df.dropDuplicates(key).transform(Barrier.materialize)
+    val existing =
+      if (Tables.exists(spark, path)) Some(spark.read.parquet(path)) else None
+    val counts = mergeCounts(batch, existing, key)
     val hconf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(path)
     val fs = dst.getFileSystem(hconf)
     val tmp = new org.apache.hadoop.fs.Path(path + "__upsert_staging")
     fs.delete(tmp, true)
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    merged(batch, existing, key).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     fs.delete(dst, true)
     fs.rename(tmp, dst)
-    (replaced, nBatch - replaced)
+    counts
   }
 
   /** Partition-pruned MERGE (the 100 TB shape of [[upsertReplace]]):
@@ -96,22 +95,20 @@ object Sinks {
     * dynamic partition overwrite — untouched partitions' files are
     * never read or rewritten. The batch's distinct partition values
     * are collected to the driver (bounded: a batch touches few
-    * partitions — days, typically). Returns (replaced, inserted).
+    * partitions — days, typically). The deduped batch goes through a
+    * barrier, as in [[upsertReplace]]. Returns (replaced, inserted).
     */
   def upsertReplacePartitioned(df: DataFrame, path: String, key: String,
       partitionCol: String): (Long, Long) = {
     val spark = df.sparkSession
-    val batch = df.dropDuplicates(key)
+    val batch = df.dropDuplicates(key).transform(Barrier.materialize)
     val parts = batch.select(col(partitionCol)).distinct()
       .collect().map(_.get(0)).toSeq // driver-bounded: days per batch
-    val (merged, replaced, nBatch) =
-      if (Tables.exists(spark, path)) {
-        val touched = spark.read.parquet(path)
-          .filter(col(partitionCol).isin(parts: _*)) // partition-pruned
-        val keep = touched.join(batch.select(col(key)), Seq(key), "left_anti")
-        val repl = touched.count() - keep.count()
-        (keep.unionByName(batch), repl, batch.count())
-      } else (batch, 0L, batch.count())
+    val touched =
+      if (!Tables.exists(spark, path)) None
+      else Some(spark.read.parquet(path)
+        .filter(col(partitionCol).isin(parts: _*))) // partition-pruned
+    val counts = mergeCounts(batch, touched, key)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
@@ -120,7 +117,7 @@ object Sinks {
       val tmp = new org.apache.hadoop.fs.Path(path + "__upsert_staging")
       val fs = tmp.getFileSystem(hconf)
       fs.delete(tmp, true)
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      merged(batch, touched, key).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       spark.read.parquet(tmp.toString)
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCol).parquet(path)
@@ -133,8 +130,27 @@ object Sinks {
           spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
     }
-    (replaced, nBatch - replaced)
+    counts
   }
+
+  /** (replaced, inserted) of merging the deduped `batch` into
+    * `existing`, from one aggregate: replaced = rows of `existing`
+    * whose key is in the batch, inserted = batch rows - replaced. */
+  private def mergeCounts(batch: DataFrame, existing: Option[DataFrame],
+      key: String): (Long, Long) = existing match {
+    case None => (0L, batch.count())
+    case Some(e) =>
+      val hits = e.groupBy(col(key)).agg(count(lit(1)).as("__hits"))
+      val r = batch.select(col(key)).join(hits, Seq(key), "left")
+        .agg(count(lit(1)), coalesce(sum(col("__hits")), lit(0L))).head()
+      (r.getLong(1), r.getLong(0) - r.getLong(1))
+  }
+
+  /** Rows of `existing` whose key is absent from `batch`, plus `batch`. */
+  private def merged(batch: DataFrame, existing: Option[DataFrame],
+      key: String): DataFrame =
+    existing.fold(batch)(e =>
+      e.join(batch.select(col(key)), Seq(key), "left_anti").unionByName(batch))
 
   /** S5 (JDBC form): full-replace load into a relational table —
     * the reference's pandas `to_sql(..., if_exists='replace')` bronze

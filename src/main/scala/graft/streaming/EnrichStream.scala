@@ -11,13 +11,15 @@ import graft.sources.Sinks
 
 /** The enrichment pipeline as a true Structured Stream: new raw-CSV
   * files are the stream, each micro-batch runs the same
-  * enrich-then-idempotent-append used by the batch EnrichJob
-  * (`foreachBatch` is the escape hatch for sinks with merge
-  * semantics). `Trigger.AvailableNow` reproduces the reference's
-  * daily cron exactly; a processing-time trigger makes it continuous
-  * with no code change. Re-delivered or overlapping files are
-  * neutralized by the key-idempotent sink, so the pipeline is
-  * effectively exactly-once on `raw_link`.
+  * idempotent append as the batch EnrichJob
+  * ([[Enrich.appendFresh]]; `foreachBatch` is the escape hatch for
+  * sinks with merge semantics). `Trigger.AvailableNow` reproduces the
+  * reference's daily cron exactly; a processing-time trigger makes it
+  * continuous with no code change. Rows of re-delivered or
+  * overlapping files are skipped on their keys before classification,
+  * so the pipeline is effectively exactly-once on `raw_link` and a
+  * re-delivery classifies nothing. Single writer per silver path, as
+  * for [[graft.jobs.EnrichJob]].
   */
 object EnrichStream {
   def start(spark: SparkSession, rawDir: String, silverPath: String,
@@ -30,11 +32,8 @@ object EnrichStream {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        import batch.sparkSession.implicits._
-        val cleaned = graft.jobs.IngestJob.clean(batch)
-        val enriched = Enrich.enrichBatch(batch.sparkSession,
-          cleaned.as[RawHeadline], enricher, now())
-        Sinks.appendDedup(enriched.toDF(), silverPath, "raw_link")
+        Enrich.appendFresh(graft.jobs.IngestJob.clean(batch), silverPath,
+          enricher, now())
         ()
       }
       .start()

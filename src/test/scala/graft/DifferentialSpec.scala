@@ -225,6 +225,53 @@ class DifferentialSpec extends SparkTestBase {
     assert(fastC == naiveC, "global cumsum")
   }
 
+  test("ranking kernels equal the single-partition window forms on skewed, tiny and empty inputs") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.Ranking
+    def byId(df: DataFrame, c: String): Map[Long, Long] =
+      df.select(col("id"), col(c)).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def check(label: String, df: DataFrame, sortCols: Column*): Unit = {
+      val w = Window.orderBy(sortCols: _*)
+      val ref = df
+        .withColumn("rk", row_number().over(w).cast("long"))
+        .withColumn("run", sum(col("delta")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("prevmin", coalesce(min(col("v")).over(
+          w.rowsBetween(Window.unboundedPreceding, -1)), lit(Long.MaxValue)))
+      assert(byId(Ranking.withGlobalRank(df, "rk", sortCols: _*), "rk") ==
+        byId(ref, "rk"), s"$label: global rank")
+      assert(byId(Ranking.withGlobalCumSums(df, Seq("delta" -> "run"), sortCols: _*), "run") ==
+        byId(ref, "run"), s"$label: global cumsum")
+      assert(byId(Ranking.withGlobalCumMinExclusive(df, "v", "prevmin", sortCols: _*),
+        "prevmin") == byId(ref, "prevmin"), s"$label: global exclusive cummin")
+    }
+    val rnd = new scala.util.Random(31)
+    // nine rows in ten share key 7: range bounds split that key across
+    // partitions, so only the tiebreak orders it
+    val skewed = (0 until 2000).map(i =>
+        (if (rnd.nextInt(10) < 9) 7L else rnd.nextInt(100).toLong,
+          rnd.nextInt(11).toLong - 5L, rnd.nextInt(1000).toLong, i.toLong))
+      .toDF("k", "delta", "v", "id").repartition(5).localCheckpoint()
+    check("skewed keys", skewed, col("k"), col("id"))
+    check("descending tiebreak", skewed, col("k"), col("id").desc)
+    check("empty input", skewed.filter(col("id") < 0), col("k"), col("id"))
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try check("more partitions than rows", skewed.filter(col("id") < 5), col("k"), col("id"))
+    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // one row per key, ranked in key order: the dedup the enrichment
+    // append runs on its range partitions
+    for (df <- Seq(skewed, skewed.filter(col("id") < 0))) {
+      val keys = df.select("k").distinct().collect().map(_.getLong(0)).sorted
+      val distinct = Ranking.distinctRanges(df, "k")
+      assert(distinct.rows == keys.length)
+      assert(distinct.withRank("rk").select("k", "rk").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted ==
+        keys.toSeq.zip(1L to keys.length.toLong), "distinct ranks")
+    }
+  }
+
   test("tolerance as-of equals the naive bounded argmax, both directions") {
     val rnd = new scala.util.Random(11)
     val left = (0 until 200).map(i =>

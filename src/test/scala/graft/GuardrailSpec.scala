@@ -74,7 +74,7 @@ class GuardrailSpec extends AnyFunSuite {
         "\\.collect\\(\\)".r.findAllIn(codeOnly(src)).size
     }.filter(_._2 > 0).toMap
     val allowed = Map(
-      "Ranking.scala" -> 3,        // P carry rows per range partition
+      "Ranking.scala" -> 1,        // P carry rows per range partition
       "Dedup.scala" -> 1,          // union-find arm, <=5M edges thresholded
       "GraphQueries.scala" -> 2,   // HITS edges + 40 top terms
       "OpsQueries.scala" -> 1,     // encoding-advisor carries, 4096 cap

@@ -77,6 +77,21 @@ class PipelineSpec extends SparkTestBase {
     assert(files == before, "a re-run appending nothing added a file")
   }
 
+  test("a batch limit appends the first n fresh links per run, each classified once") {
+    val work = tmpDir()
+    writeFixtureCsv(s"$work/raw/headlines.csv")
+    IngestJob.run(spark, s"$work/raw", s"$work/bronze")
+    val now = Timestamp.valueOf("2024-03-01 09:00:00")
+    val calls = spark.sparkContext.longAccumulator("limited classify calls")
+    def run() = EnrichJob.run(spark, s"$work/bronze", s"$work/silver",
+      new CountingEnricher(calls), now, batchLimit = Some(2))
+    assert(Seq(run(), run(), run(), run()) == Seq(2L, 2L, 1L, 0L))
+    assert(calls.value == 5, s"${calls.value} classify calls for 5 appended rows")
+    val links = spark.read.parquet(s"$work/silver").select("raw_link")
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(links == (0 until 5).map(i => s"https://exemplo.com/noticia-$i"))
+  }
+
   test("job budgets: ingest, enrich and summary") {
     val work = tmpDir()
     writeFixtureCsv(s"$work/raw/headlines.csv")
@@ -95,9 +110,74 @@ class PipelineSpec extends SparkTestBase {
       Reports.summary(bronze, silver, java.time.LocalDate.of(2024, 3, 1)))
     assert(report.totalRaw == 5 && report.pending == 0)
     assert(ingestJobs <= 3, s"ingest ran $ingestJobs Spark jobs")
-    assert(enrichJobs <= 10, s"first enrich ran $enrichJobs Spark jobs")
-    assert(rerunJobs <= 9, s"re-run enrich ran $rerunJobs Spark jobs")
+    assert(enrichJobs <= 4, s"first enrich ran $enrichJobs Spark jobs")
+    assert(rerunJobs <= 4, s"re-run enrich ran $rerunJobs Spark jobs")
     assert(summaryJobs <= 5, s"summary ran $summaryJobs Spark jobs")
+    // an incremental day: a new drop overlapping silver by two links
+    writeCsv(s"$work/raw2/headlines.csv", (3 to 8).map(i =>
+      s"Manchete incremental número $i bem longa,https://exemplo.com/noticia-$i,G1,2024-03-02T08:00:00.000000"))
+    IngestJob.run(spark, s"$work/raw2", s"$work/bronze")
+    val (incr, incrJobs) = JobCounter(spark)(EnrichJob.run(spark, s"$work/bronze",
+      s"$work/silver", MockEnricher, Timestamp.valueOf("2024-03-02 09:00:00")))
+    assert(incr == 4)
+    assert(incrJobs <= 5, s"incremental enrich ran $incrJobs Spark jobs")
+  }
+
+  test("gold job budget: one aggregate, two writes") {
+    val work = tmpDir()
+    writeFixtureCsv(s"$work/raw/headlines.csv")
+    IngestJob.run(spark, s"$work/raw", s"$work/bronze")
+    EnrichJob.run(spark, s"$work/bronze", s"$work/silver", MockEnricher,
+      Timestamp.valueOf("2024-03-01 09:00:00"))
+    val silver = spark.read.schema(Schemas.enriched).parquet(s"$work/silver")
+    val (_, goldJobs) = JobCounter(spark)(GoldJob.run(silver, s"$work/gold"))
+    assert(goldJobs <= 3, s"gold ran $goldJobs Spark jobs")
+    val stg = GoldJob.staging(silver)
+    def rows(t: String) = spark.read.parquet(s"$work/gold/$t").collect().map(_.toSeq).toSet
+    def expected(df: org.apache.spark.sql.DataFrame) =
+      df.select((df.columns.filterNot(_ == "analysis_date") :+ "analysis_date").toIndexedSeq.map(col): _*)
+        .collect().map(_.toSeq).toSet
+    assert(rows("daily_sentiment_analysis") == expected(GoldJob.dailySentiment(stg)))
+    assert(rows("daily_category_analysis") == expected(GoldJob.dailyCategory(stg)))
+  }
+
+  test("gold tables, built from the grain or per row, equal the conditional counts") {
+    import spark.implicits._
+    // null links, an 'Erro' sentiment, a null sentiment, a null
+    // category and two days: where a sum of grain counts could drift
+    // from a per-row count
+    val t1 = Timestamp.valueOf("2024-03-01 09:00:00")
+    val t2 = Timestamp.valueOf("2024-03-02 23:59:59")
+    val silver = Seq[(String, String, String, Timestamp)](
+      ("a", "Positiva", "Economia", t1), (null, "Positiva", "Economia", t1),
+      ("b", "Negativa", "Esportes", t1), ("c", "Erro", "Erro", t1),
+      ("d", "Neutra", null, t1), (null, "Neutra", "Esportes", t2),
+      ("e", "Negativa", "Economia", t2), ("f", null, "Economia", t2))
+      .toDF("link", "sentiment", "category", "processed_at")
+      .withColumn("title", lit("t")).withColumn("scraped_at", col("processed_at"))
+    val stg = GoldJob.staging(silver)
+    val day = to_date(col("processed_timestamp")).as("analysis_date")
+    val sentimentRef = stg.groupBy(day)
+      .agg(
+        count(when(col("sentiment") === "Positiva", 1)).as("positive_headlines"),
+        count(when(col("sentiment") === "Negativa", 1)).as("negative_headlines"),
+        count(when(col("sentiment") === "Neutra", 1)).as("neutral_headlines"),
+        count(col("headline_link")).as("total_headlines"))
+    val categoryRef = stg.filter(col("category").isNotNull)
+      .groupBy(day, col("category"))
+      .agg(count(col("headline_link")).as("category_count"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.toIndexedSeq.map(col): _*).collect().map(_.toSeq).toSet
+    val work = tmpDir()
+    GoldJob.run(silver, work)
+    val builtSentiment = spark.read.parquet(s"$work/daily_sentiment_analysis")
+    val builtCategory = spark.read.parquet(s"$work/daily_category_analysis")
+    assert(GoldJob.dailySentiment(stg).schema == sentimentRef.schema)
+    assert(rows(GoldJob.dailySentiment(stg)) == rows(sentimentRef))
+    assert(rows(builtSentiment) == rows(sentimentRef))
+    assert(rows(GoldJob.dailyCategory(stg).drop("category_percentage")) == rows(categoryRef))
+    assert(rows(builtCategory.drop("category_percentage")) == rows(categoryRef))
+    assert(rows(builtCategory) == rows(GoldJob.dailyCategory(stg)))
   }
 
   test("summary over an empty silver reports zeros and no averages") {

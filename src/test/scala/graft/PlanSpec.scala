@@ -567,9 +567,12 @@ class PlanSpec extends SparkTestBase {
     // (order by link) - 1`, SURVEY §7.5) used to plan a
     // single-reducer global Window over the whole bronze corpus —
     // the parity pipeline's one genuine 100×-scale killer (round-12
-    // verdict #2). It now goes through Ranking.withGlobalRank
-    // (range-partition + per-pid local rank + carried offsets);
-    // this pin fails if anyone reintroduces a corpus-wide window.
+    // verdict #2). It now goes through Ranking.sortedRanges (stored
+    // sorted range partitions, each row numbered in place plus its
+    // partition's carried offset), the path Enrich.appendFresh
+    // classifies and writes from; this pin fails if anyone
+    // reintroduces a corpus-wide window or any exchange after the
+    // range partitioning.
     import spark.implicits._
     val now = java.sql.Timestamp.valueOf("2024-05-01 12:00:00")
     val bronze = (1 to 64).map(i =>
@@ -578,18 +581,35 @@ class PlanSpec extends SparkTestBase {
     val out = graft.enrich.Enrich
       .enrichBatch(spark, bronze, graft.enrich.MockEnricher, now)
     val p = planOf(out.toDF())
-    val detail = p.linesIterator
-      .filter(_.contains("Arguments: [")).mkString("\n")
-    assert(!detail.contains("windowspecdefinition(") ||
-      detail.contains("windowspecdefinition(__pid"),
-      s"enrichBatch: rank window must partition by the range pid:\n$p")
+    assert(!p.linesIterator.exists(_.matches(""".*\bWindow \(\d+\).*""")),
+      s"enrichBatch: no window allowed, partition-less or not:\n$p")
     assert(!p.linesIterator.exists(l =>
       l.contains("Arguments: SinglePartition") && l.contains("Exchange")),
       s"enrichBatch: no single-partition exchange allowed:\n$p")
+    assert(!p.contains("Exchange"),
+      s"enrichBatch: the stored range partitions are numbered in place:\n$p")
     // the index contract itself: 0-based, dense, ordered by link
     val idx = out.collect().sortBy(_.link)
     assert(idx.map(_.sentiment).toSeq ==
       (0 until 64).map(i => graft.model.Domains.sentiments(i % 3)))
+  }
+
+  test("a barrier's scan reports no partitioning; Grain.storedBounded reads as one partition") {
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import graft.operators.Grain
+    val keyed = spark.range(200).withColumn("k", col("id") % 7).repartition(4, col("k"))
+    val stored = Barrier.materialize(keyed)
+    assert(stored.queryExecution.executedPlan.outputPartitioning
+      .isInstanceOf[UnknownPartitioning])
+    assert(planOf(stored.groupBy(col("k")).count()).contains("Exchange"),
+      "a keyed aggregate over a barrier re-shuffles")
+    val grain = Grain.storedBounded(keyed.groupBy(col("k")).count())
+    val p = planOf(grain.groupBy((col("k") % 2).as("odd")).agg(sum(col("count")).as("n"))
+      .withColumn("share", col("n") / sum(col("n")).over(Window.partitionBy(col("odd") * 0))))
+    assert(!p.contains("Exchange"),
+      s"aggregates and windows over Grain.storedBounded plan no exchange:\n$p")
   }
 
   test("t_mixture_sample / t_stratified_sample: map-side top-k, no stratum-wide window") {

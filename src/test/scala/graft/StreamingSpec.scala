@@ -136,6 +136,50 @@ class StreamingSpec extends SparkTestBase {
     assert(silver.select("raw_link").distinct().count() == 8)
   }
 
+  test("streaming enrich restarted over appended files classifies and appends nothing") {
+    val dir = tmpDir()
+    PipelineSpec.writeCsv(s"$dir/raw/b1.csv", (0 to 4).map(i =>
+      s"A streaming headline number $i long enough,https://ex.com/r$i,G1,2024-03-01T08:00:00.000000"))
+    val calls = spark.sparkContext.longAccumulator("stream classify calls")
+    def run(): Unit = {
+      // no checkpoint location: a restart re-delivers every file
+      val q = graft.streaming.EnrichStream.start(spark, s"$dir/raw",
+        s"$dir/silver", new PipelineSpec.CountingEnricher(calls),
+        () => java.sql.Timestamp.valueOf("2024-03-01 09:00:00"))
+      q.processAllAvailable()
+      q.stop()
+    }
+    def files = new java.io.File(s"$dir/silver").list().count(_.endsWith(".parquet"))
+    run()
+    assert(calls.value == 5, s"${calls.value} classify calls for 5 rows")
+    val before = files
+    calls.reset()
+    run()
+    assert(calls.value == 0, s"${calls.value} classify calls on a re-delivery")
+    assert(files == before, "a re-delivery appending nothing added a file")
+    assert(spark.read.parquet(s"$dir/silver").count() == 5)
+  }
+
+  test("streaming upsert enrich classifies each delivered row once") {
+    val dir = tmpDir()
+    val calls = spark.sparkContext.longAccumulator("upsert classify calls")
+    def deliver(raw: String, day: Int): Unit = {
+      PipelineSpec.writeCsv(s"$dir/$raw/b.csv", (0 to 4).map(i =>
+        s"An upserted headline number $i long enough,https://ex.com/v$i,G1,2024-03-0${day}T08:00:00.000000"))
+      val q = graft.streaming.EnrichStream.startUpsert(spark, s"$dir/$raw",
+        s"$dir/silver", new PipelineSpec.CountingEnricher(calls),
+        () => java.sql.Timestamp.valueOf(s"2024-03-0$day 09:00:00"))
+      q.processAllAvailable()
+      q.stop()
+    }
+    deliver("raw1", 1)
+    assert(calls.value == 5, s"${calls.value} classify calls on the first delivery")
+    calls.reset()
+    deliver("raw2", 2)
+    assert(calls.value == 5, s"${calls.value} classify calls on a re-delivery")
+    assert(spark.read.parquet(s"$dir/silver").count() == 5)
+  }
+
   test("streaming upsert enrich: re-delivered UPDATED content replaces in place") {
     val dir = tmpDir()
     PipelineSpec.writeCsv(s"$dir/raw/b1.csv", (0 to 4).map(i =>
