@@ -36,7 +36,7 @@ import org.apache.spark.sql.graftbridge.BlockBridge
   * `UnknownPartitioning` (PlanSpec pins it), whatever partitioning
   * the stored frame had. A keyed aggregate, join or window over a
   * barrier re-shuffles, and a `coalesce(1)` put before the barrier is
-  * lost to the planner; put it after ([[operators.Grain.storedBounded]]).
+  * lost to the planner; put it after ([[Grain.storedBounded]]).
   * The stored partitions themselves keep their index and row order,
   * which [[operators.Ranking]] numbers rows by.
   *

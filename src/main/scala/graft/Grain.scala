@@ -1,9 +1,7 @@
-package graft.operators
+package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
-
-import graft.Barrier
 
 /** Declared-bounded window frames — the audit seam for every
   * unpartitioned window in the engine.
@@ -11,7 +9,7 @@ import graft.Barrier
   * An unpartitioned `Window.orderBy(...)` plans a single-partition
   * exchange: the whole input funnels through ONE reducer. That is a
   * 100 TB scale-killer when the input is corpus-sized (the round-12
-  * enricher bug, fixed via [[Ranking.withGlobalRank]]) — but it is
+  * enricher bug, fixed via [[operators.Ranking.withGlobalRank]]) — but it is
   * the CORRECT, cheapest plan when the input is GRAIN-sized: a frame
   * whose cardinality is bounded by the calendar (days, months,
   * years), a fixed parameter sweep (advisor alpha grids, IVF cells ≤
@@ -50,7 +48,7 @@ object Grain {
     df.coalesce(1).sortWithinPartitions(sortCols: _*)
 
   /** A declared grain-bounded frame computed once and read as one
-    * partition by every consumer: stored through [[graft.Barrier]],
+    * partition by every consumer: stored through [[Barrier]],
     * then coalesced. The coalesce goes after the barrier: a barrier's
     * scan reports `UnknownPartitioning`, so a coalesce before it would
     * be lost and the next aggregate would plan an exchange. Over the

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Barrier
-import graft.operators.Grain
+import graft.{Barrier, Grain}
 
 /** IVF-PQ index build/search split out of the registered
   * sim_ivf_pq_search operator (SimilarityQueries) so the SAME dataflow
@@ -144,7 +142,7 @@ object IvfPq {
         l2(col("qsub"), col("sc")).as("lutd"))
     val lutR = lut.select(col("query_id"), col("cell").as("lcell"),
       col("m").as("lm"), col("scid"), col("lutd"))
-    idx.codes
+    val dists = idx.codes
       .join(broadcast(lutR), col("cell") === col("lcell") &&
         col("m") === col("lm") && col("code") === col("scid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -152,12 +150,8 @@ object IvfPq {
       .agg(expr("aggregate(sort_array(collect_list(struct(m, lutd))), 0D," +
         " (a, x) -> a + x.lutd)").as("adist"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adist"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adist"), col("neighbor_id"))))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("adist"), 6).as("approx_dist"), col("rk"))
-      .orderBy(col("query_id"), col("rk"))
+    Similarity.topKPerQuery(dists, k, col("adist"), col("neighbor_id"))(
+      col("query_id"), col("neighbor_id"), round(col("adist"), 6).as("approx_dist"),
+      col("rk"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Grain
 import graft.sources.Tables
 
 /** Similarity search over an embedding column (`Array[Float]`).
@@ -37,18 +38,38 @@ object Similarity {
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
     val q = broadcast(emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos"), col("neighbor_id"))
-    q.join(emb.select(col("vec_id").as("neighbor_id"), col("e")),
-        col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qe"), col("e")).as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"), col("rk"))
-      .orderBy(col("query_id"), col("rk"))
+    // cosineTopK's neighbor ≠ query filter becomes the join condition
+    cosineTopK(q.crossJoin(emb.select(col("vec_id").as("neighbor_id"), col("e"))), k)
   }
+
+  /** Per-query top-k of a candidate frame that has a `query_id`
+    * column: `row_number` over each query's candidates in `order`
+    * (whose last key must make it total), ranks 1..k kept, `out`
+    * projected, the answer sorted by (query_id, rk). The answer holds
+    * at most nQueries·k rows, so it is sorted in one partition
+    * ([[Grain.sortedBounded]]): no sampling job, no range exchange.
+    * `out` must keep `query_id` and `rk`. */
+  def topKPerQuery(candidates: DataFrame, k: Int, order: Column*)(
+      out: Column*): DataFrame =
+    Grain.sortedBounded(
+      candidates
+        .withColumn("rk", row_number().over(
+          Window.partitionBy(col("query_id")).orderBy(order: _*)))
+        .filter(col("rk") <= k)
+        .select(out: _*),
+      col("query_id"), col("rk"))
+
+  /** [[topKPerQuery]] by cosine of query vector `qe` and candidate
+    * `e` (ties → lower neighbor_id): (query_id, neighbor_id, cosine
+    * rounded to 6 places, rk). */
+  private def cosineTopK(candidates: DataFrame, k: Int): DataFrame =
+    topKPerQuery(
+      candidates.filter(col("neighbor_id") =!= col("query_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          cosine(col("qe"), col("e")).as("cos")),
+      k, desc("cos"), col("neighbor_id"))(
+      col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cosine"),
+      col("rk"))
 
   /** Embedding-cosine near-duplicate pairs: all pairs within a
     * blocking key (`label` — at scale: a coarse quantization/IVF
@@ -119,19 +140,9 @@ object Similarity {
         Window.partitionBy(col("query_id")).orderBy(desc("csim"), col("cell"))))
       .filter(col("crk") <= nProbe)
       .select(col("query_id"), col("qe"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos"), col("neighbor_id"))
-    broadcast(qProbe)
+    cosineTopK(broadcast(qProbe)
       .join(assigned.select(col("vec_id").as("neighbor_id"), col("e"), col("cell")),
-        Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qe"), col("e")).as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"), col("rk"))
-      .orderBy(col("query_id"), col("rk"))
+        Seq("cell")), k)
   }
 
   /** IVF with a DETERMINISTIC coarse quantizer: centroids are the
@@ -232,19 +243,9 @@ object Similarity {
       queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val qProbe = ivfArgmaxCells(cents, queries, nProbe)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos"), col("neighbor_id"))
-    broadcast(qProbe)
+    cosineTopK(broadcast(qProbe)
       .join(assigned.select(col("vec_id").as("neighbor_id"), col("e"), col("cell")),
-        Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qe"), col("e")).as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"), col("rk"))
-      .orderBy(col("query_id"), col("rk"))
+        Seq("cell")), k)
   }
 
   /** Approximate top-k with multiprobe: a query probes its own
@@ -266,17 +267,7 @@ object Similarity {
     val q = broadcast(emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"),
         explode(probes).as("bucket")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos"), col("neighbor_id"))
-    q.join(emb.select(col("vec_id").as("neighbor_id"), col("e"), col("bucket")),
-        Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qe"), col("e")).as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"), col("rk"))
-      .orderBy(col("query_id"), col("rk"))
+    cosineTopK(q.join(emb.select(col("vec_id").as("neighbor_id"), col("e"),
+      col("bucket")), Seq("bucket")), k)
   }
 }

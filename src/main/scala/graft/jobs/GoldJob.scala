@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Grain
+import graft.Grain
 import graft.sources.Sinks
 
 /** Gold analytics build (reference entry point C, SURVEY §3.3):

@@ -184,7 +184,14 @@ object Dedup {
     */
   def ngramJaccardPairs(s: SparkSession, dir: String, n: Int = 3,
       threshold: Double = 0.5): DataFrame =
-    prefixJaccardPairs(
+    ngramJaccardPairsRaw(s, dir, n, threshold).orderBy(col("d1"), col("d2"))
+
+  /** Unordered n-gram Jaccard pair stream (same set as
+    * [[ngramJaccardPairs]]) for aggregate-only consumers — see
+    * [[prefixJaccardPairsRaw]] for why the sort is skippable. */
+  private[graft] def ngramJaccardPairsRaw(s: SparkSession, dir: String, n: Int = 3,
+      threshold: Double = 0.5): DataFrame =
+    prefixJaccardPairsRaw(
       docs(s, dir).select(col("doc_id"), col("lang"), col("source"),
         TF.shingles(col("text"), n).as("items")),
       threshold)
@@ -451,23 +458,38 @@ object Dedup {
   }
 
   /** Resolve near-dup PAIRS into canonical duplicate GROUPS: the
-    * connected components of the pair graph ([[componentLabels]]),
-    * one row per group of two or more documents, canonical id = the
-    * smallest member. Pair output is inherently quadratic in
-    * dup-group size (a 10-copy document yields 45 pairs — measured
-    * 18× blowup on a 10×-duplicated corpus); group output is linear
-    * in documents, which is the shape a 100 TB dedup must emit.
+    * connected components of the pair graph, one row per group of two
+    * or more documents, canonical id = the smallest member, sorted by
+    * canonical id. Pair output is inherently quadratic in dup-group
+    * size (a 10-copy document yields 45 pairs — measured 18× blowup
+    * on a 10×-duplicated corpus); group output is linear in
+    * documents, which is the shape a 100 TB dedup must emit.
+    *
+    * Up to `localEdgeThreshold` edges the groups are built on the
+    * driver from [[localLabels]] and returned as a local frame, so
+    * collecting it runs no Spark job; beyond that, from
+    * [[propagatedLabels]] over the same stored edges ([[labelsOf]]).
     */
   def dupGroups(pairs: DataFrame, localEdgeThreshold: Long = MaxLocalEdges): DataFrame =
-    componentLabels(pairs.select(col("d1"), col("d2")), localEdgeThreshold)
-      .groupBy(col("rep").as("canonical_id"))
-      .agg(count(lit(1)).as("group_size"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .filter(col("group_size") > 1)
-      .orderBy(col("canonical_id"))
+    labelsOf(pairs.select(col("d1"), col("d2")), localEdgeThreshold) match {
+      case Right(labels) =>
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        labels.groupBy(_._2).iterator
+          .collect { case (rep, ms) if ms.length > 1 =>
+            (rep, ms.length.toLong, ms.map(_._1).sorted.toSeq) }
+          .toSeq.sortBy(_._1)
+          .toDF("canonical_id", "group_size", "members")
+      case Left(labels) =>
+        labels.groupBy(col("rep").as("canonical_id"))
+          .agg(count(lit(1)).as("group_size"),
+            sort_array(collect_list(col("id"))).as("members"))
+          .filter(col("group_size") > 1)
+          .orderBy(col("canonical_id"))
+    }
 
-  /** Edge count up to which [[componentLabels]] runs the driver
-    * union-find. */
+  /** Edge count up to which [[componentLabels]] and [[dupGroups]] run
+    * the driver union-find. */
   val MaxLocalEdges = 5000000L
 
   /** Connected components of an undirected edge list (two id columns,
@@ -476,20 +498,74 @@ object Dedup {
     *
     * Hybrid: near-dup and similarity graphs are orders of magnitude
     * smaller than the corpus (only items WITH a near neighbor
-    * appear), so up to `localEdgeThreshold` edges a driver
-    * union-find wins — one collect in, one parallelize out, no
-    * per-round jobs. Beyond that, distributed min-label propagation
-    * takes over: each round every node takes the min label among
-    * itself and its neighbors plus one pointer jump (path halving),
-    * so convergence is O(log diameter) rounds, each one join + one
-    * min-aggregate; the loop runs to a fixpoint, and the driver only
-    * reads the changed-label count. Both paths emit identical labels
-    * (DedupSpec and DifferentialSpec pin this).
+    * appear), so up to `localEdgeThreshold` edges a driver union-find
+    * wins ([[localLabels]]: one pull, no per-round jobs). Beyond that,
+    * [[propagatedLabels]] runs distributed min-label propagation. Both
+    * arms emit identical labels (DedupSpec and DifferentialSpec pin
+    * this).
     */
   private[graft] def componentLabels(edges: DataFrame,
-      localEdgeThreshold: Long): DataFrame = {
-    val undirected = edges.toDF("a", "b").transform(Barrier.materialize)
-    if (undirected.count() <= localEdgeThreshold) return unionFindLabels(undirected)
+      localEdgeThreshold: Long): DataFrame =
+    labelsOf(edges, localEdgeThreshold).fold(identity, { labels =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      labels.toSeq.toDF("id", "rep")
+    })
+
+  /** `(id, rep)` labels of an edge list: on the driver when it holds
+    * at most `threshold` edges, else as a distributed frame. The edges
+    * are stored behind one barrier that both arms read, so the pair
+    * stream is evaluated once whichever arm runs. */
+  private def labelsOf(edges: DataFrame,
+      threshold: Long): Either[DataFrame, Array[(Long, Long)]] = {
+    val stored = edges.toDF("a", "b").transform(Barrier.materialize)
+    localLabels(stored, threshold).toRight(propagatedLabels(stored))
+  }
+
+  /** Driver union-find (path compression, union by min id) over the
+    * stored edges, or None when they hold more than `threshold`.
+    *
+    * One Spark job pulls at most `threshold + 1` edges: a single task
+    * reads the stored partitions in turn and stops there, so the
+    * driver never receives more. Over several partitions a limit
+    * would scan them in growing batches, one job each, and the lazy
+    * barrier would add a job to store the partitions the first batch
+    * skipped. Only the pair stream's last stage runs in that one task;
+    * AQE runs the stages before it, in parallel, when the barrier is
+    * defined. */
+  private def localLabels(stored: DataFrame, threshold: Long): Option[Array[(Long, Long)]] = {
+    require(threshold < Int.MaxValue, s"local edge threshold $threshold exceeds one driver array")
+    val spark = stored.sparkSession
+    import spark.implicits._
+    val es = stored.coalesce(1).limit(threshold.toInt + 1).as[(Long, Long)].collect()
+    if (es.length > threshold) return None
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = x // path compression
+      while (parent.getOrDefault(c, c) != c) {
+        val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
+      }
+      r
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // min id becomes the canonical representative
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    Some(es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet.toArray
+      .map((id: Long) => (id, find(id))))
+  }
+
+  /** Distributed min-label propagation over the stored edges: each
+    * round every node takes the min label among itself and its
+    * neighbors plus one pointer jump (path halving), so convergence is
+    * O(log diameter) rounds, each one join + one min-aggregate; the
+    * loop runs to a fixpoint, and the driver only reads the
+    * changed-label count. */
+  private def propagatedLabels(undirected: DataFrame): DataFrame = {
     val both = undirected.union(undirected.select(col("b").as("a"), col("a").as("b")))
       .transform(Barrier.materialize) // read by every round's join
     var labels = both.select(col("a").as("id")).distinct()
@@ -525,33 +601,6 @@ object Dedup {
       labels = next
     }
     labels
-  }
-
-  /** Driver-side union-find (path compression + union by min) for
-    * edge lists that fit comfortably in driver memory. */
-  private def unionFindLabels(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.as[(Long, Long)].collect()
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-      var c = x // path compression
-      while (parent.getOrDefault(c, c) != c) {
-        val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-      }
-      r
-    }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // min id becomes the canonical representative
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
-    }
-    es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
-      .map((id: Long) => (id, find(id)))
-      .toDF("id", "rep")
   }
 
   /** Winnowing near-dup pairs: documents whose winnowing-fingerprint

@@ -469,7 +469,7 @@ object DedupQueries extends QueryModule {
     val canon = trim(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z0-9]+", " "), " +", " "))
     val norm = dupDocsByKey(md5(canon)).transform(Barrier.materialize)
-    val near = Dedup.minhashLshPairs(s, dir, portableHashes = true)
+    val near = Dedup.minhashLshPairsRaw(s, dir, portableHashes = true)
       .select(explode(array(col("d1"), col("d2"))).as("doc_id"))
       .distinct().transform(Barrier.materialize)
     val t1 = exact.agg(count(lit(1)).cast("long").as("n_flagged"))
@@ -740,7 +740,7 @@ object DedupQueries extends QueryModule {
   // source²-bounded aggregate.
   // ---------------------------------------------------------------
   val dedupSourceMatrix: Q = (s, dir) => {
-    val pairs = Dedup.minhashLshPairs(s, dir, portableHashes = true)
+    val pairs = Dedup.minhashLshPairsRaw(s, dir, portableHashes = true)
       .select(col("d1"), col("d2"))
     val src = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("source"))
@@ -780,7 +780,7 @@ object DedupQueries extends QueryModule {
   private val BandConfigs = Seq(4, 8, 16, 32) // r = 64 / b
 
   val dedupBandingAdvisor: Q = (s, dir) => {
-    val bucketed = Dedup.ngramJaccardPairs(s, dir, 3, 0.5)
+    val bucketed = Dedup.ngramJaccardPairsRaw(s, dir, 3, 0.5)
       .withColumn("bucket", floor(col("jaccard") * 20.0) / 20.0)
       .groupBy(col("bucket")).agg(count(lit(1)).cast("long").as("n"))
       .transform(Barrier.materialize) // all four configs fold the same buckets
@@ -1104,7 +1104,7 @@ object DedupQueries extends QueryModule {
   // audit adds one pair-keyed join plus a ≤3-row aggregate.
   // ---------------------------------------------------------------
   val dedupMethodAgreement: Q = (s, dir) => {
-    val lex = Dedup.minhashLshPairs(s, dir, portableHashes = true)
+    val lex = Dedup.minhashLshPairsRaw(s, dir, portableHashes = true)
       .select(col("d1"), col("d2"), lit(true).as("in_lex"))
     val sem = Similarity.cosineNearDupPairs(s, dir, 0.4)
       .select(col("v1").as("d1"), col("v2").as("d2"), lit(true).as("in_sem"))

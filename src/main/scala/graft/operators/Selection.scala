@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Grain
+
 /** Exact global order statistics WITHOUT ranking the whole frame.
   *
   * [[Ranking.withGlobalRank]] is the right tool when every row needs

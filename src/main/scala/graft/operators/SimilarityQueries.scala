@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
-import graft.QueryModule
+import graft.{Barrier, Grain, QueryModule}
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
 import ColumnIdioms._
@@ -1739,15 +1738,9 @@ object SimilarityQueries extends QueryModule {
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(expr("aggregate(sort_array(collect_list(struct(qslot, mx)))," +
         " 0D, (a, q) -> a + q.mx)").as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(desc("score"), col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("score"), 6).as("maxsim_score"),
-        col("rk").cast("int").as("rk"))
-      .orderBy(col("query_id"), col("rk"))
+    Similarity.topKPerQuery(scored, 3, desc("score"), col("neighbor_id"))(
+      col("query_id"), col("neighbor_id"),
+      round(col("score"), 6).as("maxsim_score"), col("rk").cast("int").as("rk"))
   }
 
   // ---------------------------------------------------------------

@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
-import graft.QueryModule
+import graft.{Barrier, Grain, QueryModule}
 import graft.sources.Tables
 import ColumnIdioms._
 

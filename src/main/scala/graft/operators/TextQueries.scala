@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
-import graft.QueryModule
+import graft.{Barrier, Grain, QueryModule}
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
 import ColumnIdioms._

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Barrier
-import graft.QueryModule
+import graft.{Barrier, Grain, QueryModule}
 import graft.sources.Tables
 import ColumnIdioms._
 import OracleSql._

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Grain
+import graft.Grain
 
 /** Parameterized serving facade over a silver table — the engine
   * analog of the reference dashboard's four cached loaders + KPI

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Grain
 import graft.jobs.GoldJob
 import graft.operators.ColumnIdioms.d
-import graft.operators.Grain
 import graft.sources.HeadlineData
 import graft.sources.HeadlineData.{SQL => H, Today}
 

@@ -8,4 +8,8 @@ import org.apache.spark.sql.classic
   * not reference. */
 object SessionBridge {
   def uuid(s: SparkSession): String = s.asInstanceOf[classic.SparkSession].sessionUUID
+
+  /** Waits until the `private[spark]` listener bus has delivered every
+    * event posted so far, query-execution listeners' included. */
+  def drainListeners(s: SparkSession): Unit = s.sparkContext.listenerBus.waitUntilEmpty()
 }

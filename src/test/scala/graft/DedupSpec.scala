@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.JobCounter
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SimHashAgg, TextFunctions => TF}
@@ -104,6 +105,54 @@ class DedupSpec extends SparkTestBase {
       assert(local == expected, "driver union-find")
       assert(dist == expected, "distributed propagation")
     }
+  }
+
+  test("dup groups: threshold edges take the local arm, threshold + 1 the distributed arm") {
+    import spark.implicits._
+    val edges = Seq((4L, 5L), (1L, 2L), (2L, 3L), (3L, 5L), (8L, 9L), (9L, 7L))
+    val expected = Seq((1L, 5L, Seq(1L, 2L, 3L, 4L, 5L)), (7L, 3L, Seq(7L, 8L, 9L)))
+    val pairs = edges.toDF("d1", "d2")
+    val local = Dedup.dupGroups(pairs, localEdgeThreshold = edges.size.toLong)
+    val dist = Dedup.dupGroups(pairs, localEdgeThreshold = edges.size - 1L)
+    // the local arm returns a driver-side frame: collecting it runs no job
+    assert(JobCounter(spark)(local.collect())._2 == 0,
+      "exactly threshold edges must take the local arm")
+    assert(JobCounter(spark)(dist.collect())._2 > 0,
+      "threshold + 1 edges must take the distributed arm")
+    assert(local.as[(Long, Long, Seq[Long])].collect().toSeq == expected)
+    assert(dist.as[(Long, Long, Seq[Long])].collect().toSeq == expected)
+  }
+
+  test("dup groups of an empty pair stream is an empty frame") {
+    val pairs = spark.emptyDataFrame.select(lit(0L).as("d1"), lit(0L).as("d2"))
+    Seq(Dedup.MaxLocalEdges, 0L).foreach { t =>
+      val g = Dedup.dupGroups(pairs, localEdgeThreshold = t)
+      assert(g.columns.toSeq == Seq("canonical_id", "group_size", "members"))
+      assert(g.collect().isEmpty)
+    }
+  }
+
+  test("component labels stay (id, rep) rows on both arms") {
+    import spark.implicits._
+    val edges = Seq((3L, 1L), (1L, 2L), (6L, 5L)).toDF("v1", "v2")
+    val expected = Set((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L))
+    Seq(Dedup.MaxLocalEdges, 0L).foreach { t =>
+      val labels = Dedup.componentLabels(edges, t)
+      assert(labels.columns.toSeq == Seq("id", "rep"))
+      assert(labels.as[(Long, Long)].collect().toSet == expected)
+    }
+  }
+
+  test("dedup_groups job budget: one pull of the stored edges, no job to collect") {
+    // build + collect, as a registry caller runs it, after a first run
+    // has read the tables; the budget is the count measured here (the
+    // pair stream's stage jobs plus the pull), so a pull split into
+    // several jobs or groups sent back through Spark fails
+    val query = SparkEntry.queries("dedup_groups")
+    query(spark, sf).collect()
+    val (rows, jobs) = JobCounter(spark)(query(spark, sf).collect())
+    assert(rows.nonEmpty)
+    assert(jobs <= 7, s"dedup_groups ran $jobs Spark jobs")
   }
 
   test("dup groups over planted minhash pairs keep doc 0 as canonical") {

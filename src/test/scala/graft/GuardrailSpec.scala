@@ -75,7 +75,7 @@ class GuardrailSpec extends AnyFunSuite {
     }.filter(_._2 > 0).toMap
     val allowed = Map(
       "Ranking.scala" -> 1,        // P carry rows per range partition
-      "Dedup.scala" -> 1,          // union-find arm, <=5M edges thresholded
+      "Dedup.scala" -> 1,          // union-find arm: one pull of <=5M+1 edges
       "GraphQueries.scala" -> 2,   // HITS edges + 40 top terms
       "OpsQueries.scala" -> 1,     // encoding-advisor carries, 4096 cap
       "TextQueries.scala" -> 1,    // one-row logistic fit coefficients

@@ -598,7 +598,7 @@ class PlanSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    import graft.operators.Grain
+    import graft.Grain
     val keyed = spark.range(200).withColumn("k", col("id") % 7).repartition(4, col("k"))
     val stored = Barrier.materialize(keyed)
     assert(stored.queryExecution.executedPlan.outputPartitioning
