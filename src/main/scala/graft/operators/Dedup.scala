@@ -44,11 +44,11 @@ object Dedup {
     * remaining EXACT (no false negatives; verification computes
     * true Jaccard on the full sets).
     *
-    * Stage 3 — expand: representative pairs broadcast back onto
-    * group members (every member shares its rep's set, so the rep
-    * Jaccard IS the member Jaccard), plus all within-group pairs at
-    * Jaccard 1.0. Same result set as the quadratic-within-block
-    * oracle, pair for pair.
+    * Stage 3 — expand ([[groupPairs]]): each verified group pair
+    * crosses its two carried member lists (every member shares its
+    * group's set, so the group Jaccard IS the member Jaccard), plus
+    * all within-group pairs at Jaccard 1.0. Same result set as the
+    * quadratic-within-block oracle, pair for pair.
     */
   private def prefixJaccardPairs(base: DataFrame, threshold: Double): DataFrame =
     prefixJaccardPairsRaw(base, threshold).orderBy(col("d1"), col("d2"))
@@ -70,8 +70,7 @@ object Dedup {
         col("lang"), col("source"), concat_ws("", col("items")))))
     val groups = grouped
       .groupBy(col("gkey"), col("lang"), col("source"))
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"),
+      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         first(col("items")).as("items"))
       .transform(Barrier.materialize)
     // ---- stage 2: AllPairs prefix filter over representatives ----
@@ -82,22 +81,7 @@ object Dedup {
     // shared-vocabulary corpus degenerates (every prefix holds the
     // same common tokens). Any consistent total order yields the
     // same exact pair set; only the candidate count changes.
-    val reps = groups.select(col("gkey"), col("lang"), col("source"), col("items"))
-    val posting = reps.select(col("gkey"), explode(col("items")).as("it"))
-    val dfreq = posting.groupBy("it").agg(count(lit(1)).as("df"))
-    val ordered = posting
-      .join(dfreq, "it")
-      .groupBy("gkey")
-      .agg(transform(sort_array(collect_list(struct(col("df"), col("it")))),
-        x => x.getField("it")).as("items"))
-    val withArr = reps.drop("items").join(ordered, "gkey")
-      .withColumn("n", size(col("items")))
-      // ε-guard: 90*0.9 in double is 81.00000000000001 and a naive
-      // ceil would SHRINK the prefix (false negatives). Larger p is
-      // always safe; smaller never is.
-      .withColumn("p",
-        (col("n") - ceil(col("n") * threshold - lit(1e-9)) + 1).cast("int"))
-      .transform(Barrier.materialize)
+    val withArr = rarestFirst(groups, threshold)
     val pre = withArr.select(col("gkey"), col("lang"), col("source"),
       col("n"), explode(slice(col("items"), lit(1), col("p"))).as("it"))
     val a = pre.alias("a"); val b = pre.alias("b")
@@ -119,30 +103,72 @@ object Dedup {
           greatest(col("a.n"), col("b.n")).cast("double") * threshold - 1e-9)
       .select(col("a.gkey").as("g1"), col("b.gkey").as("g2"))
       .distinct()
-    val sets = withArr.select(col("gkey"), col("items"))
-    val repPairs = cand
-      .join(sets.select(col("gkey").as("g1"), col("items").as("s1")), "g1")
-      .join(sets.select(col("gkey").as("g2"), col("items").as("s2")), "g2")
-      .select(col("g1"), col("g2"),
-        (size(array_intersect(col("s1"), col("s2"))).cast("double") /
-          size(array_union(col("s1"), col("s2"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    // ---- stage 3: expand groups back to document pairs ----
-    // within-group: identical sets ⇒ Jaccard exactly 1.0 ≥ any t
-    val m = groups.select(col("gkey"), explode(col("members")).as("doc_id"))
-    val wl = m.alias("wl"); val wr = m.alias("wr")
-    val withinPairs = wl.join(wr,
-        col("wl.gkey") === col("wr.gkey") &&
-        col("wl.doc_id") < col("wr.doc_id"))
-      .select(col("wl.doc_id").as("d1"), col("wr.doc_id").as("d2"),
-        lit(1.0).as("jaccard"))
-    // cross-group: every member inherits its representative's set,
-    // so the rep-level Jaccard is exact for each member pair
-    val crossPairs = repPairs
-      .join(m.select(col("gkey").as("g1"), col("doc_id").as("m1")), "g1")
-      .join(m.select(col("gkey").as("g2"), col("doc_id").as("m2")), "g2")
-      .select(least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"), col("jaccard"))
+    // ---- stage 3: verify, expand groups back to document pairs ----
+    groupPairs(cand, withArr, "jaccard", threshold, directed = false)(jaccardOf)
+  }
+
+  /** Rarest-first item order over the collapsed groups (gkey, lang,
+    * source, members, items), stored: items reordered by ascending
+    * document frequency, `n` = set size, `p` = the prefix width that
+    * keeps every pair at measure ≥ t (Jaccard or containment). */
+  private def rarestFirst(groups: DataFrame, threshold: Double): DataFrame = {
+    val posting = groups.select(col("gkey"), explode(col("items")).as("it"))
+    val dfreq = posting.groupBy("it").agg(count(lit(1)).as("df"))
+    val ordered = posting
+      .join(dfreq, "it")
+      .groupBy("gkey")
+      .agg(transform(sort_array(collect_list(struct(col("df"), col("it")))),
+        x => x.getField("it")).as("items"))
+    groups.drop("items").join(ordered, "gkey")
+      .withColumn("n", size(col("items")))
+      // ε-guard: 90*0.9 in double is 81.00000000000001 and a naive
+      // ceil would SHRINK the prefix (false negatives). Larger p is
+      // always safe; smaller never is.
+      .withColumn("p",
+        (col("n") - ceil(col("n") * threshold - lit(1e-9)) + 1).cast("int"))
+      .transform(Barrier.materialize)
+  }
+
+  private def jaccardOf(s1: Column, s2: Column): Column =
+    size(array_intersect(s1, s2)).cast("double") /
+      size(array_union(s1, s2)).cast("double")
+
+  /** Verify group-level candidates and expand them to document pairs
+    * (d1, d2, `measure`), the last stage of every collapse-then-verify
+    * kernel. `groups` holds one row per distinct item set: (gkey,
+    * items, members), `members` sorted ascending.
+    *
+    * Cross-group: both sides of each (g1, g2) candidate join the same
+    * projection of `groups`, so the two joins read one exchange
+    * (ReuseExchange), and a pair at `measure` ≥ `threshold` crosses its
+    * two carried member lists. Within-group: identical sets score 1.0,
+    * so each group's pairs come from a generator over its own members
+    * (the i-th member meets every later one, or every other one when
+    * `directed`), with no join. Undirected pairs have d1 < d2; directed
+    * pairs keep d1 in g1, d2 in g2 and go both ways within a group.
+    */
+  private def groupPairs(cand: DataFrame, groups: DataFrame, measure: String,
+      threshold: Double, directed: Boolean)(score: (Column, Column) => Column): DataFrame = {
+    val sets = groups.select(col("gkey"), col("items"), col("members"))
+    val l = sets.alias("l"); val r = sets.alias("r")
+    val (m1, m2) = (col("m1"), col("m2"))
+    val (d1, d2) = if (directed) (m1, m2) else (least(m1, m2), greatest(m1, m2))
+    val crossPairs = cand
+      .join(l, col("g1") === col("l.gkey"))
+      .join(r, col("g2") === col("r.gkey"))
+      .select(col("l.members").as("ms1"), col("r.members").as("ms2"),
+        score(col("l.items"), col("r.items")).as(measure))
+      .filter(col(measure) >= threshold)
+      .select(explode(col("ms1")).as("m1"), col("ms2"), col(measure))
+      .select(m1, explode(col("ms2")).as("m2"), col(measure))
+      .select(d1.as("d1"), d2.as("d2"), col(measure))
+    val ms = col("members")
+    val partners =
+      if (directed) filter(ms, _ =!= col("d1"))
+      else slice(ms, col("i") + 2, size(ms) - col("i") - 1)
+    val withinPairs = sets.filter(size(ms) > 1)
+      .select(ms, posexplode(ms).as(Seq("i", "d1")))
+      .select(col("d1"), explode(partners).as("d2"), lit(1.0).as(measure))
     withinPairs.union(crossPairs)
   }
 
@@ -234,20 +260,7 @@ object Dedup {
       .transform(Barrier.materialize)
     // stage 2: rarest-first ordering (selectivity only — any total
     // order is exact), then ASYMMETRIC candidates: A-prefix × B-full
-    val reps = groups.select(col("gkey"), col("lang"), col("source"), col("items"))
-    val posting = reps.select(col("gkey"), explode(col("items")).as("it"))
-    val dfreq = posting.groupBy("it").agg(count(lit(1)).as("df"))
-    val ordered = posting
-      .join(dfreq, "it")
-      .groupBy("gkey")
-      .agg(transform(sort_array(collect_list(struct(col("df"), col("it")))),
-        x => x.getField("it")).as("items"))
-    val withArr = reps.drop("items").join(ordered, "gkey")
-      .withColumn("n", size(col("items")))
-      // ε-guard as in prefixJaccardPairs: never shrink the prefix
-      .withColumn("p",
-        (col("n") - ceil(col("n") * threshold - lit(1e-9)) + 1).cast("int"))
-      .transform(Barrier.materialize)
+    val withArr = rarestFirst(groups, threshold)
     val pre = withArr.select(col("gkey"), col("lang"), col("source"),
       col("n"), explode(slice(col("items"), lit(1), col("p"))).as("it"))
     val full = withArr.select(col("gkey"), col("lang"), col("source"),
@@ -264,27 +277,10 @@ object Dedup {
           col("a.n").cast("double") * threshold - 1e-9)
       .select(col("a.gkey").as("g1"), col("b.gkey").as("g2"))
       .distinct()
-    val sets = withArr.select(col("gkey"), col("items"))
-    val repPairs = cand
-      .join(sets.select(col("gkey").as("g1"), col("items").as("s1")), "g1")
-      .join(sets.select(col("gkey").as("g2"), col("items").as("s2")), "g2")
-      .select(col("g1"), col("g2"),
-        (size(array_intersect(col("s1"), col("s2"))).cast("double") /
-          size(col("s1")).cast("double")).as("containment"))
-      .filter(col("containment") >= threshold)
-    // stage 3: expand to DIRECTED doc pairs
-    val m = groups.select(col("gkey"), explode(col("members")).as("doc_id"))
-    val wl = m.alias("wl"); val wr = m.alias("wr")
-    val withinPairs = wl.join(wr,
-        col("wl.gkey") === col("wr.gkey") &&
-        col("wl.doc_id") =!= col("wr.doc_id"))
-      .select(col("wl.doc_id").as("d1"), col("wr.doc_id").as("d2"),
-        lit(1.0).as("containment"))
-    val crossPairs = repPairs
-      .join(m.select(col("gkey").as("g1"), col("doc_id").as("m1")), "g1")
-      .join(m.select(col("gkey").as("g2"), col("doc_id").as("m2")), "g2")
-      .select(col("m1").as("d1"), col("m2").as("d2"), col("containment"))
-    withinPairs.union(crossPairs).orderBy(col("d1"), col("d2"))
+    // stage 3: verify, expand to DIRECTED doc pairs
+    groupPairs(cand, withArr, "containment", threshold, directed = true)(
+      (s1, s2) => size(array_intersect(s1, s2)).cast("double") / size(s1).cast("double"))
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** MinHash signatures: k permutation-hashes h_i(x)=(a_i·x+b_i) mod p
@@ -352,17 +348,18 @@ object Dedup {
     // barrier is load-bearing twice over: without it CollapseProject
     // inlines the signature into the band lambda below and the
     // interpreted HOF re-evaluates it once PER BAND (16× per row —
-    // measured 450 s vs <10 s at sf0.1), and the frame is consumed
-    // by four plans (banding, both verify sides, member expansion).
+    // measured 450 s vs <10 s at sf0.1), and the frame is read by
+    // the banding (both sides of the bucket join), the one verify
+    // projection both candidate sides share, and the within-group
+    // generator.
     val base = grouped.groupBy(col("gkey"))
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         first(col("sh")).as("sh"))
       .withColumn("sig", graft.plans.HashExpressions.minhash(col("sh"), k))
       .transform(Barrier.materialize)
-    val groups = base.select(col("gkey"), col("members"))
     // band join carries only (band, bucket, gkey) — the shingle
-    // sets are joined back exactly once per surviving pair, so the
-    // wide arrays never ride the bucket-join shuffle
+    // sets and members are joined back exactly once per surviving
+    // pair, so the wide arrays never ride the bucket-join shuffle
     val banded = base.select(col("gkey"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         bnd => xxhash64(concat_ws("_", bnd,
@@ -374,27 +371,8 @@ object Dedup {
         col("l.gkey") < col("r.gkey"))
       .select(col("l.gkey").as("g1"), col("r.gkey").as("g2"))
       .distinct()
-    val sets = base.select(col("gkey"), col("sh"))
-    val repPairs = cand
-      .join(sets.select(col("gkey").as("g1"), col("sh").as("sh1")), "g1")
-      .join(sets.select(col("gkey").as("g2"), col("sh").as("sh2")), "g2")
-      .select(col("g1"), col("g2"),
-        (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    val m = groups.select(col("gkey"), explode(col("members")).as("doc_id"))
-    val wl = m.alias("wl"); val wr = m.alias("wr")
-    val withinPairs = wl.join(wr,
-        col("wl.gkey") === col("wr.gkey") &&
-        col("wl.doc_id") < col("wr.doc_id"))
-      .select(col("wl.doc_id").as("d1"), col("wr.doc_id").as("d2"),
-        lit(1.0).as("jaccard"))
-    val crossPairs = repPairs
-      .join(m.select(col("gkey").as("g1"), col("doc_id").as("m1")), "g1")
-      .join(m.select(col("gkey").as("g2"), col("doc_id").as("m2")), "g2")
-      .select(least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"), col("jaccard"))
-    withinPairs.union(crossPairs)
+    groupPairs(cand, base.withColumnRenamed("sh", "items"), "jaccard", threshold,
+      directed = false)(jaccardOf)
   }
 
   /** Incremental near-dup detection — the production shape of LSH

@@ -290,13 +290,14 @@ object SimilarityQueries extends QueryModule {
   // final assignment — integer decisions plus one rounded cosine, so
   // the contract is exact. Scale shape: seeds via top-k (never a
   // global sort), both assignment passes are broadcast-k×d map-side
-  // scans (no shuffle of the corpus), and the update shuffles k·dim
-  // groups. The mean's member fold is the one deliberately
-  // non-scale-free piece: it collects each cluster's component list
-  // to pin the summation order for the oracle; at real corpus scale
-  // the update is a plain avg() whose last-ulp nondeterminism no
-  // consumer observes (same deviation class as AnalyticsQueries's
-  // documented low-cardinality windows).
+  // scans (no shuffle of the corpus), and the update ([[kmeansUpdate]])
+  // is one aggregate over k cluster groups. The mean's member fold is
+  // the one deliberately non-scale-free piece: it collects each
+  // cluster's member vectors (n/k of them per group) to pin the
+  // summation order for the oracle; at real corpus scale the update
+  // is a plain avg() whose last-ulp nondeterminism no consumer
+  // observes (same deviation class as AnalyticsQueries's documented
+  // low-cardinality windows).
   // ---------------------------------------------------------------
   /** The sim_kmeans dataflow returning BOTH the final assignment
     * (vec_id, e, cid, cos — cos = dot with the member-mean centroid)
@@ -304,36 +305,9 @@ object SimilarityQueries extends QueryModule {
     * the batch-77 cluster-validity operators consume both. */
   private[operators] def kmeansAssignCents(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val k = 8
     val emb = normalized(s, dir)
-    // seed selection: top-k by md5 order (TakeOrderedAndProject —
-    // bounded at any corpus size), then rank the k rows
-    val seeds = emb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
-    val cents0 = seeds
-      .withColumn("cid", row_number().over(
-        Grain.bounded(md5(col("vec_id").cast("string")), col("vec_id"))))
-      .select(col("cid").cast("long").as("cid"), col("e").as("ce"))
-    // map-side argmax against the collected k×d codebook — same
-    // (dot desc, cid asc) rule, no n×k crossJoin/window/shuffle
-    def assign(cents: DataFrame): DataFrame =
-      Similarity.topCellsByScore(emb, Similarity.collectCodebook(cents),
-          1, "cos", Similarity.dot)
-        .select(col("vec_id"), col("e"), col("cell").as("cid"), col("cos"))
-    val a1 = assign(cents0)
-    // centroid update: element-wise member mean per (cluster, dim);
-    // the sum folds members in vec_id order (bit-stable, replayed as
-    // list_sum(list(v ORDER BY vec_id)) in the oracle), one division
-    val cents1 = a1
-      .select(col("cid"), col("vec_id"), posexplode(col("e")).as(Seq("pos", "v")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(expr("aggregate(sort_array(collect_list(struct(vec_id, v))), 0D," +
-        " (a, x) -> a + x.v)").as("sv"), count(lit(1)).as("n"))
-      .withColumn("m", col("sv") / d(col("n")))
-      .groupBy(col("cid"))
-      .agg(expr("transform(sort_array(collect_list(struct(pos, m))), x -> x.m)")
-        .as("ce"))
-    (assign(cents1), cents1)
+    val cents1 = kmeansUpdate(kmeansAssignPass(emb, kmeansSeeds(emb, 8)))
+    (kmeansAssignPass(emb, cents1), cents1)
   }
 
   private def kmeansAssign(s: SparkSession, dir: String): DataFrame =
@@ -356,13 +330,15 @@ object SimilarityQueries extends QueryModule {
   // convergence count itself is oracle-pinned: the DuckDB replay
   // unrolls all 6 passes and picks the first fixed point with the
   // same CASE rule. Scale shape per pass = sim_kmeans's: broadcast
-  // k×d codebook scan (corpus never shuffles for assignment), k·dim
-  // update groups; the member fold pins summation order for the
+  // k×d codebook scan (corpus never shuffles for assignment), one
+  // k-group update; the member fold pins summation order for the
   // oracle exactly as sim_kmeans documents (plain avg() at real
   // scale).
   // ---------------------------------------------------------------
   private val KmeansMaxIters = 6
 
+  // seed selection: top-k by md5 order (TakeOrderedAndProject —
+  // bounded at any corpus size), then rank the k rows
   private[operators] def kmeansSeeds(emb: DataFrame, k: Int): DataFrame =
     emb.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
       .withColumn("cid", row_number().over(
@@ -377,15 +353,23 @@ object SimilarityQueries extends QueryModule {
         1, "cos", Similarity.dot)
       .select(col("vec_id"), col("e"), col("cell").as("cid"), col("cos"))
 
-  private def kmeansUpdate(a: DataFrame): DataFrame =
-    a.select(col("cid"), col("vec_id"), posexplode(col("e")).as(Seq("pos", "v")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(expr("aggregate(sort_array(collect_list(struct(vec_id, v))), 0D," +
-        " (a, x) -> a + x.v)").as("sv"), count(lit(1)).as("n"))
-      .withColumn("m", col("sv") / d(col("n")))
-      .groupBy(col("cid"))
-      .agg(expr("transform(sort_array(collect_list(struct(pos, m))), x -> x.m)")
-        .as("ce"))
+  /** Lloyd's centroid update over an assignment (cid, vec_id, e):
+    * (cid, ce), ce the element-wise mean of the cluster's members. One
+    * aggregate per cluster folds the member vectors in vec_id order,
+    * element-wise from zeros, then divides by the member count: per
+    * dimension the same additions in the same order as the oracle's
+    * list_sum(list(v ORDER BY vec_id)) / count(*), so the doubles are
+    * bit-stable. Scale trade: a group holds its cluster's n/k whole
+    * vectors (a per-(cid, dim) fold would hold n/k scalars but
+    * explodes every vector into dim rows and aggregates twice) — the
+    * non-scale-free member fold the sim_kmeans header documents. */
+  private[graft] def kmeansUpdate(a: DataFrame): DataFrame =
+    a.groupBy(col("cid"))
+      .agg(sort_array(collect_list(struct(col("vec_id"), col("e")))).as("ms"))
+      .select(col("cid"), expr("transform(" +
+        "aggregate(ms, array_repeat(0D, size(ms[0].e))," +
+        " (acc, x) -> zip_with(acc, x.e, (s, v) -> s + v))," +
+        " s -> s / CAST(size(ms) AS DOUBLE))").as("ce"))
 
   val simKmeansConverged: Q = (s, dir) => kmeansConvergedOf(normalized(s, dir))
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.graftbridge.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SimHashAgg, TextFunctions => TF}
@@ -152,7 +153,93 @@ class DedupSpec extends SparkTestBase {
     query(spark, sf).collect()
     val (rows, jobs) = JobCounter(spark)(query(spark, sf).collect())
     assert(rows.nonEmpty)
-    assert(jobs <= 7, s"dedup_groups ran $jobs Spark jobs")
+    assert(jobs <= 5, s"dedup_groups ran $jobs Spark jobs")
+  }
+
+  test("dedup_minhash_lsh job budget: both verify sides read one exchange") {
+    // measured as the dedup_groups budget; the verify joins reading two
+    // exchanges of the base, or members expanded by joins, run more
+    val query = SparkEntry.queries("dedup_minhash_lsh")
+    query(spark, sf).collect()
+    val (rows, jobs) = JobCounter(spark)(query(spark, sf).collect())
+    assert(rows.nonEmpty)
+    assert(jobs <= 7, s"dedup_minhash_lsh ran $jobs Spark jobs")
+  }
+
+  /** The LSH pair stream with its groups expanded by joins over an
+    * exploded (gkey, doc_id) frame: the reference form of
+    * `Dedup.minhashLshPairsRaw`'s carried-members expansion. */
+  private def joinExpandedLshPairs(dir: String, threshold: Double): DataFrame = {
+    val k = 64; val bands = 16; val rows = k / bands
+    val sh = TF.md5ShingleHashes(col("text"), 3)
+    val grouped = graft.sources.Tables.table(spark, dir, "documents")
+      .select(col("doc_id"), sh.as("sh"))
+      .withColumn("gkey", md5(concat_ws("\u0001",
+        concat_ws("\u0001", transform(sort_array(col("sh")), _.cast("string"))))))
+    val base = grouped.groupBy(col("gkey"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("members"), first(col("sh")).as("sh"))
+      .withColumn("sig", HashExpressions.minhash(col("sh"), k))
+      .transform(Barrier.materialize)
+    val banded = base.select(col("gkey"),
+      posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        bnd => xxhash64(concat_ws("_", bnd,
+          concat_ws(",", slice(col("sig"), bnd * lit(rows) + 1, lit(rows))))))))
+      .select(col("gkey"), col("pos").as("band"), col("col").as("bucket"))
+    val l = banded.alias("l"); val r = banded.alias("r")
+    val cand = l.join(r,
+        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
+        col("l.gkey") < col("r.gkey"))
+      .select(col("l.gkey").as("g1"), col("r.gkey").as("g2")).distinct()
+    val sets = base.select(col("gkey"), col("sh"))
+    val repPairs = cand
+      .join(sets.select(col("gkey").as("g1"), col("sh").as("sh1")), "g1")
+      .join(sets.select(col("gkey").as("g2"), col("sh").as("sh2")), "g2")
+      .select(col("g1"), col("g2"),
+        (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
+          size(array_union(col("sh1"), col("sh2"))).cast("double")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+    val m = base.select(col("gkey"), explode(col("members")).as("doc_id"))
+    val wl = m.alias("wl"); val wr = m.alias("wr")
+    val withinPairs = wl.join(wr,
+        col("wl.gkey") === col("wr.gkey") && col("wl.doc_id") < col("wr.doc_id"))
+      .select(col("wl.doc_id").as("d1"), col("wr.doc_id").as("d2"), lit(1.0).as("jaccard"))
+    val crossPairs = repPairs
+      .join(m.select(col("gkey").as("g1"), col("doc_id").as("m1")), "g1")
+      .join(m.select(col("gkey").as("g2"), col("doc_id").as("m2")), "g2")
+      .select(least(col("m1"), col("m2")).as("d1"),
+        greatest(col("m1"), col("m2")).as("d2"), col("jaccard"))
+    withinPairs.union(crossPairs)
+  }
+
+  test("LSH pair stream with carried members equals the join-based expansion") {
+    def sorted(df: DataFrame) =
+      df.select("d1", "d2", "jaccard").as[(Long, Long, Double)].collect().toSeq.sorted
+    def written(texts: Seq[String]): String = {
+      val dir = tmpDir()
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+        .withColumn("n_chars", length(col("text")))
+        .write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val fox = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val cases = Seq(
+      // a group {0, 4}, a near pair, singletons
+      "planted" -> withPlanted(identity),
+      // groups {0, 2, 4} and {1, 5, 6}, a near pair (3), a singleton (7)
+      "groups" -> written(Seq(fox, "a b c d e f g", fox, fox.replace("dog", "cat"),
+        fox, "a b c d e f g", "a b c d e f g", "unrelated words stand alone here")),
+      "one group" -> written(Seq.fill(5)(fox)),
+      "empty" -> written(Seq.empty),
+      "sf0.001" -> sf)
+    cases.foreach { case (name, dir) =>
+      val got = sorted(Dedup.minhashLshPairsRaw(spark, dir, threshold = 0.5,
+        portableHashes = true))
+      val want = sorted(joinExpandedLshPairs(dir, 0.5))
+      assert(got == want, s"$name: ${got.size} vs ${want.size} pairs")
+      if (name == "one group") assert(got.size == 10, "5 copies make 10 pairs")
+      if (name == "empty") assert(got.isEmpty)
+    }
   }
 
   test("dup groups over planted minhash pairs keep doc 0 as canonical") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.graftbridge.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,6 +57,44 @@ class SimilaritySpec extends SparkTestBase {
     val (rows, jobs) = JobCounter(spark)(query(spark, sf).collect())
     assert(rows.length == 50)
     assert(jobs <= 3, s"sim_cosine_topk ran $jobs Spark jobs")
+  }
+
+  test("sim_kmeans job budget: the centroid update is one aggregate") {
+    // measured as the sim_cosine_topk budget; an update that explodes
+    // every vector into (cid, pos) rows and aggregates twice runs more
+    val query = SparkEntry.queries("sim_kmeans")
+    query(spark, sf).collect()
+    val (rows, jobs) = JobCounter(spark)(query(spark, sf).collect())
+    assert(rows.nonEmpty)
+    assert(jobs <= 6, s"sim_kmeans ran $jobs Spark jobs")
+  }
+
+  test("k-means update as one aggregate equals the per-(cid, pos) fold bit for bit") {
+    import graft.operators.SimilarityQueries.kmeansUpdate
+    // the per-dimension form: every vector exploded to (cid, pos) rows,
+    // each folded in vec_id order, divided, then gathered by pos
+    def perPosition(a: DataFrame) =
+      a.select(col("cid"), col("vec_id"), posexplode(col("e")).as(Seq("pos", "v")))
+        .groupBy(col("cid"), col("pos"))
+        .agg(expr("aggregate(sort_array(collect_list(struct(vec_id, v))), 0D," +
+          " (a, x) -> a + x.v)").as("sv"), count(lit(1)).as("n"))
+        .withColumn("m", col("sv") / col("n").cast("double"))
+        .groupBy(col("cid"))
+        .agg(expr("transform(sort_array(collect_list(struct(pos, m))), x -> x.m)")
+          .as("ce"))
+    def bits(df: DataFrame) =
+      df.select("cid", "ce").as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+        .map { case (c, ce) => (c, ce.map(java.lang.Double.doubleToRawLongBits)) }
+    val emb = Tables.table(spark, sf, "embeddings")
+      .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("e"))
+    val first = emb.agg(min(col("vec_id"))).head().getLong(0)
+    // three large clusters and a one-member cluster
+    val a = emb.withColumn("cid",
+      when(col("vec_id") === first, lit(99L)).otherwise(col("vec_id") % 3))
+    val want = bits(perPosition(a))
+    assert(want.size == 4 && want.exists(_._1 == 99L))
+    assert(bits(kmeansUpdate(a)) == want)
+    assert(kmeansUpdate(a.filter(lit(false))).collect().isEmpty)
   }
 
   test("lsh top-k recall vs brute force") {
