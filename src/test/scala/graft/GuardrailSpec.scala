@@ -82,7 +82,7 @@ class GuardrailSpec extends AnyFunSuite {
       "SimilarityQueries.scala" -> 3, // k-center driver-stepped 1-row steps
       "EventQueries.scala" -> 1,   // <=|event_types|^2 transition chain
       "Reports.scala" -> 1,        // summary rollup: categories + 1 rows
-      "Dashboard.scala" -> 1,      // kpis: one row per day in range
+      "Dashboard.scala" -> 1,      // visit grain: days × (sentiments + categories) rows
       "Sinks.scala" -> 1,          // batch's distinct partition values
       "Bench.scala" -> 1,          // benchmark main, driver tool
       "Explain.scala" -> 1,        // plan-inspection tool, not a query
