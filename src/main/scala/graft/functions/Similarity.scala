@@ -110,50 +110,16 @@ object Similarity {
     }.reduce(_ + _)
 
   /** IVF (inverted-file) approximate top-k — the other standard
-    * scale path next to sign-LSH: a KMeans coarse quantizer assigns
-    * every vector to a cell once (one training pass + one narrow
-    * map); queries probe their `nProbe` nearest cells only, so probe
-    * cost is corpus-size-independent per cell. Recall is tested
-    * against [[bruteForceTopK]].
-    */
-  def ivfTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-      nCells: Int = 16, nProbe: Int = 2, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val emb = Tables.table(s, dir, "embeddings")
-      .select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
-      .withColumn("features", array_to_vector(col("e")))
-    val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(5)
-      .fit(emb.select(col("features")))
-    val assigned = model.transform(emb)
-      .select(col("vec_id"), col("e"), col("prediction").as("cell"))
-    val centers = typedlit(model.clusterCenters.toSeq.map(_.toArray.toSeq))
-    // each query ranks the centroids and probes its nProbe nearest
-    val qProbe = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        posexplode(centers))
-      .select(col("query_id"), col("qe"), col("pos").as("cell"),
-        dot(col("qe"), col("col")).as("cdot"),
-        sqrt(dot(col("col"), col("col"))).as("cnorm"))
-      .withColumn("csim", col("cdot") / (col("cnorm") * sqrt(dot(col("qe"), col("qe")))))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(desc("csim"), col("cell"))))
-      .filter(col("crk") <= nProbe)
-      .select(col("query_id"), col("qe"), col("cell"))
-    cosineTopK(broadcast(qProbe)
-      .join(assigned.select(col("vec_id").as("neighbor_id"), col("e"), col("cell")),
-        Seq("cell")), k)
-  }
-
-  /** IVF with a DETERMINISTIC coarse quantizer: centroids are the
-    * `nCells` corpus vectors first in md5(vec_id) order (the
-    * random-sample initialization every IVF build starts from,
-    * frozen) instead of KMeans iterates. Same inverted-file shape
-    * and probe cost as [[ivfTopK]], but the whole structure is
-    * reproducible in plain SQL, so the driver gate can replay it
-    * end-to-end in DuckDB. Assignment = argmax centroid cosine
-    * (ties → lower centroid id); queries probe their `nProbe`
-    * nearest cells.
+    * scale path next to sign-LSH: a coarse quantizer assigns every
+    * vector to a cell once; queries probe their `nProbe` nearest
+    * cells only, so probe cost is corpus-size-independent per cell.
+    * The quantizer is DETERMINISTIC: centroids are the `nCells`
+    * corpus vectors first in md5(vec_id) order (the random-sample
+    * initialization every IVF build starts from, frozen) instead of
+    * KMeans iterates, so the whole structure is reproducible in
+    * plain SQL and the driver gate can replay it end-to-end in
+    * DuckDB. Assignment = argmax centroid cosine (ties → lower
+    * centroid id).
     *
     * Scale: centroid pick is a TakeOrdered (no global sort); the
     * corpus×centroid scoring is a broadcast nested product — at

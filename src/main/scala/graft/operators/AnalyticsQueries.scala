@@ -1447,9 +1447,9 @@ object AnalyticsQueries extends QueryModule {
   // independently and combine. Scale shape: one map-side-combining
   // aggregate to (group, register), then bounded 64-row folds.
   // ---------------------------------------------------------------
-  /** The (grp, reg, rnk, half) hash decomposition — shared with the
-    * streaming HLL twin (EventStreams.hllStream), which must sketch
-    * the SAME registers for the batch≡stream pin to be meaningful. */
+  /** The (grp, reg, rnk, half) hash decomposition — shared by
+    * a_hll_registers and a_hll_set_algebra, which must sketch the
+    * SAME registers. */
   private[graft] def hllBase(s: SparkSession, dir: String): DataFrame = {
     val m = 64
     val hex = md5(col("o_custkey").cast("string"))

@@ -16,7 +16,7 @@ object EventQueries extends QueryModule {
   val prefixes: Seq[String] = Seq("ev_")
 
   // Tumbling 1-day windows over the event stream table (batch twin of
-  // the Structured Streaming job in graft.streaming)
+  // graft.streaming.EventStreams.tumblingDailyAgg)
   val evTumblingDaily: Q = (s, dir) =>
     t(s, dir, "events")
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
@@ -26,8 +26,7 @@ object EventQueries extends QueryModule {
 
   // Hopping (sliding) windows: 2-day windows advancing 1 day, so
   // each event lands in exactly two windows — the streaming-native
-  // generalization of the tumbling agg (streaming twin:
-  // graft.streaming.EventStreams.hoppingDailyAgg).
+  // generalization of the tumbling agg.
   //
   // Written aggregate-then-expand rather than the naive
   // `window(ts, "2 days", "1 day")`: that form Expands every FACT row
@@ -153,7 +152,8 @@ object EventQueries extends QueryModule {
   // histogram. The oracle replays with the lag-based islands form —
   // equivalent on this data (semantics differ only at EXACT-gap
   // boundaries, and the events table has no exact-1800s gap; the
-  // StreamingSpec equivalence test pins the same).
+  // "native session_window equals lag-based sessionization" spec
+  // pins the same).
   val evSessionWindow: Q = (s, dir) =>
     t(s, dir, "events")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))

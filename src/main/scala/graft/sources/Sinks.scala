@@ -2,13 +2,13 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
-import org.apache.spark.sql.types.StructType
 
 import graft.Barrier
 
 /** Sink surface mirroring the reference (SURVEY §2.1):
   * S2 CSV sink (UTF-8, header), S5 full-replace bronze,
-  * S6 key-idempotent append (ON CONFLICT DO NOTHING analog),
+  * S6 key-idempotent append (ON CONFLICT DO NOTHING analog; the
+  * parquet silver's form is [[graft.enrich.Enrich.appendFresh]]),
   * S10 gold table materialization.
   */
 object Sinks {
@@ -20,33 +20,6 @@ object Sinks {
   /** S5: daily full replace (reference: dags/g1_scraping_dag.py:77-83). */
   def overwrite(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** S6: append only rows whose `key` is absent from the sink —
-    * first-write-wins like the reference's
-    * `INSERT .. ON CONFLICT (raw_link) DO NOTHING`
-    * (scripts/llm_enricher.py:285-309). The probe reads only the key
-    * column, with its schema pinned so no footer-reading job runs;
-    * new rows are deduped in-batch first. The survivors go through a
-    * barrier: the count and the write read the stored rows, so `df`
-    * runs once per row, and an empty batch writes nothing (not even
-    * an empty part file). Returns rows appended. Enrichment does not
-    * come here: it skips known keys before classifying
-    * ([[graft.enrich.Enrich.appendFresh]]).
-    */
-  def appendDedup(df: DataFrame, path: String, key: String): Long = {
-    val spark = df.sparkSession
-    val batch = df.dropDuplicates(key)
-    val fresh =
-      if (!Tables.exists(spark, path)) batch
-      else {
-        val existing = spark.read.schema(StructType(Seq(df.schema(key)))).parquet(path)
-        batch.join(existing, Seq(key), "left_anti")
-      }
-    val stored = fresh.transform(Barrier.materialize)
-    val n = stored.count()
-    if (n > 0) stored.write.mode(SaveMode.Append).parquet(path)
-    n
-  }
 
   /** MERGE analog, LAST-write-wins: rows in `df` REPLACE sink rows
     * with the same `key` (the `ON CONFLICT DO UPDATE` the reference
@@ -169,9 +142,12 @@ object Sinks {
       .save()
 
   /** S6 (JDBC form): key-idempotent append — anti-join the batch
-    * against the sink's current keys, append survivors. Same
-    * first-write-wins contract as [[appendDedup]]; the key probe is a
-    * keys-only remote projection. (A dialect-level
+    * against the sink's current keys, append survivors:
+    * first-write-wins like the reference's
+    * `INSERT .. ON CONFLICT (raw_link) DO NOTHING`
+    * (scripts/llm_enricher.py:285-309), the contract the parquet
+    * silver keeps through [[graft.enrich.Enrich.appendFresh]]. The key
+    * probe is a keys-only remote projection. (A dialect-level
     * `INSERT .. ON CONFLICT DO NOTHING` would push the dedup into
     * the DB; vanilla Spark JDBC has no conflict clause, so the
     * anti-join is the engine-side equivalent.) Returns rows appended.
@@ -264,7 +240,7 @@ object Sinks {
     * probe rethrows (surfacing the mismatch) rather than treating it
     * as absent and appending duplicates. First deployment against a
     * new engine should smoke this probe before trusting
-    * [[appendDedup]]. */
+    * [[jdbcAppendDedup]]. */
   private def jdbcTableExists(url: String, tableName: String,
       options: Map[String, String]): Boolean = {
     require(ValidTableName.matches(tableName),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 import graft.Barrier
 import graft.functions.{TextFunctions => TF}
@@ -27,6 +28,15 @@ object DedupStream {
   private val Bands = 16
   private val ShingleN = 3
   private val Threshold = 0.7
+
+  /** Parquet-dir schema of the arriving documents (the documents
+    * table's columns). */
+  val docSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("text", StringType),
+    StructField("n_chars", LongType)))
 
   /** The corpus artifact: thin band index + hash sets, one barrier. */
   final case class CorpusIndex(bands: DataFrame, sets: DataFrame)
@@ -147,7 +157,7 @@ object DedupStream {
   def startGrowing(spark: SparkSession, srcDir: String,
       outPath: String): StreamingQuery = {
     var index: CorpusIndex = null
-    spark.readStream.schema(CorpusStream.docSchema)
+    spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
       .writeStream
       .outputMode("append")
@@ -164,7 +174,7 @@ object DedupStream {
             index.sets.unionAll(bIdx.sets))
         // within-batch near-dups surface mirrored (both members are
         // simultaneously "new" and "indexed"): canonicalize to one
-        // undirected row per pair, matching SubstringStream.flagSpans
+        // undirected row per pair
         flagPairs(b, index)
           .filter(col("new_doc_id") =!= col("corpus_doc_id"))
           .select(
@@ -183,7 +193,7 @@ object DedupStream {
     * srcDir; near-dup hit summaries append to outPath. */
   def start(spark: SparkSession, srcDir: String, index: CorpusIndex,
       outPath: String): StreamingQuery =
-    spark.readStream.schema(CorpusStream.docSchema).parquet(srcDir)
+    spark.readStream.schema(docSchema).parquet(srcDir)
       .writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())

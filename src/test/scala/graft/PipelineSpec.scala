@@ -180,6 +180,15 @@ class PipelineSpec extends SparkTestBase {
     assert(rows(builtCategory) == rows(GoldJob.dailyCategory(stg)))
   }
 
+  test("gold run writes date-partitioned tables") {
+    val dir = tmpDir()
+    val silver = graft.sources.HeadlineData.silverCached(spark, sf)
+    graft.jobs.GoldJob.run(silver, s"$dir/gold")
+    val parts = new java.io.File(s"$dir/gold/daily_sentiment_analysis")
+      .listFiles().filter(_.getName.startsWith("analysis_date="))
+    assert(parts.length >= 7, "one partition dir per day")
+  }
+
   test("summary over an empty silver reports zeros and no averages") {
     val work = tmpDir()
     writeFixtureCsv(s"$work/raw/headlines.csv")

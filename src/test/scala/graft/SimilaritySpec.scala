@@ -110,19 +110,4 @@ class SimilaritySpec extends SparkTestBase {
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.3, s"mean recall@5 too low: $mean")
   }
-
-  test("ivf top-k recall vs brute force") {
-    val exact = Similarity.bruteForceTopK(spark, sf, nQueries = 10, k = 5)
-      .as[(Long, Long, Double, Int)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val approx = Similarity.ivfTopK(spark, sf, nQueries = 10, k = 5,
-        nCells = 8, nProbe = 3)
-      .as[(Long, Long, Double, Int)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val recalls = exact.map { case (q, truth) =>
-      approx.get(q).map(a => (a & truth).size.toDouble / truth.size).getOrElse(0.0)
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.3, s"mean IVF recall@5 too low: $mean")
-  }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sources.Tables
 
 /** Invariant pins for the round-9 batch-39 operators (contract
   * properties beyond the oracle's engine-equality hash). */
@@ -81,5 +84,37 @@ class TrainingData44Spec extends SparkTestBase {
       assert(r.getAs[Long]("depth") >= 1)
       assert(r.getAs[Long]("n_sessions") >= 1)
     }
+  }
+
+  test("native session_window equals lag-based sessionization") {
+    // same 30-min gap as w_sessionize_users; semantics agree except
+    // at EXACT-gap boundaries (session_window opens a new session at
+    // next == last + gap, the lag form only at next > last + gap) —
+    // the events table has no exact-1800s gap, checked in DuckDB
+    val ev = Tables.table(spark, sf, "events")
+    // enforce the precondition instead of assuming it: an exact-gap
+    // event pair would make the two forms legitimately diverge, so a
+    // fixture change that introduces one must fail HERE, not as an
+    // opaque oracle hash mismatch
+    val wPre = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val exactGaps = ev
+      .withColumn("gap_us",
+        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(wPre))
+      .where(col("gap_us") === 1800000000L).count()
+    assert(exactGaps == 0L,
+      "events fixture gained an exact-1800s gap; session_window and the lag oracle diverge there")
+    val native = ev
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n"))
+      .groupBy(col("user_id")).agg(count(lit(1)).as("sessions"))
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val lagBased = ev
+      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
+      .withColumn("new_session",
+        when(col("prev_us").isNull ||
+          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1).otherwise(0))
+      .groupBy(col("user_id")).agg(sum(col("new_session")).as("sessions"))
+    assert(native.orderBy("user_id").collect().toSeq ==
+      lagBased.orderBy("user_id").collect().toSeq)
   }
 }

@@ -118,6 +118,24 @@ class TrainingData4Spec extends SparkTestBase {
       val bad = out.filter(col("peak_active") > col("n_opens") + 10).count()
       assert(bad == 0L, "peak exceeds opens plus any plausible midnight carry")
     } finally out.unpersist()
+    // an interval open past midnight carries into the next day: A
+    // opens 23:58, B and C open together early next day → day-2
+    // peak 3 is reachable ONLY via the carry
+    import spark.implicits._
+    val dir = tmpDir()
+    Seq(
+      (1L, "2024-03-01 23:58:00", 10L, "view", 1.0, "{}"),
+      (2L, "2024-03-02 00:01:00", 11L, "view", 1.0, "{}"),
+      (3L, "2024-03-02 00:02:00", 12L, "view", 1.0, "{}"))
+      .toDF("event_id", "tss", "user_id", "event_type", "value", "props")
+      .select(col("event_id"), to_timestamp(col("tss")).as("ts"),
+        col("user_id"), col("event_type"), col("value"), col("props"))
+      .write.parquet(s"$dir/events.parquet")
+    val carried = SparkEntry.queries("ev_peak_concurrency")(spark, dir)
+      .select(col("day").cast("string"), col("peak_active"), col("n_opens"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(carried.contains(("2024-03-02", 3L, 2L)),
+      "a day-2 peak that needs day-1's open interval")
   }
 
   test("j_interval_overlap: pair counts bounded by active-user pairs, argmax pair ordered") {
