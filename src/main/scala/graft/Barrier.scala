@@ -36,7 +36,7 @@ import org.apache.spark.sql.graftbridge.BlockBridge
   * `UnknownPartitioning` (PlanSpec pins it), whatever partitioning
   * the stored frame had. A keyed aggregate, join or window over a
   * barrier re-shuffles, and a `coalesce(1)` put before the barrier is
-  * lost to the planner; put it after ([[Grain.storedBounded]]).
+  * lost to the planner; put it after ([[jobs.SilverGrain.frame]]).
   * The stored partitions themselves keep their index and row order,
   * which [[operators.Ranking]] numbers rows by.
   *
@@ -44,10 +44,10 @@ import org.apache.spark.sql.graftbridge.BlockBridge
   *  - the blocks live in executor storage and are not replicated, so
   *    losing an executor that holds one fails the query instead of
   *    recomputing it ("Checkpoint block … not found");
-  *  - most barriers live for one query. The memoized silver frame
-  *    ([[sources.HeadlineData.silverCached]]) lives for the session,
-  *    so its memo checks [[Barrier.intact]] on each fetch and rebuilds
-  *    it after a lost block: only queries already built over it fail;
+  *  - most barriers live for one query. The memoized silver frame and
+  *    grains ([[sources.HeadlineData.silverCached]], [[jobs.SilverGrain]])
+  *    live for the session; the memo checks [[Barrier.intact]] on each
+  *    fetch and rebuilds after a lost block (queries over it fail);
   *  - the barrier is lazy: its blocks are stored by the first job
   *    that reads the frame, and two stages of that job (both sides
   *    of a self-join, say) can each compute the same partition. The

@@ -46,14 +46,4 @@ object Grain {
     * no further exchange. */
   def sortedBounded(df: DataFrame, sortCols: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(sortCols: _*)
-
-  /** A declared grain-bounded frame computed once and read as one
-    * partition by every consumer: stored through [[Barrier]],
-    * then coalesced. The coalesce goes after the barrier: a barrier's
-    * scan reports `UnknownPartitioning`, so a coalesce before it would
-    * be lost and the next aggregate would plan an exchange. Over the
-    * result, aggregates and windows (partitioned or [[bounded]]) plan
-    * no exchange. */
-  def storedBounded(df: DataFrame): DataFrame =
-    df.transform(Barrier.materialize).coalesce(1)
 }

@@ -2,7 +2,7 @@ package graft.jobs
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,20 +26,14 @@ object Reports {
   val ErrorRateThreshold = 0.10    // dag:176-184
   val MinAvgConfidence = 0.7       // dag:185-193
 
-  private def onDay(df: DataFrame, today: LocalDate): DataFrame =
-    df.filter(to_date(col("processed_at")) === lit(java.sql.Date.valueOf(today)))
-
-  /** Q2: totals / error rows / avg confidence / thresholds. */
+  /** Q2: totals / error rows / avg confidence / thresholds, from the
+    * [[GoldJob.silverGrain]]'s cells of `today`. */
   def validate(silver: DataFrame, today: LocalDate): ValidationReport = {
-    val day = onDay(silver, today)
-    val row: Row = day.agg(
-      count(lit(1)).as("total"),
-      count(when(col("sentiment") === "Erro", 1)).as("errors"),
-      round(avg(when(col("sentiment") =!= "Erro", col("confidence_score"))), 3)
-        .as("avg_conf")).head()
-    val total = row.getLong(0)
-    val errors = row.getLong(1)
-    val avgConf = if (row.isNullAt(2)) None else Some(row.getDouble(2))
+    val cells = GoldJob.silverGrain(silver).rows.filter(_.day == today)
+    val day = cells.find(_.set == GrainCell.ByDay)
+    val total = day.fold(0L)(_.rows)
+    val errors = cells.filter(c => c.set == GrainCell.BySentiment && c.sentiment == "Erro").map(_.rows).sum
+    val avgConf = day.flatMap(c => Option(c.avgRatedConfidence)).map(_.doubleValue)
     val rate = if (total == 0) 0.0 else errors.toDouble / total
     val warnings = Seq(
       if (rate > ErrorRateThreshold) Some(f"error rate $rate%.3f > $ErrorRateThreshold") else None,
@@ -48,36 +42,27 @@ object Reports {
     ValidationReport(total, errors, avgConf, rate, warnings)
   }
 
-  /** Q3: processing summary + top-5 categories today (O4), in two
-    * actions. One grouping-set aggregate over silver: its grand-total
-    * row holds the totals and the average processing time, and its
-    * per-category rows hold today's counts, from which the top 5 are
-    * picked on the driver. One aggregate over bronze and its
-    * [[EnrichJob.pending]] anti-join counts raw and pending rows. */
+  /** Q3: processing summary + top-5 categories today (O4). Silver's
+    * side is the [[GoldJob.silverGrain]]'s all-of-silver cell, its
+    * cell of `today` and its (today, category) cells; one aggregate
+    * over bronze and its [[EnrichJob.pending]] anti-join counts raw
+    * and pending rows. */
   def summary(bronze: DataFrame, silver: DataFrame, today: LocalDate): ProcessingReport = {
-    val isToday = to_date(col("processed_at")) === lit(java.sql.Date.valueOf(today))
-    val byCategory = silver.rollup(col("category"))
-      .agg(grouping_id().cast("long").as("gid"),
-        count(lit(1)).as("total"),
-        round(avg(col("processing_time_seconds")), 3).as("avg_time"),
-        count(when(isToday, 1)).as("today"))
-      .collect() // report-sized: categories + 1 rows
-    // no grand-total row when silver is empty
-    val grand = byCategory.find(_.getLong(1) == 1L)
-    val top5 = byCategory
-      .filter(r => r.getLong(1) == 0L && !r.isNullAt(0) &&
-        r.getString(0) != "Erro" && r.getLong(4) > 0)
-      .map(r => (r.getString(0), r.getLong(4))).toSeq
-      .sortBy { case (c, n) => (-n, UTF8String.fromString(c)) } // Spark's string order
-      .take(5)
+    val cells = GoldJob.silverGrain(silver).rows
+    val all = cells.find(_.set == GrainCell.All) // none when silver is empty
+    val day = cells.filter(_.day == today)
+    val top5 = day
+      .filter(c => c.set == GrainCell.ByCategory && c.category != null && c.category != "Erro")
+      .map(c => (c.category, c.rows))
+      .sortBy { case (c, n) => (-n, UTF8String.fromString(c)) }.take(5) // Spark's string order
     val raw = bronze.select(lit(false).as("pending"))
       .unionByName(EnrichJob.pending(bronze, silver).select(lit(true).as("pending")))
       .agg(count(when(!col("pending"), 1)), count(when(col("pending"), 1))).head()
     ProcessingReport(
       totalRaw = raw.getLong(0),
-      totalProcessed = grand.fold(0L)(_.getLong(2)),
-      processedToday = grand.fold(0L)(_.getLong(4)),
-      avgProcessingTime = grand.filterNot(_.isNullAt(3)).map(_.getDouble(3)),
+      totalProcessed = all.fold(0L)(_.rows),
+      processedToday = day.find(_.set == GrainCell.ByDay).fold(0L)(_.rows),
+      avgProcessingTime = all.flatMap(c => Option(c.avgProcessingTime)).map(_.doubleValue),
       pending = raw.getLong(1),
       topCategories = top5)
   }

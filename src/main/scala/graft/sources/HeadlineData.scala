@@ -40,7 +40,7 @@ object HeadlineData {
     * per (session, dir) in the [[Tables]] memo: released at application
     * end, rebuilt after a lost block. */
   def silverCached(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memoized(spark, sfDir, "silver (derived)")(
+    Tables.memoized(spark, sfDir, "silver (derived)")(Barrier.intact)(
       Barrier.materialize(silver(spark, sfDir)))
 
   def bronze(spark: SparkSession, sfDir: String): DataFrame =

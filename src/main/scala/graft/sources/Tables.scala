@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
@@ -24,9 +26,10 @@ object Tables {
     * inside its timed region, so a 458-query sweep paid that tax
     * hundreds of times over. A memoized table is a LAZY DataFrame
     * (a logical plan): every action still scans the parquet input —
-    * no rows are cached, nothing is precomputed. The one derived
-    * entry, [[HeadlineData.silverCached]], is a barrier whose blocks
-    * share this lifetime; it is rebuilt if a block is lost.
+    * no rows are cached, nothing is precomputed. The derived entries,
+    * [[HeadlineData.silverCached]] and the silver grains
+    * ([[graft.jobs.GoldJob.silverGrain]]), share this lifetime and are
+    * rebuilt if their barrier loses a block.
     *
     * Lifetime: the outer map is keyed by the session's UUID, a
     * String the cached plans do not reference. Every cached
@@ -40,7 +43,7 @@ object Tables {
     * place. */
   private final class Plans(val appId: String) {
     val byTable =
-      new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+      new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
   }
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[String, Plans]()
@@ -48,24 +51,29 @@ object Tables {
   private val watched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    memoized(spark, sfDir, name)(
+    memoized(spark, sfDir, name)(Barrier.intact)(
       if (name == "events") events(spark, sfDir)
       else spark.read.parquet(s"$sfDir/$name.parquet"))
 
-  /** The frame memoized under `key` for this session and dir, built
-    * on first use and again once it is a barrier that lost a block.
-    * `build` runs outside the map's lock, so it may itself read
-    * memoized tables; when two threads race, both build and the
-    * first stored frame wins. */
-  private[sources] def memoized(spark: SparkSession, sfDir: String, key: String)(
-      build: => DataFrame): DataFrame = {
+  /** The value memoized under `key` (one value type per key) for this
+    * session and dir, built on first use and again once `fresh`
+    * rejects it. `build` runs outside the map's lock, so it may read
+    * memoized tables; when two threads race, the first fresh value
+    * stored wins. */
+  private[graft] def memoized[V <: AnyRef](spark: SparkSession, dir: String, key: String)(
+      fresh: V => Boolean)(build: => V): V = {
     val plans = memo.computeIfAbsent(SessionBridge.uuid(spark),
       _ => plansFor(spark.sparkContext)).byTable
-    Option(plans.get((sfDir, key))).filter(Barrier.intact).getOrElse {
-      val df = build
-      plans.merge((sfDir, key), df, (cur, _) => if (Barrier.intact(cur)) cur else df)
-    }
+    val valid = (v: AnyRef) => fresh(v.asInstanceOf[V])
+    Option(plans.get((dir, key))).filter(valid).getOrElse {
+      val v = build
+      plans.merge((dir, key), v, (cur, _) => if (valid(cur)) cur else v)
+    }.asInstanceOf[V]
   }
+
+  /** The (dir, key) of every memoized value, all sessions. */
+  private[graft] def entries: Seq[(String, String)] =
+    memo.values.asScala.toSeq.flatMap(_.byTable.keySet.asScala)
 
   private def plansFor(sc: SparkContext): Plans = {
     val app = sc.applicationId
@@ -76,8 +84,10 @@ object Tables {
     new Plans(app)
   }
 
-  /** Drop memoized plans (all sessions) — for in-process testdata
-    * regeneration at an already-memoized path. */
+  /** Drop every memoized value of every session: plans, the derived
+    * silver and the silver grains. For in-process testdata
+    * regeneration at an already-memoized path; perfbench also calls
+    * it before each of its set-ups. */
   def invalidate(): Unit = memo.clear()
 
   /** events.parquet's `ts` encoding has shifted across testdata

@@ -1,15 +1,19 @@
 package graft
 
-import java.lang.ref.WeakReference
-
+import org.apache.spark.graftbridge.{ApplicationEnd, JobCounter}
 import org.apache.spark.sql.{DataFrame, Row}
 
+import graft.jobs.{GoldJob, GrainCell}
 import graft.model.Schemas
 import graft.serve.Dashboard
+import graft.sources.Tables
 
-/** The dashboard's visit memo must not pin silver frames: its key is
-  * the frame, held weakly, and its value plain rows. A frame sees the
-  * files listed when it was read; a new frame sees new data. */
+/** The dashboard answers from the silver grain, which is memoized per
+  * silver path and file listing: fresh reads of an unchanged path
+  * share one grain, an append gives a new one, a path holds one
+  * entry, and the entry goes at application end or on
+  * `Tables.invalidate`. A frame sees the files listed when it was
+  * read; a new frame sees new data. */
 class DashboardMemoSpec extends SparkTestBase {
   private def write(dir: String, days: Seq[Int]): Unit = {
     val rows = days.zipWithIndex.map { case (d, i) =>
@@ -24,45 +28,73 @@ class DashboardMemoSpec extends SparkTestBase {
   private def read(dir: String): DataFrame =
     spark.read.schema(Schemas.enriched).parquet(dir)
 
-  /** A frame visited once, then only weakly reachable. In a method of
-    * its own, so no local slot of the test keeps the frame alive. */
-  private def visitedOnce(dir: String): WeakReference[DataFrame] = {
-    val frame = read(dir)
-    Dashboard.defaultRange(frame)
-    new WeakReference(frame)
-  }
+  /** Silver grains memoized, all sessions. */
+  private def memoized: Int = Tables.entries.count(_._2 == GoldJob.GrainKey)
 
-  /** Collects garbage until `done`, for at most 30 s. */
-  private def gcUntil(done: => Boolean): Unit = {
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (!done && System.nanoTime() < deadline) {
-      System.gc()
-      Thread.sleep(20)
-    }
-  }
+  /** Silver grains memoized under `dir`'s path, all sessions. */
+  private def entries(dir: String): Int =
+    Tables.entries.count { case (path, key) => key == GoldJob.GrainKey && path.endsWith(dir) }
 
-  test("the visit memo holds no entry once its silver frame is collected") {
+  private def total(g: graft.jobs.SilverGrain): Seq[Long] =
+    g.rows.filter(_.set == GrainCell.All).map(_.rows)
+
+  test("two fresh reads of one unchanged path share one grain; the second costs 0 Spark jobs") {
     val dir = tmpDir() + "/silver"
     write(dir, Seq(1, 2))
-    // let frames earlier suites dropped leave the memo first
-    var last = -1
-    gcUntil { val n = Dashboard.memoized; val stable = n == last; last = n; stable }
-    val before = Dashboard.memoized
-    val ref = visitedOnce(dir)
-    assert(Dashboard.memoized == before + 1)
-    gcUntil(ref.get == null && Dashboard.memoized <= before)
-    assert(ref.get == null, "the memo keeps its silver frame reachable")
-    assert(Dashboard.memoized <= before, "a collected frame's grain stayed memoized")
+    // as perfbench reads silver: inferred for gold, declared for the visit
+    val (inferred, declared) = (spark.read.parquet(dir), read(dir))
+    val (range, firstJobs) = JobCounter(spark)(Dashboard.defaultRange(inferred))
+    val (again, jobs) = JobCounter(spark)(Dashboard.defaultRange(declared))
+    assert(again == range)
+    assert(firstJobs > 0 && jobs == 0, s"grain jobs: first read $firstJobs, second $jobs")
+    assert(GoldJob.silverGrain(inferred) eq GoldJob.silverGrain(declared))
+  }
+
+  test("an append gives a new grain") {
+    val dir = tmpDir() + "/silver"
+    write(dir, Seq(1, 2))
+    val first = GoldJob.silverGrain(read(dir))
+    write(dir, Seq(3))
+    val appended = GoldJob.silverGrain(read(dir))
+    assert(!(appended eq first))
+    assert(total(first) == Seq(2L) && total(appended) == Seq(3L))
+  }
+
+  test("a path holds at most one grain entry") {
+    val (dir, other) = (tmpDir() + "/silver", tmpDir() + "/silver")
+    write(dir, Seq(1))
+    write(other, Seq(1))
+    for (d <- 2 to 4) {
+      Dashboard.defaultRange(read(dir))
+      assert(entries(dir) == 1)
+      write(dir, Seq(d))
+    }
+    Dashboard.defaultRange(read(other))
+    assert(entries(dir) == 1 && entries(other) == 1)
+  }
+
+  test("application end evicts the grain entry, and so does Tables.invalidate") {
+    val dir = tmpDir() + "/silver"
+    write(dir, Seq(1, 2))
+    val first = GoldJob.silverGrain(read(dir))
+    assert(entries(dir) == 1)
+    ApplicationEnd.post(spark)
+    assert(entries(dir) == 0, "application end left the grain memoized")
+    val rebuilt = GoldJob.silverGrain(read(dir))
+    assert(!(rebuilt eq first) && entries(dir) == 1)
+    Tables.invalidate()
+    assert(entries(dir) == 0, "Tables.invalidate left the grain memoized")
+    assert(!(GoldJob.silverGrain(read(dir)) eq rebuilt))
   }
 
   test("a visited frame is memoized once and keeps its snapshot") {
     val dir = tmpDir() + "/silver"
     write(dir, Seq(1, 2))
     val frame = read(dir)
-    val before = Dashboard.memoized
+    val before = memoized
     val range = Dashboard.defaultRange(frame)
     Dashboard.defaultRange(frame)
-    assert(Dashboard.memoized == before + 1)
+    assert(memoized == before + 1)
     write(dir, Seq(3, 3))
     assert(Dashboard.defaultRange(frame) == range)
     assert(Dashboard.kpis(frame, range._1, range._2).total == 2)

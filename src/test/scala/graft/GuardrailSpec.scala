@@ -81,8 +81,7 @@ class GuardrailSpec extends AnyFunSuite {
       "TextQueries.scala" -> 1,    // one-row logistic fit coefficients
       "SimilarityQueries.scala" -> 3, // k-center driver-stepped 1-row steps
       "EventQueries.scala" -> 1,   // <=|event_types|^2 transition chain
-      "Reports.scala" -> 1,        // summary rollup: categories + 1 rows
-      "Dashboard.scala" -> 1,      // visit grain: days × (sentiments + categories) rows
+      "GoldJob.scala" -> 1,        // silver grain: days × (sentiments + categories + 1) + 1 rows
       "Sinks.scala" -> 1,          // batch's distinct partition values
       "Bench.scala" -> 1,          // benchmark main, driver tool
       "Explain.scala" -> 1,        // plan-inspection tool, not a query

@@ -9,6 +9,7 @@ import org.apache.spark.util.LongAccumulator
 import graft.enrich.{Enricher, MockEnricher}
 import graft.jobs.{EnrichJob, GoldJob, IngestJob, ProcessingReport, Reports}
 import graft.model.{Domains, Schemas}
+import graft.serve.Dashboard
 import graft.sources.Tables
 
 /** End-to-end pipeline over FIXTURES.md fixture A: the reference's
@@ -139,6 +140,41 @@ class PipelineSpec extends SparkTestBase {
         .collect().map(_.toSeq).toSet
     assert(rows("daily_sentiment_analysis") == expected(GoldJob.dailySentiment(stg)))
     assert(rows("daily_category_analysis") == expected(GoldJob.dailyCategory(stg)))
+  }
+
+  test("gold, reports and a visit over one unchanged silver aggregate it once") {
+    val work = tmpDir()
+    writeFixtureCsv(s"$work/raw/headlines.csv")
+    IngestJob.run(spark, s"$work/raw", s"$work/bronze")
+    EnrichJob.run(spark, s"$work/bronze", s"$work/silver", MockEnricher,
+      Timestamp.valueOf("2024-03-01 09:00:00"))
+    val today = java.time.LocalDate.of(2024, 3, 1)
+    // a fresh read per reader, as perfbench makes; its schema
+    // inference runs before the counted calls
+    val Seq(forGold, forValidate, forSummary) =
+      Seq.fill(3)(spark.read.parquet(s"$work/silver"))
+    val forVisit = spark.read.schema(Schemas.enriched).parquet(s"$work/silver")
+    val bronze = spark.read.schema(Schemas.raw).parquet(s"$work/bronze")
+    val (_, goldJobs) = JobCounter(spark)(GoldJob.run(forGold, s"$work/gold"))
+    val (_, validateJobs) = JobCounter(spark)(Reports.validate(forValidate, today))
+    val (_, summaryJobs) = JobCounter(spark)(Reports.summary(bronze, forSummary, today))
+    val (_, visitJobs) = JobCounter(spark) {
+      val (start, end) = Dashboard.defaultRange(forVisit)
+      Dashboard.kpis(forVisit, start, end)
+      Seq(Dashboard.dailySentiment(forVisit, start, end),
+        Dashboard.categoryCounts(forVisit, start, end),
+        Dashboard.confidenceStats(forVisit, start, end),
+        Dashboard.recentHeadlines(forVisit, 10),
+        Dashboard.topCategoryTimeSeries(forVisit, start, end, 5)).foreach(_.collect())
+    }
+    // gold builds and stores the grain; validate collects its rows (1
+    // job, no shuffle); the summary's silver side and the visit's
+    // range calls read those rows, so the summary runs only its
+    // bronze/pending aggregate (3) and the visit only recentHeadlines
+    assert(goldJobs <= 3, s"gold ran $goldJobs Spark jobs")
+    assert(validateJobs <= 1, s"validate ran $validateJobs Spark jobs")
+    assert(summaryJobs <= 3, s"summary ran $summaryJobs Spark jobs")
+    assert(visitJobs <= 1, s"the visit ran $visitJobs Spark jobs")
   }
 
   test("gold tables, built from the grain or per row, equal the conditional counts") {

@@ -594,22 +594,25 @@ class PlanSpec extends SparkTestBase {
       (0 until 64).map(i => graft.model.Domains.sentiments(i % 3)))
   }
 
-  test("a barrier's scan reports no partitioning; Grain.storedBounded reads as one partition") {
+  test("a barrier's scan reports no partitioning; the silver grain's frame reads as one partition") {
     import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    import graft.Grain
     val keyed = spark.range(200).withColumn("k", col("id") % 7).repartition(4, col("k"))
     val stored = Barrier.materialize(keyed)
     assert(stored.queryExecution.executedPlan.outputPartitioning
       .isInstanceOf[UnknownPartitioning])
     assert(planOf(stored.groupBy(col("k")).count()).contains("Exchange"),
       "a keyed aggregate over a barrier re-shuffles")
-    val grain = Grain.storedBounded(keyed.groupBy(col("k")).count())
-    val p = planOf(grain.groupBy((col("k") % 2).as("odd")).agg(sum(col("count")).as("n"))
-      .withColumn("share", col("n") / sum(col("n")).over(Window.partitionBy(col("odd") * 0))))
+    val silver = keyed.select(col("id").cast("string").as("link"),
+      (col("k") % 3).cast("string").as("sentiment"), col("k").cast("string").as("category"),
+      timestamp_seconds(col("id") * 3600).as("processed_at"))
+    val grain = graft.jobs.GoldJob.silverGrain(silver).frame
+    val p = planOf(grain.filter(col("set") === graft.jobs.GrainCell.ByCategory)
+      .groupBy(col("analysis_date"), col("category")).agg(sum(col("links")).as("n"))
+      .withColumn("share", col("n") / sum(col("n")).over(Window.partitionBy(col("analysis_date")))))
     assert(!p.contains("Exchange"),
-      s"aggregates and windows over Grain.storedBounded plan no exchange:\n$p")
+      s"aggregates and windows over the silver grain's frame plan no exchange:\n$p")
   }
 
   test("t_mixture_sample / t_stratified_sample: map-side top-k, no stratum-wide window") {

@@ -5,10 +5,12 @@
 
 Each line is `<status>  <kind>  <Owner.name>  <file>:<line>`, where status
 is `test-only` (src/test refers to it) or `unreferenced` (nothing does).
-`+README` marks a name that README.md mentions in code (a code span or
-a fenced block). With path prefixes, only definitions under them are
-listed; references are always looked up in the whole of src/main and
-src/test.
+`+bench` marks a name the benchmark's driver (perfbench/src) calls:
+deleting it breaks the benchmark build, which program changes may not
+edit. `+README` marks a name that README.md mentions in code (a code
+span or a fenced block). With path prefixes, only definitions under
+them are listed; references are always looked up in the whole of
+src/main, src/test and perfbench/src.
 
 It is a report, not a gate: the match is by name, so it misses a
 definition whose name is also used for something else (it counts as
@@ -33,6 +35,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAIN = os.path.join(ROOT, "src", "main")
 TEST = os.path.join(ROOT, "src", "test")
+BENCH = os.path.join(ROOT, "perfbench", "src")
 SKIP_DEFS = {"main", "apply", "unapply", "toString", "equals", "hashCode"}
 
 
@@ -167,6 +170,7 @@ def main():
     prefixes = [os.path.abspath(p) for p in sys.argv[1:]]
     mains = {p: strip(open(p, encoding="utf-8").read()) for p in scala_files(MAIN)}
     tests = {p: strip(open(p, encoding="utf-8").read())[1] for p in scala_files(TEST)}
+    bench = {p: strip(open(p, encoding="utf-8").read())[1] for p in scala_files(BENCH)}
     readme = open(os.path.join(ROOT, "README.md"), encoding="utf-8").read()
     fenced = re.findall(r"^```.*?^```", readme, re.S | re.M)
     readme = "\n".join(fenced + re.findall(
@@ -207,15 +211,18 @@ def main():
                 continue
             status = ("test-only" if used(tests, name, okind, owner, None, 0)
                       else "unreferenced")
+            if used(bench, name, okind, owner, None, 0):
+                status += " +bench"
             if count(readme, name) > 0:
                 status += " +README"
             qual = f"{owner}.{name}" if owner else name
             found.append((os.path.relpath(p, ROOT), line, status, kind, qual))
     for path, line, status, kind, qual in sorted(found):
-        print(f"{status:<20} {kind:<6} {qual:<44} {path}:{line}")
+        print(f"{status:<26} {kind:<6} {qual:<44} {path}:{line}")
     n_test = sum(1 for f in found if f[2].startswith("test-only"))
+    n_bench = sum(1 for f in found if "+bench" in f[2])
     print(f"# {len(found)} listed: {n_test} test-only, "
-          f"{len(found) - n_test} unreferenced")
+          f"{len(found) - n_test} unreferenced; {n_bench} +bench")
 
 
 if __name__ == "__main__":
