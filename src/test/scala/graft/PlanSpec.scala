@@ -594,7 +594,7 @@ class PlanSpec extends SparkTestBase {
       (0 until 64).map(i => graft.model.Domains.sentiments(i % 3)))
   }
 
-  test("a barrier's scan reports no partitioning; the silver grain's frame reads as one partition") {
+  test("a barrier's scan reports no partitioning; the silver grain reads as one partition") {
     import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
